@@ -183,8 +183,8 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     buffer; per-part co-purchase degree is bounded by baskets-per-part
     x basket size (~30 x 7 at any SF — parts scale with SF), so the
     arrays stay KB-sized; the probe/wedge explode is additionally
-    hub-capped at {cap}.
-    """.format(cap=_CN_HUB_CAP)
+    hub-capped at _CN_HUB_CAP (128).
+    """
     from planning_center_data_pipeline_spark.plans.wave43 import (
         _copurchase_sym_adj,
     )

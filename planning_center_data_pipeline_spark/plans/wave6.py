@@ -208,13 +208,14 @@ def _jaccard_prefix_core(sh_with_df: DataFrame, t: float) -> DataFrame:
     100 entries — and pairs come from a map-side double explode with
     the SAME length + positional predicates applied in-row.  The two
     payload attaches carry an explicit broadcast hint: the build side
-    is the |docs|-row array table (vocabulary-scale; at a corpus size
-    where it outgrows the broadcast budget the df auto-switch has long
-    since routed to the capped path, whose docs table shrinks with the
-    rare-shingle restriction — and the hint degrades to a size
-    misestimate, not wrong results).  Plan: 8 shuffle Exchanges -> 4
-    (prefix group, candidate distinct, final sort x2), payload
-    attaches BroadcastHashJoin."""
+    is the |docs|-row array table.  A forced broadcast does not degrade
+    when that table outgrows the driver: it fails the query.  So the
+    hint is gated on spark.planning_center.broadcastVocabulary (default
+    true, the plan below); set it false at a corpus size where the
+    docs table no longer fits, and the attaches fall back to the
+    planner's own choice (sort-merge, as localCheckpoint hides the
+    size).  Plan: 8 shuffle Exchanges -> 4 (prefix group, candidate
+    distinct, final sort x2), payload attaches BroadcastHashJoin."""
     docs = sh_with_df.groupBy("doc_id").agg(
         F.array_sort(F.collect_list(F.struct("df", "shingle"))).alias(
             "by_rarity"
@@ -265,9 +266,16 @@ def _jaccard_prefix_core(sh_with_df: DataFrame, t: float) -> DataFrame:
         F.col("shs").alias("shs_2"),
         F.col("n").alias("n_2"),
     )
+    if (
+        sh_with_df.sparkSession.conf.get(
+            "spark.planning_center.broadcastVocabulary", "true"
+        )
+        == "true"
+    ):
+        d1, d2 = F.broadcast(d1), F.broadcast(d2)
     return (
-        cand.join(F.broadcast(d1), "id_1")
-        .join(F.broadcast(d2), "id_2")
+        cand.join(d1, "id_1")
+        .join(d2, "id_2")
         .select(
             "id_1",
             "id_2",

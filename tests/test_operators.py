@@ -774,23 +774,67 @@ def test_lsh_near_dup_subset_and_planted_recall(spark, sf_dir):
     assert planted <= got  # measured: 50/50 with these deterministic planes
 
 
-def test_triangle_count_no_forced_broadcast(spark, sf_dir):
-    """The degree and adjacency tables are |V|-cardinality — a forced
-    broadcast hint there OOMs at 100x scale.  With the broadcast
-    threshold disabled the plan must contain NO BroadcastHashJoin:
-    proves no hint overrides the optimizer's sizing and the joins
-    degrade to shuffle joins when the build side is too big."""
-    from planning_center_data_pipeline_spark.plans.advanced import (
-        graph_triangle_count,
-    )
+# Every forced broadcast of a |V|- or |docs|-row side, and the columns
+# only that side carries (one set per hinted join).  A hinted join
+# inside a localCheckpoint (triangle count's degree join) is planned
+# when the checkpoint is taken and does not show in the query's plan.
+GATED_BROADCASTS = {
+    "graph_triangle_count": [{"nbrs_t"}],
+    "graph_degree_assortativity": [{"y"}],
+    "graph_minhash_neighbors": [{"hv0"}],
+    "doc_jaccard_prefix_filter": [{"shs_1"}, {"shs_2"}],
+}
 
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+
+def _scala_list(seq):
+    return [seq.apply(i) for i in range(seq.size())]
+
+
+def _broadcast_joins(df):
+    """(build side, build child's output names) per BroadcastHashJoin in
+    the physical plan as planned before execution."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    found, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        kids = _scala_list(node.children())
+        if node.nodeName() == "BroadcastHashJoin":
+            side = node.buildSide().toString()
+            build = kids[1] if side == "BuildRight" else kids[0]
+            found.append((side, {a.name() for a in _scala_list(build.output())}))
+        stack.extend(kids)
+    return found
+
+
+@pytest.mark.parametrize("name", sorted(GATED_BROADCASTS))
+def test_broadcast_gate_both_positions(spark, sf_dir, name):
+    """spark.planning_center.broadcastVocabulary gates each explicit
+    broadcast hint.  Default (true): every hinted join is a
+    BroadcastHashJoin building the small side on the right.  False,
+    with the size-based broadcast threshold disabled as well: no
+    BroadcastHashJoin at all, so no hint is left that would force a
+    build side too big for the driver at scale."""
+    from __spark_entry__ import queries
+
+    build = queries()[name]
+    joins = _broadcast_joins(build(spark, sf_dir))
+    for side_cols in GATED_BROADCASTS[name]:
+        assert any(
+            side == "BuildRight" and side_cols <= cols for side, cols in joins
+        ), (side_cols, joins)
+
+    gate = "spark.planning_center.broadcastVocabulary"
+    threshold = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(threshold)
+    spark.conf.set(gate, "false")
+    spark.conf.set(threshold, "-1")
     try:
-        df = graph_triangle_count(spark, sf_dir)
-        plan = df._jdf.queryExecution().executedPlan().toString()
+        plan = build(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        spark.conf.unset(gate)
+        spark.conf.set(threshold, prev)
     assert "BroadcastHashJoin" not in plan
 
 
