@@ -160,7 +160,7 @@ def main() -> None:
     # the total is recorded as `warmup_seconds` in the artifact, so
     # single-sample driver windows measure warm plans.
     warmup_list = [
-        next(iter(qs)),  # relational: JVM + parquet footers
+        "q1_pricing_summary",  # relational: JVM + parquet footers
         "emb_topk_pandas",  # pandas_udf -> Python worker pool fork
         "ev_wavg_grouped_arrow",  # applyInArrow path
         "ev_type_value_boxplot",  # grouped-map pandas

@@ -113,3 +113,15 @@ def semi_join_rename(
     return df.join(F.broadcast(mapping), key, "inner").withColumnRenamed(
         mapped_col, mapped_col
     )
+
+
+def gated_broadcast(df: DataFrame) -> DataFrame:
+    """Broadcast-hint `df` unless spark.planning_center.broadcastVocabulary
+    is "false".  A forced broadcast does not degrade when its side
+    outgrows the driver, it fails the query; this one switch lets every
+    explicit hint in the plans fall back to the planner's own join
+    choice at that scale without a code edit."""
+    gate = df.sparkSession.conf.get(
+        "spark.planning_center.broadcastVocabulary", "true"
+    )
+    return F.broadcast(df) if gate == "true" else df

@@ -1,484 +1,63 @@
 """Named end-to-end query plans exposed through __spark_entry__.py.
 
-Each module contributes `QUERIES: dict[name -> fn(spark, sf_dir) -> DataFrame]`
+Each submodule contributes `QUERIES: dict[name -> fn(spark, sf_dir) -> DataFrame]`
 and `ORACLES: dict[name -> ANSI SQL str]` (DuckDB-runnable over the
 pre-registered test-table views).  Column names are aliased identically
 on both sides — the driver sorts columns by name before hashing.
+`collect_all()` discovers the submodules, so a new module registers
+itself by defining both dicts.
 """
 
 from __future__ import annotations
 
+import importlib
+import pkgutil
 from collections.abc import Callable
+from itertools import chain, zip_longest
 
 from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-# DISCLOSURE (to the harness owner / judge — see also STATUS.md):
-# the grading harness hash-checks a fixed-size prefix of
-# collect_all()'s iteration order.  We deliberately order the prefix
-# "never-externally-sampled first" so each round's external check lands
-# on fresh queries (maximizing cumulative external coverage), per the
-# round-5 and round-6 VERDICT worklists which sanctioned and asked to
-# extend this rotation (round-7 VERDICT re-affirmed the arrangement).
-# The trade-off (previously-sampled queries are only re-verified by the
-# committed full-suite CROSSCHECK_SF01 artifact, regenerated each round
-# at sf0.01 AND sf0.1) was flagged by round-6 ADVICE; the mitigations
-# are (a) this open disclosure, kept current each round, (b) the
-# mandatory full-suite crosscheck each round, and (c) the CANARY
-# mechanism below, UNCONDITIONAL since round 9 (round-8 VERDICT item 2):
-# the first _N_CANARIES prefix slots always go to previously-verified
-# queries, rotating in _N_CANARIES-sized windows over the oldest-first
-# sampled list keyed on the newest committed CORRECTNESS round, so every
-# old query gets externally re-checked on a deterministic cycle.
-# Pool math as of round 11: the driver's r10 sample (45 fresh + 5
-# canaries, _DRIVER_SAMPLED_R10) and the round-10 judge's 34
-# bare-session checks (23 fresh, _JUDGE_SAMPLED_R10) extend the walk
-# to 364 distinct names in _SAMPLED_BY_ROUND; every registered query
-# has at least one driver- or judge-run hash-check (the last residue
-# was drained in round 10 by CROSSCHECK_NEVER_SAMPLED_R10.json plus
-# the judge's own 34-query pass, VERDICT.md r10).  A 50-sample with 5
-# canaries covers 45 fresh/round; with the fresh pool nearly drained
-# the rotation naturally degenerates toward re-verification, which is
-# the intent — new waves (50+) enter the fresh pool as they land.
-#
-# Names the harness hash-checked in CORRECTNESS_r01-r05 (all green).
-_DRIVER_SAMPLED_R1_R5 = frozenset({
-    "agg_cube_events", "agg_grouping_sets", "agg_rollup_orders",
-    "agg_stats_moments", "arr_dim_stats", "arr_setops_vocab",
-    "arr_vector_stats", "arr_zipwith_dot", "asof_cogrouped_pandas",
-    "asof_purchase_last_click", "cdc_scd1_apply", "corpus_mix_plan",
-    "corr_above_nation_avg", "cust_cohort_ltv", "cust_nation_gini",
-    "distinct_users_approx", "distinct_users_bitmap", "distinct_users_exact",
-    "distinct_users_hll_mergeable", "doc_bpe_merge_candidates", "doc_dedup_survivors",
-    "doc_dup_rate_by_source", "doc_exact_dedup", "doc_fingerprint",
-    "doc_hash_sample_per_source", "doc_hash_split", "doc_lang_confusion",
-    "doc_lang_guess", "doc_minhash_lsh", "doc_ngram_jaccard",
-    "doc_ngram_novelty", "doc_prefix_edit_near_dup", "doc_quality",
-    "doc_sequence_packing", "doc_simhash", "doc_simhash_near_dups",
-    "doc_token_stats", "doc_word_freq", "ev_dedup_first",
-    "ev_funnel_ttc", "ev_hourly_profile", "ev_interval_join",
-    "ev_json_props", "ev_mad_outliers", "ev_max_concurrency",
-    "ev_sessionize", "ev_sliding_window", "ev_top_users",
-    "ev_tumbling_window", "ev_user_share_pandas", "ev_wavg_grouped_pandas",
-    "fn_conditional", "fn_datetime", "fn_listagg_top_customers",
-    "fn_map_props", "fn_regexp", "fn_string_math",
-    "j_anti_customers_without_orders", "j_semi_late_orders", "median_order_price",
-    "pivot_status_priority", "q10_returned_revenue", "q10_shuffle_hash_variant",
-    "q11_important_parts", "q12_priority_classes", "q13_customer_distribution",
-    "q14_promo_share", "q15_top_supplier", "q16_supplier_variety",
-    "q17_small_qty_revenue", "q18_big_orders", "q19_disjunctive_revenue",
-    "q1_pricing_summary", "q20_dominant_suppliers", "q21_solo_late_suppliers",
-    "q22_idle_customers", "q2_min_cost_supplier", "q3_shipping_priority",
-    "q4_priority_exists", "q5_local_supplier_volume", "q6_forecast_revenue",
-    "q7_nation_volume", "q8_market_share", "q9_product_profit",
-    "range_join_price_bands", "ref_count_validation", "ref_presentation",
-    "ref_range_copy", "ref_semijoin_rename", "salted_join_orders",
-    "scd2_customer_priority", "set_customer_years", "stat_ab_conversion",
-    "ts_gap_fill_daily", "ts_interpolate_linear", "ts_seasonal_naive_mape",
-    "win_customer_order_history", "win_frame_variants", "win_gaps_islands",
-    "win_range_rolling_spend", "win_rank_variants",
-})
-
-# Names the harness hash-checked in CORRECTNESS_r06 (50/50 green).
-_DRIVER_SAMPLED_R6 = frozenset({
-    "agg_filter_clause", "agg_salted_skew", "corpus_curate_e2e",
-    "cust_entity_resolution", "cust_rfm_global_quintiles", "doc_filter_funnel",
-    "doc_incremental_dedup_merge", "doc_minhash_lsh_portable", "doc_minhash_portable",
-    "doc_quality_bins_fixed", "doc_quality_deciles", "doc_weighted_sample",
-    "doc_weighted_sample_stratified", "dq_audit_report", "emb_dup_threshold_sweep",
-    "emb_label_centroid_drift", "ev_daily_poisson_outliers", "ev_markov_transitions",
-    "ev_power_users_p90", "ev_session_window_batch", "ev_skipgram_pairs",
-    "ev_top_journeys", "ev_wavg_grouped_arrow", "fn_bitwise",
-    "fn_month_spine", "fn_string_edit", "fn_try_arith",
-    "fn_unpivot_orders", "freq_heavy_hitters", "geo_radius_pairs",
-    "graph_bfs_hops", "graph_pagerank_parts", "hist_order_totals",
-    "j_nullsafe_priority", "ml_calibration_bins", "mm_shard_plan",
-    "ord_open_backlog_daily", "priv_k_anonymity", "q_lateral_top2_orders",
-    "rec_negative_sampling", "rel_integrity_audit", "sql_param_binding",
-    "stat_chi2_brand_size", "stat_trimmed_mean", "stat_welch_t",
-    "sup_acct_benford", "sup_part_hhi", "ts_autocorrelation",
-    "ts_interval_union_length", "zorder_file_manifest",
-})
-
-# Names the harness hash-checked in CORRECTNESS_r07 (50/50 green).
-_DRIVER_SAMPLED_R7 = frozenset({
-    "agg_bitwise_masks", "agg_mode_segment", "agg_percentiles",
-    "cf_item_item_cosine", "cust_order_gap_histogram", "doc_bpe_token_count",
-    "doc_cms_token_counts", "doc_containment_pairs", "doc_exact_stratified_split",
-    "doc_jaccard_prefix_filter", "doc_kfold_split", "doc_near_dup_edges",
-    "doc_rag_chunks", "doc_simhash_portable", "doc_stopword_leakage",
-    "doc_tokenizer_fertility", "emb_ivfpq_adc", "emb_lsh_recall_sweep",
-    "emb_topk_cosine", "er_fuzzy_name_match", "ev_basket_triples",
-    "ev_bounce_rate", "ev_path_regex_funnel", "ev_type_value_boxplot",
-    "fn_agg_argmax", "fn_variant_props", "graph_bipartite_kcore_rounds",
-    "graph_common_neighbors", "graph_pagerank_transitions", "graph_triangle_count",
-    "jw_best_match_parts", "li_lineposition_stats", "li_margin_waterfall",
-    "li_price_consistency_audit", "li_price_volume_mix", "ml_decile_lift",
-    "ml_threshold_metrics", "ord_reorder_intervals", "ord_revenue_bridge",
-    "q_null_semantics", "rec_contrastive_pairs", "sql_recursive_tree",
-    "stat_ks_two_sample", "stat_mann_whitney", "surv_hazard_curve",
-    "theta_user_set_ops", "ts_ses_forecast_int", "win_share_of_parent",
-    "win_topn_group_limit", "win_value_positions",
-})
-
-# Names the harness hash-checked in CORRECTNESS_r08 (50/50 green).
-_DRIVER_SAMPLED_R8 = frozenset({
-    "data_profile_orders", "doc_boilerplate_prefixes", "doc_cdc_chunks",
-    "doc_chunk_dedup", "doc_cross_source_dup", "doc_dedup_savings",
-    "doc_dup_clusters", "doc_jaccard_rare_prefix", "doc_pii_scrub",
-    "doc_zipf_rankfreq", "emb_dim_trunc_recall", "emb_hard_negatives",
-    "emb_ivf_nprobe_recall_sweep", "emb_near_dup_pairs", "emb_semantic_dedup",
-    "emb_topk_pandas", "ev_audience_overlap", "ev_avro_roundtrip_agg",
-    "ev_entropy_by_type", "ev_retention_triangle", "ev_window_funnel",
-    "fn_map_hof", "graph_minhash_neighbors", "inc_merge_rollup",
-    "li_abc_xyz_matrix", "li_discount_elasticity", "li_newsvendor_quantile",
-    "li_scd2_pit_revenue", "li_ship_sla_percentiles", "ml_auc_rank",
-    "ml_map_mrr_at10", "ml_ndcg_at10", "mm_dedup_by_hash",
-    "mm_png_roundtrip_agg", "ord_fiscal_445_revenue", "ord_iso_week_revenue",
-    "pareto_orders_skyline", "priv_generalization_ladder", "priv_l_diversity",
-    "rolling_distinct_users_7d", "set_orders_intersect_all", "sql_pipe_orders",
-    "sql_scalar_udf_orders", "sup_credit_risk_exposure", "sup_lead_time_trend",
-    "ts_changepoint_daily", "ts_ewma_spend", "ts_rolling_ols_slope",
-    "ts_seasonal_decompose", "ts_yoy_growth",
-})
-
-# Names the harness hash-checked in CORRECTNESS_r09 (50/50 green).
-# The 5 canary names (agg_cube_events, agg_grouping_sets,
-# agg_rollup_orders, agg_stats_moments, arr_dim_stats) already live in
-# _DRIVER_SAMPLED_R1_R5 and are deliberately NOT repeated here — the
-# canary picker's flattened walk must stay duplicate-free.
-_DRIVER_SAMPLED_R9 = frozenset({
-    "asof_nearest_event", "asof_next_event_forward", "bloom_prune_orders",
-    "compaction_plan_orders", "cust_abc_pareto", "cust_decile_migration",
-    "cust_lorenz_deciles", "cust_rfm_segments", "data_skew_report",
-    "doc_kl_divergence_sources", "doc_repetition_signals",
-    "doc_stratified_topk_sample", "doc_tfidf_top_terms", "doc_unigram_xent",
-    "doc_vocab_coverage", "doc_zipf_slope", "emb_bitpack_hamming",
-    "emb_centroid_by_label", "emb_near_dup_lsh", "ev_cusum_shift",
-    "ev_dow_hour_heatmap", "ev_longest_streak", "ev_markov_stationary",
-    "ev_position_attribution", "ev_user_lifespan_days", "fn_collation_group",
-    "gdpr_purge_audit", "graph_components_minlabel",
-    "graph_degree_assortativity", "li_otif_by_month", "li_price_index_fisher",
-    "li_weighted_median_price", "mm_jpeg_roundtrip_agg",
-    "ord_mann_kendall_trend", "ord_queue_wait_closed_form",
-    "priv_dp_noisy_counts", "sql_group_by_all", "sql_scalar_subquery_orders",
-    "stat_cochran_q", "stat_cohens_kappa", "stat_kendall_tau_b",
-    "stat_spearman_rank", "sup_nation_hhi", "ts_monthly_seasonal_index",
-    "ts_theil_sen_slope",
-})
-
-# Names the round-9 judge crosschecked bare-session (23/23 green,
-# VERDICT.md r9) — external verification outside the driver's samples.
-_JUDGE_SAMPLED_R9 = frozenset({
-    "cust_survival_km", "doc_bigram_entropy_rate", "doc_hapax_ratio",
-    "doc_term_burstiness", "doc_yule_k", "emb_hamming_recall_at3",
-    "ev_cohort_half_life", "ev_interarrival_burstiness",
-    "fn_regexp_extract_all", "graph_local_clustering",
-    "li_bollinger_outliers", "li_theil_index", "li_vwap_by_month",
-    "ml_brier_decomposition", "ml_mcc_confusion", "ord_little_law",
-    "stat_cvm_two_sample", "stat_friedman", "stat_kruskal_wallis",
-    "stat_mood_median", "sup_kraljic_matrix", "ts_ljung_box",
-    "ts_wma_crossover",
-})
-
-# Names the harness hash-checked in CORRECTNESS_r10 (50/50 green).
-# The 5 canaries (arr_setops_vocab, arr_vector_stats, arr_zipwith_dot,
-# asof_cogrouped_pandas, asof_purchase_last_click) live in
-# _DRIVER_SAMPLED_R1_R5 and are not repeated here.
-_DRIVER_SAMPLED_R10 = frozenset({
-    "attr_linear_touch", "basket_part_pairs", "cust_basket_diversity",
-    "cust_category_entropy", "cust_pit_training_features",
-    "data_corr_matrix", "doc_bm25_scores", "doc_common_substring_pairs",
-    "doc_readability_fk", "doc_udtf_chunks", "emb_ann_ivf", "emb_ann_lsh",
-    "emb_gram_arrow", "emb_gram_matrix", "emb_int8_quantize",
-    "emb_kmeans_step", "emb_knn_classify", "emb_mips_topk", "emb_pq_codes",
-    "ev_bigram_lift", "ev_fano_burstiness", "ev_funnel_stages",
-    "ev_retention_cohorts", "ev_stickiness", "ev_transition_matrix",
-    "fn_decimal_exact", "graph_powerlaw_degree_fit", "li_eoq_policy",
-    "mm_jpeg_color_roundtrip_agg", "ord_duplicate_invoices",
-    "ord_keyspace_density", "ord_runs_test", "priv_t_closeness",
-    "rank_rbo_topk", "stat_anova_oneway", "stat_bh_fdr",
-    "stat_bootstrap_ci", "stat_brown_forsythe", "stat_g_test",
-    "stat_permutation_test", "stat_wilson_ci_returns", "ts_max_drawdown",
-    "ts_rolling_median", "ts_spectral_peaks_daily",
-    "win_distribution_ranks",
-})
-
-# Names the round-10 judge crosschecked bare-session (34/34 green,
-# VERDICT.md r10; lists preserved from /tmp/judge_cc_r10*.json).  The
-# 11 judge names already covered by an earlier round or by
-# _DRIVER_SAMPLED_R10 (agg_grouping_sets, cust_category_entropy,
-# doc_minhash_lsh_portable, emb_int8_quantize, ev_markov_stationary,
-# graph_components_minlabel, graph_powerlaw_degree_fit,
-# mm_jpeg_color_roundtrip_agg, q1_pricing_summary, stat_bh_fdr,
-# ts_spectral_peaks_daily) are not repeated — the flattened walk stays
-# duplicate-free.
-_JUDGE_SAMPLED_R10 = frozenset({
-    "agg_kll_value_quantiles", "data_diff_report", "doc_decontaminate",
-    "doc_shard_manifest", "doc_training_order", "emb_pca_variance",
-    "emb_silhouette_centroid", "ev_capped_sessions", "ev_type_affinity",
-    "ev_zscore_anomaly", "ml_psi_priority_shift", "mm_audio_rms",
-    "mm_binary_features", "mm_frame_sample", "mm_resize_thumb",
-    "ord_mase_seasonal", "rank_kendall_w_nations", "rec_training_set_e2e",
-    "set_except_all_priorities", "stat_bartlett_qty", "stat_grubbs_max",
-    "sup_cr4_concentration", "ts_ols_trend",
-})
-
-# Names the harness hash-checked in CORRECTNESS_r11 (50/50 green) that
-# an earlier round had not already covered — the six wave-50 newcomers;
-# the other 44 r11 samples were repeats and are not duplicated here.
-# The round-11 judge's own 14-query both-SF crosscheck (VERDICT.md r11)
-# adds no new names either: all 14 (the six newcomers plus
-# ev_markov_stationary, rank_kendall_w_nations, ord_mase_seasonal,
-# mm_jpeg_color_roundtrip_agg, mm_jpeg_roundtrip_agg,
-# graph_components_minlabel, doc_simhash, q21_solo_late_suppliers)
-# were already in earlier-round sets or in this one.
-_DRIVER_SAMPLED_R11 = frozenset({
-    "emb_davies_bouldin", "ev_entropy_rate_stationary",
-    "li_gini_by_brand", "stat_jonckheere_terpstra",
-    "ts_holt_winters_additive", "ts_hurst_rs",
-})
-
-# Oldest-verified first: the canary picker walks these in order.
-_SAMPLED_BY_ROUND = (
-    _DRIVER_SAMPLED_R1_R5,
-    _DRIVER_SAMPLED_R6,
-    _DRIVER_SAMPLED_R7,
-    _DRIVER_SAMPLED_R8,
-    _DRIVER_SAMPLED_R9 | _JUDGE_SAMPLED_R9,
-    _DRIVER_SAMPLED_R10 | _JUDGE_SAMPLED_R10,
-    _DRIVER_SAMPLED_R11,
-)
-_DRIVER_SAMPLED = frozenset().union(*_SAMPLED_BY_ROUND)
-
-# Number of prefix slots UNCONDITIONALLY reserved for previously-verified
-# canaries (round-8 VERDICT item 2: start canaries by fiat, not by
-# pool-size trigger — the trigger kept deferring the first re-check).
-_N_CANARIES = 5
-
-
-def _newest_correctness_round() -> int:
-    """Round number of the newest committed CORRECTNESS_r*.json, parsed
-    NUMERICALLY (round-8 ADVICE: lexicographic sort breaks past r99),
-    resolved lazily at collect_all() time (not import time).  Returns 0
-    when no artifact exists (fresh checkout / round 1)."""
-    import glob
-    import os
-    import re
-
-    here = os.path.dirname(os.path.dirname(os.path.dirname(__file__)))
-    best = 0
-    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if m:
-            best = max(best, int(m.group(1)))
-    return best
-
-
-def _canary_names(oracles: dict[str, str]) -> list[str]:
-    """The _N_CANARIES oldest-verified queries whose turn it is this
-    round.  The rotation walks the oldest-first flattened sampled list
-    in _N_CANARIES-sized windows keyed on the newest committed
-    CORRECTNESS round (r08 -> window 0, r09 -> window 1, ...), so over
-    successive rounds external evidence cycles back over EVERY
-    previously-verified query, oldest era first, deterministically."""
-    flat = [
-        n
-        for round_set in _SAMPLED_BY_ROUND
-        for n in sorted(round_set)
-        if n in oracles
-    ]
-    if not flat:
-        return []
-    start = (max(0, _newest_correctness_round() - 8) * _N_CANARIES) % len(flat)
-    return [flat[(start + i) % len(flat)] for i in range(_N_CANARIES)]
-
 
 def collect_all() -> tuple[dict[str, QueryFn], dict[str, str]]:
-    """Aggregate queries + oracles from every plan module."""
-    from planning_center_data_pipeline_spark.plans import (
-        advanced,
-        analytic,
-        arrays,
-        corpus,
-        extensions,
-        lifecycle,
-        pandas_ops,
-        reference,
-        relational,
-        scalars_extra,
-        streaming_batch,
-        tpch_extra,
-        wave4,
-        wave4b,
-        wave4c,
-        wave4d,
-        wave5,
-        wave6,
-        wave7,
-        wave8,
-        wave9,
-        wave10,
-        wave11,
-        wave12,
-        wave13,
-        wave14,
-        wave15,
-        wave16,
-        wave17,
-        wave18,
-        wave19,
-        wave20,
-        wave21,
-        wave22,
-        wave23,
-        wave24,
-        wave25,
-        wave26,
-        wave27,
-        wave28,
-        wave29,
-        wave30,
-        wave31,
-        wave32,
-        wave33,
-        wave34,
-        wave35,
-        wave36,
-        wave37,
-        wave38,
-        wave39,
-        wave40,
-        wave41,
-        wave42,
-        wave43,
-        wave44,
-        wave45,
-        wave46,
-        wave47,
-        wave48,
-        wave49,
-        wave50,
-        wave51,
-        wave52,
-    )
+    """Aggregate queries + oracles from every plan module.
 
-    modules = (
-        relational,
-        tpch_extra,
-        analytic,
-        arrays,
-        scalars_extra,
-        pandas_ops,
-        reference,
-        streaming_batch,
-        extensions,
-        corpus,
-        lifecycle,
-        advanced,
-        wave4,
-        wave4b,
-        wave4c,
-        wave4d,
-        wave5,
-        wave6,
-        wave7,
-        wave8,
-        wave9,
-        wave10,
-        wave11,
-        wave12,
-        wave13,
-        wave14,
-        wave15,
-        wave16,
-        wave17,
-        wave18,
-        wave19,
-        wave20,
-        wave21,
-        wave22,
-        wave23,
-        wave24,
-        wave25,
-        wave26,
-        wave27,
-        wave28,
-        wave29,
-        wave30,
-        wave31,
-        wave32,
-        wave33,
-        wave34,
-        wave35,
-        wave36,
-        wave37,
-        wave38,
-        wave39,
-        wave40,
-        wave41,
-        wave42,
-        wave43,
-        wave44,
-        wave45,
-        wave46,
-        wave47,
-        wave48,
-        wave49,
-        wave50,
-        wave51,
-        wave52,
-    )
-    # duplicate names across modules would silently shadow each other
-    # in the dict merges below — fail loudly instead
-    seen: dict[str, str] = {}
-    for mod in modules:
-        for n in mod.QUERIES:
-            if n in seen:  # not assert: must survive python -O
-                raise ValueError(
-                    f"duplicate query name {n!r} in {mod.__name__} and {seen[n]}"
-                )
-            seen[n] = mod.__name__
-
+    Modules are imported in sorted name order and their queries
+    interleaved round-robin, every module's oracle-backed queries
+    before any rows-only one, so any prefix of the result spans every
+    operator family and the order depends only on this package.
+    """
+    modules = [
+        importlib.import_module(f"{__name__}.{name}")
+        for name in sorted(m.name for m in pkgutil.iter_modules(__path__))
+    ]
+    by_name: dict[str, QueryFn] = {}
+    owner: dict[str, str] = {}
     oracles: dict[str, str] = {}
     for mod in modules:
+        if not hasattr(mod, "QUERIES") or not hasattr(mod, "ORACLES"):
+            raise ValueError(f"{mod.__name__} must define QUERIES and ORACLES")
+        # duplicate names would silently shadow each other — fail loudly
+        # (not assert: must survive python -O)
+        for n, fn in mod.QUERIES.items():
+            if n in owner:
+                raise ValueError(
+                    f"duplicate query name {n!r} in {mod.__name__} and {owner[n]}"
+                )
+            owner[n] = mod.__name__
+            by_name[n] = fn
         oracles.update(mod.ORACLES)
-
-    # The harness hash-checks a prefix of this dict's iteration order.
-    # Interleave modules round-robin (oracle-backed entries first within
-    # each module) so any prefix spans every operator family and spends
-    # no checked slot on a rows-only (no-oracle) query before it must.
-    # Within each module, oracle-backed queries the harness has NEVER
-    # sampled go first, so each round's prefix lands on fresh external
-    # evidence (see the DISCLOSURE comment at the top of this file); the
-    # committed full-suite crosscheck covers every query regardless.
-    fresh_mod, stale_mod, bare_mod = [], [], []
-    for mod in modules:
-        names = list(mod.QUERIES)
-        fresh_mod.append(
-            [n for n in names if n in oracles and n not in _DRIVER_SAMPLED]
-        )
-        stale_mod.append([n for n in names if n in oracles and n in _DRIVER_SAMPLED])
-        bare_mod.append([n for n in names if n not in oracles])
-
-    # CANARY mechanism (round-6 VERDICT item 9; made UNCONDITIONAL per
-    # round-8 VERDICT item 2): the first _N_CANARIES prefix slots always
-    # go to previously-verified queries, rotating oldest-era-first each
-    # round, so external evidence cycles back over old queries instead
-    # of going permanently self-reported-only.
-    canaries = _canary_names(oracles)
-
-    queries: dict[str, QueryFn] = {}
-    by_name = {n: mod.QUERIES[n] for mod in modules for n in mod.QUERIES}
-    for n in canaries:
-        queries[n] = by_name[n]
-    for tier in (fresh_mod, stale_mod, bare_mod):
-        for wave in range(max(len(m) for m in tier)):
-            for mod, names in zip(modules, tier):
-                if wave < len(names) and names[wave] not in queries:
-                    queries[names[wave]] = mod.QUERIES[names[wave]]
-    missing = set(oracles) - set(queries)
-    if missing:  # not assert: must survive python -O
+    missing = set(oracles) - set(by_name)
+    if missing:
         raise ValueError(f"oracle without query: {missing}")
+
+    tiers = (
+        [[n for n in mod.QUERIES if n in oracles] for mod in modules],
+        [[n for n in mod.QUERIES if n not in oracles] for mod in modules],
+    )
+    order = chain.from_iterable(
+        chain.from_iterable(zip_longest(*tier)) for tier in tiers
+    )
+    queries = {n: by_name[n] for n in order if n is not None}
     return queries, oracles

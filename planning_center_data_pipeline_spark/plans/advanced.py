@@ -34,11 +34,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from planning_center_data_pipeline_spark.functions.temporal import epoch_us
+from planning_center_data_pipeline_spark.operators.joins import gated_broadcast
 from planning_center_data_pipeline_spark.sources.tables import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # --- exact mergeable distinct via bitmaps -----------------------------------
@@ -52,7 +49,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # HLL sketch in distinct_users_hll_mergeable.
 
 def distinct_users_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     per_bucket = e.groupBy(
         "event_type", F.bitmap_bucket_number("user_id").alias("bkt")
     ).agg(
@@ -79,7 +76,7 @@ FROM events GROUP BY event_type ORDER BY event_type
 # identical at any partition count.
 
 def fn_listagg_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     w = Window.partitionBy("c_mktsegment", "c_nationkey").orderBy(
         F.desc("c_acctbal"), F.col("c_custkey")
     )
@@ -126,7 +123,7 @@ _CONC_US = 300 * 1_000_000
 
 
 def ev_max_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events").withColumn("tus", epoch_us("ts"))
+    e = load_table(spark, sf_dir, "events").withColumn("tus", epoch_us("ts"))
     opens = e.select("event_type", F.col("tus").alias("t"), F.lit(1).alias("d"))
     closes = e.select(
         "event_type", (F.col("tus") + F.lit(_CONC_US)).alias("t"),
@@ -180,7 +177,7 @@ _COVER_US = 600 * 1_000_000
 
 
 def ts_interval_union_length(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, sf_dir, "events").select(
         "user_id",
         epoch_us("ts").alias("s"),
         (epoch_us("ts") + F.lit(_COVER_US)).alias("e"),
@@ -270,7 +267,7 @@ def _morton16(bx: str, by: str) -> str:
 
 def zorder_file_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .withColumn("odus", epoch_us("o_orderdate"))
         .select(
             "o_orderkey",
@@ -370,15 +367,14 @@ FROM numbered GROUP BY file_id ORDER BY file_id
 #
 # Scale note: the degree and adjacency tables are |V|-cardinality —
 # the same order as the edge list on sparse graphs.  r13: they carry
-# an EXPLICIT broadcast hint, gated on
-# spark.planning_center.broadcastVocabulary — measurement showed the
-# planner choosing sort-merge for the probe join (shuffling |E| rows
-# that each carry a full adjacency array) because the probe side is a
-# Generate over a checkpointed RDD whose size estimate is the tiny
-# pre-explode one (the wave39 trap).  On a billion-node graph set the
-# conf false and the identical plan degrades to shuffle joins keyed on
-# the node id; the O(sqrt E) out-degree bound from orientation still
-# caps the per-row array size.
+# an EXPLICIT broadcast hint through operators.joins.gated_broadcast
+# — measurement showed the planner choosing sort-merge for the probe
+# join (shuffling |E| rows that each carry a full adjacency array)
+# because the probe side is a Generate over a checkpointed RDD whose
+# size estimate is the tiny pre-explode one (the wave39 trap).  On a
+# billion-node graph switch the gate off and the identical plan
+# degrades to shuffle joins keyed on the node id; the O(sqrt E)
+# out-degree bound from orientation still caps the per-row array size.
 # localCheckpoint(eager=False) keeps plan *construction* lazy (no jobs
 # run at build time — explain-only callers pay nothing); the subtree
 # still materializes exactly once at first action and every consumer
@@ -405,7 +401,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Adjacency rows stay bounded at scale: per-part co-purchase
     # degree does not grow with SF (parts scale with SF).
     # Measured 4.1 -> 2.5 s warm at sf0.1; n/m/t bit-identical.
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     baskets = (
         li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
         .groupBy("ok")
@@ -431,15 +427,11 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so letting the planner pick a sort-merge join (it did — the
     # Generate size-estimate trap, see plans/wave39) shuffles |E| x
     # array payload; broadcasting the |V|-row adjacency/degree side
-    # moves the payload zero times.  Gated on the shared conf so an
-    # extreme-scale |V| falls back to shuffle joins without a code
-    # edit (the O(sqrt E) orientation bound still caps array sizes).
-    _bc = (
-        spark.conf.get("spark.planning_center.broadcastVocabulary", "true")
-        == "true"
-    )
+    # moves the payload zero times.  Gated so an extreme-scale |V|
+    # falls back to shuffle joins without a code edit (the O(sqrt E)
+    # orientation bound still caps array sizes).
     oriented = (
-        exploded.join(F.broadcast(degv) if _bc else degv, "v")
+        exploded.join(gated_broadcast(degv), "v")
         .select(
             F.when(
                 (F.col("deg") < F.col("deg_v"))
@@ -460,9 +452,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         "s", "nbrs_s", F.explode("nbrs_s").alias("t")
     )
     adj_t = adj.select(F.col("s").alias("t"), F.col("nbrs").alias("nbrs_t"))
-    per_edge = probe.join(
-        F.broadcast(adj_t) if _bc else adj_t, "t", "left"
-    ).select(
+    per_edge = probe.join(gated_broadcast(adj_t), "t", "left").select(
         F.size(
             F.array_intersect(
                 F.col("nbrs_s"),
@@ -509,7 +499,7 @@ JOIN edges e3 ON e3.u = e1.u AND e3.v = e2.v
 # apply) while state stays 128 KB per group.
 
 def theta_user_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     sk = e.agg(
         F.expr(
             "theta_sketch_agg(CASE WHEN event_type = 'click' THEN user_id END, 14)"
@@ -556,7 +546,7 @@ SELECT
 # day — the rolling union runs on aggregate state, never raw events.
 
 def rolling_distinct_users_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events").withColumn("tus", epoch_us("ts"))
+    e = load_table(spark, sf_dir, "events").withColumn("tus", epoch_us("ts"))
     daily = (
         e.withColumn("day", F.expr("tus DIV 86400000000"))
         .groupBy("day", F.bitmap_bucket_number("user_id").alias("bkt"))
@@ -621,7 +611,7 @@ def _skyline_scan(df: DataFrame, part_cols: list[str]) -> DataFrame:
 
 def pareto_orders_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .withColumn("odus", epoch_us("o_orderdate"))
         .select("o_orderkey", "o_totalprice", "odus")
     )

@@ -23,10 +23,6 @@ from planning_center_data_pipeline_spark.functions.temporal import epoch_us
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 REVENUE_SQL = (
     "CAST(ROUND(l_extendedprice*100) AS BIGINT)"
     " * (100 - CAST(ROUND(l_discount*100) AS BIGINT))"
@@ -38,7 +34,7 @@ REVENUE_SQL = (
 # the agg is a partial+final sum of one long column — scan-bound.
 
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     return (
         l.filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -71,11 +67,11 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01'
 # --- q14: promo revenue share (broadcast dim + conditional agg) -------------
 
 def q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem").filter(
+    l = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1995-09-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1995-10-01").cast("timestamp"))
     )
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     rev = cents("l_extendedprice") * (100 - cents("l_discount"))
     promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0).cast("bigint"))
     return (
@@ -106,8 +102,8 @@ WHERE l_shipdate >= TIMESTAMP '1995-09-01'
 # left_semi never widens rows and stops probing a key on first match.
 
 def j_semi_late_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    l = load_table(spark, sf_dir, "lineitem")
     return (
         o.join(
             l,
@@ -137,8 +133,8 @@ ORDER BY o_orderpriority
 # --- anti join: customers with no recent orders -----------------------------
 
 def j_anti_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") >= F.lit("2000-01-01").cast("timestamp")
     )
     return (
@@ -168,7 +164,7 @@ ORDER BY c_mktsegment
 # ~= product of level cardinalities, tiny regardless of input size.
 
 def agg_rollup_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.rollup("o_orderstatus", "o_orderpriority")
         .agg(
@@ -192,7 +188,7 @@ ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST
 
 
 def agg_cube_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     bucket = (F.col("user_id") % 3).alias("user_bucket")
     return (
         e.select("event_type", bucket, "value")
@@ -221,7 +217,7 @@ ORDER BY event_type NULLS FIRST, user_bucket NULLS FIRST
 # One shuffle on o_custkey; all three functions share the same frame.
 
 def win_customer_order_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     price_c = cents("o_totalprice")
     return (
@@ -265,7 +261,7 @@ ORDER BY o_custkey, order_seq
 # tagged so one result table carries all three.
 
 def set_customer_years(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
 
     def buyers(year: int) -> DataFrame:
         return (
@@ -312,7 +308,7 @@ SELECT tag, COUNT(*) AS n_customers FROM tagged GROUP BY tag ORDER BY tag
 # the max event_id among equal-ts clicks wins — fully deterministic.
 
 def asof_purchase_last_click(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events").withColumn("tus", epoch_us("ts"))
+    e = load_table(spark, sf_dir, "events").withColumn("tus", epoch_us("ts"))
     clicks = e.filter(F.col("event_type") == "click").select(
         "user_id", "tus", F.lit(0).alias("side"), F.col("event_id")
     )
@@ -377,7 +373,7 @@ _BANDS = [
 
 
 def range_join_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     bands = o.sparkSession.createDataFrame(
         _BANDS, "band string, lo double, hi double"
     )
@@ -410,9 +406,9 @@ GROUP BY band ORDER BY band
 # --- q18: agg-then-join (big orders) ----------------------------------------
 
 def q18_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    l = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
     big = (
         l.groupBy("l_orderkey")
         .agg(money_sum(cents("l_quantity")).alias("total_qty"))
@@ -453,13 +449,13 @@ LIMIT 100
 # --- q10: returned-item revenue per customer --------------------------------
 
 def q10_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    o = _t(spark, sf_dir, "orders").filter(
+    l = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-10-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     )
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
     rev = cents("l_extendedprice") * (100 - cents("l_discount"))
     return (
         l.join(o, l.l_orderkey == o.o_orderkey)
@@ -493,7 +489,7 @@ LIMIT 20
 # implementations differ across engines by design).
 
 def distinct_users_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy("event_type")
         .agg(F.countDistinct("user_id").alias("n_users"))
@@ -511,7 +507,7 @@ def distinct_users_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HLL++ sketch distinct — the 100 TB path (no exact-distinct
     shuffle explosion). Rows-only check; accuracy vs exact is asserted
     in unit tests."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy("event_type")
         .agg(F.approx_count_distinct("user_id", 0.02).alias("n_users_approx"))
@@ -526,7 +522,7 @@ def distinct_users_hll_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
     store per-slice sketch bytes, merge at query time, never rescan.
     Rows-only check (sketch internals have no SQL twin); the estimate's
     error bound vs exact is unit-tested."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     per_type = e.groupBy("event_type").agg(
         F.hll_sketch_agg("user_id", 14).alias("sketch")
     )
@@ -545,7 +541,7 @@ def distinct_users_hll_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (single shuffle on the groupBy key, no per-pivot-value passes).
 
 def pivot_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     df = (
         o.withColumn("pr", F.split_part(F.col("o_orderpriority"), F.lit("-"), F.lit(1)))
         .groupBy("o_orderstatus")
@@ -577,7 +573,7 @@ ORDER BY o_orderstatus
 # agg+rejoin); the window form shuffles once on the correlation key.
 
 def corr_above_nation_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     w = Window.partitionBy("c_nationkey")
     nat_avg = (
         F.sum(cents("c_acctbal")).over(w).cast("double")
@@ -613,7 +609,7 @@ GROUP BY c_nationkey ORDER BY c_nationkey
 # --- ranking-function variants ----------------------------------------------
 
 def win_rank_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.desc("value"), "event_id")
     return (
         e.select(
@@ -647,7 +643,7 @@ ORDER BY user_id, rn
 # grouping_id disambiguates which set produced each row.
 
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_gs")
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_gs")
     return spark.sql(
         """
         SELECT o_orderstatus, o_orderpriority,
@@ -679,8 +675,8 @@ def salted_join_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical results prove the salting is semantics-preserving."""
     from planning_center_data_pipeline_spark.operators.joins import salted_join
 
-    o = _t(spark, sf_dir, "orders").withColumnRenamed("o_custkey", "c_custkey")
-    c = _t(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").withColumnRenamed("o_custkey", "c_custkey")
+    c = load_table(spark, sf_dir, "customer")
     return (
         salted_join(o, c, "c_custkey", salt_src="o_orderkey", n_salts=8)
         .groupBy("c_mktsegment")
@@ -703,7 +699,7 @@ GROUP BY c_mktsegment ORDER BY c_mktsegment
 # --- scalar function showcases ----------------------------------------------
 
 def fn_string_math(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
         F.upper("p_name").alias("up_name"),
@@ -736,7 +732,7 @@ FROM part ORDER BY p_partkey
 
 
 def fn_datetime(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     d = F.col("o_orderdate")
     return o.select(
         "o_orderkey",
@@ -771,16 +767,16 @@ FROM orders ORDER BY o_orderkey
 # (supp_nation, cust_nation) pairs.
 
 def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    n1 = _t(spark, sf_dir, "nation").select(
+    n1 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation")
     )
-    n2 = _t(spark, sf_dir, "nation").select(
+    n2 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("cust_nation")
     )
-    s = _t(spark, sf_dir, "supplier")
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem").filter(
+    s = load_table(spark, sf_dir, "supplier")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
+    l = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
     )
@@ -830,7 +826,7 @@ ORDER BY supp_nation, cust_nation, l_year
 # is sketch-based and engine-specific, so it stays rows-only territory.
 
 def median_order_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderstatus").orderBy(
         cents("o_totalprice"), "o_orderkey"
     )
@@ -870,7 +866,7 @@ GROUP BY o_orderstatus ORDER BY o_orderstatus
 # --- window frames: lead / first_value / nth_value / range frame ------------
 
 def win_frame_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     wo = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     price = cents("o_totalprice")
     return (
@@ -917,7 +913,7 @@ ORDER BY o_custkey, o_orderkey
 # --- regexp scalar showcase -------------------------------------------------
 
 def fn_regexp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     return (
         p.filter(F.col("p_name").rlike("^[a-z]+ [a-z]+$"))
         .select(
@@ -950,13 +946,13 @@ ORDER BY p_partkey
 # oracle is the SAME SQL — identical results under any join strategy.
 
 def q10_shuffle_hash_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    o = _t(spark, sf_dir, "orders").filter(
+    l = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-10-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     )
-    c = _t(spark, sf_dir, "customer").hint("shuffle_hash")
-    n = _t(spark, sf_dir, "nation").hint("shuffle_hash")
+    c = load_table(spark, sf_dir, "customer").hint("shuffle_hash")
+    n = load_table(spark, sf_dir, "nation").hint("shuffle_hash")
     rev = cents("l_extendedprice") * (100 - cents("l_discount"))
     return (
         l.join(o.hint("shuffle_hash"), l.l_orderkey == o.o_orderkey)
@@ -977,7 +973,7 @@ def scd2_customer_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning (change detection via lag on the full stream, then
     lead over the surviving change rows), so the data shuffles once
     and both windows run in the same sort."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     ch = o.withColumn(
         "prev_prio", F.lag("o_orderpriority").over(w)
@@ -1030,8 +1026,8 @@ ORDER BY custkey, valid_from, priority
 # o_orderkey.
 
 def q_lateral_top2_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("v_customer")
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
+    load_table(spark, sf_dir, "customer").createOrReplaceTempView("v_customer")
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
     return spark.sql(
         """
         SELECT c.c_custkey, t.o_orderkey,
@@ -1073,7 +1069,7 @@ ORDER BY c.c_custkey, price_cents DESC, o_orderkey
 # IS NOT DISTINCT FROM is the ANSI spelling of the same predicate.
 
 def j_nullsafe_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     left = o.groupBy(
         F.nullif("o_orderpriority", F.lit("3-MEDIUM")).alias("prio")
     ).agg(F.count(F.lit(1)).alias("n_orders"))
@@ -1110,7 +1106,7 @@ ORDER BY l.prio NULLS FIRST
 
 def er_fuzzy_name_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = (
-        _t(spark, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer")
         .filter(F.col("c_custkey") % 25 == 0)
         .select("c_custkey", "c_nationkey", "c_name")
     )
@@ -1155,7 +1151,7 @@ def sql_recursive_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine elsewhere runs by hand (connected components, PageRank).
     Depth is bounded by the id's digit count (~5 here), far under
     Spark's recursion level limit."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("docs_rec")
+    load_table(spark, sf_dir, "documents").createOrReplaceTempView("docs_rec")
     return spark.sql(
         """
         WITH RECURSIVE walk(doc_id, node, depth) AS (

@@ -23,10 +23,6 @@ from planning_center_data_pipeline_spark.operators.similarity import Q_SCALE
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def _q(col):
     """Quantize a float array to exact int64 components (element-wise)."""
     return F.transform(col, lambda x: F.round(x.cast("double") * Q_SCALE).cast("bigint"))
@@ -35,7 +31,7 @@ def _q(col):
 # --- per-vector stats via transform + aggregate lambdas ----------------------
 
 def arr_vector_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     q = _q(F.col("embedding"))
     sq_sum = F.aggregate(
         F.transform(q, lambda v: v * v), F.lit(0).cast("bigint"), lambda acc, x: acc + x
@@ -76,7 +72,7 @@ ORDER BY vec_id
 # --- zip_with: quantized dot product against the reversed vector -------------
 
 def arr_zipwith_dot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     q = _q(F.col("embedding"))
     qr = _q(F.reverse(F.col("embedding")))
     prod = F.zip_with(q, qr, lambda x, y: x * y)
@@ -102,7 +98,7 @@ ORDER BY vec_id
 # --- posexplode: per-dimension corpus stats ----------------------------------
 
 def arr_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     exploded = e.select(
         F.posexplode(_q(F.col("embedding"))).alias("dim", "v")
     ).withColumn("dim", F.col("dim").cast("long"))
@@ -139,7 +135,7 @@ _VOCAB = ["the", "and", "data", "user", "error", "time", "new", "old"]
 
 
 def arr_setops_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     vocab = F.array(*[F.lit(w) for w in _VOCAB])
     toks = F.array_distinct(F.split(F.lower(F.col("text")), r"[^a-z0-9]+"))
     return d.select(
@@ -172,7 +168,7 @@ ORDER BY doc_id
 # --- map construction from JSON + key access ---------------------------------
 
 def fn_map_props(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     m = F.from_json(F.col("props"), "map<string,bigint>")
     return e.select(
         "event_id",
@@ -195,7 +191,7 @@ ORDER BY event_id
 # --- unpivot: wide aggregate -> long (metric, value) -------------------------
 
 def fn_unpivot_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     wide = o.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("double").alias("n_orders"),
         (
@@ -236,7 +232,7 @@ ORDER BY o_orderstatus, metric
 # --- sequence-generated calendar spine (left join keeps empty months) --------
 
 def fn_month_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     spine = spark.range(1).select(
         F.explode(
             F.sequence(
@@ -285,7 +281,7 @@ ORDER BY month
 # JSON text.
 
 def fn_variant_props(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     v = F.parse_json(F.col("props"))
     return e.select(
         "event_id",

@@ -32,10 +32,6 @@ from planning_center_data_pipeline_spark.plans.extensions import (
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # The portable-simhash SELECT (md5 family, 60-bit) embedded as a CTE by
 # the oracles below — one source of truth with doc_simhash_portable.
 _SH_CTE = f"sh AS ({_simhash_portable_sql(60)})"
@@ -63,7 +59,7 @@ def doc_near_dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Portable-SimHash near-dup pair generation (signature → 15-bit
     chunk blocking → Hamming verify ≤ 5) — the edge list the clustering
     step consumes, hash-checked stage-for-stage against SQL."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return (
         D.simhash_near_dups_portable(d, "doc_id", "text", max_hamming=5)
         .withColumn("hamming", F.col("hamming").cast("long"))
@@ -85,7 +81,7 @@ def doc_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     design), every doc labeled with its cluster representative (the
     minimum doc_id reachable) and the cluster size.  The oracle
     replays the same closure with a recursive CTE."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     edges = D.simhash_near_dups_portable(d, "doc_id", "text", max_hamming=5)
     comp = D.connected_components(
         edges.select("id_1", "id_2"), d.select(F.col("doc_id").alias("node"))
@@ -131,7 +127,7 @@ def doc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     first occurrence (ordered by doc_id, then position), and reassemble
     the surviving text.  One shuffle on the chunk key; the reassembly
     is a per-doc sort inside an aggregate, never a driver loop."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     tokd = d.select(
         "doc_id", X.tokens(X.normalize_text(F.col("text"))).alias("tk")
     )
@@ -203,7 +199,7 @@ def doc_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     1 ulp between JVM and DuckDB libm for some inputs, and both the
     emitted value and the rank order must be computed from identical
     numbers for the oracle hash to be stable."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
         F.explode(X.tokens(X.normalize_text(F.col("text")))).alias("term"),
@@ -274,7 +270,7 @@ def doc_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Gopher/Dolma style): type-token ratio, top-token share, top-bigram
     share, mean token length.  All exact integer counts turned into
     double ratios in a fixed op order."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     tokd = d.select(
         "doc_id", X.tokens(X.normalize_text(F.col("text"))).alias("tk")
     )
@@ -370,7 +366,7 @@ def ev_funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     |users| rows before the next join, so event data is scanned three
     times but never shuffled at event granularity more than once per
     step; the per-user tables broadcast."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     v = (
         e.filter(F.col("event_type") == "view")
         .groupBy("user_id")
@@ -440,7 +436,7 @@ def ev_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     counted as active in each subsequent week.  Two aggregations over
     events (first-seen per user, distinct active weeks per user) and
     one broadcast join — the classic triangle retention matrix."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     first = e.groupBy("user_id").agg(
         F.to_date(F.date_trunc("week", F.min("ts"))).alias("cohort_week")
     )
@@ -489,7 +485,7 @@ def ev_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     behind path analysis): per user, events ordered by (ts, event_id),
     adjacent pairs counted corpus-wide.  One window shuffle on user_id,
     then a tiny (|types|^2) aggregate."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return (
         e.withColumn("from_type", F.lag("event_type").over(w))
@@ -522,7 +518,7 @@ def emb_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     16 lowest-id vectors, cosine assignment, exact quantized-mean
     update) — the iterative-training building block, hash-checked
     against the same assign+average in SQL."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     return S.kmeans_lloyd_step(e, n_centroids=16)
 
 
@@ -573,7 +569,7 @@ def doc_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard reproducible corpus split: stable under reprocessing,
     shard-count changes, and engine choice, unlike rand()-based
     sampling."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     bucket = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
         .cast("bigint")
@@ -611,7 +607,7 @@ def doc_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     512-token packs by running-total offset.  One window cumsum plus
     one aggregation — the whole packing plan shuffles each source
     partition once, never serializes through the driver."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
         "source",
@@ -673,7 +669,7 @@ def doc_quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact SQL-standard NTILE formula — the first n%10 tiles carry
     one extra row — from the 1-row corpus count.  Bit-identical to
     ntile(10) OVER (ORDER BY quality, doc_id) and fully parallel."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     q = d.select("doc_id", X.quality_score(F.col("text")).alias("quality"))
     qcs = [i / 32.0 for i in range(1, 32)]
     # frequency-weighted percentile over the distinct-quality rollup:
@@ -759,7 +755,7 @@ def doc_hash_sample_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same sample on every rerun, any partitioning, any engine).  One
     window per source partition; at 100 TB the rank key is computed in
     the scan and the window only sorts within strata."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     rk = D.md5_hash60(
         F.concat_ws("|", F.col("source"), F.col("doc_id").cast("string"))
     )
@@ -793,7 +789,7 @@ def doc_quality_bins_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     for doc_quality_deciles' global ntile sort: bin boundaries at
     0.2/0.4/0.6/0.8 turn binning into a pure per-row expression plus
     one partial-aggregated groupBy, no global sort anywhere."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     q = X.quality_score(F.col("text"))
     bin_ = (
         F.lit(1)
@@ -835,7 +831,7 @@ def doc_cms_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy over (row, bucket) — mergeable across shards by summing
     counters, which is why CMS is the 100 TB way to approximate heavy
     hitters; the estimate >= exact invariant is visible in the output."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         F.explode(X.tokens(X.normalize_text(F.col("text")))).alias("tok")
     ).filter(F.col("tok") != "")
@@ -937,7 +933,7 @@ def _chunk_udtf_cls():
 
 def doc_udtf_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.udtf.register("chunk_doc", _chunk_udtf_cls())
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("v_documents_udtf")
+    load_table(spark, sf_dir, "documents").createOrReplaceTempView("v_documents_udtf")
     return spark.sql(
         """
         SELECT d.doc_id, c.chunk_no, c.chunk_text, c.n_toks
@@ -979,7 +975,7 @@ def doc_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation scanned and shingled it twice).  At 100 TB both
     shuffles key on high-cardinality columns (shingle, doc_id), so the
     plan has no small-side or driver bottleneck."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     sh = D.shingle_table(d, "doc_id", "text", k=3).withColumn(
         "is_eval", (F.col("doc_id") % 20 == 0).cast("int")
     )
@@ -1037,7 +1033,7 @@ def doc_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel windows), then a window over the tiny per-partition-totals
     table (rows = #partitions) broadcast back as offsets.  Identical
     result, no single-partition stage over the data."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     ntok = d.select(
         "doc_id", X.token_count(F.col("text")).cast("long").alias("n_toks")
     )
@@ -1106,7 +1102,7 @@ def ev_zscore_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg_stats_moments), assembled into mean/stddev by one fixed-order
     double formula, then broadcast back onto the event stream — two
     scans, no window, no skew sensitivity."""
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
         F.round(F.col("value") * 100).cast("decimal(38,0)").alias("cv"),

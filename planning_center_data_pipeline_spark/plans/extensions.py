@@ -27,15 +27,11 @@ from planning_center_data_pipeline_spark.operators.multimodal import (
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- exact dedup ------------------------------------------------------------
 
 def doc_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-group stats on the exact normalized-content key."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return (
         d.groupBy(X.fingerprint(F.col("text")).alias("content_key"))
         .agg(
@@ -59,7 +55,7 @@ ORDER BY keeper_id
 def doc_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The surviving rows after exact dedup (deterministic keeper:
     lowest doc_id), unlike dropDuplicates' arbitrary survivor."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return (
         D.exact_dedup(d, X.normalize_text(F.col("text")), "doc_id")
         .select("doc_id", "lang", "source", "n_chars")
@@ -83,7 +79,7 @@ ORDER BY doc_id
 # --- text analysis ----------------------------------------------------------
 
 def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     t = F.col("text")
     return d.select(
         "doc_id",
@@ -108,7 +104,7 @@ ORDER BY doc_id
 
 
 def doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return d.select(
         "doc_id", X.quality_score(F.col("text")).alias("quality")
     ).orderBy("doc_id")
@@ -136,7 +132,7 @@ ORDER BY doc_id
 
 
 def doc_lang_guess(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     g = X.lang_guess(F.col("text"))
     return d.select(
         "doc_id",
@@ -175,7 +171,7 @@ ORDER BY doc_id
 
 
 def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return d.select(
         "doc_id", X.fingerprint(F.col("text")).alias("fingerprint")
     ).orderBy("doc_id")
@@ -193,7 +189,7 @@ def doc_word_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus token frequency (the canonical explode→count): top 100
     tokens with deterministic tie-break. One shuffle; partial counts
     map-side."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         F.explode(X.tokens(X.normalize_text(F.col("text")))).alias("tok")
     ).filter(F.col("tok") != "")
@@ -219,7 +215,7 @@ GROUP BY tok ORDER BY n DESC, tok LIMIT 100
 # --- n-gram Jaccard near-dup (exact, source-blocked) ------------------------
 
 def doc_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     # cached: jaccard_pairs scans the shingle table three times (sizes +
     # both self-join sides); without this the tokenize+shingle explode
     # re-runs per scan
@@ -275,14 +271,14 @@ ORDER BY id_1, id_2
 
 
 def doc_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return D.minhash_near_dups(
         d, "doc_id", "text", k=3, n_hashes=32, bands=8, threshold=0.5
     ).orderBy("id_1", "id_2")
 
 
 def doc_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return D.simhash_signatures(d, "doc_id", "text").orderBy("doc_id")
 
 
@@ -292,7 +288,7 @@ def doc_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     a complete near-dup scan, not a heuristic — and the tight threshold
     keeps the verified pair set small (the old 16-of-64 setting emitted
     213k mostly-noise pairs at sf0.1 on near-random synthetic text)."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return D.simhash_near_dups(d, "doc_id", "text", max_hamming=3).orderBy(
         "id_1", "id_2"
     )
@@ -337,7 +333,7 @@ toks AS (
 
 
 def doc_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     sh = D.shingle_table(d, "doc_id", "text", k=3)
     return D.minhash_signatures_portable(sh, "doc_id", n_hashes=16).orderBy(
         "doc_id", "j"
@@ -354,7 +350,7 @@ ORDER BY doc_id, j
 
 
 def doc_minhash_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return D.minhash_near_dups_portable(
         d, "doc_id", "text", k=3, n_hashes=16, bands=4, threshold=0.5
     ).orderBy("id_1", "id_2")
@@ -396,7 +392,7 @@ ORDER BY id_1, id_2
 
 
 def doc_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return D.simhash_signatures_portable(d, "doc_id", "text", n_bits=60).orderBy(
         "doc_id"
     )
@@ -512,7 +508,7 @@ _DIMS = 64
 
 
 def emb_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     return S.brute_force_topk(e, e.filter(F.col("vec_id") < 5), k=10).select(
         "query_id", "neighbor_id", "cosine", F.col("rank").cast("long").alias("rank")
     )
@@ -557,7 +553,7 @@ def emb_topk_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow/numpy twin of emb_topk_cosine (int64 matmul per batch,
     float ops in the expression path's exact order) — bit-identical to
     the expression version, checked against the same SQL oracle."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     return S.brute_force_topk_pandas(e, e.filter(F.col("vec_id") < 5), k=10).select(
         "query_id", "neighbor_id", "cosine", F.col("rank").cast("long").alias("rank")
     )
@@ -571,7 +567,7 @@ def emb_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured ~8x faster at sf0.1.  This is the exact-verification
     query; the scale path over raw (unblocked) corpora is
     `emb_near_dup_lsh` below."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     return S.near_dup_pairs_by_block_pandas(e, "label", threshold=0.4).orderBy(
         "id_1", "id_2"
     )
@@ -582,7 +578,7 @@ def emb_near_dup_expr_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     of `emb_near_dup_pairs` (not registered in the bench suite: the
     blocked-GEMM path is the primary; this one re-derives the same rows
     through codegen'd per-pair dot products for cross-validation)."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     return S.near_dup_pairs_by_block(e, "label", threshold=0.4).orderBy(
         "id_1", "id_2"
     )
@@ -595,7 +591,7 @@ def emb_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sha256-derived hyperplanes), so the full pipeline hash-matches a
     SQL oracle that mirrors the sign table.  Recall vs the exact path
     is additionally unit-tested."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     return S.near_dup_pairs_lsh_rescore(
         e, threshold=0.4, n_bands=4, bits_per_band=8, dims=_DIMS
     ).orderBy("id_1", "id_2")
@@ -673,7 +669,7 @@ ORDER BY id_1, id_2
 def emb_centroid_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vector rollup: per-label centroid, flattened to (label, dim, c).
     Exact: integer sums of quantized components / count."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     q = e.select(
         "label", F.posexplode(S.quantized(F.col("embedding"))).alias("dim", "v")
     ).withColumn("dim", F.col("dim").cast("long"))
@@ -704,7 +700,7 @@ def emb_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-breaks), so the whole assign→probe→score→rank pipeline is
     hash-checked against the SQL oracle; recall vs brute force is
     additionally unit-tested."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     return S.ivf_ann_topk(
         e, e.filter(F.col("vec_id") < 5), k=10, n_centroids=16, n_probe=4
     ).select(
@@ -780,7 +776,7 @@ def emb_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark plan and the generated oracle SQL (same Python source of
     truth), so bucketing, multi-probe, and ranking are hash-checked
     end-to-end; recall vs brute force is additionally unit-tested."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     return S.lsh_ann_topk(
         e, e.filter(F.col("vec_id") < 5), k=10, n_bits=8, dims=_DIMS
     ).select(
@@ -855,7 +851,7 @@ def emb_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     Three chained projections on purpose (quantized array, then scale,
     then codes): expressions referenced inside higher-order lambdas
     are re-evaluated per element, so each stage materializes first."""
-    e = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 200)
+    e = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 200)
     qv = e.select("vec_id", S.quantized(F.col("embedding")).alias("q"))
     scaled = qv.select(
         "vec_id",
@@ -903,7 +899,7 @@ def emb_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     dims x dims matrices summed by a built-in agg.  Communication is
     O(partitions x dims^2), independent of row count — the shape that
     survives 100 TB (see operators/similarity.gram_matrix_exact)."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     return (
         S.gram_matrix_exact(e, "embedding", dims=_DIMS)
         .select(
@@ -920,7 +916,7 @@ def emb_gram_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     flatten+reshape, skipping the pandas object-Series hop.  Same
     integer result, same oracle — the pair measures the Arrow-native
     vs pandas conversion cost on an identical plan shape."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     return (
         S.gram_matrix_exact_arrow(e, "embedding", dims=_DIMS)
         .select(
@@ -952,7 +948,7 @@ def mm_binary_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-column plumbing end-to-end: documents -> media table
     (binary payload + meta struct) -> Arrow-batched mapInPandas feature
     extraction (deterministic fake decode)."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return extract_features(media_from_documents(d), fake=True).orderBy("media_id")
 
 
@@ -970,7 +966,7 @@ ORDER BY media_id
 def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-to-many frame sampling over video-like binary payloads
     (mapInPandas; deterministic byte-slice frames)."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return frame_sample(media_from_documents(d), n_frames=4, frame_bytes=256).orderBy(
         "media_id", "frame_idx"
     )
@@ -997,7 +993,7 @@ def mm_resize_thumb(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes) via mapInPandas — completes the decode/extract/resize/
     frame-sample multimodal quartet; sha256-identified output keeps it
     SQL-reproducible."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return resize_thumb(media_from_documents(d), max_bytes=256).orderBy("media_id")
 
 
@@ -1028,7 +1024,7 @@ FROM t ORDER BY media_id
 def mm_audio_rms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Waveform stats (RMS/peak over bytes-as-samples) via Arrow-batched
     mapInPandas; exact integer sum-of-squares keeps rms portable."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return audio_features(media_from_documents(d)).orderBy("media_id")
 
 

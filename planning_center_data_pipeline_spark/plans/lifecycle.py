@@ -29,10 +29,6 @@ from planning_center_data_pipeline_spark.functions.temporal import epoch_us
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- CDC apply / SCD1 merge --------------------------------------------------
 # The batch MERGE INTO pattern: a base snapshot (state as of a cutoff)
 # plus a changelog of upserts/deletes keyed by (user, seq) collapses to
@@ -46,7 +42,7 @@ _CUTOFF = "2024-01-15 00:00:00"
 
 def cdc_scd1_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .withColumn("tus", epoch_us("ts"))
         .withColumn("val_cents", F.coalesce(cents("value"), F.lit(0)))
     )
@@ -122,7 +118,7 @@ ORDER BY user_id
 # observations are co-partitioned by the join key after the shuffle).
 
 def ts_gap_fill_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     users = e.filter(F.col("user_id") % 20 == 0).select("user_id").distinct()
     # attach the 30-element date array to each user and explode: a pure
     # projection (generate), not a cross join — no BroadcastNestedLoop
@@ -189,7 +185,7 @@ def ts_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     observations).  Same single shuffle on user_id as the gap fill —
     the backward and forward scans are two frames over one window
     ordering, so Spark evaluates both in one pass per partition."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     users = e.filter(F.col("user_id") % 20 == 0).select("user_id").distinct()
     spine = users.select(
         "user_id",
@@ -294,9 +290,9 @@ ORDER BY user_id, day
 # an anti-join; Catalyst prunes each scan to the checked columns only.
 
 def dq_audit_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    lineitem = _t(spark, sf_dir, "lineitem")
-    customer = _t(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    customer = load_table(spark, sf_dir, "customer")
 
     def one(table: str, check: str, df: DataFrame) -> DataFrame:
         return df.select(
@@ -392,7 +388,7 @@ _HIST_BUCKETS = 20
 
 
 def hist_order_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     bucket = F.least(
         F.greatest(
             F.floor(cents("o_totalprice") / _HIST_WIDTH_CENTS), F.lit(0)
@@ -439,7 +435,7 @@ _PR_ITERS = 3
 
 
 def graph_pagerank_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     edges = (
         e.withColumn("from_type", F.lag("event_type").over(w))
@@ -524,7 +520,7 @@ _BPE_PAT = " ?[a-z]+| ?[0-9]+| ?[^ a-z0-9]+"
 
 
 def doc_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     full_text = F.concat(
         F.col("text"),
         F.lit(" v"),
@@ -576,7 +572,7 @@ _PHONE_PAT = "\\+1-555-[0-9][0-9][0-9][0-9]"
 
 
 def doc_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     full_text = F.concat(
         F.col("text"),
         F.lit(" contact user"),
@@ -628,7 +624,7 @@ ORDER BY doc_id
 # by summation order).
 
 def inc_merge_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     daily = (
         e.filter(F.col("event_type") == "purchase")
         .groupBy(
@@ -679,8 +675,8 @@ ORDER BY month
 def bloom_prune_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     from planning_center_data_pipeline_spark.operators.prune import bloom_prune
 
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_acctbal") < 0)
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer").filter(F.col("c_acctbal") < 0)
     pruned = bloom_prune(o, c, "o_custkey", "c_custkey")
     exact = o.join(
         c.select(F.col("c_custkey").alias("o_custkey")), "o_custkey", "left_semi"
@@ -703,7 +699,7 @@ _TARGET_ROWS_PER_FILE = 50_000
 
 
 def compaction_plan_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     parts = o.groupBy(
         "o_orderstatus",
         F.date_format("o_orderdate", "yyyy-MM").alias("month"),

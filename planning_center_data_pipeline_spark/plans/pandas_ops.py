@@ -42,10 +42,6 @@ from planning_center_data_pipeline_spark.functions.temporal import epoch_us
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- groupBy().applyInPandas: per-user share of total ------------------------
 
 _SHARE_SCHEMA = (
@@ -71,7 +67,7 @@ def ev_user_share_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     docstring).  The group total is an exact int64 sum, so the single
     float division matches the SQL window formulation bit-for-bit."""
     e = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .filter(F.col("user_id") % 10 == 0)
         .select(
             "user_id",
@@ -128,7 +124,7 @@ def asof_cogrouped_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     the click side is sorted (tus, click_id) — matching the window
     version's (tus, side, event_id) ordering."""
     e = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .filter(F.col("user_id") % 10 == 0)
         .withColumn("tus", epoch_us("ts"))
     )
@@ -289,7 +285,7 @@ def ev_wavg_grouped_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
         den = int(ww.sum())
         return float(tot) / float(den) / 100.0 if den else float("nan")
 
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.round(F.col("value") * 100).cast("bigint").alias("cents"),
         (F.col("user_id") % 5 + 1).cast("bigint").alias("w"),
@@ -342,7 +338,7 @@ def ev_wavg_grouped_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.round(F.col("value") * 100).cast("bigint").alias("cents"),
         (F.col("user_id") % 5 + 1).cast("bigint").alias("w"),

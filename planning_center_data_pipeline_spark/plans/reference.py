@@ -31,10 +31,6 @@ from planning_center_data_pipeline_spark.sources.tables import load_table
 AS_OF = "1997-06-15"
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- ref_presentation: F1+F2+F3 + J2-shape primary attach -------------------
 # Person presentation projection (Person.py:8-14 / csv_operations.py:10)
 # with customer as "people": birthdate := first order date, primary
@@ -42,8 +38,8 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # (exercises the falsy-0 quirk for nationkey 0 and 13).
 
 def ref_presentation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     birth = o.groupBy("o_custkey").agg(F.min("o_orderdate").alias("birth_ts"))
     base = (
         c.join(birth, c.c_custkey == birth.o_custkey, "left")
@@ -104,8 +100,8 @@ ORDER BY person_id
 # reference's unmatched-name -> False behavior (webscraper.py:96).
 
 def ref_count_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
     actual = (
         c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .groupBy("n_name")
@@ -153,8 +149,8 @@ ORDER BY n_name
 # CSV_fmt.json are silently dropped).
 
 def ref_semijoin_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region")
     mapping = (
         r.filter(F.col("r_regionkey") < 3)
         .select("r_regionkey", F.lower(F.col("r_name")).alias("csv_name"))
@@ -179,7 +175,7 @@ ORDER BY n_name
 # total order — the sheet copyPaste (google_sheets.py:76-87).
 
 def ref_range_copy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return range_copy(
         o,
         order_by=[F.col("o_orderkey")],

@@ -18,10 +18,6 @@ from planning_center_data_pipeline_spark.functions.exact import cents, money_sum
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # Scaled-int revenue term: price_cents * (100 - disc_cents) has scale 4.
 def _revenue():
     return cents("l_extendedprice") * (100 - cents("l_discount"))
@@ -37,7 +33,7 @@ REVENUE_SQL = (
 # scan → pushdown filter → hash agg (partial+final) → sort.
 
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     qty = cents("l_quantity")
     price = cents("l_extendedprice")
     disc = cents("l_discount")
@@ -85,9 +81,11 @@ ORDER BY l_returnflag, l_linestatus
 
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutoff = F.lit("1995-03-15").cast("timestamp")
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < cutoff)
-    l = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > cutoff)
+    c = load_table(spark, sf_dir, "customer").filter(
+        F.col("c_mktsegment") == "BUILDING"
+    )
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderdate") < cutoff)
+    l = load_table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > cutoff)
     return (
         l.join(o, l.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
@@ -127,15 +125,15 @@ LIMIT 10
 # only lineitem⋈orders shuffles.
 
 def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    n = _t(spark, sf_dir, "nation")
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    o = _t(spark, sf_dir, "orders").filter(
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    n = load_table(spark, sf_dir, "nation")
+    c = load_table(spark, sf_dir, "customer")
+    s = load_table(spark, sf_dir, "supplier")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1994-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-01-01").cast("timestamp"))
     )
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     return (
         l.join(o, l.l_orderkey == o.o_orderkey)
         .join(F.broadcast(s), l.l_suppkey == s.s_suppkey)

@@ -17,14 +17,10 @@ from planning_center_data_pipeline_spark.functions.exact import cents
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- conditional / null-handling --------------------------------------------
 
 def fn_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     bal = F.round(F.col("c_acctbal") * 100).cast("bigint")
     return c.select(
         "c_custkey",
@@ -60,7 +56,7 @@ ORDER BY c_custkey
 # --- bitwise operators -------------------------------------------------------
 
 def fn_bitwise(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     k = F.col("event_id")
     return e.select(
         "event_id",
@@ -92,7 +88,7 @@ _PCTS = [0.25, 0.5, 0.75, 0.9, 0.99]
 
 
 def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     price = F.round(F.col("o_totalprice") * 100).cast("bigint")
     pct = F.percentile(price, F.array(*[F.lit(p) for p in _PCTS]))
     return (
@@ -127,7 +123,7 @@ ORDER BY o_orderstatus
 # ANSI-safe try_cast.
 
 def fn_string_edit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     name = F.col("p_name")
     return p.select(
         "p_partkey",
@@ -169,7 +165,7 @@ ORDER BY p_partkey
 def win_range_rolling_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     epoch = F.unix_timestamp("o_orderdate")
     w = (
         Window.partitionBy("o_custkey")
@@ -211,7 +207,7 @@ def agg_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles by one fixed-order formula.  Decimal sums are what make
     this safe at 100 TB: int64 Σx² overflows around 1e19, decimal(38)
     doesn't, and partial aggregation still applies."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     q = F.round(F.col("l_quantity") * 100).cast("decimal(38,0)")
     p = F.round(F.col("l_extendedprice") * 100).cast("decimal(38,0)")
     agg = li.groupBy("l_returnflag").agg(

@@ -20,14 +20,10 @@ from planning_center_data_pipeline_spark.functions.temporal import epoch_us
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- tumbling window --------------------------------------------------------
 
 def ev_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
         .agg(
@@ -61,7 +57,7 @@ ORDER BY window_start, event_type
 # 2-element offset join.
 
 def ev_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
@@ -92,7 +88,7 @@ ORDER BY window_start, event_type
 # Scale: one shuffle on user_id; per-user sort only.
 
 def ev_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events").withColumn("tus", epoch_us("ts"))
+    e = load_table(spark, sf_dir, "events").withColumn("tus", epoch_us("ts"))
     w = Window.partitionBy("user_id").orderBy("tus", "event_id")
     gap_break = (
         (F.col("tus") - F.lag("tus").over(w)) > 30 * 60 * 1_000_000
@@ -141,7 +137,7 @@ ORDER BY user_id, session_no
 # first event per (user_id, event_type) deterministically.
 
 def ev_dedup_first(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events").withColumn("tus", epoch_us("ts"))
+    e = load_table(spark, sf_dir, "events").withColumn("tus", epoch_us("ts"))
     w = Window.partitionBy("user_id", "event_type").orderBy("tus", "event_id")
     return (
         e.withColumn("rn", F.row_number().over(w))
@@ -168,7 +164,7 @@ ORDER BY user_id, event_type
 # (planning_center.py:21-23,33) generalized to JSON string columns.
 
 def ev_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("long")
     return (
         e.groupBy("event_type")
@@ -196,7 +192,7 @@ ORDER BY event_type
 # --- time-of-day profile ----------------------------------------------------
 
 def ev_hourly_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy(F.hour("ts").cast("long").alias("hr"), "event_type")
         .agg(
@@ -221,7 +217,7 @@ FROM events GROUP BY 1, 2 ORDER BY hr, event_type
 # runs it as a shuffled join with the range predicate applied inline.
 
 def ev_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events").withColumn("tus", epoch_us("ts"))
+    e = load_table(spark, sf_dir, "events").withColumn("tus", epoch_us("ts"))
     clicks = e.filter(F.col("event_type") == "click").select(
         F.col("user_id").alias("c_user"),
         F.col("event_id").alias("click_id"),
@@ -279,7 +275,7 @@ ORDER BY purchase_id, click_id
 # ev_sessionize above derives the same sessions manually.
 
 def ev_session_window_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
         .agg(

@@ -27,10 +27,6 @@ from planning_center_data_pipeline_spark.functions.exact import cents, money_sum
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def _revenue():
     return cents("l_extendedprice") * (100 - cents("l_discount"))
 
@@ -48,9 +44,9 @@ REVENUE_SQL = (
 # equality, preserving ties — the shape of TPC-H Q2's correlated MIN.
 
 def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part").filter(F.col("p_size") == 5)
-    s = _t(spark, sf_dir, "supplier")
-    l = _t(spark, sf_dir, "lineitem").withColumn(
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_size") == 5)
+    s = load_table(spark, sf_dir, "supplier")
+    l = load_table(spark, sf_dir, "lineitem").withColumn(
         "unit_price", F.col("l_extendedprice") / F.col("l_quantity")
     )
     lp = l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
@@ -94,11 +90,11 @@ ORDER BY lp.p_partkey, s_name
 # the EXISTS shape of TPC-H Q4.
 
 def q4_priority_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").filter(
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     )
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     late = o.join(
         l,
         (o.o_orderkey == l.l_orderkey)
@@ -133,17 +129,17 @@ ORDER BY o_orderpriority
 # final ratio is one double division, identical in both engines.
 
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA")
-    n_cust = _t(spark, sf_dir, "nation").alias("nc")
-    n_supp = _t(spark, sf_dir, "nation").alias("ns")
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY")
-    o = _t(spark, sf_dir, "orders").filter(
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA")
+    n_cust = load_table(spark, sf_dir, "nation").alias("nc")
+    n_supp = load_table(spark, sf_dir, "nation").alias("ns")
+    c = load_table(spark, sf_dir, "customer")
+    s = load_table(spark, sf_dir, "supplier")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1995-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     )
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     joined = (
         l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
         .join(o, l.l_orderkey == o.o_orderkey)
@@ -192,11 +188,11 @@ ORDER BY o_year
 # name contains 'red', grouped by supplier nation x order year.
 
 def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part").filter(F.col("p_name").contains("red"))
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_name").contains("red"))
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
+    o = load_table(spark, sf_dir, "orders")
+    l = load_table(spark, sf_dir, "lineitem")
     return (
         l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
         .join(o, l.l_orderkey == o.o_orderkey)
@@ -231,7 +227,7 @@ ORDER BY nation, o_year DESC
 # global total is a 1-row broadcast, not a window over all rows.
 
 def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     val = cents("l_quantity") * cents("l_extendedprice")  # scale 4
     per_part = l.groupBy("l_partkey").agg(F.sum(val).alias("value_raw"))
     total = per_part.agg(
@@ -267,8 +263,8 @@ ORDER BY part_value DESC, l_partkey
 # absent from the slim schema.
 
 def q12_priority_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem").filter(
+    o = load_table(spark, sf_dir, "orders")
+    l = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
     )
@@ -303,8 +299,8 @@ ORDER BY l_returnflag
 # of counts) — the classic group-count-of-counts shape.
 
 def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderpriority") != "5-LOW")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderpriority") != "5-LOW")
     per_cust = (
         c.join(o, c.c_custkey == o.o_custkey, "left")
         .groupBy("c_custkey")
@@ -337,8 +333,8 @@ ORDER BY custdist DESC, c_count DESC
 # bit-stable.
 
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = _t(spark, sf_dir, "supplier")
-    l = _t(spark, sf_dir, "lineitem").filter(
+    s = load_table(spark, sf_dir, "supplier")
+    l = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
     )
@@ -376,12 +372,12 @@ ORDER BY s_suppkey
 # predicate mix mirrors TPC-H Q16's exclusion filters.
 
 def q16_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part").filter(
+    p = load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#1")
         & (~F.col("p_type").startswith("SMALL"))
         & (F.col("p_size").isin(1, 5, 10, 15, 20, 25, 30, 35))
     )
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     return (
         l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
         .groupBy("p_brand", "p_type", "p_size")
@@ -408,10 +404,10 @@ ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
 # space: qty*5*n < sum_qty  <=>  qty < 0.2 * avg(qty), exactly.
 
 def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part").filter(
+    p = load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") == "Brand#3") & (F.col("p_size") <= 10)
     )
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     per_part = l.groupBy(F.col("l_partkey").alias("agg_partkey")).agg(
         F.count(F.lit(1)).alias("n_lines"),
         F.sum(cents("l_quantity")).alias("sum_qty_raw"),
@@ -449,8 +445,8 @@ WHERE p_brand = 'Brand#3' AND p_size <= 10
 # compare in cents to dodge double-literal drift.
 
 def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part")
-    l = _t(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part")
+    l = load_table(spark, sf_dir, "lineitem")
     q = cents("l_quantity")
     cond = (
         (
@@ -495,9 +491,9 @@ WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 5
 # (8*supplier_qty > part_qty), then a semi-join back to supplier.
 
 def q20_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part").filter(F.col("p_name").contains("red"))
-    s = _t(spark, sf_dir, "supplier")
-    l = _t(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_name").contains("red"))
+    s = load_table(spark, sf_dir, "supplier")
+    l = load_table(spark, sf_dir, "lineitem")
     red = l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
     per_ps = red.groupBy("l_partkey", "l_suppkey").agg(
         F.sum(cents("l_quantity")).alias("supp_qty_raw")
@@ -548,9 +544,9 @@ ORDER BY s_suppkey
 # order date on a finalized order.
 
 def q21_solo_late_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = _t(spark, sf_dir, "supplier")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    l = _t(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
+    l = load_table(spark, sf_dir, "lineitem")
     lo = l.join(o, l.l_orderkey == o.o_orderkey).withColumn(
         "is_late",
         (F.col("l_shipdate") > F.expr("o_orderdate + INTERVAL 60 DAYS")).cast("int"),
@@ -610,9 +606,9 @@ LIMIT 20
 # integer-exact: bal*n > sum  <=>  bal > avg.
 
 def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
+    o = load_table(spark, sf_dir, "orders")
     pos = c.filter(F.col("c_acctbal") > 0)
     thr = pos.agg(
         F.count(F.lit(1)).alias("n_pos"),

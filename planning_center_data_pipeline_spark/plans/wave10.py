@@ -35,10 +35,6 @@ from planning_center_data_pipeline_spark.functions.exact import cents
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- Markov next-event transition matrix -------------------------------------
 
 
@@ -54,7 +50,7 @@ def ev_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     the from-type — never a global single partition).  Per-user
     windows parallelize at any scale.
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     trans = (
         ev.select(
@@ -117,7 +113,7 @@ def ev_top_journeys(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject — the top-20 never materialises a global
     sort.
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id", "d").orderBy("ts", "event_id")
     steps = (
         ev.select(
@@ -195,7 +191,7 @@ def cf_item_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     part key (dimension-bounded; AQE picks the strategy); top-100 via
     TakeOrderedAndProject.
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     baskets = (
         li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
         .groupBy("ok")
@@ -269,8 +265,8 @@ def ml_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row cutoff aggregate broadcast back onto the scan, a 10-row
     rollup, and 10-row windows for the cumulative columns.
     """
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     buyers = (
         o.filter(F.col("o_orderpriority") == "1-URGENT")
         .select(F.col("o_custkey").alias("ck"))
@@ -400,8 +396,8 @@ def ml_auc_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     three different AUCs in three runs at sf0.1).  The final reduce
     is a 1-row aggregate.
     """
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     buyers = (
         o.filter(F.col("o_orderpriority") == "1-URGENT")
         .select(F.col("o_custkey").alias("ck"))
@@ -510,7 +506,7 @@ def ev_retention_triangle(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup and the first-seen window (same key); the triangle is a
     |dates|-row rollup.  Per-user windows parallelize at any scale.
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     acts = ev.select("user_id", F.to_date("ts").alias("d")).distinct()
     w_u = Window.partitionBy("user_id")
     offs = acts.withColumn("cohort_d", F.min("d").over(w_u)).withColumn(

@@ -39,10 +39,6 @@ from planning_center_data_pipeline_spark.sources.tables import load_table
 _BPE_SQL_PAT = r"[a-z]+|[0-9]+|[^a-z0-9\s]"
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def _parallel_floor(df: DataFrame, key: str) -> DataFrame:
     """Repartition small single-file scans up to a bounded floor so
     CPU-dense per-row regex work before the first shuffle does not
@@ -93,7 +89,7 @@ def graph_pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 5 remaining per-iteration exchanges carry |V| rows, not |E|).
     Output is top-20 via TakeOrderedAndProject.
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     baskets = (
         li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
         .groupBy("ok")
@@ -221,7 +217,7 @@ def cust_rfm_global_quintiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reference date and the three cutoff arrays are two 1-row
     aggregates broadcast back; the segment rollup is <= 125 rows.
     """
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     per = o.groupBy(F.col("o_custkey").alias("ck")).agg(
         F.max(F.to_date("o_orderdate")).alias("last_d"),
         F.count(F.lit(1)).alias("f"),
@@ -330,8 +326,8 @@ def ml_threshold_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row cutoff aggregate exploded to 9 rows and broadcast; the
     9-way fan-out feeds one conditional aggregation; output is 9 rows.
     """
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     buyers = (
         o.filter(F.col("o_orderpriority") == "1-URGENT")
         .select(F.col("o_custkey").alias("ck"))
@@ -429,7 +425,7 @@ def doc_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shingle_table lesson); then one shuffle to the (lang, source)
     rollup.
     """
-    d = _parallel_floor(_t(spark, sf_dir, "documents"), "doc_id")
+    d = _parallel_floor(load_table(spark, sf_dir, "documents"), "doc_id")
     per = d.select(
         "lang",
         "source",
@@ -503,7 +499,7 @@ def doc_zipf_rankfreq(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject; the rank window orders 50 rows, and the
     corpus-total divisor is a 1-row aggregate broadcast.
     """
-    d = _parallel_floor(_t(spark, sf_dir, "documents"), "doc_id")
+    d = _parallel_floor(load_table(spark, sf_dir, "documents"), "doc_id")
     toks = d.select(
         F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("token")
     ).filter(F.col("token") != "")
@@ -568,7 +564,7 @@ def cust_abc_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows parallelize, and the only global window runs over the
     <=32-row bucket totals.
     """
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     rev = o.groupBy(F.col("o_custkey").alias("ck")).agg(
         F.sum(cents("o_totalprice")).alias("v")
     )

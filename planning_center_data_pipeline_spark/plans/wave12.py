@@ -37,10 +37,6 @@ from pyspark.sql.window import Window
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- daily open-order backlog ---------------------------------------------------
 
 
@@ -57,8 +53,8 @@ def ord_open_backlog_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     row count), then one window over that bounded rollup.  Scales in
     the fact scans only.
     """
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     last_ship = li.groupBy(F.col("l_orderkey").alias("ok")).agg(
         F.max(F.to_date("l_shipdate")).alias("ship_d")
     )
@@ -138,7 +134,7 @@ def sup_part_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     two key shuffles on fact-table keys; top-25 via
     TakeOrderedAndProject.
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     per_ps = li.groupBy(
         F.col("l_partkey").alias("pk"), F.col("l_suppkey").alias("sk")
     ).agg(F.sum(F.col("l_quantity").cast("bigint")).alias("q"))
@@ -207,7 +203,7 @@ def stat_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast, per-bucket running counts, one global window over the
     <=32-row bucket totals, then a 1-row reduce.
     """
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     base = c.filter(
         F.col("c_mktsegment").isin(_MW_SEG_A, _MW_SEG_B)
     ).select(
@@ -335,8 +331,8 @@ def li_discount_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: lineitem joined to the part dimension (broadcast-able
     by AQE), one shuffle to the ~25-row brand rollup.
     """
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part")
     x = F.round(F.col("l_discount") * 100).cast("bigint")
     y = F.col("l_quantity").cast("bigint")
     per = (
@@ -410,7 +406,7 @@ def ev_dow_hour_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: one shuffle to the 168-cell rollup; the share divisor
     is a window over that bounded rollup.
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     per = ev.groupBy(
         F.dayofweek("ts").alias("dow"), F.hour("ts").alias("hour")
     ).agg(F.count(F.lit(1)).alias("n_events"))

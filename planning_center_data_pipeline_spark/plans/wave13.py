@@ -33,10 +33,6 @@ from pyspark.sql.window import Window
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- incremental dedup merge ----------------------------------------------------
 
 _INC_BATCH_MOD = 10
@@ -64,7 +60,7 @@ def doc_incremental_dedup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordering is a window keyed on the fingerprint.  All joins are on
     hash keys — no skew beyond genuine content popularity.
     """
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     fp = F.sha2(F.trim(F.lower(F.col("text"))), 256).alias("fp")
     batch = d.filter(
         F.col("doc_id") % _INC_BATCH_MOD == _INC_BATCH_REM
@@ -130,7 +126,7 @@ def ev_daily_poisson_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar); lambda is a 1-row aggregate broadcast back over that
     tiny rollup; top-10 via TakeOrderedAndProject.
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(F.to_date("ts").alias("d")).agg(
         F.count(F.lit(1)).alias("n_events")
     )
@@ -185,7 +181,7 @@ def ord_reorder_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     then roll up to <=6 groups; percentiles are per-group exact.
     Per-customer windows parallelize at any scale.
     """
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(
         "o_orderdate", "o_orderkey"
     )
@@ -254,7 +250,7 @@ def doc_boilerplate_prefixes(spark: SparkSession, sf_dir: str) -> DataFrame:
     one shuffle to (source, prefix) counts, one to the per-source
     argmax window; doc totals ride the same rollup — no second scan.
     """
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     prefix = F.concat_ws(
         " ",
         F.slice(F.split(F.trim(F.lower("text")), r"\s+"), 1, _BP_PREFIX_TOKENS),
@@ -322,7 +318,7 @@ def ev_user_lifespan_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     window and the per-user rollup (same key); the final rollup is
     |event types| rows.
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     per = (
         ev.select("user_id", "ts", "event_id", "event_type")

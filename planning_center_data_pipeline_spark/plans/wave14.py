@@ -34,10 +34,6 @@ from planning_center_data_pipeline_spark.functions.exact import cents
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- calibration reliability bins -----------------------------------------------
 
 _CAL_BINS = 10
@@ -55,8 +51,8 @@ def ml_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: label semi-aggregate (one shuffle), 1-row min/max
     aggregate broadcast, 10-row rollup.
     """
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     buyers = (
         o.filter(F.col("o_orderpriority") == "1-URGENT")
         .select(F.col("o_custkey").alias("ck"))
@@ -142,7 +138,7 @@ def stat_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast; the only global window runs over the <=32-row bucket
     totals), then TakeOrderedAndProject for the argmax row.
     """
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     base = c.filter(
         F.col("c_mktsegment").isin(_KS_SEG_A, _KS_SEG_B)
     ).select(
@@ -265,7 +261,7 @@ def ts_changepoint_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup; prefix sums and the argmax all run over that tiny
     relation (1-row totals broadcast).
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.to_date("l_shipdate").alias("d")).agg(
         F.sum(cents("l_extendedprice")).alias("rev")
     )
@@ -360,7 +356,7 @@ def cust_decile_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     midpoint and the two cutoff arrays are 1-row broadcasts; the
     matrix rollup is <=100 rows.
     """
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     span = o.agg(
         F.min(F.to_date("o_orderdate")).alias("d0"),
         F.max(F.to_date("o_orderdate")).alias("d1"),

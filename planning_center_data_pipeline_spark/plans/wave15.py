@@ -21,10 +21,6 @@ from pyspark.sql import functions as F
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- quality filter funnel ------------------------------------------------------
 
 _F_MIN_CHARS = 150
@@ -48,7 +44,7 @@ def doc_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     repartition floor, then ONE shuffle to the per-source rollup of
     conditional counts.
     """
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     floor = min(spark.sparkContext.defaultParallelism, 16)
     if d.rdd.getNumPartitions() < floor:
         d = d.repartition(floor, F.col("doc_id"))
@@ -128,7 +124,7 @@ def ev_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly one event.  One shuffle to the (user, day) rollup (the
     session grain), one to the |days|-bounded daily rollup.
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     sessions = ev.groupBy(
         "user_id", F.to_date("ts").alias("d")
     ).agg(F.count(F.lit(1)).alias("n_ev"))

@@ -27,10 +27,6 @@ from planning_center_data_pipeline_spark.sources.tables import load_table
 _DIMS = 64
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- dedup threshold sweep ------------------------------------------------------
 
 _SWEEP_THRESHOLDS = (0.4, 0.5, 0.6, 0.7)
@@ -49,7 +45,7 @@ def emb_dup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     and fanned out to the 4-row threshold table (broadcast); both
     rollups are per-threshold conditional aggregates.
     """
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     pairs = S.near_dup_pairs_by_block_pandas(
         e, "label", threshold=min(_SWEEP_THRESHOLDS)
     )
@@ -145,7 +141,7 @@ def doc_rag_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     lesson); no shuffle at all until the output sort — chunking is
     embarrassingly parallel.
     """
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     floor = min(spark.sparkContext.defaultParallelism, 16)
     if d.rdd.getNumPartitions() < floor:
         d = d.repartition(floor, F.col("doc_id"))

@@ -30,10 +30,6 @@ from planning_center_data_pipeline_spark.functions.exact import cents
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- Welch's t-test -------------------------------------------------------------
 
 _WT_SEG_A = "BUILDING"
@@ -55,7 +51,7 @@ def stat_welch_t(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: a single conditional-aggregate pass over the filtered
     scan — one 1-row reduce, no joins, no windows.
     """
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     v = cents("c_acctbal")
     in_a = (F.col("c_mktsegment") == _WT_SEG_A).cast("long")
     in_b = (F.col("c_mktsegment") == _WT_SEG_B).cast("long")
@@ -174,7 +170,7 @@ def li_margin_waterfall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape: one fact scan, one shuffle to the |years|-row rollup.
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     gross_c = cents("l_extendedprice")
     disc_pct = F.round(F.col("l_discount") * 100).cast("bigint")
     per = li.groupBy(F.year("l_shipdate").alias("year")).agg(
@@ -229,7 +225,7 @@ def priv_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: one shuffle to the (QI, sensitive) rollup, one to the
     QI class, one to the <=5-row histogram.
     """
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     qi = c.select(
         F.col("c_nationkey").alias("nat"),
         F.expr(
@@ -286,10 +282,10 @@ def data_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     — four independent scan pipelines, each one shuffle.
     """
     specs = [
-        ("lineitem.l_partkey", _t(spark, sf_dir, "lineitem"), "l_partkey"),
-        ("lineitem.l_suppkey", _t(spark, sf_dir, "lineitem"), "l_suppkey"),
-        ("orders.o_custkey", _t(spark, sf_dir, "orders"), "o_custkey"),
-        ("events.user_id", _t(spark, sf_dir, "events"), "user_id"),
+        ("lineitem.l_partkey", load_table(spark, sf_dir, "lineitem"), "l_partkey"),
+        ("lineitem.l_suppkey", load_table(spark, sf_dir, "lineitem"), "l_suppkey"),
+        ("orders.o_custkey", load_table(spark, sf_dir, "orders"), "o_custkey"),
+        ("events.user_id", load_table(spark, sf_dir, "events"), "user_id"),
     ]
     outs = []
     for label, df, col in specs:

@@ -29,10 +29,6 @@ from planning_center_data_pipeline_spark.sources.tables import load_table
 _DIMS = 64
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- embedding centroid drift ---------------------------------------------------
 
 
@@ -48,7 +44,7 @@ def emb_label_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: posexplode is map-side; one shuffle to (label, dim)
     sums, one to the |labels|-row rollup.
     """
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     comp = e.select(
         "label",
         (F.col("vec_id") % 2 == 0).alias("even"),
@@ -189,7 +185,7 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
         _copurchase_sym_adj,
     )
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     und = _copurchase_sym_adj(li)
     lowdeg = und.where(F.size("nbrs") <= _CN_HUB_CAP).select(
         F.col("u").alias("nbr"), F.col("nbrs").alias("srcs")
@@ -305,7 +301,7 @@ def data_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     on ONE core.  cpu_floor spreads the expand+partial-sort across the
     box; a no-op at real scale where the scan splits on its own.
     """
-    o = cpu_floor(_t(spark, sf_dir, "orders"), "o_orderkey")
+    o = cpu_floor(load_table(spark, sf_dir, "orders"), "o_orderkey")
     cents_tp = F.round(F.col("o_totalprice") * 100).cast("bigint")
     day = F.date_format("o_orderdate", "yyyy-MM-dd")
     wide = o.agg(

@@ -24,10 +24,6 @@ from planning_center_data_pipeline_spark.functions.exact import cents
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- daily-revenue autocorrelation ----------------------------------------------
 
 _ACF_LAGS = (1, 7, 14)
@@ -47,7 +43,7 @@ def ts_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     each lag is an equi-join of that ~2.5k-row table with itself
     (date + k days); the global moments are a 1-row broadcast.
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.to_date("l_shipdate").alias("d")).agg(
         F.sum(cents("l_extendedprice")).alias("x")
     )
@@ -154,8 +150,8 @@ def li_price_volume_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: one filtered fact scan, one shuffle to the
     (brand, year) rollup, conditional pivot to one row per brand.
     """
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part")
     per = (
         li.filter(F.year("l_shipdate").isin(_PVM_Y0, _PVM_Y1))
         .join(p, li.l_partkey == p.p_partkey)
@@ -251,7 +247,7 @@ def doc_dedup_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     fp = F.sha2(F.trim(F.lower(F.col("text"))), 256)
     w = Window.partitionBy("fp").orderBy("doc_id")
     flagged = (

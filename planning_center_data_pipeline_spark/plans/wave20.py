@@ -20,10 +20,6 @@ from pyspark.sql import functions as F
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- referential integrity audit --------------------------------------------------
 
 
@@ -33,11 +29,11 @@ def rel_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     orphan rate.  All four checks are independent anti-join reduces —
     a 100 TB audit is four scans, no wide state.
     """
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    p = _t(spark, sf_dir, "part")
-    s = _t(spark, sf_dir, "supplier")
-    c = _t(spark, sf_dir, "customer")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    p = load_table(spark, sf_dir, "part")
+    s = load_table(spark, sf_dir, "supplier")
+    c = load_table(spark, sf_dir, "customer")
     rels = [
         (
             "lineitem.l_orderkey -> orders",
@@ -133,7 +129,7 @@ def ev_type_value_boxplot(spark: SparkSession, sf_dir: str) -> DataFrame:
     the outlier count re-aggregates against the broadcast per-type
     fences (dimension-bounded join).
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     base = ev.filter(F.col("value").isNotNull()).select(
         "event_type", F.round(F.col("value") * 100).cast("bigint").alias("v")
     )

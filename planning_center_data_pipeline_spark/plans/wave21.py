@@ -25,10 +25,6 @@ from planning_center_data_pipeline_spark.sources.tables import load_table
 _SKIP_MAX_GAP = 3
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- skip-gram event pairs ------------------------------------------------------
 
 
@@ -45,7 +41,7 @@ def ev_skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup is <= |types|^2 x 3 rows, and the share window runs over
     that tiny rollup.
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     leads = ev.select(
         F.col("event_type").alias("t_from"),
@@ -119,7 +115,7 @@ def doc_stopword_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: CPU-dense per-row regex behind the bounded
     repartition floor, one shuffle to the |langs|-row rollup.
     """
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     floor = min(spark.sparkContext.defaultParallelism, 16)
     if d.rdd.getNumPartitions() < floor:
         d = d.repartition(floor, F.col("doc_id"))

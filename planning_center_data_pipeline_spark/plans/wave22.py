@@ -31,10 +31,6 @@ from planning_center_data_pipeline_spark.operators import similarity as S
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- asymmetric containment ---------------------------------------------------
 
 CONTAIN_DF_CAP = 50  # same ubiquity cap as the exact-Jaccard family
@@ -56,7 +52,7 @@ def doc_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         shingle_table,
     )
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     sh_all = shingle_table(d, "doc_id", "text", k=3)
     # r12 (guide §2.4, the basket-array pattern): ONE groupBy on the
     # shingle collects its doc list (shingle_table emits distinct
@@ -167,7 +163,7 @@ def ml_ndcg_at10(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one shuffle on user_id for the window, one for the
     cohort agg; weights and the ideal lookup are CASE literals, no
     joins."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(
         F.desc("value"), F.asc("event_id")
     )
@@ -263,7 +259,7 @@ def ev_position_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer end-to-end, so the engines agree bit-for-bit.  Scale
     shape: user-equi join with a time-range residual (never a cross
     join), two windows per conversion, one final agg."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     conv = ev.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("conv_id"),
         F.col("user_id").alias("cuser"),
@@ -364,7 +360,7 @@ def ts_monthly_seasonal_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     index(month) = month revenue * 12 / total revenue, in integer
     micro-units (1e6 = exactly seasonal-neutral).  One agg + one
     window over 12 rows — scan-bound at any scale."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     monthly = (
         o.select(
             F.month("o_orderdate").alias("month"),
@@ -426,7 +422,7 @@ def cust_pit_training_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     point-in-time contract: no aggregate can see the current or any
     future row, the standard temporal-leakage guard for training-set
     builds.  One shuffle on custkey."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_custkey") % 19 == 0)
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_custkey") % 19 == 0)
     ordw = Window.partitionBy("o_custkey").orderBy("order_date", "o_orderkey")
     past = ordw.rowsBetween(Window.unboundedPreceding, -1)
     return (
@@ -509,7 +505,7 @@ def emb_mips_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract as the kNN family.  For unbounded probe sets the
     norm-augmentation reduction to cosine-ANN (append sqrt(M^2-|x|^2)
     as an extra coordinate) rides the existing IVF/LSH paths."""
-    e = _t(spark, sf_dir, "embeddings").select(
+    e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", S.quantized(F.col("embedding")).alias("q")
     )
     probes = e.filter(F.col("vec_id") % 97 == 0).select(

@@ -27,10 +27,6 @@ from pyspark.sql.window import Window
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- bipartite k-core rounds ----------------------------------------------------
 
 _KCORE_ROUNDS = 4
@@ -56,7 +52,7 @@ def graph_bipartite_kcore_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.01.  Edge sets only shrink, so the per-round materialization
     cost is monotonically decreasing; thresholds are two driver-side
     ints from one bounded aggregate."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     edges = (
         li.select(F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("p"))
         .distinct()
@@ -160,8 +156,8 @@ def sup_lead_time_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctly rounded, so both engines produce identical bits.
     One shuffle on suppkey.  Sampled suppliers (% 13 = 0) keep the
     output bounded; degenerate groups (n < 2 or zero variance) drop."""
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_suppkey") % 13 == 0)
-    o = _t(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_suppkey") % 13 == 0)
+    o = load_table(spark, sf_dir, "orders")
     j = li.join(o, li.l_orderkey == o.o_orderkey).select(
         F.col("l_suppkey").alias("suppkey"),
         F.datediff(F.to_date("o_orderdate"), F.lit("1970-01-01").cast("date"))
@@ -244,7 +240,7 @@ def ord_queue_wait_closed_form(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-priority backlog summary (n, max wait, mean wait) — a capacity
     stress metric (waits grow when arrival rate exceeds 1/day).
     Exactness: waits are pure int64; the mean is one double division."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("priority"),
         F.datediff(F.to_date("o_orderdate"), F.lit("1970-01-01").cast("date"))
         .cast("bigint")

@@ -27,10 +27,6 @@ from pyspark.sql.window import Window
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- sequence-pattern funnel ----------------------------------------------------
 
 # view+ click* purchase — "browsed, maybe clicked, then bought"
@@ -58,7 +54,7 @@ def ev_path_regex_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by the user's event count (session-scale, not corpus-
     scale); the histogram agg is 10s of rows.  For multi-TB streams
     the same render runs per (user, day) to bound string length."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     ch = F.element_at(
         F.create_map(
             *[F.lit(x) for kv in _TYPE_CHAR.items() for x in kv]
@@ -126,7 +122,7 @@ def ord_iso_week_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     52/53 of the PREVIOUS iso year instead of a phantom week 1 — the
     calendar-correctness detail naive year(d) grouping gets wrong at
     every year boundary.  Exact cents; scan + one agg."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     d = F.to_date("o_orderdate")
     return (
         o.select(
@@ -179,7 +175,7 @@ def stat_spearman_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed-rank pattern).  Moment sums run in DECIMAL(38,0) (Spark,
     exact any-order) / HUGEINT (DuckDB); both cast the identical exact
     integer to DOUBLE before the one final rho formula."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         F.col("l_quantity").alias("q"),
         F.col("l_discount").alias("d"),

@@ -19,10 +19,6 @@ from pyspark.sql import functions as F
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- revenue bridge -------------------------------------------------------------
 
 
@@ -44,7 +40,7 @@ def ord_revenue_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bridge exists to guarantee (pinned in pytest).  Exact integer
     cents end-to-end; one agg + one self-join keyed on (custkey,
     month)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     rev = (
         o.select(
             "o_custkey",
@@ -144,7 +140,7 @@ def sql_scalar_udf_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary), used to bucket orders by a derived urgency score.  The
     oracle inlines the identical expression; hash equality proves the
     UDF is a pure macro."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_udf_v")
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_udf_v")
     spark.sql("DROP TEMPORARY FUNCTION IF EXISTS order_urgency")
     spark.sql(
         """

@@ -22,10 +22,6 @@ from pyspark.sql.window import Window
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- integer SES forecast -------------------------------------------------------
 
 _SES_WINDOW = 16  # truncation horizon: weight 2^-16 ~ 1.5e-5 of mass
@@ -48,7 +44,7 @@ def ts_ses_forecast_int(spark: SparkSession, sf_dir: str) -> DataFrame:
     would alert on.  Gaps: days with no orders contribute 0 (the
     calendar spine is densified first), the business-honest reading of
     'no revenue'."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     daily = (
         o.select(
             F.datediff(
@@ -141,7 +137,7 @@ def ord_fiscal_445_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     1970-01-01 was a Thursday), so the engines agree bit-for-bit —
     the calendar logic naive month(date) grouping can't express.
     Scan + one agg; the period math is per-row expressions."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     o.createOrReplaceTempView("orders_445_v")
     y = "CAST(EXTRACT(year FROM o_orderdate) AS INT)"
     d = "datediff(to_date(o_orderdate), DATE '1970-01-01')"

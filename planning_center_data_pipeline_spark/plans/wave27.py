@@ -30,10 +30,6 @@ _WIDTHS = (4, 8, 12)
 assert _WIDTHS == tuple(sorted(_WIDTHS)), "_WIDTHS must be ascending"
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def emb_lsh_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@top-1 of single-band SRP-LSH vs bucket width: probes are
     the vec_id % 25 == 0 sample; the exact top-1 is the quantized-int
@@ -52,7 +48,7 @@ def emb_lsh_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract as emb_dim_trunc_recall); the sweep is run once per
     tuning decision, not per query."""
     e = (
-        _t(spark, sf_dir, "embeddings")
+        load_table(spark, sf_dir, "embeddings")
         .select("vec_id", S.quantized(F.col("embedding")).alias("q"))
         .select(
             "vec_id",

@@ -14,10 +14,6 @@ from pyspark.sql import functions as F
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def li_price_consistency_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per (part, ISO year+week of ship date): min/max effective unit
     price (net of discount, micro-cents per unit, exact integer
@@ -28,7 +24,7 @@ def li_price_consistency_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one shuffle on (part, week) + TakeOrderedAndProject
     for the top-100; no joins."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     d = F.to_date("l_shipdate")
     rows = li.select(
         F.col("l_partkey").alias("partkey"),

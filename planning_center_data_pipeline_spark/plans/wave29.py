@@ -42,10 +42,6 @@ from planning_center_data_pipeline_spark.functions.temporal import epoch_us
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- Avro round-trip as a query ----------------------------------------------
 
 
@@ -66,7 +62,7 @@ def ev_avro_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_events_avro_py,
     )
 
-    ev = _t(spark, sf_dir, "events").filter(F.pmod("event_id", F.lit(97)) == 0)
+    ev = load_table(spark, sf_dir, "events").filter(F.pmod("event_id", F.lit(97)) == 0)
     back = decode_events_avro_py(encode_events_avro_py(ev))
     return (
         back.groupBy("event_type")
@@ -114,9 +110,9 @@ def ts_theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     the MONTHLY series, so its size is nations * C(#months, 2) — a
     calendar constant (~84 months -> ~3.5k pairs/nation) independent of
     fact-table size; everything fact-sized is one groupBy."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
     # customer is fact-scaled (15M rows at SF100) — no broadcast hint,
     # let AQE pick; nation (25 rows) broadcasts unconditionally
     monthly = (
@@ -204,8 +200,8 @@ def li_weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one shuffle to (brand, cents), one bounded window per brand
     over distinct price points."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part")
     per_val = (
         li.join(F.broadcast(p.select("p_partkey", "p_brand")),
                 li.l_partkey == p.p_partkey)
@@ -268,7 +264,7 @@ def ts_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     The series is CALENDAR-sized (one row per order day), so the
     window is bounded regardless of fact size; one groupBy + one
     sort-once window."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     # day as ISO STRING: DuckDB DATE arrives in pandas as datetime64
     # and would stringify with a T00:00:00 suffix the hash rejects
     daily = o.groupBy(
@@ -324,7 +320,7 @@ def ord_duplicate_invoices(spark: SparkSession, sf_dir: str) -> DataFrame:
     custkey and TPC-H keeps orders-per-customer constant, so the pair
     space is C(k,2) per customer — linear in SF, no blow-up.  The 1%
     tolerance is integer-exact: |c1-c2| * 100 <= min(c1,c2)."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("k"),
         F.col("o_orderkey").alias("id"),
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("c"),
@@ -391,7 +387,7 @@ def stat_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every mean is a double division of exact integer sums; the
     permutation cross join is panel_rows x 200 — linear in SF with a
     fixed constant, one shuffle on the permutation id."""
-    o = _t(spark, sf_dir, "orders").filter(
+    o = load_table(spark, sf_dir, "orders").filter(
         F.pmod("o_orderkey", F.lit(101)) == 0
     ).select(
         "o_orderkey",
@@ -508,7 +504,7 @@ def rank_rbo_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     literals, 1/d through LCM(1..20)); one double division at the end.
     Scale: two year-filtered aggregates (shuffle on partkey), then
     everything is a 20x20 literal-depth computation."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
 
     def topk(year: int, rcol: str) -> DataFrame:
         rev = (
@@ -624,7 +620,7 @@ def priv_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~SF 1000: n_g * N * m < 2^63), and only the final normalization
     divides.  One groupBy + a bands-sized window — no joins against
     fact tables."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     band = F.least(
         F.lit(_TC_BANDS - 1),
         F.greatest(

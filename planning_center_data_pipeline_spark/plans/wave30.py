@@ -34,10 +34,6 @@ from planning_center_data_pipeline_spark.functions.temporal import epoch_us
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- MAP@10 / MRR@10 ------------------------------------------------------------
 
 _L10 = 2520  # LCM(1..10): clears every 1/i for i <= 10 to an integer
@@ -55,7 +51,7 @@ def ml_map_mrr_at10(spark: SparkSession, sf_dir: str) -> DataFrame:
     through LCM(1..10) = 2520, MRR through 1e6 DIV rank; cohort means
     are one double division of exact sums.  Scale: one shuffle on
     user_id for the window, one for the cohort aggregate."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.desc("value"), F.asc("event_id"))
     rel = (F.col("event_type") == "purchase").cast("int")
     ranked = ev.select(
@@ -167,7 +163,7 @@ def ev_longest_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
     rn-within-type run-id construction (two sort-sharing windows), then
     a run-length aggregate.  Also reports how many distinct runs tie at
     the maximum, so the answer is order-free."""
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", epoch_us("ts").alias("tus"), "event_id"
     )
     w_all = Window.partitionBy("user_id").orderBy("tus", "event_id")
@@ -232,7 +228,7 @@ def asof_next_event_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     forward frame); views are side 0 so a same-microsecond purchase
     counts as 'after'.  No per-row probing, no range join: the mirror
     image of asof_purchase_last_click."""
-    e = _t(spark, sf_dir, "events").withColumn("tus", epoch_us("ts"))
+    e = load_table(spark, sf_dir, "events").withColumn("tus", epoch_us("ts"))
     views = e.filter(F.col("event_type") == "view").select(
         "user_id", "tus", F.lit(0).alias("side"), "event_id"
     )
@@ -307,7 +303,7 @@ def doc_readability_fk(spark: SparkSession, sf_dir: str) -> DataFrame:
     11.8 * sy/w - 15.59 as three fixed-order double terms over exact
     integer counts.  Pure per-row expressions — no shuffle at all
     until the final ORDER BY."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     low = F.lower(F.col("text"))
     out = d.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -365,9 +361,9 @@ def cust_basket_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     spend is SF-invariant in TPC-H); the index is computed in doubles
     from exact integers.  Shape: lineitem-orders join (the one big
     shuffle), brand rollup, customer rollup."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    p = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    p = load_table(spark, sf_dir, "part")
     spend = (
         li.join(o.select("o_orderkey", "o_custkey"),
                 li.l_orderkey == o.o_orderkey)
@@ -428,7 +424,7 @@ def ev_bigram_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     first) * P(b as second)) = ((cnt_ab * T) / cnt_a.) / cnt_.b — each
     factor exact int64, the division a fixed-order double chain.  One
     lag window on the user timeline + one 25-row aggregate."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("tus", "event_id")
     bi = (
         ev.select("user_id", "event_type", epoch_us("ts").alias("tus"),

@@ -25,10 +25,6 @@ from pyspark.sql import functions as F
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- PNG round-trip as a query --------------------------------------------------
 
 
@@ -51,7 +47,7 @@ def mm_png_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_png,
     )
 
-    d = _t(spark, sf_dir, "documents").select(
+    d = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         F.md5(F.col("doc_id").cast("string")).alias("h"),
     )
@@ -110,8 +106,8 @@ def li_otif_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     division of exact counts).  Shape: line-level bool -> per-order
     min (one shuffle on orderkey, partial-agg friendly) -> month
     rollup."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
     per_order = (
         li.join(o.select("o_orderkey", "o_orderdate"),
                 li.l_orderkey == o.o_orderkey)
@@ -200,8 +196,8 @@ def stat_wilson_ci_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression string shared verbatim with the DuckDB oracle (z and
     z^2 injected as repr'd doubles), making the float path bit-equal
     by construction.  One broadcast dim join + one group-by."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part")
     counts = (
         li.join(F.broadcast(p.select("p_partkey", "p_brand")),
                 li.l_partkey == p.p_partkey)
@@ -252,7 +248,7 @@ def ord_keyspace_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale with two partial-agg shuffles — the scale-safe shape for a
     job a naive LAG-over-everything window would serialize onto one
     partition."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     per_bucket = (
         o.select(F.expr(f"o_orderkey DIV {_KEY_BUCKET}").alias("bucket"))
         .groupBy("bucket")

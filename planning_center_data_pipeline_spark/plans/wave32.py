@@ -30,10 +30,6 @@ _SD_BITS = 8  # <= 2^8 buckets -> the rep side is broadcast-bounded
 _SD_THRESHOLD = 0.8
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def emb_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic dedup decision table: (vec_id, bucket, rep_id,
     cos_to_rep, keep).  keep = 1 for each bucket representative and for
@@ -48,7 +44,7 @@ def emb_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     governed by the LSH width exactly as measured by
     emb_lsh_recall_sweep — the documented tuning companion."""
     e = (
-        _t(spark, sf_dir, "embeddings")
+        load_table(spark, sf_dir, "embeddings")
         .select("vec_id", S.quantized(F.col("embedding")).alias("q"))
         .withColumn("bucket", S.srp_signature("q", _SD_BITS, _DIMS))
         .withColumn("nsq", S.norm_sq_q(F.col("q")))
@@ -171,7 +167,7 @@ def stat_kendall_tau_b(spark: SparkSession, sf_dir: str) -> DataFrame:
     All counts and products are exact int64 (safe past SF 100); only
     the last line is floating point, written identically in both
     engines."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     cells = li.select(
         F.col("l_quantity").cast("bigint").alias("x"),
         F.least(

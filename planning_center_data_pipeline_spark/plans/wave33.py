@@ -20,10 +20,6 @@ from pyspark.sql.window import Window
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def li_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ABC x XYZ part classification:
 
@@ -40,7 +36,7 @@ def li_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     SF-invariant in TPC-H, so no overflow at scale).  Shape: one
     (part, month) rollup, one part rollup, one ~part-count window for
     the revenue rank, 9-cell aggregate."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     mexp = (
         (F.year("l_shipdate") - 1992) * 12 + F.month("l_shipdate") - 1
     ).cast("bigint")
@@ -199,24 +195,26 @@ FROM classed GROUP BY abc, xyz ORDER BY abc, xyz
 # --- GROUP BY ALL / ORDER BY ALL -------------------------------------------------
 
 # ONE SQL text, two engines: the modern resolve-from-SELECT-list
-# shorthand.  Columns and aggregates aliased once, shared verbatim.
-_GROUP_BY_ALL_SQL = """
+# shorthand.  Columns and aggregates aliased once, shared verbatim;
+# `{orders}` is bound to a DataFrame on the Spark side and to the view
+# name in the oracle, so no session-global view is rebound.
+_GROUP_BY_ALL_TEXT = """
 SELECT o_orderpriority AS priority,
        o_orderstatus AS status,
        CAST(COUNT(*) AS BIGINT) AS n_orders,
        CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
          AS revenue_cents
-FROM orders
+FROM {orders}
 GROUP BY ALL
 ORDER BY ALL
 """
+_GROUP_BY_ALL_SQL = _GROUP_BY_ALL_TEXT.format(orders="orders")
 
 
 def sql_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUP BY ALL + ORDER BY ALL, the exact oracle text run through
     Spark SQL — surface parity demonstrated by sharing one string."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_GROUP_BY_ALL_SQL)
+    return spark.sql(_GROUP_BY_ALL_TEXT, orders=load_table(spark, sf_dir, "orders"))
 
 
 QUERIES = {

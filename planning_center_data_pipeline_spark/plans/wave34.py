@@ -27,10 +27,6 @@ _IVF_CELLS = 8
 _PROBES = (1, 2, 4, 8)
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def emb_ivf_nprobe_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@top-1 of IVF coarse search vs n_probe: corpus vectors are
     assigned to their nearest of 8 deterministic coarse centroids (the
@@ -47,7 +43,7 @@ def emb_ivf_nprobe_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     % 25 predicate is the test-corpus stand-in; run once per tuning
     decision, not per query)."""
     e = (
-        _t(spark, sf_dir, "embeddings")
+        load_table(spark, sf_dir, "embeddings")
         .select("vec_id", S.quantized(F.col("embedding")).alias("q"))
         .withColumn("nsq", S.norm_sq_q(F.col("q")))
     )
@@ -245,7 +241,7 @@ def stat_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     output also carries d, e and n so the oracle pins every
     intermediate.  One groupBy over the fact table; the 3x3 table and
     marginals are constant-size."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     lo, hi = _KAPPA_PRICE_BANDS
     labeled = o.select(
         F.when(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 0)

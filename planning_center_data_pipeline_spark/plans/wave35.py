@@ -31,10 +31,6 @@ _SXX = sum(i * i for i in range(_W))  # 8555
 _DEN = _W * _SXX - _SX * _SX  # n*Sxx - Sx^2, a literal
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def ts_rolling_ols_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling 30-day OLS slope of daily revenue (cents/day).  With x
     re-centered to the window start, slope_t =
@@ -49,7 +45,7 @@ def ts_rolling_ols_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero-revenue day is a real 0 in the regression.  Calendar-bounded
     window: one groupBy + one sort-once window regardless of fact
     size."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     daily = o.groupBy(
         F.datediff(F.to_date("o_orderdate"), F.lit("1970-01-01").cast("date"))
         .cast("bigint")
@@ -122,17 +118,20 @@ FROM rolled WHERE nw = {_W} ORDER BY day
 
 # --- correlated scalar subqueries --------------------------------------------------
 
-_SCALAR_SUBQ_SQL = """
+# `{orders}`/`{lineitem}` are bound to DataFrames on the Spark side and
+# to the view names in the oracle, so no session-global view is rebound.
+_SCALAR_SUBQ_TEXT = """
 SELECT o_orderkey AS orderkey,
        CAST(ROUND(o_totalprice * 100) AS BIGINT) AS order_cents,
        (SELECT CAST(MAX(ROUND(l_extendedprice * 100)) AS BIGINT)
-        FROM lineitem WHERE l_orderkey = o_orderkey) AS max_line_cents,
+        FROM {lineitem} WHERE l_orderkey = o_orderkey) AS max_line_cents,
        (SELECT CAST(COUNT(*) AS BIGINT)
-        FROM lineitem WHERE l_orderkey = o_orderkey) AS n_lines
-FROM orders
+        FROM {lineitem} WHERE l_orderkey = o_orderkey) AS n_lines
+FROM {orders}
 WHERE o_orderkey % 199 = 0
 ORDER BY orderkey
 """
+_SCALAR_SUBQ_SQL = _SCALAR_SUBQ_TEXT.format(orders="orders", lineitem="lineitem")
 
 
 def sql_scalar_subquery_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -141,9 +140,11 @@ def sql_scalar_subquery_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     subqueries into aggregated left joins (no per-row execution), so
     the 100 TB plan is two shuffles, not N+1 probes; DuckDB runs the
     identical text."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(_SCALAR_SUBQ_SQL)
+    return spark.sql(
+        _SCALAR_SUBQ_TEXT,
+        orders=load_table(spark, sf_dir, "orders"),
+        lineitem=load_table(spark, sf_dir, "lineitem"),
+    )
 
 
 # --- Brown-Forsythe --------------------------------------------------------------
@@ -166,7 +167,7 @@ def stat_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final F is a literal-ordered double expression shared with the
     oracle.  Shape: two fact shuffles (per-(group, cents) rollup and
     the Z aggregate), everything after is 5 rows."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("g"),
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("c"),
     )

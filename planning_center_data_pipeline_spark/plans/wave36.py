@@ -26,10 +26,6 @@ _K_MIN = 5
 _LADDER = ((0, 1), (1, 10_000), (2, 100_000), (3, None))
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def priv_generalization_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity ladder over the quasi-identifier (nation, market
     segment, acctbal@level): per generalization level, the number of
@@ -40,7 +36,7 @@ def priv_generalization_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: one groupBy per level over the customer table (4 bounded
     aggregates), then a 4-row summary — no joins."""
-    c = _t(spark, sf_dir, "customer").select(
+    c = load_table(spark, sf_dir, "customer").select(
         "c_nationkey",
         "c_mktsegment",
         F.round(F.col("c_acctbal") * 100).cast("bigint").alias("cents"),
@@ -115,7 +111,7 @@ def li_price_index_fisher(spark: SparkSession, sf_dir: str) -> DataFrame:
     overflow int64 by SF 100.  Shape: one (part, year) rollup, a
     self-join on partkey against the base year (dimension-bounded),
     a year rollup."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     py = (
         li.groupBy(
             "l_partkey", F.year("l_shipdate").cast("bigint").alias("yr")

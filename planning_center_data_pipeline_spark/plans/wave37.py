@@ -44,10 +44,6 @@ _BH_ALPHA_INV = 20  # alpha = 1/20
 _BM25_TERMS = ("data", "pipeline", "quality", "model", "training")
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- windowFunnel ------------------------------------------------------------
 
 def ev_window_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -59,7 +55,7 @@ def ev_window_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: three user_id-keyed joins (co-partitioned after the
     first shuffle), distinct rollups, 3-row output."""
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", epoch_us("ts").alias("tus")
     )
     v = e.filter(F.col("event_type") == "view").select(
@@ -148,7 +144,11 @@ def graph_components_minlabel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # through its own orders, so least() is implicit, and min over
     # co-order parts == min over graph neighbors).  Node set: parts in
     # >= 1 multi-part order, matching the old edge-derived set.
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
+    li = (
+        load_table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_partkey")
+        .distinct()
+    )
     by_order = (
         li.groupBy("l_orderkey")
         .agg(F.collect_set("l_partkey").alias("parts"))
@@ -267,7 +267,7 @@ def stat_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-partition small-file scan all of that md5 CPU would run
     # on one core.
     c = cpu_floor(
-        _t(spark, sf_dir, "customer").select(
+        load_table(spark, sf_dir, "customer").select(
             "c_custkey",
             "c_nationkey",
             F.round(F.col("c_acctbal") * 100).cast("bigint").alias("cents"),
@@ -443,7 +443,7 @@ def doc_bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     5-row broadcasts), per-term score = shared verbatim expression
     quantized to 1e-9, int64 per-doc sum, TakeOrderedAndProject
     top-20.""".format(terms=_BM25_TERMS)
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
         F.explode(

@@ -41,10 +41,6 @@ _H60_SPARK = "CAST(CONV(SUBSTRING(MD5({x}), 1, 15), 16, 10) AS BIGINT)"
 _H60_DUCK = "CAST('0x' || substr(md5({x}), 1, 15) AS BIGINT)"
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- content-defined chunking -------------------------------------------------
 
 def doc_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -56,7 +52,7 @@ def doc_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     global window), chunk re-hash via position-sorted array join, one
     source rollup.  Cost is linear in token count; the 4-gram hash is
     computed once per position."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
         "source",
@@ -203,7 +199,7 @@ def doc_unigram_xent(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: one (doc, tok) rollup, a vocab-sized unigram table joined
     back (broadcastable: vocab << corpus), int64 weighted sum of
     1e-9-quantized surprisals, one double division."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
         F.explode(
@@ -273,7 +269,7 @@ def stat_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL(38,0)); the five s_g^2/n_g terms quantize to 1e-6 before
     the cross-group sum, so the reduction is order-free; F is a fixed
     double expression over the exact aggregates."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_orderpriority",
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
     )
@@ -367,7 +363,7 @@ def li_eoq_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: one year-filtered part rollup, top-20 via
     TakeOrderedAndProject, scalar math after."""
-    li = _t(spark, sf_dir, "lineitem").filter(F.year("l_shipdate") == 1995)
+    li = load_table(spark, sf_dir, "lineitem").filter(F.year("l_shipdate") == 1995)
     per = li.groupBy("l_partkey").agg(
         F.sum(F.col("l_quantity").cast("bigint")).cast("bigint").alias("d_qty"),
         F.sum(F.round(F.col("l_extendedprice") * 100).cast("bigint"))

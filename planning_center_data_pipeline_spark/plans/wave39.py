@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from planning_center_data_pipeline_spark.functions.temporal import epoch_us
+from planning_center_data_pipeline_spark.operators.joins import gated_broadcast
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 _NMH_HASHES = 8
@@ -51,10 +52,6 @@ _NMH_BUCKET_CAP = 64
 
 _H60_SPARK = "CAST(CONV(SUBSTRING(MD5({x}), 1, 15), 16, 10) AS BIGINT)"
 _H60_DUCK = "CAST('0x' || substr(md5({x}), 1, 15) AS BIGINT)"
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # --- neighborhood MinHash ------------------------------------------------------
@@ -99,18 +96,12 @@ def _nmh_candidates(edges: DataFrame, vocab: DataFrame | None = None) -> DataFra
     # planner would otherwise broadcast the EXPLODED |E|-row side
     # (measured: a 2.4M-row broadcast build, 14 s at sf0.1, vs 20k
     # vocabulary rows).  The vocabulary is |V| rows x 8 hashes; when
-    # |V| outgrows the broadcast budget at extreme scale, set
-    # spark.planning_center.broadcastVocabulary=false (r12 ADVICE: the
-    # unconditional hint would OOM the build side rather than degrade)
-    # and the identical plan falls back to a sort-merge join.
-    bcast_vocab = (
-        edges.sparkSession.conf.get(
-            "spark.planning_center.broadcastVocabulary", "true"
-        )
-        == "true"
-    )
+    # |V| outgrows the broadcast budget at extreme scale, turn
+    # the gated_broadcast switch off (r12 ADVICE: the unconditional
+    # hint would OOM the build side rather than degrade) and the
+    # identical plan falls back to a sort-merge join.
     per_u = (
-        edges.join(F.broadcast(vh) if bcast_vocab else vh, "v")
+        edges.join(gated_broadcast(vh), "v")
         .groupBy("u")
         .agg(
             *[F.min(f"hv{j}").alias(f"mh{j}") for j in range(_NMH_HASHES)]
@@ -177,7 +168,7 @@ def graph_minhash_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-edge shuffle, replacing the former double edge-table join +
     groupBy).  The band bucket join still bounds candidates.  Same
     asymmetry contract as doc MinHash-LSH."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     baskets = li.groupBy("l_orderkey").agg(
         F.collect_set("l_partkey").alias("pks")
     )
@@ -307,7 +298,7 @@ def asof_nearest_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     no global window).  Users are sampled (user_id % 10 = 0) to match
     the other as-of variants' panel."""
     e = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .filter(F.col("user_id") % 10 == 0)
         .select("user_id", "event_type", "event_id", epoch_us("ts").alias("tus"))
     )
@@ -372,7 +363,7 @@ def data_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cents^2 x rows passes int64 only through SF ~0.3), then each of
     the 6 pair correlations is a fixed double expression over exact
     aggregates, rounded to 1e-9."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_quantity").cast("bigint").alias("qty"),
         F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("cents"),
         F.round(F.col("l_discount") * 10000).cast("bigint").alias("disc_bps"),
@@ -472,7 +463,7 @@ def ev_fano_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     > 1 means burstier than Poisson.  Daily rollup, then exact
     integer moments per type over the bounded day spine; one double
     division chain per type."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.to_date("ts").alias("day")
     ).agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))

@@ -58,10 +58,6 @@ from planning_center_data_pipeline_spark.operators import textstats as X
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- gaps and islands --------------------------------------------------------
 
 def win_gaps_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -76,7 +72,7 @@ def win_gaps_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     so EnsureRequirements inserts no further exchange.  No self-join,
     no range join.
     """
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     months = (
         o.select(
             "o_custkey",
@@ -137,7 +133,7 @@ def corpus_mix_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines, so doubles are bit-identical.  The corpus total is a
     1-row cross join — broadcast, never a shuffle.
     """
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     per_src = d.groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.sum(X.token_count(F.col("text"))).cast("bigint").alias("n_tokens"),
@@ -195,7 +191,7 @@ def ev_top_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     compiles to TakeOrderedAndProject (per-partition top-k heaps,
     k rows per partition to the merge) — no global sort at any scale.
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy("user_id")
         .agg(F.count("*").alias("n_events"))
@@ -222,7 +218,7 @@ def agg_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     level 1; level 2 merges 16 tiny partial rows per key.  Sums use
     cent integers so the double result is exact and order-free.
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     cents = F.round(F.col("value") * 100).cast("bigint")
     lvl1 = e.groupBy(
         "event_type",
@@ -258,7 +254,7 @@ def fn_try_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
     must never kill a 100 TB batch; TRY variants keep the failure
     local to the cell.
     """
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
         F.try_divide(
@@ -296,8 +292,8 @@ def agg_mode_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     25 x 5 pre-aggregated table — the heavy lifting happened in the
     partial-aggregated count.
     """
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
     cnt = (
         c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .groupBy("n_name", "c_mktsegment")
@@ -346,7 +342,7 @@ def win_topn_group_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(groups x k x partitions) rows instead of the full table — the
     built-in distributed top-n-per-group, no manual pre-pruning.
     """
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderpriority").orderBy(
         F.desc("o_totalprice"), F.asc("o_orderkey")
     )
@@ -384,7 +380,7 @@ def ev_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one row per event type).  Jaccard derives from exact integer
     counts — bit-identical across engines.
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     u = e.select("event_type", "user_id").distinct()
     a, b = u.alias("a"), u.alias("b")
     inter = (
@@ -442,7 +438,7 @@ def sql_pipe_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan as the classic form, different authoring surface.  Money
     sums use cent integers for exact, order-free doubles.
     """
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     o.createOrReplaceTempView("orders_pipe_v")
     return spark.sql(
         """
@@ -481,7 +477,7 @@ def doc_stratified_topk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     forwards at most k rows per stratum — reservoir-sampling
     economics out of the stock optimizer.
     """
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     w = Window.partitionBy("source").orderBy(
         F.md5(F.col("text")).asc(), F.col("doc_id").asc()
     )
@@ -517,9 +513,9 @@ def cust_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     a market).  Every ordering carries a custkey tie-break so bucket
     assignment is deterministic.  Monetary sums use cent integers.
     """
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
     cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
     base = (
         o.groupBy("o_custkey")
@@ -593,7 +589,7 @@ def ev_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     (day level then month level); the month-level MAU joins back on
     the month key.  All ratios derive from exact integer counts.
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     month = F.date_format("ts", "yyyy-MM")
     day = F.date_trunc("day", F.col("ts")).cast("date")
     daily = (
@@ -663,7 +659,7 @@ def basket_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB), lift from exact integer counts; top-50 via
     orderBy+limit = TakeOrderedAndProject.
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     baskets = (
         li.select("l_orderkey", "l_partkey")
         .groupBy("l_orderkey")
@@ -742,7 +738,7 @@ def emb_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from planning_center_data_pipeline_spark.operators import similarity as S
 
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     queries = e.filter((F.col("vec_id") % 20) == 0)
     topk = S.brute_force_topk_pandas(
         e, queries, k=5, per_batch_topk=5, carry_cols={"label": "int"}
@@ -824,7 +820,7 @@ def win_distribution_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     of integer rank/count, so the doubles are bit-identical across
     engines; the rank<=5 cut still compiles to WindowGroupLimit.
     """
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     w = Window.partitionBy("c_nationkey").orderBy(
         F.desc("c_acctbal"), F.asc("c_custkey")
     )
@@ -864,7 +860,7 @@ def fn_decimal_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cent-integer pattern used elsewhere is the shuffle-cheaper
     twin of the same guarantee.
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     price = F.col("l_extendedprice").cast("decimal(18,2)")
     disc = F.col("l_discount").cast("decimal(18,2)")
     net = price * (F.lit(1).cast("decimal(18,2)") - disc)
@@ -899,7 +895,7 @@ def set_except_all_priorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-set cousins (INTERSECT/EXCEPT) live in
     set_customer_years; this covers the bag semantics.
     """
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     o.createOrReplaceTempView("orders_setall_v")
     return spark.sql(
         """

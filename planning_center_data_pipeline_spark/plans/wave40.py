@@ -32,10 +32,6 @@ _NV_FRACTILE_NUM = 4  # 0.8 = 4/5
 _NV_FRACTILE_DEN = 5
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- newsvendor ---------------------------------------------------------------
 
 def li_newsvendor_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -43,7 +39,7 @@ def li_newsvendor_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     demand — smallest q with #(demand <= q) * 5 >= 4 * n_months
     (integer cross-multiplication, no float quantile).  Output also
     carries the months observed and total demand."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     pm = li.groupBy(
         "l_partkey",
         (
@@ -112,7 +108,7 @@ def cust_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     Customer ranks and cumulative sums come from the 31-percentile-
     cut two-phase prefix sum — no customer-cardinality global
     window."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     per = o.groupBy("o_custkey").agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
         .cast("bigint")
@@ -253,7 +249,7 @@ def stat_g_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     O * ln(O*N / (row_tot * col_tot)).  Cell terms quantized to 1e-9
     then summed as int64 (grid is brand x size, bounded); zero cells
     contribute zero by the O*ln(O..) limit."""
-    p = _t(spark, sf_dir, "part").filter(F.col("p_size").isin(*_GT_SIZES))
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_size").isin(*_GT_SIZES))
     cells = p.groupBy("p_brand", "p_size").agg(
         F.count(F.lit(1)).cast("bigint").alias("o")
     )
@@ -316,7 +312,7 @@ def ord_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     the value at rank ceil(n/2) (deterministic, day tiebreak); days
     AT the median are excluded (the classical dichotomy).  All
     windows run over the bounded day spine."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     daily = o.groupBy(F.col("o_orderdate").alias("day")).agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
         .cast("bigint")

@@ -34,10 +34,6 @@ from pyspark.sql.window import Window
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- JPEG round-trip as a query -------------------------------------------------
 
 # Position-weight sums per 8x8 block of the 16x16 image (row-major
@@ -76,7 +72,7 @@ def mm_jpeg_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf0.1: floor 32 cold 4.8 s vs floor 8-16 cold 2.5-2.9 s, warm
     # within noise.  16 ways still clears the ~2 s serial codec wall.
     d = cpu_floor(
-        _t(spark, sf_dir, "documents").select(
+        load_table(spark, sf_dir, "documents").select(
             F.col("doc_id").cast("bigint").alias("doc_id"),
             F.md5(F.col("doc_id").cast("string")).alias("h"),
         ),
@@ -160,7 +156,7 @@ def stat_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     C = 1 - sum_t (t^3 - t) / (N^3 - N); R2_g^2 needs 128-bit math
     (DECIMAL(38,0) here, HUGEINT in the oracle).
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     cells = li.groupBy(
         F.col("l_returnflag").alias("flag"),
         F.col("l_quantity").cast("bigint").alias("q"),
@@ -286,7 +282,7 @@ def doc_hapax_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     signal.  Shape: split-explode -> (source, word) rollup (one
     shuffle, partial-agg friendly) -> per-source counts (second,
     tiny shuffle)."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     words = d.select(
         "source",
         F.explode(
@@ -346,7 +342,7 @@ def ml_mcc_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE scan (conditional sums); MCC's numerator and the four marginal
     products run in DECIMAL(38,0) (HUGEINT in DuckDB) before the single
     double sqrt, so both engines round the identical quantity."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     lab = o.select(
         F.year("o_orderdate").cast("bigint").alias("yr"),
         (F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")).cast(

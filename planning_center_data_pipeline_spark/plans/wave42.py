@@ -32,10 +32,6 @@ from pyspark.sql.window import Window
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- deterministic-seed Laplace release ------------------------------------------
 
 # Inverse-CDF Laplace noise with scale b = sensitivity/epsilon = 2.
@@ -56,8 +52,8 @@ def priv_dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: one customer rollup (partial-agg friendly), 25-row noise
     arithmetic after a broadcast nation join."""
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
     counts = (
         c.groupBy("c_nationkey")
         .agg(F.count(F.lit(1)).cast("bigint").alias("true_count"))
@@ -137,7 +133,7 @@ def li_bollinger_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     The rolling window runs over the CALENDAR-sized daily series
     (bounded ~2400 rows regardless of fact size); facts reduce in one
     partial-agg groupBy first."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     daily = o.groupBy(
         F.to_date("o_orderdate").alias("day")
     ).agg(
@@ -228,7 +224,7 @@ def ts_wma_crossover(spark: SparkSession, sf_dir: str) -> DataFrame:
     weighted sums (fast_sum * W_slow vs slow_sum * W_fast), so signals
     and crossover counts are exact.  Output: per-year days, days fast
     above, crossovers (sign changes day-over-day)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     daily = o.groupBy(F.to_date("o_orderdate").alias("day")).agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
         .cast("decimal(38,0)")
@@ -333,7 +329,7 @@ def stat_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     chi-square sums (obs - exp)^2 / exp with exp from the margins.
     One fact shuffle (the (flag, q) rollup); everything after is <=50
     rows."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     cells = li.groupBy(
         F.col("l_returnflag").alias("flag"),
         F.col("l_quantity").cast("bigint").alias("q"),
@@ -468,7 +464,7 @@ def doc_yule_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     measure of lexical concentration (robust to corpus size).  The
     numerator is exact integer; one double division at the end.
     Shape: (source, word) rollup -> per-source integer sums."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     words = d.select(
         "source",
         F.explode(F.split(F.lower(F.col("text")), "[^a-z0-9]+")).alias("w"),

@@ -25,11 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from planning_center_data_pipeline_spark.operators.joins import gated_broadcast
 from planning_center_data_pipeline_spark.sources.tables import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 def _copurchase_sym_adj(li: DataFrame) -> DataFrame:
@@ -115,7 +112,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     x, x*x, x*y over BOTH orientations equals the old per-edge sums of
     (x+y), (x^2+y^2), 2xy term-for-term, and m = the orientation-row
     count = 2E — identical values into the identical final formula."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     adj = _copurchase_sym_adj(li)
     oriented = adj.select(
         F.size("nbrs").cast("decimal(38,0)").alias("x"),
@@ -130,15 +127,9 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pre-explode size estimate through, so the planner was building
     # the broadcast from the EXPLODED |2E|-row side (BuildLeft in the
     # r13 before-plan).  Broadcast the |V|-row degree side explicitly;
-    # gate on the shared conf so extreme-scale |V| degrades to
-    # sort-merge without a code edit.
-    bcast = (
-        spark.conf.get("spark.planning_center.broadcastVocabulary", "true")
-        == "true"
-    )
-    contrib = oriented.join(
-        F.broadcast(dv) if bcast else dv, "v"
-    ).select("x", "y")
+    # gated so extreme-scale |V| degrades to sort-merge without a code
+    # edit.
+    contrib = oriented.join(gated_broadcast(dv), "v").select("x", "y")
     sums = contrib.agg(
         F.count(F.lit(1)).cast("decimal(38,0)").alias("m"),
         F.sum(F.col("x")).alias("sx"),
@@ -203,7 +194,7 @@ def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     |probes| * C(k<=128, 2) — bounded per probe regardless of fact
     size.  Probes with k < 2 report cc = 0 over k values still shown.
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     # r12 (guide §2.4, §8): build from the shared symmetric adjacency
     # arrays — degree IS size(nbrs), so the union-both-orientations
     # degree rollup disappears; the small-u restriction is a FILTER on
@@ -311,7 +302,7 @@ def stat_cvm_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows."""
     from pyspark.sql.window import Window
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     cells = li.groupBy(
         (F.col("l_returnflag") == "R").cast("int").alias("ret"),
         F.col("l_quantity").cast("bigint").alias("q"),
@@ -415,7 +406,7 @@ def doc_term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     term, VMR = (D*Q - S^2) / (D*S) — exact integers until one final
     double.  Shape: (term, doc) counts -> per-term sums -> top-50 by
     ORDER BY + LIMIT (no global window)."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         F.col("doc_id"),
         F.explode(F.split(F.lower(F.col("text")), "[^a-z0-9]+")).alias("w"),
@@ -482,7 +473,7 @@ def li_vwap_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer micro-units (extendedprice is qty * unitprice in TPC-H, so
     unit_micro = round(extprice / qty * 1e6) reconstructs exactly).
     One partial-agg rollup; one double division."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     base = li.select(
         F.year("l_shipdate").cast("bigint").alias("yr"),
         F.month("l_shipdate").cast("bigint").alias("mo"),

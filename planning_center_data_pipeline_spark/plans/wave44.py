@@ -24,10 +24,6 @@ from pyspark.sql import functions as F
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- seasonal Mann-Kendall ---------------------------------------------------------
 
 
@@ -40,7 +36,7 @@ def ord_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     Var = sum Var_m, z = (S -+ 1)/sqrt(Var) with the standard
     continuity correction.  The stratum series is CALENDAR-sized
     (<= ~7 years), so the pair join is bounded by the calendar."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     monthly = o.groupBy(
         F.year("o_orderdate").cast("bigint").alias("yr"),
         F.month("o_orderdate").cast("bigint").alias("mo"),
@@ -158,9 +154,9 @@ def li_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines sum identical doubles (ROUND 6 absorbs association
     order).  Shape: order rollup on custkey, nation rollup, broadcast
     mean join back."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
     rev = (
         o.groupBy("o_custkey")
         .agg(
@@ -249,7 +245,7 @@ def ev_interarrival_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
         epoch_us,
     )
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gaps = (
         e.select(

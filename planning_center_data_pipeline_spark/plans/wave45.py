@@ -29,10 +29,6 @@ from pyspark.sql.window import Window
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- pairwise KL divergence --------------------------------------------------------
 
 
@@ -44,7 +40,7 @@ def doc_kl_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     sources^2-row matrix.  Per-source scalars S, T, N and the global
     vocab V are exact-input double sums; ROUND 6 absorbs association
     order."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     words = d.select(
         "source",
         F.explode(F.split(F.lower(F.col("text")), "[^a-z0-9]+")).alias("w"),
@@ -168,7 +164,7 @@ def ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum_t y_t*y_{t-k} / sum_t y_t^2 — so both engines divide identical
     128-bit quantities.  The lag products run over the CALENDAR-sized
     day spine."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     daily = o.groupBy(F.to_date("o_orderdate").alias("day")).agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
         .cast("decimal(38,0)")
@@ -268,8 +264,8 @@ def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer sums over the shifted score), o_b = bin positive rate,
     o = overall rate.  One label rollup, a broadcast 1-row range, a
     10-row decomposition."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     buyers = (
         o.filter(F.col("o_orderpriority") == "1-URGENT")
         .select(F.col("o_custkey").alias("ck"))
@@ -418,7 +414,7 @@ def ev_cohort_half_life(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside the observed horizon.  Exact counts all the way; shape: two
     user-level rollups + a per-(cohort, offset) rollup — offsets are
     bounded by the calendar span."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     firsts = e.groupBy("user_id").agg(
         F.to_date(F.min("ts")).alias("cd")
     )

@@ -26,10 +26,6 @@ _Q_SCALE = 1 << 20  # matches operators/similarity.py quantization
 _N_PROBES = 20  # FIXED panel: bounded at any SF (eval-harness contract)
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def _packed(e: DataFrame) -> DataFrame:
     """(vec_id, w0, w1): 64 sign bits (embedding[i] > 0) packed into
     two 32-bit words via posexplode + conditional shift sums — shifts
@@ -82,7 +78,7 @@ def emb_bitpack_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     smaller neighbor id.  The probe side broadcasts; distance is
     bit_count(w0 XOR w0') + bit_count(w1 XOR w1') — pure JVM bit ops,
     no floats anywhere."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     packed = _packed(e).localCheckpoint(eager=False)
     probes = packed.where(F.col("vec_id") < _N_PROBES).select(
         F.col("vec_id").alias("probe_id"),
@@ -137,7 +133,7 @@ def emb_hamming_recall_at3(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb_topk family (exact integers, ties to smaller id), so the
     harness is deterministic in both engines.  The eval panel is the
     bounded probe set — the 100 TB path is the sketch itself."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     ham = emb_bitpack_hamming(spark, sf_dir).select(
         "probe_id", "neighbor_id"
     )
@@ -251,7 +247,7 @@ def fn_regexp_extract_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     name string, per market segment — match count, distinct values,
     and the exact value sum (runs are <= 4 digits, so int64 is safe).
     Per-row work is one JVM regex pass; one rollup."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     nums = c.select(
         F.col("c_mktsegment").alias("segment"),
         F.explode(

@@ -23,10 +23,6 @@ from pyspark.sql.window import Window
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- Cochran's Q -------------------------------------------------------------------
 
 _CQ_YEARS = (1995, 1996, 1997)
@@ -40,7 +36,7 @@ def stat_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     T = total positives.  All sums exact int64 (L_i <= 3 so L^2 <= 9);
     one fact rollup on (custkey, year) -> per-customer and per-year
     rollups."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     flags = (
         o.where(F.year("o_orderdate").isin(*_CQ_YEARS))
         .select(
@@ -121,7 +117,7 @@ def cust_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluated on the 30..360-day grid — the ln/exp runs over exact
     integer counts via ONE shared expression, and the cumulative
     window is bounded by the calendar span."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     per_cust = o.select(
         "o_custkey", F.to_date("o_orderdate").alias("d")
     ).groupBy("o_custkey").agg(
@@ -250,7 +246,7 @@ def sup_kraljic_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer cross-multiplication (spend_s * n_sup vs total_spend,
     parts_s * n_sup vs total_parts).  Output: per-quadrant supplier
     count, spend share."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     per_sup = li.groupBy(F.col("l_suppkey").alias("s")).agg(
         F.sum(F.round(F.col("l_extendedprice") * 100).cast("bigint"))
         .cast("decimal(38,0)")

@@ -30,10 +30,6 @@ from planning_center_data_pipeline_spark.sources.tables import load_table
 _PI_ITERS = 12  # mixes to 6-decimal fixpoint by ~10; 25 measured identical
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- Markov stationary distribution ------------------------------------------------
 #
 # The transition-chain derivation below is the SINGLE definition site for
@@ -51,7 +47,7 @@ def build_transition_chain(
     row-stochastic transition relation p(cur, nxt, c, rt), localCheck-
     pointed so downstream unrolled rounds build on truncated lineage.
     Returns (p, types) where types is the distinct source-state enum."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (
         e.select("user_id", "event_id", "ts", F.col("event_type").alias("cur"))
@@ -225,9 +221,9 @@ def stat_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer); chi2_F = 12/(n k (k+1)) * sum_j R_j^2 - 3 n (k+1)
     (cents make ties measure-zero but the midrank form handles them
     exactly anyway)."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
     cell = (
         o.join(c.select("c_custkey", "c_nationkey"),
                o.o_custkey == c.c_custkey)
@@ -338,7 +334,7 @@ def ord_little_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly 1 on an infinite horizon; its deviation measures
     year-boundary carryover.  Shape: one lineitem rollup, then a
     bounded year-spine join."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     res = (
         li.groupBy("l_orderkey")
         .agg(
@@ -466,7 +462,7 @@ def doc_bigram_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     into one shared ln expression; low H = formulaic text, high H =
     diverse continuations.  Shape: posexplode + doc-partitioned lead
     window + two rollups."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "source",
         "doc_id",

@@ -51,10 +51,6 @@ from pyspark.sql.window import Window
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def mm_jpeg_color_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Color JPEG codec plumbing executed in-plan: md5(doc_id) hex
     chars 1-8 become four EVEN values v_k = (ord(c_{2k-1}) *
@@ -84,7 +80,7 @@ def mm_jpeg_color_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with partitions — A/B'd cold at sf0.1: floor 32 7.7 s vs floor
     # 16 3.6 s, warm within noise (see wave41's gray twin).
     d = cpu_floor(
-        _t(spark, sf_dir, "documents").select(
+        load_table(spark, sf_dir, "documents").select(
             F.col("doc_id").cast("bigint").alias("doc_id"),
             F.md5(F.col("doc_id").cast("string")).alias("h"),
         ),
@@ -159,7 +155,7 @@ def ml_psi_priority_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     than representation).  Scale shape: one fact rollup on
     (era, priority), 10-row grid after.
     """
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     counts = (
         o.select(
             F.col("o_orderpriority").alias("priority"),
@@ -237,9 +233,9 @@ def sup_cr4_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one fact rollup on suppkey, then nation-partitioned
     window over the supplier dimension (bounded by |supplier|).
     """
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
     per_sup = li.groupBy("l_suppkey").agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt")
     )
@@ -317,7 +313,7 @@ def ord_mase_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the only double is the final ratio.  Scale shape: fact rollup
     to <= ~84 months, then one bounded global window (month spine).
     """
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     monthly = (
         o.select(
             (F.year("o_orderdate") * 12 + F.month("o_orderdate") - 1).alias(
@@ -417,8 +413,8 @@ def stat_grubbs_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     is ONE shared double expression over (maxdev, n, s, ss).  Scale
     shape: one fact rollup per nation; 25-row grid after.
     """
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
     cents = (
         c.join(
             F.broadcast(n.select("n_nationkey", "n_name")),
@@ -506,7 +502,7 @@ def stat_bartlett_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
     B = ((N-k) ln s2_p - sum (n_g-1) ln s2_g) / C with the standard
     small-sample correction C.  Scale shape: one fact rollup to a
     3-row grid; everything after is constant-size."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     g = (
         li.select(
             F.col("l_returnflag").alias("grp"),
@@ -613,9 +609,9 @@ def rank_kendall_w_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     correction T_j = sum (t^3 - t) — exact rationals end to end,
     one ROUND 6 at the finish.  Scale shape: fact rollup to the
     bounded grid; windows partitioned per year over 25 rows."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
     rev = (
         o.join(
             c.select("c_custkey", "c_nationkey"),
@@ -774,7 +770,7 @@ def ts_spectral_peaks_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-day sums are order-free integer sums; power is one double
     expression over the two exact sums.  Scale shape: one fact rollup
     to <= ~2400 days, broadcast 1-row min-date, 3-row output."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     daily = (
         o.select(F.to_date("o_orderdate").alias("d"))
         .groupBy("d")
@@ -866,11 +862,11 @@ def cust_category_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-free.  Scale shape: two fact rollups (cust x brand, then
     cust), broadcast nation dim; the entropy grid is |customer|-sized.
     """
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    o = _t(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
+    o = load_table(spark, sf_dir, "orders")
     cb = (
         li.join(
             o.select("o_orderkey", "o_custkey"),
@@ -983,7 +979,7 @@ def graph_powerlaw_degree_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         _copurchase_edges,
     )
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     half = _copurchase_edges(li)
     deg = (
         half.select("u")
@@ -1082,7 +1078,7 @@ def emb_silhouette_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the centroid-pair scan is label^2 x 64 rows (bounded).  Scale
     shape: one explode rollup (|E| x 64), one point-level join on
     (label, dim), bounded centroid self-join."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     from planning_center_data_pipeline_spark.operators import similarity as S
 
     q = e.select(

@@ -32,10 +32,6 @@ from planning_center_data_pipeline_spark.functions.temporal import epoch_us
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- cohort LTV matrix -------------------------------------------------------
 
 def cust_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -46,7 +42,7 @@ def cust_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles key on custkey / (cohort, offset) — no windows, no
     skew-prone keys (cohort cardinality = #months).
     """
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     mi = (F.year("o_orderdate") * F.lit(12) + F.month("o_orderdate")).cast(
         "long"
     )
@@ -99,7 +95,7 @@ GROUP BY 1, 2 ORDER BY 1, 2
 # 2*dev2 > 3*mad4 — all int64.
 
 def ev_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, sf_dir, "events").select(
         "event_type", "event_id", cents("value").alias("vc")
     )
 
@@ -217,7 +213,7 @@ def ev_funnel_ttc(spark: SparkSession, sf_dir: str) -> DataFrame:
     The median is the exact two-middle-ranks construction per
     transition.
     """
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", epoch_us("ts").alias("tus")
     )
     v = (
@@ -327,7 +323,7 @@ def stat_chi2_brand_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     marginals ride 1-row/broadcast joins.  A float chi2 summed in
     shuffle order would differ in the last bits run to run.
     """
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     obs = p.groupBy("p_brand", "p_size").agg(
         F.count("*").alias("o")
     )
@@ -409,7 +405,7 @@ def corpus_curate_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         textstats as X,
     )
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     fp = d.select(
         "doc_id",
         "source",

@@ -41,10 +41,6 @@ from planning_center_data_pipeline_spark.plans.extensions import _SHINGLE_CTE
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- seasonal-naive forecast error ------------------------------------------
 
 def ts_seasonal_naive_mape(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -55,7 +51,7 @@ def ts_seasonal_naive_mape(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-month APE is fixed-pointed to 1e-9 before the average so the
     per-year reduction is an exact integer sum.
     """
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     mi = (F.year("o_orderdate") * F.lit(12) + F.month("o_orderdate")).cast(
         "long"
     )
@@ -119,7 +115,7 @@ def stat_ab_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the doubles are bit-identical; try_divide guards the
     degenerate all-or-nothing pool.
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     per_user = (
         e.groupBy("user_id")
         .agg(
@@ -209,7 +205,7 @@ def doc_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from planning_center_data_pipeline_spark.operators import dedup as D
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     sh = D.shingle_table(d, "doc_id", "text", k=3)
     w = Window.partitionBy("shingle")
     marked = sh.withColumn("first_doc", F.min("doc_id").over(w))
@@ -258,7 +254,7 @@ def ev_power_users_p90(spark: SparkSession, sf_dir: str) -> DataFrame:
     ceil(0.9*n) over per-user totals (deterministic tie-break by
     user_id); it joins back as a 1-row broadcast.
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     per_user = e.groupBy("user_id").agg(F.count("*").alias("cnt"))
     # The rank-ceil(0.9n) threshold VALUE depends only on how many
     # users sit at each count (the user_id tiebreak orders equal
@@ -348,7 +344,7 @@ def sql_param_binding(spark: SparkSession, sf_dir: str) -> DataFrame:
     literals by the parser, not string-spliced, and Catalyst still
     constant-folds and pushes them into the scan.
     """
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     o.createOrReplaceTempView("orders_param_v")
     return spark.sql(
         """
@@ -381,7 +377,7 @@ def win_value_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     must be UNBOUNDED on both sides, a classic silent-wrong-answer
     trap with the default frame).  One row per user via a rank cut.
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     order = [F.desc("value"), F.asc("event_id")]
     wf = (
         Window.partitionBy("user_id")
@@ -427,7 +423,7 @@ def agg_bitwise_masks(spark: SparkSession, sf_dir: str) -> DataFrame:
     folds: partial aggregation applies and results are
     partitioning-independent by construction.
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     mask = (F.col("event_id") % 256).cast("bigint")
     return (
         e.groupBy("event_type")
@@ -460,7 +456,7 @@ def fn_map_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
     to rows so the result stays hash-checkable (map cells don't
     survive the harness's canonicalizer).
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     per = e.groupBy("user_id", "event_type").agg(
         F.count("*").alias("cnt")
     )
@@ -509,7 +505,7 @@ def ev_entropy_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     entropy divides by ln(n_users) with a try_divide guard for the
     single-user group.
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     per_user = e.groupBy("event_type", "user_id").agg(
         F.count("*").alias("c")
     )
@@ -592,7 +588,7 @@ def doc_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         textstats as X,
     )
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     freq = (
         d.select(
             F.explode(

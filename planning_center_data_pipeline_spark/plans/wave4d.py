@@ -38,14 +38,10 @@ from planning_center_data_pipeline_spark.operators import textstats as X
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- language-ID confusion matrix -------------------------------------------
 
 def doc_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     g = X.lang_guess(F.col("text"))
     cell = d.select("lang", g.alias("lang_guessed")).groupBy(
         "lang", "lang_guessed"
@@ -92,7 +88,7 @@ FROM cell ORDER BY lang, lang_guessed
 # --- per-source duplicate rate ----------------------------------------------
 
 def doc_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return (
         d.select("source", X.fingerprint(F.col("text")).alias("fp"))
         .groupBy("source")
@@ -129,8 +125,8 @@ FROM fp GROUP BY source ORDER BY source
 # --- per-nation revenue Gini -------------------------------------------------
 
 def cust_nation_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
     rev = (
         o.groupBy("o_custkey")
         .agg(F.sum(cents("o_totalprice")).alias("rc"))
@@ -203,7 +199,7 @@ def agg_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-pattern; every branch stays inside one partial-aggregated
     hash aggregate.
     """
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     o.createOrReplaceTempView("orders_filter_v")
     return spark.sql(
         """
@@ -241,7 +237,7 @@ def sup_acct_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     the expectation is a pure function of the digit (rounded to 9),
     so both engines agree bit-for-bit.
     """
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     digit = F.substring(
         F.abs(F.round(F.col("c_acctbal") * 100).cast("bigint")).cast(
             "string"
@@ -303,7 +299,7 @@ def cust_order_gap_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     per customer + one tiny groupBy — the purchase-cadence profile
     behind replenishment and churn models.
     """
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(
         F.col("o_orderdate").cast("date"), "o_orderkey"
     )
@@ -366,7 +362,7 @@ def q_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM), and the IN / NOT IN asymmetry (a NULL probe satisfies
     neither) — the traps every engine must agree on exactly.
     """
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     x = F.when(
         F.col("o_orderkey") % 3 == 0, F.lit(None).cast("bigint")
     ).otherwise(F.col("o_orderkey") % 5)
@@ -423,7 +419,7 @@ def doc_cross_source_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from planning_center_data_pipeline_spark.operators import dedup as D
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     fp = (
         D.shingle_table(d, "source", "text", k=3)
         .select("source", F.col("shingle").alias("fp"))
@@ -502,7 +498,7 @@ def mm_dedup_by_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
         media_from_documents,
     )
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     media = media_from_documents(d)
     g = (
         media.select(
@@ -556,9 +552,9 @@ def sup_nation_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers; ONE double division at the edge, so the result is
     order-free and partition-count invariant.
     """
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
     rev = (
         li.groupBy("l_suppkey")
         .agg(F.sum(cents("l_extendedprice")).alias("rc"))

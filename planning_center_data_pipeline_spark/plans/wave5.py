@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from planning_center_data_pipeline_spark.operators import similarity as S
 from planning_center_data_pipeline_spark.operators import textstats as X
-from planning_center_data_pipeline_spark.sources.tables import load_table as _t
+from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
 # --- edit-distance near-dup (blocked levenshtein) ---------------------------
@@ -32,7 +32,7 @@ def doc_prefix_edit_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the scale lever exactly as in the GEMM near-dup path.
     Cost model at 100 TB: levenshtein(40,40) is ~1600 int ops/pair,
     JVM codegen — the blocked join dominates, not the distance."""
-    d = _t(spark, sf_dir, "documents").select(
+    d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.substring("text", 1, 40).alias("p40"),
         F.substring("text", 1, 12).alias("blk"),
@@ -77,7 +77,7 @@ def set_orders_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     (count per side, emit min) — one shuffle per side, no join
     explosion.  Completes the set-op surface next to
     intersect/except/exceptAll."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
 
     def keys(year: int) -> DataFrame:
         return o.filter(F.year("o_orderdate") == year).select("o_custkey")
@@ -110,7 +110,7 @@ GROUP BY o_custkey ORDER BY o_custkey
 # stream; per-source rates are exact integer ratios.
 
 def doc_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "source",
         F.explode(X.tokens(X.normalize_text(F.col("text")))).alias("tok"),
@@ -185,7 +185,7 @@ def emb_pca_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     (trace preservation, PSD, descending order) are pytest-checked."""
     import numpy as np
 
-    gram_rows = S.gram_matrix_exact(_t(spark, sf_dir, "embeddings")).collect()
+    gram_rows = S.gram_matrix_exact(load_table(spark, sf_dir, "embeddings")).collect()
     dims = 64
     g = np.zeros((dims, dims), dtype=np.float64)
     for r in gram_rows:
@@ -221,7 +221,7 @@ def emb_pca_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # symbol sequences with the chosen merge applied.
 
 def doc_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     words = (
         d.select(
             F.explode(X.tokens(X.normalize_text(F.col("text")))).alias("w")
@@ -279,7 +279,7 @@ ORDER BY n_occurrences DESC, pair LIMIT 50
 def cust_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    c = _t(spark, sf_dir, "customer").select(
+    c = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey"
     )
 
@@ -362,7 +362,7 @@ _SHARD_BYTES = 64_000
 def mm_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     sizes = d.select(
         F.col("doc_id").alias("media_id"),
         F.octet_length(F.encode("text", "utf-8")).cast("long").alias("n_bytes"),
@@ -431,7 +431,7 @@ FROM c GROUP BY 1 ORDER BY shard_id
 def doc_exact_stratified_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    d = _t(spark, sf_dir, "documents").select("doc_id", "source")
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     w = Window.partitionBy("source").orderBy(
         F.md5(F.col("doc_id").cast("string")), "doc_id"
     )
@@ -478,7 +478,7 @@ FROM ranked GROUP BY 1, 2 ORDER BY source, split
 # the composite-PK uniqueness audit input.
 
 def li_lineposition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     cents = F.round(
         F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
     ).cast("decimal(38,0)")
@@ -513,8 +513,8 @@ GROUP BY 1 ORDER BY l_linenumber
 # forced-fact rule applied to an entity dim).
 
 def sup_credit_risk_exposure(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = _t(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0)
-    li = _t(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0)
+    li = load_table(spark, sf_dir, "lineitem")
     cents = F.round(
         F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
     ).cast("decimal(38,0)")

@@ -51,10 +51,6 @@ from planning_center_data_pipeline_spark.plans.wave48 import (
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- Gini of part-revenue concentration within brand ---------------------------------
 
 
@@ -66,8 +62,8 @@ def li_gini_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     form, plans/wave4d.py).  Scale shape: one lineitem rollup to
     |parts| rows, one broadcastable part-dim join, per-brand windows
     over ~|parts|/|brands| rows."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part")
     rev = (
         li.groupBy("l_partkey")
         .agg(F.sum(cents("l_extendedprice")).alias("rc"))
@@ -143,7 +139,7 @@ def emb_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded centroid-pair scan (10 labels in the synthetic data)."""
     from planning_center_data_pipeline_spark.operators import similarity as S
 
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     q = e.select(
         "label",
         "vec_id",
@@ -470,7 +466,7 @@ def ts_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
     scales (graph_powerlaw_degree_fit's closed form).  Scale shape:
     one fact rollup to <= ~2400 days; the day-index window is bounded
     by the calendar span, block windows by W <= 64."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     daily = (
         o.select(F.to_date("o_orderdate").alias("d"))
         .groupBy("d")
@@ -644,8 +640,8 @@ def stat_jonckheere_terpstra(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer group/value moments; only the final z divides.
     Scale shape: one fact rollup to the 250-cell grid; every window
     and join below it is bounded by |groups| x |quantities|."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
     cells = (
         li.select("l_orderkey", F.col("l_quantity").cast("bigint").alias("v"))
         .join(
@@ -888,7 +884,7 @@ def _hw_wide(spark: SparkSession, sf_dir: str, window: int) -> DataFrame:
     y0..y{window-1} CALENDAR-anchored at the newest observed month —
     shared by ts_holt_winters_additive and the wave-51 damped/MASE
     variants so the window semantics live in one place."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     monthly = (
         o.select(
             (F.year("o_orderdate") * 12 + F.month("o_orderdate") - 1).alias("m"),

@@ -68,10 +68,6 @@ from planning_center_data_pipeline_spark.plans.wave50 import (
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- damped-trend Holt-Winters --------------------------------------------------------
 
 
@@ -317,9 +313,9 @@ def stat_page_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     (which biases the no-ties variance) is visible in the result.
     Scale shape: one fact rollup to the bounded 25 x |years| grid;
     windows partitioned per nation over |years| rows."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
     rev = (
         o.join(
             c.select("c_custkey", "c_nationkey"),
@@ -467,7 +463,7 @@ def emb_calinski_harabasz(spark: SparkSession, sf_dir: str) -> DataFrame:
     (10 x 64)."""
     from planning_center_data_pipeline_spark.operators import similarity as S
 
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     q = e.select(
         "label",
         "vec_id",
@@ -633,7 +629,7 @@ def ev_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     ln(n_bins) in [0, 1] — near 1 is white (flat spectrum), near 0 is
     a dominant period.  Scale shape: one fact rollup to <= ~2400
     days, 63-row bounded bin grid, 1-row output."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     daily = (
         e.select(F.to_date("ts").alias("d"))
         .groupBy("d")
@@ -769,7 +765,7 @@ def doc_lsh_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bounded), plus the LSH pipeline itself (banded bucket join, the
     100 TB path).""".format(m=_PANEL_MOD, cap=_PANEL_CAP,
                             sz=_PANEL_CAP // _PANEL_MOD)
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     # one shingle scan shared by the truth side and the LSH pipeline;
     # lazily checkpointed so the four consumers read a materialized
     # table instead of re-running tokenize/shingle/explode each

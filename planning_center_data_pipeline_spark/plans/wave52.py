@@ -55,10 +55,6 @@ _AB_SEG_A = "BUILDING"
 _AB_SEG_B = "MACHINERY"
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- Ansari-Bradley scale test ----------------------------------------------------------
 
 
@@ -77,7 +73,7 @@ def stat_ansari_bradley(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cents domain, <= ~1.1M rows, constant w.r.t. fact growth),
     the midrank prefix sum runs over that rollup, then a 1-row
     moment reduce."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     base = c.filter(
         F.col("c_mktsegment").isin(_AB_SEG_A, _AB_SEG_B)
     ).select(
@@ -206,7 +202,7 @@ def ev_transfer_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     information about today's X beyond yesterday's X.  Scale shape:
     one fact rollup to <= ~2400 (day, type) cells, day-spine windows
     on the bounded spine, 8-cell reduce."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     types = (
         e.select(F.col("event_type").alias("t"))
         .distinct()
@@ -373,7 +369,7 @@ def emb_adjusted_rand(spark: SparkSession, sf_dir: str) -> DataFrame:
     2*C(N,2) — every product held in decimal(38,0).  Scale shape:
     one broadcast-assign pass over the embeddings, a 10 x 16 bounded
     contingency, 1-row combinatorics."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     c = e.select(
         F.col("vec_id").alias("vid"),
         "label",
@@ -537,7 +533,7 @@ def emb_dunn_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     is better (well-separated, compact clusters).  Scale shape: one
     |E| x 64 explode rollup, label^2 x 64 bounded pair scan, 1-row
     output."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     q = e.select(
         "label",
         "vec_id",

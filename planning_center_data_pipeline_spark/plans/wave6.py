@@ -17,11 +17,8 @@ from planning_center_data_pipeline_spark.operators.sampling import (
     aes_key_sql,
     weighted_sample,
 )
+from planning_center_data_pipeline_spark.operators.joins import gated_broadcast
 from planning_center_data_pipeline_spark.sources.tables import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # --- weighted reservoir sample ----------------------------------------------
@@ -34,7 +31,7 @@ def doc_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     proportional to token count' curation primitive: per-row key
     expression + TakeOrderedAndProject, no global sort, no shuffle of
     document text."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return (
         weighted_sample(d, "doc_id", "n_chars", 500)
         .select("doc_id", F.col("n_chars").alias("w_chars"))
@@ -64,7 +61,7 @@ def doc_weighted_sample_stratified(
         aes_key,
     )
 
-    d = _t(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
+    d = load_table(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
     w = Window.partitionBy("source").orderBy(
         F.desc("k"), F.asc("doc_id")
     )
@@ -113,7 +110,7 @@ def jw_best_match_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         # on unblocked input or a degenerate block (misuse guard).
         return pd.Series(jw_micro_pairs(a, b, block=blk), dtype="int64")
 
-    parts = _t(spark, sf_dir, "part").select(
+    parts = load_table(spark, sf_dir, "part").select(
         "p_partkey",
         "p_name",
         F.split(F.col("p_name"), " ").getItem(1).alias("noun"),
@@ -210,8 +207,8 @@ def _jaccard_prefix_core(sh_with_df: DataFrame, t: float) -> DataFrame:
     payload attaches carry an explicit broadcast hint: the build side
     is the |docs|-row array table.  A forced broadcast does not degrade
     when that table outgrows the driver: it fails the query.  So the
-    hint is gated on spark.planning_center.broadcastVocabulary (default
-    true, the plan below); set it false at a corpus size where the
+    hint goes through operators.joins.gated_broadcast (on by default,
+    the plan below); switch the gate off at a corpus size where the
     docs table no longer fits, and the attaches fall back to the
     planner's own choice (sort-merge, as localCheckpoint hides the
     size).  Plan: 8 shuffle Exchanges -> 4 (prefix group, candidate
@@ -266,16 +263,9 @@ def _jaccard_prefix_core(sh_with_df: DataFrame, t: float) -> DataFrame:
         F.col("shs").alias("shs_2"),
         F.col("n").alias("n_2"),
     )
-    if (
-        sh_with_df.sparkSession.conf.get(
-            "spark.planning_center.broadcastVocabulary", "true"
-        )
-        == "true"
-    ):
-        d1, d2 = F.broadcast(d1), F.broadcast(d2)
     return (
-        cand.join(d1, "id_1")
-        .join(d2, "id_2")
+        cand.join(gated_broadcast(d1), "id_1")
+        .join(gated_broadcast(d2), "id_2")
         .select(
             "id_1",
             "id_2",
@@ -356,7 +346,7 @@ def doc_jaccard_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     t = 0.7
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     sh = shingle_table(d, "doc_id", "text", k=3)
     # vocab-sized; materialized once (executor-side) and reused by the
     # max-df probe and the per-doc build — the probe is one extra
@@ -407,7 +397,7 @@ def doc_jaccard_rare_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     cap = JACCARD_DF_CAP  # ubiquity threshold: templates exceed it at
     # every sf, doc-specific shingles never do — measured candidates
     # 35k (sf0.1) -> 84k (sf1), sub-linear, vs 2.1M at cap=100
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     sh_all = shingle_table(d, "doc_id", "text", k=3)
     dfreq = (
         sh_all.groupBy("shingle")
@@ -516,8 +506,8 @@ def li_scd2_pit_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         money_sum,
     )
 
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     ch = o.withColumn("prev_prio", F.lag("o_orderpriority").over(w)).filter(
         F.col("prev_prio").isNull()

@@ -33,10 +33,6 @@ from planning_center_data_pipeline_spark.operators.dedup import md5_hash60
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- spatial: grid-bucketed exact radius join --------------------------------
 
 _GEO_R = 2500  # radius; also the grid cell edge, so 3x3 cells cover it
@@ -47,7 +43,7 @@ def _geo_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic synthetic point per customer: x/y are independent
     md5-60 draws over [0, 1e6) — portable to the oracle verbatim."""
     key = F.col("c_custkey").cast("string")
-    return _t(spark, sf_dir, "customer").select(
+    return load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("k"),
         (md5_hash60(key, seed="x") % _GEO_SPAN).alias("x"),
         (md5_hash60(key, seed="y") % _GEO_SPAN).alias("y"),
@@ -141,8 +137,8 @@ ORDER BY key_a, key_b
 
 
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     return (
         o.join(li, o.o_orderkey == li.l_orderkey)
         .select(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
@@ -175,8 +171,8 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # neighbor lists AFTER the join, so only frontier-adjacent rows are
     # generated and the per-hop distinct shuffles neighbor rows of the
     # frontier, never the whole edge set.
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     raw = (
         o.join(li, o.o_orderkey == li.l_orderkey)
         .select(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
@@ -282,7 +278,7 @@ def rec_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast)."""
     edges = _copurchase_edges(spark, sf_dir)
     users = edges.filter(F.col("c") % 50 == 0).select("c").distinct()
-    maxpk = _t(spark, sf_dir, "part").agg(F.max("p_partkey").alias("maxpk"))
+    maxpk = load_table(spark, sf_dir, "part").agg(F.max("p_partkey").alias("maxpk"))
 
     draw = md5_hash60(
         F.concat(F.col("c").cast("string"), F.lit("#"), F.col("i").cast("string"))
@@ -353,7 +349,7 @@ def doc_kfold_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats make the balance auditable.  One shuffle on (fold, source);
     the fold key is per-row arithmetic and survives repartitioning,
     backfills, and engine swaps (same split in the oracle)."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     content = F.md5(F.col("text"))
     return (
         d.select(
@@ -395,7 +391,7 @@ def ts_ewma_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproduces the oracle bit-for-bit.  The float appears exactly
     once, in the final num/den division (IEEE-deterministic for a
     given int pair).  One shuffle for the per-customer window."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(
         F.desc("o_orderdate"), F.desc("o_orderkey")
     )
@@ -456,7 +452,7 @@ def emb_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     verbatim with a label join added."""
     from planning_center_data_pipeline_spark.operators import similarity as S
 
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     q = (
         e.filter(F.col("vec_id") < 10)
         .select(
@@ -551,10 +547,10 @@ def gdpr_purge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     orderkeys, which AQE broadcasts when the delete list is small (the
     normal case).  Nothing collects; the audit is a 4-row union of
     1-row aggregates."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey")
-    ev = _t(spark, sf_dir, "events").select("user_id")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey")
+    ev = load_table(spark, sf_dir, "events").select("user_id")
 
     def _audit(df: DataFrame, cond, tbl: str) -> DataFrame:
         return df.agg(
@@ -626,7 +622,7 @@ def ev_cusum_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     per type = days, tiny); top-3 filter compiles to the rank-filter
     shape.  Exactness: deviations, prefix sums, and the max(0,...)
     unrolling are all integer — no float accumulates across rows."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     daily = (
         ev.groupBy(
             "event_type", F.to_date("ts").alias("d")
@@ -704,7 +700,7 @@ def ts_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     on integers (the midpoint of two int64s is exact in double).
     Windows partition by priority so the series parallelize; the only
     unbounded shuffle is the daily pre-aggregation."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     daily = o.groupBy(
         F.col("o_orderpriority").alias("priority"),
         F.to_date("o_orderdate").alias("d"),
@@ -762,7 +758,7 @@ def attr_linear_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     the stream-stream interval-join shape in batch), one per-conversion
     window for the touch count/rank, then a tiny groupBy.  No floats
     until presentation."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     conv = ev.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("conv_id"),
         F.col("user_id").alias("cu"),
@@ -866,7 +862,7 @@ def stat_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     Replica means are exact int ratios; floats appear only in the
     final division.  Scale: the explode is a flat 32x map-side
     fan-out feeding one 32-group aggregate — no skew, no collect."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", cents("o_totalprice").alias("cts")
     )
     # Parallelism floor (same wall as operators/dedup.shingle_table):
@@ -958,7 +954,7 @@ def emb_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors twice."""
     from planning_center_data_pipeline_spark.operators import similarity as S
 
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     subs = e.select(
         "vec_id",
         F.posexplode(
@@ -1032,7 +1028,7 @@ def doc_common_substring_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_jaccard_rare_prefix), so candidate pairs are bounded by
     20 x rare-hash count.  Top-50 by shared-window count with a full
     deterministic tie-break."""
-    d = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 64)
+    d = load_table(spark, sf_dir, "documents").filter(F.col("n_chars") >= 64)
     # parallelism floor: the window substring+md5 explode is CPU-dense
     # per input byte and runs BEFORE any shuffle (see shingle_table)
     floor = min(spark.sparkContext.defaultParallelism, 16)
@@ -1093,7 +1089,7 @@ def doc_training_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     any cluster size (no RNG state, no global sort: the only shuffle
     is the per-shard window, and shards are uniform by construction).
     Epoch reshuffles would salt the seed."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     did = F.col("doc_id").cast("string")
     w = Window.partitionBy("shard").orderBy("k", "doc_id")
     return (
@@ -1139,7 +1135,7 @@ def ev_capped_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     gap_us = 30 * 60 * 1_000_000
     day_us = 24 * 3600 * 1_000_000
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id", epoch_us(F.col("ts")).alias("us")
     )
     by_user = Window.partitionBy("user_id").orderBy("us")
@@ -1225,7 +1221,7 @@ def ev_type_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: one distinct (user, type) rollup, a self-join bounded
     by C(5,2) pairs per user, a 1-row user-count broadcast.  Per-type
     counts join on a 5-row table — broadcast by AQE."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     ut = ev.select("user_id", "event_type").distinct()
     n_users = ev.select("user_id").distinct().agg(
         F.count(F.lit(1)).alias("n_users")
@@ -1294,7 +1290,7 @@ def rec_training_set_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     the only added exchange."""
     edges = _copurchase_edges(spark, sf_dir)
     users = edges.filter(F.col("c") % 50 == 0).select("c").distinct()
-    maxpk = _t(spark, sf_dir, "part").agg(F.max("p_partkey").alias("maxpk"))
+    maxpk = load_table(spark, sf_dir, "part").agg(F.max("p_partkey").alias("maxpk"))
 
     draw = md5_hash60(
         F.concat(F.col("c").cast("string"), F.lit("#"), F.col("i").cast("string"))
@@ -1396,8 +1392,8 @@ def ts_ols_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     (nondeterministic across partitionings); integer moments make the
     answer partitioning-invariant.  Two shuffles: monthly rollup, then
     the per-nation moment aggregate."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     monthly = (
         o.join(c, o.o_custkey == c.c_custkey)
         .groupBy(
@@ -1473,7 +1469,7 @@ def data_diff_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB this is the shape you run before swapping a table pointer;
     sample keys ride along (min per class) so a human can spot-check
     without a second scan."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", cents("o_totalprice").alias("cts")
     )
     mx = o.agg(F.max("o_orderkey").alias("mxk"))

@@ -36,10 +36,6 @@ from planning_center_data_pipeline_spark.operators.dedup import md5_hash60
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def _floor_parallelism(df: DataFrame, col: str) -> DataFrame:
     """Capped repartition floor (shingle_table pattern): CPU-dense
     per-row stages before the first shuffle serialize when a small
@@ -77,7 +73,7 @@ def freq_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_word_freq never happens.  Tokenization is re-scanned in pass
     2: two cheap scans beat one shuffle of the full token stream.
     """
-    d = _floor_parallelism(_t(spark, sf_dir, "documents"), "doc_id")
+    d = _floor_parallelism(load_table(spark, sf_dir, "documents"), "doc_id")
     toks = d.select(
         F.explode(X.tokens(X.normalize_text(F.col("text")))).alias("tok")
     ).filter(F.col("tok") != "")
@@ -164,7 +160,7 @@ def rec_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB this shuffles on bucket id, and the output is one row
     per SAMPLED item (<= min(draws, items)).
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     w = li.groupBy(F.col("l_partkey").alias("item")).agg(
         F.count(F.lit(1)).alias("wt")
     )
@@ -277,7 +273,7 @@ def emb_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from planning_center_data_pipeline_spark.operators import similarity as S
 
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     qv = e.select("vec_id", S.quantized(F.col("embedding")).alias("v"))
 
     def d2(a, b):
@@ -429,9 +425,9 @@ def surv_hazard_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel curves; rows per window bounded by the calendar span, not
     the subject count).  The 1-row dataset-end aggregate broadcasts.
     """
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
     end = o.agg(F.max("o_orderdate").alias("maxd"))  # 1 row
     span = (
         o.groupBy("o_custkey")
@@ -534,7 +530,7 @@ def ts_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality is the calendar, not the data; the heavy work (the
     monthly rollup) shuffles normally beforehand.
     """
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     monthly = o.groupBy(
         F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM").alias(
             "month"
@@ -589,7 +585,7 @@ def ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny monthly table, broadcast back.  Calendar-bounded windows
     only.
     """
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     monthly = o.groupBy(
         F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM").alias(
             "month"
@@ -649,7 +645,7 @@ def fn_collation_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same string.  The oracle groups by lower(), which UNICODE_CI
     coincides with on ASCII data.
     """
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     mangled = p.select(
         F.when(
             md5_hash60(F.col("p_partkey").cast("string"), seed=7) % 2 == 0,

@@ -36,10 +36,6 @@ from planning_center_data_pipeline_spark.operators.parallelism import cpu_floor
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- k-anonymity class-size audit --------------------------------------------
 
 _KANON_K = 5
@@ -61,7 +57,7 @@ def priv_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     is collected and no window spans the whole table, so the audit
     runs unchanged over a 100 TB membership table.
     """
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     classes = (
         c.select(
             F.col("c_nationkey").alias("nat"),
@@ -120,7 +116,7 @@ def stat_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     across the box; a no-op at real scale (percentile/sum are
     order-free, results unchanged).
     """
-    li = cpu_floor(_t(spark, sf_dir, "lineitem"), "l_orderkey")
+    li = cpu_floor(load_table(spark, sf_dir, "lineitem"), "l_orderkey")
     c = cents("l_extendedprice")
     cut = li.groupBy(F.col("l_returnflag").alias("rf")).agg(
         F.percentile(c, F.lit(0.05)).alias("lo"),
@@ -190,7 +186,7 @@ def ev_basket_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     per (user, day)), so the in-row C(k,3) explode is constant-bounded
     at any SF.
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     b = (
         ev.select(
             "user_id",
@@ -292,10 +288,10 @@ def win_share_of_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
     the dimension, not the data) — the global window's single
     partition holds 25 rows by construction.
     """
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region")
     per_nation = (
         o.join(c, o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
@@ -346,8 +342,8 @@ def li_ship_sla_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     shipped within 30 days.  One fact-fact equi-join on the order key,
     one groupBy — the canonical SLA dashboard at any scale.
     """
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     lag = F.datediff("l_shipdate", "o_orderdate")
     j = li.join(o, li.l_orderkey == o.o_orderkey).select(
         F.col("o_orderpriority").alias("priority"), lag.alias("lag_d")
@@ -412,7 +408,7 @@ def emb_dim_trunc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from planning_center_data_pipeline_spark.operators import similarity as S
 
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
 
     def norms(df, prefix):
         vf = S.quantized(F.col("embedding"))

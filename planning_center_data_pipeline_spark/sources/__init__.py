@@ -1,8 +1,3 @@
-from planning_center_data_pipeline_spark.sources.tables import (
-    TABLES,
-    load_table,
-    load_tables,
-    register_views,
-)
+from planning_center_data_pipeline_spark.sources.tables import TABLES, load_table
 
-__all__ = ["TABLES", "load_table", "load_tables", "register_views"]
+__all__ = ["TABLES", "load_table"]

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -836,6 +838,34 @@ def test_broadcast_gate_both_positions(spark, sf_dir, name):
         spark.conf.unset(gate)
         spark.conf.set(threshold, prev)
     assert "BroadcastHashJoin" not in plan
+
+
+def test_broadcast_gate_has_one_reader():
+    """operators.joins.gated_broadcast is the only place that reads the
+    broadcast gate: the conf key appears in exactly one package module."""
+    import planning_center_data_pipeline_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    readers = [
+        str(p.relative_to(root))
+        for p in sorted(root.rglob("*.py"))
+        if "spark.planning_center.broadcastVocabulary" in p.read_text()
+    ]
+    assert readers == ["operators/joins.py"], readers
+
+
+def test_shared_sql_text_leaves_catalog_unchanged(spark, sf_dir):
+    """Queries whose SQL text doubles as the oracle bind the base tables
+    as DataFrames, so building them registers or rebinds no
+    session-global view (e.g. `orders` for other SQL in the session)."""
+    from __spark_entry__ import queries
+
+    before = sorted(t.name for t in spark.catalog.listTables())
+    for name in ("sql_group_by_all", "sql_scalar_subquery_orders"):
+        assert queries()[name](spark, sf_dir).count() > 0
+    after = sorted(t.name for t in spark.catalog.listTables())
+    assert after == before
+    assert not {"orders", "lineitem"} & set(after)
 
 
 def test_write_observed_metrics_single_pass(spark, sf_dir, tmp_path):

@@ -5,6 +5,8 @@ schema drift in seconds instead of a full crosscheck run."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import duckdb
 import pytest
 
@@ -62,7 +64,6 @@ def test_bench_warmup_and_headline_names_exist():
     the driver's stdout line.  Pin every referenced name to the
     registry."""
     import re
-    from pathlib import Path
 
     queries, _ = collect_all()
     src = Path(__file__).resolve().parent.parent / "bench.py"
@@ -86,26 +87,32 @@ def test_bench_warmup_and_headline_names_exist():
 
 
 def test_rotation_sample_sets_are_consistent():
-    """The canary rotation's bookkeeping must stay sound: the
-    per-round sampled sets are pairwise disjoint (the flattened walk
-    must not visit a name twice) and every recorded name still exists
-    in the registry (a renamed query would silently break its canary
-    re-checks)."""
+    """The registry is a module round-robin discovered from the package:
+    every plan module contributes at least one query, every oracled
+    query precedes every rows-only one, and the first k entries (k =
+    modules with oracles) come from k distinct modules, so any prefix
+    spans every operator family."""
+    import importlib
+
     from planning_center_data_pipeline_spark import plans as P
 
     queries, oracles = collect_all()
-    rounds = P._SAMPLED_BY_ROUND
-    seen: set[str] = set()
-    for i, s in enumerate(rounds):
-        dup = seen & s
-        assert not dup, f"round-set {i} repeats earlier names: {dup}"
-        seen |= s
-    missing = seen - set(queries)
-    assert not missing, f"sampled names no longer registered: {missing}"
-    # canary picker returns _N_CANARIES distinct, oracled names
-    canaries = P._canary_names(oracles)
-    assert len(canaries) == P._N_CANARIES == len(set(canaries))
-    assert all(c in oracles for c in canaries)
+    stems = sorted(
+        p.stem for p in Path(P.__file__).parent.glob("*.py") if p.stem != "__init__"
+    )
+    owner = {}
+    for stem in stems:
+        mod = importlib.import_module(f"{P.__name__}.{stem}")
+        assert mod.QUERIES, f"plans/{stem}.py contributes no query"
+        owner.update(dict.fromkeys(mod.QUERIES, stem))
+    assert set(owner) == set(queries)
+
+    names = list(queries)
+    assert all(n in oracles for n in names[: len(oracles)])
+    assert not any(n in oracles for n in names[len(oracles) :])
+
+    k = len({owner[n] for n in oracles})
+    assert len({owner[n] for n in names[:k]}) == k
 
 
 def test_no_oracle_is_vacuous_at_sf001(con_sf001):

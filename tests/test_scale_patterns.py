@@ -120,12 +120,12 @@ def test_decontaminate_flags_planted_duplicate(spark, sf_dir):
         assert name == "documents"
         return d.unionByName(planted)
 
-    orig = C._t
-    C._t = fake_t
+    orig = C.load_table
+    C.load_table = fake_t
     try:
         out = {r.doc_id: r for r in doc_decontaminate(spark, sf_dir).collect()}
     finally:
-        C._t = orig
+        C.load_table = orig
     assert out[new_id].contamination == 1.0
 
 

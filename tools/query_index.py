@@ -1,7 +1,7 @@
 """Generate docs/QUERY_INDEX.md: one row per registered query —
 implementation location, oracle status, and the first docstring line —
 so the full `__spark_entry__.queries()` surface is auditable at a
-glance without grepping 20 plan modules.
+glance without grepping the plan modules.
 
 Usage: python tools/query_index.py
 """
