@@ -643,17 +643,17 @@ ORDER BY user_id, rn
 # grouping_id disambiguates which set produced each row.
 
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_gs")
     return spark.sql(
         """
         SELECT o_orderstatus, o_orderpriority,
                CAST(grouping_id(o_orderstatus, o_orderpriority) AS BIGINT) AS gid,
                COUNT(*) AS n_orders
-        FROM orders_gs
+        FROM {orders}
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority),
                                 (o_orderstatus, o_orderpriority))
         ORDER BY gid, o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -1023,36 +1023,16 @@ ORDER BY custkey, valid_from, priority
 # ORDER BY + LIMIT.  Catalyst decorrelates this into a ranked window
 # join — same physical plan family as the window formulation, but it
 # exercises the SQL decorrelation path.  Deterministic tie-break on
-# o_orderkey.
+# o_orderkey.  One text for both engines: `{customer}`/`{orders}` bind
+# DataFrames on the Spark side and the table names in the oracle.
 
-def q_lateral_top2_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("v_customer")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
-    return spark.sql(
-        """
-        SELECT c.c_custkey, t.o_orderkey,
-               CAST(ROUND(t.o_totalprice*100) AS BIGINT) AS price_cents
-        FROM v_customer c,
-        LATERAL (
-          SELECT o_orderkey, o_totalprice
-          FROM v_orders o
-          WHERE o.o_custkey = c.c_custkey
-          ORDER BY o_totalprice DESC, o_orderkey
-          LIMIT 2
-        ) t
-        WHERE c.c_custkey % 100 = 0
-        ORDER BY c.c_custkey, price_cents DESC, o_orderkey
-        """
-    )
-
-
-Q_LATERAL_SQL = """
+_Q_LATERAL_TEXT = """
 SELECT c.c_custkey, t.o_orderkey,
        CAST(ROUND(t.o_totalprice*100) AS BIGINT) AS price_cents
-FROM customer c,
+FROM {customer} c,
 LATERAL (
   SELECT o_orderkey, o_totalprice
-  FROM orders o
+  FROM {orders} o
   WHERE o.o_custkey = c.c_custkey
   ORDER BY o_totalprice DESC, o_orderkey
   LIMIT 2
@@ -1060,6 +1040,15 @@ LATERAL (
 WHERE c.c_custkey % 100 = 0
 ORDER BY c.c_custkey, price_cents DESC, o_orderkey
 """
+Q_LATERAL_SQL = _Q_LATERAL_TEXT.format(customer="customer", orders="orders")
+
+
+def q_lateral_top2_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return spark.sql(
+        _Q_LATERAL_TEXT,
+        customer=load_table(spark, sf_dir, "customer"),
+        orders=load_table(spark, sf_dir, "orders"),
+    )
 
 
 # --- null-safe equality join -------------------------------------------------
@@ -1151,11 +1140,10 @@ def sql_recursive_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine elsewhere runs by hand (connected components, PageRank).
     Depth is bounded by the id's digit count (~5 here), far under
     Spark's recursion level limit."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("docs_rec")
     return spark.sql(
         """
         WITH RECURSIVE walk(doc_id, node, depth) AS (
-          SELECT doc_id, doc_id AS node, 0 AS depth FROM docs_rec
+          SELECT doc_id, doc_id AS node, 0 AS depth FROM {documents}
           UNION ALL
           SELECT w.doc_id, w.node DIV 10, w.depth + 1
           FROM walk w WHERE w.node > 0
@@ -1164,7 +1152,8 @@ def sql_recursive_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(MAX(depth) AS BIGINT) AS depth_to_root,
                CAST(SUM(node) AS BIGINT) AS chain_sum
         FROM walk GROUP BY doc_id ORDER BY doc_id
-        """
+        """,
+        documents=load_table(spark, sf_dir, "documents"),
     )
 
 

@@ -933,13 +933,13 @@ def _chunk_udtf_cls():
 
 def doc_udtf_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.udtf.register("chunk_doc", _chunk_udtf_cls())
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("v_documents_udtf")
     return spark.sql(
         """
         SELECT d.doc_id, c.chunk_no, c.chunk_text, c.n_toks
-        FROM v_documents_udtf d, LATERAL chunk_doc(d.text) c
+        FROM {documents} d, LATERAL chunk_doc(d.text) c
         ORDER BY d.doc_id, c.chunk_no
-        """
+        """,
+        documents=load_table(spark, sf_dir, "documents"),
     )
 
 

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from planning_center_data_pipeline_spark.functions.exact import cents
+from planning_center_data_pipeline_spark.operators.unrolled import unrolled_sql
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 _BPE_SQL_PAT = r"[a-z]+|[0-9]+|[^a-z0-9\s]"
@@ -117,31 +118,20 @@ def graph_pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=False)
     )
-    # r13 (guide §1.4/§7.3): the 5 unrolled rounds are ONE chained-CTE
-    # spark.sql() statement over temp views instead of 5 x 5 chained
-    # DataFrame calls — the loop form re-analyzes the growing tree at
-    # every op (O(iters^2) Catalyst work; split-timed build was ~1.6 s
-    # of the 3.25 s total at sf0.1).  Round expressions are the
-    # identical integer-exact trees (`r DIV deg`, `(15*base) DIV 100 +
-    # (85*coalesce(s,0)) DIV 100`), so results are bit-identical.
-    adj.createOrReplaceTempView("pr_adj")
-    nodes.createOrReplaceTempView("pr_nodes")
-    rounds = ["r0 AS (SELECT node, base AS r FROM pr_nodes)"]
-    prev = "r0"
-    for i in range(1, _PR_ITERS + 1):
-        rounds.append(
-            f"r{i} AS (SELECT n.node, "
-            "(15 * n.base) DIV 100 + "
-            "(85 * coalesce(c.s, CAST(0 AS BIGINT))) DIV 100 AS r "
-            "FROM pr_nodes n LEFT JOIN ("
-            "SELECT cnode, SUM(c) AS s FROM ("
-            "SELECT explode(a.dsts) AS cnode, x.r DIV a.deg AS c "
-            f"FROM {prev} x JOIN pr_adj a ON x.node = a.src"
-            ") GROUP BY cnode) c ON n.node = c.cnode)"
-        )
-        prev = f"r{i}"
-    ranks = adj.sparkSession.sql(
-        "WITH " + ", ".join(rounds) + f" SELECT node, r FROM {prev}"
+    ranks = unrolled_sql(
+        "SELECT node, base AS r FROM {nodes}",
+        "SELECT n.node, "
+        "(15 * n.base) DIV 100 + "
+        "(85 * coalesce(c.s, CAST(0 AS BIGINT))) DIV 100 AS r "
+        "FROM {nodes} n LEFT JOIN ("
+        "SELECT cnode, SUM(c) AS s FROM ("
+        "SELECT explode(a.dsts) AS cnode, x.r DIV a.deg AS c "
+        "FROM {prev} x JOIN {adj} a ON x.node = a.src"
+        ") GROUP BY cnode) c ON n.node = c.cnode",
+        _PR_ITERS,
+        "SELECT node, r FROM {prev}",
+        nodes=nodes,
+        adj=adj,
     )
     return (
         ranks.orderBy(F.desc("r"), "node")

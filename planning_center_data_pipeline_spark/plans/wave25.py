@@ -140,11 +140,9 @@ def sql_scalar_udf_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary), used to bucket orders by a derived urgency score.  The
     oracle inlines the identical expression; hash equality proves the
     UDF is a pure macro."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_udf_v")
-    spark.sql("DROP TEMPORARY FUNCTION IF EXISTS order_urgency")
     spark.sql(
         """
-        CREATE TEMPORARY FUNCTION order_urgency(
+        CREATE OR REPLACE TEMPORARY FUNCTION order_urgency(
             priority STRING, price DOUBLE) RETURNS BIGINT
         RETURN CAST(substring(priority, 1, 1) AS BIGINT) * 10
                + CASE WHEN price > 200000 THEN 1 ELSE 0 END
@@ -156,9 +154,10 @@ def sql_scalar_udf_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(COUNT(*) AS BIGINT) AS n_orders,
                CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
                  AS revenue_cents
-        FROM orders_udf_v
+        FROM {orders}
         GROUP BY 1 ORDER BY urgency
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 

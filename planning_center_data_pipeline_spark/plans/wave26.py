@@ -137,8 +137,6 @@ def ord_fiscal_445_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     1970-01-01 was a Thursday), so the engines agree bit-for-bit —
     the calendar logic naive month(date) grouping can't express.
     Scan + one agg; the period math is per-row expressions."""
-    o = load_table(spark, sf_dir, "orders")
-    o.createOrReplaceTempView("orders_445_v")
     y = "CAST(EXTRACT(year FROM o_orderdate) AS INT)"
     d = "datediff(to_date(o_orderdate), DATE '1970-01-01')"
     start_y = _fy_start_expr(y)
@@ -151,7 +149,7 @@ def ord_fiscal_445_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                    AS fy,
                  CASE WHEN {d} >= {start_y} THEN {d} - {start_y}
                       ELSE {d} - {start_prev} END AS doffs
-          FROM orders_445_v
+          FROM {{orders}}
         ), weeks AS (
           SELECT cents, fy,
                  LEAST(CAST(doffs / 7 AS INT), 52) AS wk
@@ -169,7 +167,8 @@ def ord_fiscal_445_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(SUM(cents) AS BIGINT) AS revenue_cents
         FROM periods
         GROUP BY 1, 2 ORDER BY fiscal_year, period
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from planning_center_data_pipeline_spark.functions.temporal import epoch_us
+from planning_center_data_pipeline_spark.operators.unrolled import unrolled_sql
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 _W_US = 86_400_000_000  # 24 h in microseconds (BIGINT-safe literal)
@@ -161,37 +162,21 @@ def graph_components_minlabel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.collect_set("l_orderkey").alias("orders"))
         .localCheckpoint(eager=False)
     )
-    # r13 (guide §1.4/§7.3): the 5 propagation rounds are ONE chained-
-    # CTE spark.sql() statement over temp views of the two checkpointed
-    # adjacency groupings, instead of 5 x 4 chained DataFrame calls
-    # (each op re-analyzes the growing tree — O(rounds^2) driver work).
-    # Round structure is the identical half-step chain (min per order
-    # from exploded labels.orders, min per part from exploded by_order
-    # .parts, re-attach orders from by_part), so the physical plan and
-    # the integer-exact results are unchanged.
-    by_order.createOrReplaceTempView("cc_by_order")
-    by_part.createOrReplaceTempView("cc_by_part")
-    rounds = ["l0 AS (SELECT node, node AS lbl, orders FROM cc_by_part)"]
-    prev = "l0"
-    for i in range(1, _LP_ITERS + 1):
-        rounds.append(
-            f"m{i} AS (SELECT l_orderkey, MIN(lbl) AS om FROM ("
-            f"SELECT lbl, explode(orders) AS l_orderkey FROM {prev}"
-            ") GROUP BY l_orderkey)"
-        )
-        rounds.append(
-            f"n{i} AS (SELECT node, MIN(om) AS lbl FROM ("
-            "SELECT m.om, explode(b.parts) AS node "
-            f"FROM m{i} m JOIN cc_by_order b ON b.l_orderkey = m.l_orderkey"
-            ") GROUP BY node)"
-        )
-        rounds.append(
-            f"l{i} AS (SELECT n.node, n.lbl, p.orders "
-            f"FROM n{i} n JOIN cc_by_part p ON p.node = n.node)"
-        )
-        prev = f"l{i}"
-    labels = by_part.sparkSession.sql(
-        "WITH " + ", ".join(rounds) + f" SELECT node, lbl FROM {prev}"
+    labels = unrolled_sql(
+        "SELECT node, node AS lbl, orders FROM {by_part}",
+        "SELECT n.node, n.lbl, p.orders FROM ("
+        "SELECT node, MIN(om) AS lbl FROM ("
+        "SELECT m.om, explode(b.parts) AS node FROM ("
+        "SELECT l_orderkey, MIN(lbl) AS om FROM ("
+        "SELECT lbl, explode(orders) AS l_orderkey FROM {prev}"
+        ") GROUP BY l_orderkey"
+        ") m JOIN {by_order} b ON b.l_orderkey = m.l_orderkey"
+        ") GROUP BY node"
+        ") n JOIN {by_part} p ON p.node = n.node",
+        _LP_ITERS,
+        "SELECT node, lbl FROM {prev}",
+        by_order=by_order,
+        by_part=by_part,
     )
     return (
         labels.groupBy(F.col("lbl").alias("component"))

@@ -438,11 +438,9 @@ def sql_pipe_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan as the classic form, different authoring surface.  Money
     sums use cent integers for exact, order-free doubles.
     """
-    o = load_table(spark, sf_dir, "orders")
-    o.createOrReplaceTempView("orders_pipe_v")
     return spark.sql(
         """
-        FROM orders_pipe_v
+        FROM {orders}
         |> WHERE o_orderstatus <> 'P'
         |> AGGREGATE
              COUNT(*) AS n_orders,
@@ -450,7 +448,8 @@ def sql_pipe_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
                / 100.0 AS sum_price
            GROUP BY o_orderstatus, o_orderpriority
         |> ORDER BY o_orderstatus, o_orderpriority
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -895,18 +894,17 @@ def set_except_all_priorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-set cousins (INTERSECT/EXCEPT) live in
     set_customer_years; this covers the bag semantics.
     """
-    o = load_table(spark, sf_dir, "orders")
-    o.createOrReplaceTempView("orders_setall_v")
     return spark.sql(
         """
         SELECT o_orderpriority, COUNT(*) AS surplus FROM (
-          SELECT o_orderpriority FROM orders_setall_v
+          SELECT o_orderpriority FROM {orders}
           WHERE year(o_orderdate) = 1997
           EXCEPT ALL
-          SELECT o_orderpriority FROM orders_setall_v
+          SELECT o_orderpriority FROM {orders}
           WHERE year(o_orderdate) = 1996
         ) GROUP BY o_orderpriority ORDER BY o_orderpriority
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from planning_center_data_pipeline_spark.operators.unrolled import unrolled_sql
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 _PI_ITERS = 12  # mixes to 6-decimal fixpoint by ~10; 25 measured identical
@@ -68,35 +69,16 @@ def build_transition_chain(
 def power_iteration(x: DataFrame, p: DataFrame, iters: int = _PI_ITERS) -> DataFrame:
     """iters unrolled rounds of x <- x P over the |types|-row vector;
     transition probabilities stay exact rationals (c / rt) inside the
-    round expression so both engines iterate the identical matrix.
-
-    r13 (guide §1.4 / §7.3 "planning time itself can become the
-    bottleneck"): the rounds are emitted as ONE chained-CTE spark.sql()
-    statement over temp views instead of iters chained DataFrame calls.
-    Each DataFrame op analyzes its whole subtree eagerly, so the loop
-    form pays O(iters^2) Catalyst analysis plus ~4 py4j round-trips per
-    round — measured ~60% of this query's wall time at sf0.1 (split-
-    timed build 1.5 s of 2.6 s total).  One SQL text is parsed and
-    analyzed once; round expression `SUM(pi * CAST(c AS DOUBLE) /
-    CAST(rt AS DOUBLE))` is the identical Catalyst tree, so the
-    physical plan and results are unchanged (oracle hash== both SFs).
-    Temp views are resolved eagerly at spark.sql(), so later
-    createOrReplaceTempView calls by sibling queries cannot retarget
-    this plan."""
-    spark = x.sparkSession
-    x.createOrReplaceTempView("pi_x0")
-    p.createOrReplaceTempView("pi_p")
-    rounds = []
-    prev = "pi_x0"
-    for i in range(1, iters + 1):
-        rounds.append(
-            f"x{i} AS (SELECT p.nxt AS t, "
-            "SUM(x.pi * CAST(p.c AS DOUBLE) / CAST(p.rt AS DOUBLE)) AS pi "
-            f"FROM {prev} x JOIN pi_p p ON x.t = p.cur GROUP BY p.nxt)"
-        )
-        prev = f"x{i}"
-    return spark.sql(
-        "WITH " + ", ".join(rounds) + f" SELECT t, pi FROM {prev}"
+    round expression so both engines iterate the identical matrix."""
+    return unrolled_sql(
+        "SELECT t, pi FROM {x0}",
+        "SELECT p.nxt AS t, "
+        "SUM(x.pi * CAST(p.c AS DOUBLE) / CAST(p.rt AS DOUBLE)) AS pi "
+        "FROM {prev} x JOIN {p} p ON x.t = p.cur GROUP BY p.nxt",
+        iters,
+        "SELECT t, pi FROM {prev}",
+        x0=x,
+        p=p,
     )
 
 

@@ -344,18 +344,17 @@ def sql_param_binding(spark: SparkSession, sf_dir: str) -> DataFrame:
     literals by the parser, not string-spliced, and Catalyst still
     constant-folds and pushes them into the scan.
     """
-    o = load_table(spark, sf_dir, "orders")
-    o.createOrReplaceTempView("orders_param_v")
     return spark.sql(
         """
         SELECT o_orderpriority, COUNT(*) AS n_orders,
                CAST(SUM(CAST(ROUND(o_totalprice*100) AS BIGINT)) AS DOUBLE)
                  / 100.0 AS sum_price
-        FROM orders_param_v
+        FROM {orders}
         WHERE o_orderstatus = :status AND o_totalprice > :min_price
         GROUP BY o_orderpriority ORDER BY o_orderpriority
         """,
         args={"status": "F", "min_price": 150000.0},
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 

@@ -199,8 +199,6 @@ def agg_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-pattern; every branch stays inside one partial-aggregated
     hash aggregate.
     """
-    o = load_table(spark, sf_dir, "orders")
-    o.createOrReplaceTempView("orders_filter_v")
     return spark.sql(
         """
         SELECT o_orderpriority,
@@ -210,9 +208,10 @@ def agg_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(SUM(CAST(ROUND(o_totalprice*100) AS BIGINT))
                     FILTER (WHERE year(o_orderdate) >= 1997) AS DOUBLE)
                  / 100.0 AS late_rev
-        FROM orders_filter_v
+        FROM {orders}
         GROUP BY o_orderpriority ORDER BY o_orderpriority
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 

@@ -71,7 +71,6 @@ def test_max_concurrency_hand_case(spark):
     df = spark.createDataFrame(
         rows, "event_id bigint, sec bigint, user_id bigint, event_type string, value double, props string"
     ).withColumn("ts", F.timestamp_micros(F.col("sec") * 1_000_000).cast("timestamp_ntz"))
-    df.createOrReplaceTempView("_conc_events")
 
     from planning_center_data_pipeline_spark.functions.temporal import epoch_us
     from planning_center_data_pipeline_spark.plans import advanced as A

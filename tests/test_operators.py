@@ -854,18 +854,97 @@ def test_broadcast_gate_has_one_reader():
     assert readers == ["operators/joins.py"], readers
 
 
+def test_broadcast_gate_list_covers_every_call_site():
+    """GATED_BROADCASTS names a query from every plan module that
+    places a gated_broadcast hint, and from no other module, so a new
+    hinted call site fails here until the both-positions test covers it."""
+    import planning_center_data_pipeline_spark.plans as plans
+    from __spark_entry__ import queries
+
+    root = Path(plans.__file__).parent
+    hinted = {
+        f"{plans.__name__}.{p.stem}"
+        for p in root.glob("*.py")
+        if "gated_broadcast(" in p.read_text()
+    }
+    covered = {queries()[n].__module__ for n in GATED_BROADCASTS}
+    assert covered == hinted, (covered, hinted)
+
+
+def test_no_session_global_views_in_package():
+    """Query builds bind DataFrames through spark.sql(text, **dfs); no
+    package module registers a temp view under a fixed name."""
+    import planning_center_data_pipeline_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    calls = ("createOrReplaceTempView", "createTempView", "createGlobalTempView")
+    found = [
+        str(p.relative_to(root))
+        for p in sorted(root.rglob("*.py"))
+        if any(c in p.read_text() for c in calls)
+    ]
+    assert found == [], found
+
+
+# Every query that runs SQL text over DataFrames bound by name.
+SQL_OVER_DATAFRAMES = (
+    "sql_group_by_all",
+    "sql_scalar_subquery_orders",
+    "sql_pipe_orders",
+    "set_except_all_priorities",
+    "sql_param_binding",
+    "agg_filter_clause",
+    "sql_scalar_udf_orders",
+    "ord_fiscal_445_revenue",
+    "agg_grouping_sets",
+    "q_lateral_top2_orders",
+    "sql_recursive_tree",
+    "doc_udtf_chunks",
+    "ev_markov_stationary",
+    "ev_entropy_rate_stationary",
+    "graph_pagerank_parts",
+    "graph_components_minlabel",
+)
+
+
 def test_shared_sql_text_leaves_catalog_unchanged(spark, sf_dir):
-    """Queries whose SQL text doubles as the oracle bind the base tables
-    as DataFrames, so building them registers or rebinds no
+    """Queries that run SQL text bind the base tables and intermediate
+    frames as DataFrames, so building them registers or rebinds no
     session-global view (e.g. `orders` for other SQL in the session)."""
     from __spark_entry__ import queries
 
     before = sorted(t.name for t in spark.catalog.listTables())
-    for name in ("sql_group_by_all", "sql_scalar_subquery_orders"):
-        assert queries()[name](spark, sf_dir).count() > 0
+    for name in SQL_OVER_DATAFRAMES:
+        assert queries()[name](spark, sf_dir).count() > 0, name
     after = sorted(t.name for t in spark.catalog.listTables())
     assert after == before
     assert not {"orders", "lineitem"} & set(after)
+
+
+def test_concurrent_sql_builds_keep_their_own_tables(spark, sf_dir):
+    """Two threads build the same SQL-text queries at two scale factors
+    at once; every result equals that scale factor's sequential result.
+    A fixed view name shared by both builds lets one thread read the
+    other's tables."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from __spark_entry__ import queries
+
+    names = ("set_except_all_priorities", "q_lateral_top2_orders")
+    sfs = (sf_dir, str(Path(sf_dir).with_name("sf0.01")))
+
+    def run(sf):
+        return [sorted(queries()[n](spark, sf).collect()) for n in names]
+
+    expected = {sf: run(sf) for sf in sfs}
+    assert expected[sfs[0]] != expected[sfs[1]]
+
+    def rounds(sf):
+        return [run(sf) == expected[sf] for _ in range(10)]
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        results = dict(zip(sfs, pool.map(rounds, sfs)))
+    assert all(all(r) for r in results.values()), results
 
 
 def test_write_observed_metrics_single_pass(spark, sf_dir, tmp_path):
