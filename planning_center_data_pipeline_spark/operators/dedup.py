@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from planning_center_data_pipeline_spark.operators.parallelism import cpu_floor
 from planning_center_data_pipeline_spark.operators.textstats import (
     normalize_text,
     tokens,
@@ -93,7 +94,7 @@ def shingle_table(
     extra cores return (measured 8-16 optimal on local[32] at sf0.1).
     At real scale the scan already exceeds the floor — no-op, no added
     shuffle."""
-    df = _tokenize_floor(df, id_col)
+    df = cpu_floor(df, id_col, cap=16)
     tokenized = df.select(
         F.col(id_col),
         *[F.col(c) for c in (extra_cols or [])],
@@ -289,7 +290,7 @@ def minhash_near_dups(
 ) -> DataFrame:
     """Full near-dup pipeline: shingle → minhash → LSH buckets →
     candidate pairs → exact-Jaccard verification ≥ threshold."""
-    sh = shingle_table(df, id_col, text_col, k).cache()
+    sh = shingle_table(df, id_col, text_col, k).localCheckpoint(eager=False)
     sigs = minhash_signatures(sh, id_col, n_hashes)
     cands = lsh_candidate_pairs(sigs, id_col, bands)
     return _verify_pairs_arrays(sh, id_col, cands, threshold)
@@ -414,8 +415,8 @@ def minhash_near_dups_portable(
     sh = (
         shingle_df
         if shingle_df is not None
-        else shingle_table(df, id_col, text_col, k)
-    ).cache()
+        else shingle_table(df, id_col, text_col, k).localCheckpoint(eager=False)
+    )
     # same per-row-digest + hex-min + decode-winners-only shape as
     # minhash_signatures_portable (bit-identical)
     sigs = (
@@ -467,18 +468,6 @@ def minhash_near_dups_portable(
     return _verify_pairs_arrays(sh, id_col, cands, threshold)
 
 
-def _tokenize_floor(df: DataFrame, id_col: str) -> DataFrame:
-    """shingle_table's scan-parallelism floor (see its docstring), for
-    the SimHash tokenize stages: spread a below-floor scan over the id
-    hash so the regex tokenize + explode does not serialize on the one
-    partition parquet gives a small single-file corpus.  Capped at 16
-    for the same downstream-join-fragmentation reason."""
-    floor = min(df.sparkSession.sparkContext.defaultParallelism, 16)
-    if df.rdd.getNumPartitions() < floor:
-        df = df.repartition(floor, F.col(id_col))
-    return df
-
-
 def simhash_signatures_portable(
     df: DataFrame, id_col: str, text_col: str, n_bits: int = 60
 ) -> DataFrame:
@@ -488,7 +477,7 @@ def simhash_signatures_portable(
     # r12 (guide §2.5): the regex tokenize + explode is CPU-dense per
     # input byte and a small corpus scans as ONE partition — same floor
     # rationale (and cap) as shingle_table; per-row, results unchanged.
-    df = _tokenize_floor(df, id_col)
+    df = cpu_floor(df, id_col, cap=16)
     tok = df.select(
         F.col(id_col),
         F.explode(tokens(normalize_text(F.col(text_col)))).alias("tok"),
@@ -696,7 +685,7 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     conditional sums → bit assembly."""
     # r12 (guide §2.5): same tokenize-parallelism floor as the portable
     # variant / shingle_table; per-row, results unchanged.
-    df = _tokenize_floor(df, id_col)
+    df = cpu_floor(df, id_col, cap=16)
     tok = df.select(
         F.col(id_col),
         F.explode(tokens(normalize_text(F.col(text_col)))).alias("tok"),

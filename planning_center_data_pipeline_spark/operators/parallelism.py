@@ -13,10 +13,11 @@ shuffle, no constant tuned to the local core count (the floor follows
 SPARK_GRAFT_CPUS via defaultParallelism, so the driver's lower-core
 bench runs keep their own floor).
 
-Older call sites (dedup.shingle_table, wave8/wave11 local helpers) cap
-the floor at 16 because their downstream *joins* fragment past that;
-per-row map work has no such coupling, so this helper defaults to the
-full default parallelism.
+Callers whose downstream *joins* fragment past 16 partitions
+(dedup.shingle_table, the SimHash and SRP signature stages, the
+regex-tokenize plans) and the Arrow-Python codec maps, whose idle-cold
+worker spawns scale with partitions, pass `cap=16`; plain per-row map
+work has no such coupling and takes the full default parallelism.
 """
 
 from __future__ import annotations
@@ -25,15 +26,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def cpu_floor(df: DataFrame, key: str, floor: int | None = None) -> DataFrame:
-    """Repartition `df` on hash(key) up to `floor` (default: the
-    session's defaultParallelism) when — and only when — the current
-    plan has fewer partitions.  Use directly below a scan feeding a
-    CPU-dense per-row stage; results are unchanged for any per-row or
-    order-free computation."""
-    sc = df.sparkSession.sparkContext
-    if floor is None:
-        floor = sc.defaultParallelism
+def cpu_floor(df: DataFrame, key: str, cap: int | None = None) -> DataFrame:
+    """Repartition `df` on hash(key) up to the session's
+    defaultParallelism, at most `cap`, when — and only when — the
+    current plan has fewer partitions.  Use directly below a scan
+    feeding a CPU-dense per-row stage; results are unchanged for any
+    per-row or order-free computation."""
+    floor = df.sparkSession.sparkContext.defaultParallelism
+    if cap is not None:
+        floor = min(floor, cap)
     if df.rdd.getNumPartitions() < floor:
         df = df.repartition(floor, F.col(key))
     return df

@@ -33,6 +33,7 @@ from planning_center_data_pipeline_spark.operators.joins import (
     semi_join_rename,
     validate_counts,
 )
+from planning_center_data_pipeline_spark.operators.sinks import write_partitioned
 
 PRESENTATION_COLUMNS = [
     "name",
@@ -132,12 +133,10 @@ def render_csv_outputs(
         "list_name",
         "csv_name",
     )
-    (
-        mapped.repartition("csv_name")
-        .sortWithinPartitions("csv_name", "name")
-        .select("csv_name", *PRESENTATION_COLUMNS)
-        .write.mode("overwrite")
-        .partitionBy("csv_name")
-        .option("header", True)
-        .csv(out_dir)
+    write_partitioned(
+        mapped.select("csv_name", *PRESENTATION_COLUMNS),
+        out_dir,
+        ["csv_name"],
+        fmt="csv",
+        sort_within=["name"],
     )

@@ -28,6 +28,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from planning_center_data_pipeline_spark.operators.parallelism import cpu_floor
+
 # Misuse ceilings for the Pandas kernels (round-7 VERDICT item 8, the
 # jw_micro_pairs contract): Python/numpy kernels must only ever see
 # bounded work units, and the bound is enforced at the kernel, not
@@ -378,9 +380,7 @@ def near_dup_pairs_lsh_rescore(
     # multiply-adds per row BEFORE the first shuffle; a single-file
     # corpus scans as one partition and serializes it (same wall as
     # operators/dedup.shingle_table — no-op at real scale)
-    floor = min(df.sparkSession.sparkContext.defaultParallelism, 16)
-    if df.rdd.getNumPartitions() < floor:
-        df = df.repartition(floor, F.col(id_col))
+    df = cpu_floor(df, id_col, cap=16)
     v = df.select(
         F.col(id_col).alias("vid"), quantized(F.col(vec_col)).alias("qv")
     ).withColumn("nsq", norm_sq_q(F.col("qv")))

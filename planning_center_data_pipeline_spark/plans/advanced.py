@@ -394,7 +394,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     #   4. the per-edge intersect probe is derived by exploding the
     #      oriented adjacency (nbrs_s attached map-side), so it joins
     #      adj ONCE (t side) instead of twice.
-    # localCheckpoint (not .cache()) materializes the two multi-
+    # localCheckpoint (not a cache) materializes the two multi-
     # consumer frames with their AQE-coalesced partitioning — same
     # rationale as before the rewrite (cache froze pre-AQE
     # partitioning: 2.6s vs 88s at sf0.01 under 200 partitions).

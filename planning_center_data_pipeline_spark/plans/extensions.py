@@ -216,10 +216,12 @@ GROUP BY tok ORDER BY n DESC, tok LIMIT 100
 
 def doc_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    # cached: jaccard_pairs scans the shingle table three times (sizes +
-    # both self-join sides); without this the tokenize+shingle explode
-    # re-runs per scan
-    sh = D.shingle_table(d, "doc_id", "text", k=3, extra_cols=["source"]).cache()
+    # checkpointed: jaccard_pairs scans the shingle table three times
+    # (sizes + both self-join sides); without this the tokenize+shingle
+    # explode re-runs per scan
+    sh = D.shingle_table(
+        d, "doc_id", "text", k=3, extra_cols=["source"]
+    ).localCheckpoint(eager=False)
     return D.jaccard_pairs(sh, "doc_id", threshold=0.2, block_col="source").orderBy(
         "id_1", "id_2"
     )

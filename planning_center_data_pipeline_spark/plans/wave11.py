@@ -34,20 +34,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from planning_center_data_pipeline_spark.functions.exact import cents
+from planning_center_data_pipeline_spark.operators.parallelism import cpu_floor
 from planning_center_data_pipeline_spark.operators.unrolled import unrolled_sql
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 _BPE_SQL_PAT = r"[a-z]+|[0-9]+|[^a-z0-9\s]"
-
-
-def _parallel_floor(df: DataFrame, key: str) -> DataFrame:
-    """Repartition small single-file scans up to a bounded floor so
-    CPU-dense per-row regex work before the first shuffle does not
-    serialize on one core (same rationale as dedup.shingle_table)."""
-    floor = min(df.sparkSession.sparkContext.defaultParallelism, 16)
-    if df.rdd.getNumPartitions() < floor:
-        df = df.repartition(floor, F.col(key))
-    return df
 
 
 # --- integer-exact PageRank over the co-purchase graph -----------------------
@@ -415,7 +406,7 @@ def doc_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shingle_table lesson); then one shuffle to the (lang, source)
     rollup.
     """
-    d = _parallel_floor(load_table(spark, sf_dir, "documents"), "doc_id")
+    d = cpu_floor(load_table(spark, sf_dir, "documents"), "doc_id", cap=16)
     per = d.select(
         "lang",
         "source",
@@ -489,7 +480,7 @@ def doc_zipf_rankfreq(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject; the rank window orders 50 rows, and the
     corpus-total divisor is a 1-row aggregate broadcast.
     """
-    d = _parallel_floor(load_table(spark, sf_dir, "documents"), "doc_id")
+    d = cpu_floor(load_table(spark, sf_dir, "documents"), "doc_id", cap=16)
     toks = d.select(
         F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("token")
     ).filter(F.col("token") != "")

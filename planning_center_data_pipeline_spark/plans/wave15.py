@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from planning_center_data_pipeline_spark.operators.parallelism import cpu_floor
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
@@ -44,10 +45,7 @@ def doc_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     repartition floor, then ONE shuffle to the per-source rollup of
     conditional counts.
     """
-    d = load_table(spark, sf_dir, "documents")
-    floor = min(spark.sparkContext.defaultParallelism, 16)
-    if d.rdd.getNumPartitions() < floor:
-        d = d.repartition(floor, F.col("doc_id"))
+    d = cpu_floor(load_table(spark, sf_dir, "documents"), "doc_id", cap=16)
     toks = F.split(F.trim(F.lower("text")), r"\s+")
     m = d.select(
         "source",

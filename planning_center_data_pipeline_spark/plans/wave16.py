@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from planning_center_data_pipeline_spark.operators import similarity as S
+from planning_center_data_pipeline_spark.operators.parallelism import cpu_floor
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 _DIMS = 64
@@ -141,10 +142,7 @@ def doc_rag_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     lesson); no shuffle at all until the output sort — chunking is
     embarrassingly parallel.
     """
-    d = load_table(spark, sf_dir, "documents")
-    floor = min(spark.sparkContext.defaultParallelism, 16)
-    if d.rdd.getNumPartitions() < floor:
-        d = d.repartition(floor, F.col("doc_id"))
+    d = cpu_floor(load_table(spark, sf_dir, "documents"), "doc_id", cap=16)
     toks = d.select(
         "doc_id",
         F.split(

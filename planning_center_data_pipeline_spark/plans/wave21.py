@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from planning_center_data_pipeline_spark.operators import textstats as X
+from planning_center_data_pipeline_spark.operators.parallelism import cpu_floor
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 _SKIP_MAX_GAP = 3
@@ -115,10 +116,7 @@ def doc_stopword_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: CPU-dense per-row regex behind the bounded
     repartition floor, one shuffle to the |langs|-row rollup.
     """
-    d = load_table(spark, sf_dir, "documents")
-    floor = min(spark.sparkContext.defaultParallelism, 16)
-    if d.rdd.getNumPartitions() < floor:
-        d = d.repartition(floor, F.col("doc_id"))
+    d = cpu_floor(load_table(spark, sf_dir, "documents"), "doc_id", cap=16)
     hits = X.stopword_hits(F.col("text"), "en").cast("long")
     per = d.select(
         "lang",

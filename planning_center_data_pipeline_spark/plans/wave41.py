@@ -77,7 +77,7 @@ def mm_jpeg_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.md5(F.col("doc_id").cast("string")).alias("h"),
         ),
         "doc_id",
-        floor=min(spark.sparkContext.defaultParallelism, 16),
+        cap=16,
     )
 
     def run(batches):

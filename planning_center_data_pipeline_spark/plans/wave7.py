@@ -30,6 +30,7 @@ from pyspark.sql.window import Window
 
 from planning_center_data_pipeline_spark.functions.exact import cents, sql_cents
 from planning_center_data_pipeline_spark.operators.dedup import md5_hash60
+from planning_center_data_pipeline_spark.operators.parallelism import cpu_floor
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
@@ -870,9 +871,7 @@ def stat_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cannot split below a row group — a single-file orders table
     # scans as ONE partition and serializes all 32N draws (measured
     # 4.8s -> 1.4s warm at sf0.1 with the floor; a no-op at real scale).
-    floor = min(spark.sparkContext.defaultParallelism, 16)
-    if o.rdd.getNumPartitions() < floor:
-        o = o.repartition(floor, F.col("o_orderkey"))
+    o = cpu_floor(o, "o_orderkey", cap=16)
     u = md5_hash60(
         F.concat(
             F.col("o_orderkey").cast("string"), F.lit("#"), F.col("b").cast("string")
@@ -1028,12 +1027,13 @@ def doc_common_substring_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_jaccard_rare_prefix), so candidate pairs are bounded by
     20 x rare-hash count.  Top-50 by shared-window count with a full
     deterministic tie-break."""
-    d = load_table(spark, sf_dir, "documents").filter(F.col("n_chars") >= 64)
     # parallelism floor: the window substring+md5 explode is CPU-dense
     # per input byte and runs BEFORE any shuffle (see shingle_table)
-    floor = min(spark.sparkContext.defaultParallelism, 16)
-    if d.rdd.getNumPartitions() < floor:
-        d = d.repartition(floor, F.col("doc_id"))
+    d = cpu_floor(
+        load_table(spark, sf_dir, "documents").filter(F.col("n_chars") >= 64),
+        "doc_id",
+        cap=16,
+    )
     w = (
         d.select(
             "doc_id",

@@ -33,17 +33,8 @@ from pyspark.sql.window import Window
 from planning_center_data_pipeline_spark.functions.exact import cents
 from planning_center_data_pipeline_spark.operators import textstats as X
 from planning_center_data_pipeline_spark.operators.dedup import md5_hash60
+from planning_center_data_pipeline_spark.operators.parallelism import cpu_floor
 from planning_center_data_pipeline_spark.sources.tables import load_table
-
-
-def _floor_parallelism(df: DataFrame, col: str) -> DataFrame:
-    """Capped repartition floor (shingle_table pattern): CPU-dense
-    per-row stages before the first shuffle serialize when a small
-    parquet scans as one partition; a no-op at real scale."""
-    floor = min(df.sparkSession.sparkContext.defaultParallelism, 16)
-    if df.rdd.getNumPartitions() < floor:
-        df = df.repartition(floor, F.col(col))
-    return df
 
 
 # --- two-pass Misra-Gries exact heavy hitters --------------------------------
@@ -73,7 +64,7 @@ def freq_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_word_freq never happens.  Tokenization is re-scanned in pass
     2: two cheap scans beat one shuffle of the full token stream.
     """
-    d = _floor_parallelism(load_table(spark, sf_dir, "documents"), "doc_id")
+    d = cpu_floor(load_table(spark, sf_dir, "documents"), "doc_id", cap=16)
     toks = d.select(
         F.explode(X.tokens(X.normalize_text(F.col("text")))).alias("tok")
     ).filter(F.col("tok") != "")

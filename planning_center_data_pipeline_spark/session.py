@@ -23,11 +23,12 @@ def get_spark(
     """Build (or reuse) the engine SparkSession.
 
     Defaults follow the local test topology (`local[N]`, N from
-    SPARK_GRAFT_CPUS, shuffle partitions ~= cores).  On a cluster the
+    SPARK_GRAFT_CPUS or else the CPUs this process may run on, shuffle
+    partitions ~= cores).  On a cluster the
     caller overrides master via spark-submit; AQE coalescing makes the
     shuffle-partition default safe at any scale.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     # in local mode the driver heap holds every executor too; half of
     # physical memory leaves room for the Python workers and the page
     # cache, so an unconfigured run spills instead of being OOM-killed

@@ -236,7 +236,11 @@ def _doc_rows(doc: dict, page_no: int):
         )
 
 
-class JsonApiReader(DataSourceReader):
+class _JsonApiOptions:
+    """Option parsing shared by the batch and streaming readers: one
+    of `path` (page files) or `url` (live http/https), plus paging,
+    retry and auth settings."""
+
     def __init__(self, options: dict):
         self.path = options.get("path")
         self.url = options.get("url")
@@ -257,6 +261,8 @@ class JsonApiReader(DataSourceReader):
         self.backoff_s = float(options.get("backoff_s", "0.5"))
         self.headers = _auth_headers(options)
 
+
+class JsonApiReader(_JsonApiOptions, DataSourceReader):
     def partitions(self):
         """One partition per page — the unit of parallel fetch.
 
@@ -267,13 +273,9 @@ class JsonApiReader(DataSourceReader):
         serial `pco.iterate` loop.  If the API omits total_count, fall
         back to ONE partition that walks links.next serially."""
         if self.path:
-            pages = sorted(
-                f for f in os.listdir(self.path)
-                if f.startswith("page-") and f.endswith(".json")
-            )
             return [
                 JsonApiPagePartition(i, os.path.join(self.path, f))
-                for i, f in enumerate(pages)
+                for i, f in enumerate(_list_pages(self.path))
             ]
         probe = _http_get_json(
             _page_url(self.url, self.per_page, 0),
@@ -334,7 +336,7 @@ def _read_page_rows(path: str, page_no: int):
     yield from _doc_rows(doc, page_no)
 
 
-class JsonApiStreamReader(SimpleDataSourceStreamReader):
+class JsonApiStreamReader(_JsonApiOptions, SimpleDataSourceStreamReader):
     """Streaming variant: pages-on-arrival.
 
     File mode: the offset is the count of consumed page files over the
@@ -352,26 +354,6 @@ class JsonApiStreamReader(SimpleDataSourceStreamReader):
     capped per_page so the range replays deterministically.
 
     Offsets are plain dicts checkpointed by Spark."""
-
-    def __init__(self, options: dict):
-        self.path = options.get("path")
-        self.url = options.get("url")
-        if not self.path and not self.url:
-            raise ValueError("pco_jsonapi: 'path' or 'url' option is required")
-        if self.path and self.url:
-            raise ValueError("pco_jsonapi: 'path' and 'url' are exclusive")
-        if self.url:
-            from urllib.parse import urlsplit
-
-            if urlsplit(self.url).scheme not in ("http", "https"):
-                raise ValueError(
-                    f"pco_jsonapi: unsupported url scheme in {self.url!r} "
-                    "(only http/https)"
-                )
-        self.per_page = int(options.get("per_page", "100"))
-        self.max_retries = int(options.get("max_retries", "5"))
-        self.backoff_s = float(options.get("backoff_s", "0.5"))
-        self.headers = _auth_headers(options)
 
     def initialOffset(self) -> dict:
         return {"consumed": 0} if self.url else {"next_idx": 0}

@@ -873,17 +873,36 @@ def test_broadcast_gate_list_covers_every_call_site():
 
 def test_no_session_global_views_in_package():
     """Query builds bind DataFrames through spark.sql(text, **dfs); no
-    package module registers a temp view under a fixed name."""
+    package module registers a temp view under a fixed name, or puts a
+    relation in the session's CacheManager, where a later build of the
+    same plan would read it (localCheckpoint(eager=False) instead)."""
     import planning_center_data_pipeline_spark as pkg
 
     root = Path(pkg.__file__).parent
-    calls = ("createOrReplaceTempView", "createTempView", "createGlobalTempView")
+    calls = (
+        "createOrReplaceTempView",
+        "createTempView",
+        "createGlobalTempView",
+        ".cache(",
+        ".persist(",
+    )
     found = [
         str(p.relative_to(root))
         for p in sorted(root.rglob("*.py"))
         if any(c in p.read_text() for c in calls)
     ]
     assert found == [], found
+
+
+def test_query_run_leaves_cache_manager_empty(spark, sf_dir):
+    """doc_ngram_jaccard scans its shingle table three times through a
+    lazy localCheckpoint; running it leaves nothing in the session's
+    CacheManager for a later build of the same plan to read."""
+    from __spark_entry__ import queries
+
+    spark.catalog.clearCache()
+    queries()["doc_ngram_jaccard"](spark, sf_dir).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 # Every query that runs SQL text over DataFrames bound by name.

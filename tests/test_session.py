@@ -1,9 +1,37 @@
-"""Session defaults: JVM case mapping (ICU off), which is both cheaper to
-start and the one that agrees with DuckDB, the oracle engine."""
+"""Session defaults: one local thread per usable CPU, and JVM case
+mapping (ICU off), which is both cheaper to start and the one that
+agrees with DuckDB, the oracle engine."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+from pathlib import Path
+
 import duckdb
+
+
+def test_default_parallelism_fits_the_host():
+    """With SPARK_GRAFT_CPUS unset, a fresh session runs local[N] for
+    the N CPUs this process may run on."""
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    code = (
+        "from planning_center_data_pipeline_spark.session import get_spark\n"
+        "s = get_spark()\n"
+        "print(s.sparkContext.master)\n"
+        "s.stop()\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=Path(__file__).resolve().parent.parent,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+        check=True,
+    ).stdout
+    assert out.split() == [f"local[{len(os.sched_getaffinity(0))}]"]
 
 
 def test_icu_case_mapping_off(spark):

@@ -1,377 +1,51 @@
-"""Shuffle-budget regression tests: each flagship query's physical
-plan carries an explicit Exchange budget.  A plan regression (lost
-broadcast, lost partitioning reuse, an accidental extra repartition)
-shows up here as a budget overrun long before it shows up as an sf1
-timing — the cheapest possible guard for the 100 TB story, since every
-Exchange is a full shuffle of its subtree's output at scale.
+"""Plan-shape regression tests: every query's physical plan against its
+`PLANS.json` entry.  A plan regression (lost broadcast, lost
+partitioning reuse, an accidental extra repartition) shows up here as a
+count above the entry, or as a join the entry does not hold, long
+before it shows up as an sf1 timing: every Exchange is a full shuffle
+of its subtree's output at scale, and a lost broadcast turns into a
+SortMergeJoin.
 
-Budgets are CEILINGS asserted against the CURRENT plans (AQE disabled
-for determinism — AQE can only merge/skip exchanges at runtime, never
-add them).  A budget increase must be a deliberate, reviewed edit of
-this table.
+Entries are CEILINGS recorded from the current plans by
+`tools/plan_manifest.py` (sf0.001, AQE off — AQE can only merge or skip
+exchanges at runtime, never add them — and this suite's session
+settings).  Raising one is a deliberate edit of PLANS.json: regenerate
+it and review the diff.
 """
 
 from __future__ import annotations
 
-import io
-import re
-from contextlib import redirect_stdout
+import json
+from collections import Counter
 
+import __spark_entry__ as entrymod
 import pytest
+from conftest import REPO, SF_SMOKE
 
-SF_DIR = "/root/testdata/sf0.001"
+from planning_center_data_pipeline_spark.planshape import plan_record
 
-# query -> max Exchange nodes allowed in the physical plan (pinned to
-# the counts the current plans actually produce).
-BUDGETS = {
-    # dims broadcast; lineitem groupBy shuffle + final sort
-    "q1_pricing_summary": 2,
-    # every dim side broadcast: the whole join tree runs on ONE
-    # shuffle-free scan pipeline + the agg/sort exchange
-    "q3_shipping_priority": 1,
-    "q5_local_supplier_volume": 2,
-    # window + downstream reuse one partitioning
-    "win_customer_order_history": 2,
-    # as-of via union + window: one data shuffle + final sort
-    "asof_purchase_last_click": 2,
-    # exact dedup: one shuffle on the content key + presentation sort
-    "doc_exact_dedup": 2,
-    # banded LSH: sig agg, band bucket self-join, rescore joins
-    "doc_minhash_lsh": 6,
-    # GEMM kNN: scorer repartition + vote agg/window (reused) + sort
-    "emb_knn_classify": 3,
-    # A-ES sample: TakeOrderedAndProject — ZERO exchanges
-    "doc_weighted_sample": 0,
-    # stratified: one shuffle on stratum + final sort
-    "doc_weighted_sample_stratified": 2,
-    # grid spatial join: one cell-key exchange (other side broadcast)
-    "geo_radius_pairs": 1,
-    # content-hash folds: distinct-rewrite agg pair + final sort
-    "doc_kfold_split": 3,
-    # per-customer window + group reuse one custkey shuffle + sort
-    "ts_ewma_spend": 2,
-    # per-user windows/aggs reuse one user_id shuffle + sort
-    "ev_capped_sessions": 2,
-    # md5 shard/position: one shard shuffle + final sort
-    "doc_training_order": 2,
-    # daily agg shuffle + per-type windows reuse + final sort
-    "ev_cusum_shift": 3,
-    # 32-replica bootstrap: parallelism-floor repartition + replica agg
-    # + tiny window
-    "stat_bootstrap_ci": 3,
-    # waves 10-16: the round-6 flagships.  The bucketed prefix-sum
-    # family (auc/ks/abc) runs extra exchanges, but every one past the
-    # per-value rollup moves a <=32-row relation — cheap at any scale.
-    # PageRank's loop exchanges hide behind the edge checkpoint; the
-    # pinned count is the post-checkpoint chain.
-    "graph_pagerank_parts": 5,
-    "ml_auc_rank": 9,
-    "stat_ks_two_sample": 7,
-    "cf_item_item_cosine": 4,
-    "cust_abc_pareto": 8,
-    "ord_open_backlog_daily": 5,
-    "sup_part_hhi": 2,
-    "doc_rag_chunks": 2,
-    "ev_markov_transitions": 4,
-    "doc_incremental_dedup_merge": 4,
-    "ev_retention_triangle": 4,
-    "ml_decile_lift": 4,
-    "cust_decile_migration": 5,
-    "doc_filter_funnel": 3,
-    # waves 22-25 (round 7).  Spearman's 7 exchanges all move
-    # value-count tables (<=550 rows per flag) after the three fact
-    # aggregations — the count-based rank design's whole point.
-    "doc_containment_pairs": 4,
-    "ml_ndcg_at10": 3,
-    "ev_position_attribution": 3,
-    "ts_monthly_seasonal_index": 2,
-    "cust_pit_training_features": 2,
-    "emb_mips_topk": 2,
-    "sup_lead_time_trend": 2,
-    "ord_queue_wait_closed_form": 2,
-    "ev_path_regex_funnel": 3,
-    "ord_iso_week_revenue": 2,
-    "stat_spearman_rank": 7,
-    "ord_revenue_bridge": 4,
-    "sql_scalar_udf_orders": 2,
-    # wave 26: SES window is global-ordered but over the CALENDAR
-    # spine (rows = days, bounded regardless of data volume)
-    "ts_ses_forecast_int": 2,
-    "ord_fiscal_445_revenue": 2,
-    # wave 29: serde map is shuffle-free; agg + sort
-    "ev_avro_roundtrip_agg": 2,
-    # monthly agg, calendar-bounded pair join, median window/sort
-    "ts_theil_sen_slope": 3,
-    # (brand, cents) agg + brand windows reuse + final sort
-    "li_weighted_median_price": 3,
-    # daily agg + calendar-bounded global window/top-k
-    "ts_max_drawdown": 2,
-    # custkey-blocked self-join: ONE exchange (both sides co-keyed)
-    "ord_duplicate_invoices": 1,
-    # panel x 200-perm cross (broadcast) + perm agg + final reduce
-    "stat_permutation_test": 3,
-    # two year-ranked top-20 sides + literal-depth rollup
-    "rank_rbo_topk": 3,
-    # nation/band aggs + two bounded windows + final sort (all rows
-    # post-agg: 25 x 10 cells)
-    "priv_t_closeness": 5,
-    # wave 30: one user_id shuffle reused by rank+prefix windows,
-    # cohort agg, sort
-    "ml_map_mrr_at10": 3,
-    # run-id windows + run agg reuse one user shuffle + sort
-    "ev_longest_streak": 2,
-    # union + one user timeline window + final sort
-    "asof_next_event_forward": 2,
-    # pure per-row regex: the only exchange is the final sort
-    "doc_readability_fk": 1,
-    # lineitem-orders join + brand/customer rollups
-    "cust_basket_diversity": 3,
-    # lead window + bigram agg + bounded marginal windows
-    "ev_bigram_lift": 3,
-    # wave 31: per-row codec map; final sort only
-    "mm_png_roundtrip_agg": 1,
-    # line-order join + per-order min + month rollup
-    "li_otif_by_month": 3,
-    # broadcast part dim: brand agg + final sort
-    "stat_wilson_ci_returns": 2,
-    # bucket agg + histogram agg + sort (all partial-agg friendly)
-    "ord_keyspace_density": 3,
-    # wave 32: sig groupBy is the only fact shuffle; reps broadcast
-    "emb_semantic_dedup": 4,
-    # bounded cell-pair join + marginal aggs: every exchange past the
-    # first (x,y) rollup moves a <=500-row cell/marginal relation
-    "stat_kendall_tau_b": 8,
-    # wave 33, repinned after the round-8 two-phase cumsum rewrite
-    # (round-7 VERDICT item 5): the part-cardinality global window is
-    # gone; the static no-AQE count inflates because the per_part
-    # subtree appears under the cut/total/offset branches that AQE
-    # deduplicates via ReusedExchange at runtime.  Real data shuffles:
-    # pm rollup, per_part rollup, bk window — the rest are <=32-row or
-    # 1-row exchanges.
-    "li_abc_xyz_matrix": 14,
-    "sql_group_by_all": 2,
-    # wave 35: calendar spine window + daily agg
-    "ts_rolling_ols_slope": 3,
-    # decorrelated scalar subqueries: two agg joins + sort
-    "sql_scalar_subquery_orders": 5,
-    # per-(g,cents) rollup, median windows, Z agg, 5-row pick
-    "stat_brown_forsythe": 5,
-    # wave 36: four level aggregates + 4-row union
-    "priv_generalization_ladder": 8,
-    # (part,year) rollup + base self-join + year rollup + sort
-    "li_price_index_fisher": 4,
-    # wave 34: eval harness — after the centroid/probe broadcasts, the
-    # exchanges move panel-sized relations (assign rollup, top-1
-    # window, hit join, 4-row sweep agg)
-    "emb_ivf_nprobe_recall_sweep": 8,
-    "stat_cohens_kappa": 5,
-    # waves 37-40 (pinned round 9 — the round-8 gap): static-plan
-    # ceilings with AQE off; the iterative/two-phase plans count every
-    # unrolled stage, so these are upper bounds, not steady-state costs
-    "ev_window_funnel": 6,
-    # min-label propagation: unrolled bounded loop over checkpointed
-    # round-10 bipartite form: distinct + multi-order filter prelude,
-    # two one-time li repartitions (checkpoint boundaries hide the
-    # rounds' reuse), then per-round agg exchanges over |lineitem|;
-    # measured 11 at AQE-off
-    "graph_components_minlabel": 12,
-    # r12: +1 cpu_floor exchange before the x201 permutation expansion
-    "stat_bh_fdr": 5,
-    "doc_bm25_scores": 7,
-    "doc_cdc_chunks": 4,
-    "doc_unigram_xent": 5,
-    "stat_anova_oneway": 2,
-    "li_eoq_policy": 1,
-    # banded signatures + capped bucket join + candidate-x-degree verify.
-    # r12: +1 exchange (distinct-neighbor hash table join-back) BUYS the
-    # removal of the |E|x8 explode and two fact-wide groupBys — the added
-    # exchange carries |V| rows of 8 precomputed hashes; measured
-    # 11.9 -> 6.4 s at sf0.1.
-    "graph_minhash_neighbors": 13,
-    "asof_nearest_event": 2,
-    "data_corr_matrix": 1,
-    "ev_fano_burstiness": 3,
-    "li_newsvendor_quantile": 2,
-    # value-bucketed two-phase rank: percentile cuts + local/offset
-    # windows + decile join
-    "cust_lorenz_deciles": 11,
-    "stat_g_test": 8,
-    "ord_runs_test": 3,
-    # rollup-only z-rank (round 9): fact table feeds ONE combinable
-    # groupBy; everything after (prefix-sum window, explode spread,
-    # manifest agg, sort) shuffles <=65536-row relations
-    "zorder_file_manifest": 5,
-    # wave 41: per-row codec map; final sort only.  r12: +1 exchange =
-    # the cpu_floor repartition lifting the single-file scan to core
-    # count before the codec (10x wall win; no-op at real scale).
-    "mm_jpeg_roundtrip_agg": 2,
-    # wave 49: per-row color codec map; final sort only (r12 cpu_floor
-    # exchange as above)
-    "mm_jpeg_color_roundtrip_agg": 2,
-    # era x priority rollup + 1-row totals + sort (measured 4)
-    "ml_psi_priority_shift": 4,
-    # suppkey rollup + nation window + final sort
-    "sup_cr4_concentration": 3,
-    # month rollup + one bounded month-spine window
-    "ord_mase_seasonal": 2,
-    # nation moments rollup + deviation rollup + sort
-    "stat_grubbs_max": 3,
-    # 3-row flag rollup + constant-size finish
-    "stat_bartlett_qty": 2,
-    # nation-year rollup, bounded grid windows, ties branch, plus the
-    # round-11 nsub derivation (ADVICE: count nations from the grid
-    # instead of a literal 26 — a 25-row distinct + 1-row broadcast)
-    "rank_kendall_w_nations": 10,
-    # day rollup + 3-row period fanout rollup + sort
-    "ts_spectral_peaks_daily": 4,
-    # cust x brand rollup -> cust rollup -> nation rollup + sort
-    "cust_category_entropy": 4,
-    # pair self-join, degree + histogram rollups (bounded fit after)
-    "graph_powerlaw_degree_fit": 5,
-    # explode rollup + point join + bounded centroid-pair scan + sort
-    "emb_silhouette_centroid": 6,
-    # (flag,q) rollup is the only fact shuffle; the rank table and
-    # totals branches move <=50-row / 1-row relations
-    "stat_kruskal_wallis": 7,
-    # (source,word) rollup + per-source rollup + sort
-    "doc_hapax_ratio": 3,
-    # one conditional-sum rollup + final sort
-    "ml_mcc_confusion": 2,
-    # wave 42: customer rollup + 25-row release sort
-    "priv_dp_noisy_counts": 2,
-    # daily rollup + day-spine window/year rollup
-    "li_bollinger_outliers": 2,
-    "ts_wma_crossover": 2,
-    # (flag,q) rollup is the only fact shuffle; median/total branches
-    # move <=50-row or 1-row relations
-    "stat_mood_median": 8,
-    # (source,word) rollup + per-source rollup + sort
-    "doc_yule_k": 3,
-    # wave 43: basket self-join/distinct + degree rollup + one-row sums
-    "graph_degree_assortativity": 5,
-    # edge build + degree/adjacency joins + probe pair/tri rollups
-    "graph_local_clustering": 6,
-    # (ret,q) rollup is the only fact shuffle; ECDF moves <=50 rows
-    "stat_cvm_two_sample": 4,
-    # (term,doc) rollup + per-term rollup + top-50 sort
-    "doc_term_burstiness": 3,
-    # month rollup + final sort
-    "li_vwap_by_month": 2,
-    # wave 44: month rollup feeds the bounded stratum pair join +
-    # tie rollup; everything past the rollup moves <= 84 rows
-    "ord_mann_kendall_trend": 6,
-    # custkey rollup + nation joins + mean join-back + sort
-    "li_theil_index": 4,
-    # user-partitioned lag window + per-user rollup reuse one shuffle
-    "ev_interarrival_burstiness": 2,
-    # wave 45: (source,word) rollup feeds scalar + word-level self-join
-    # branches; the pair matrix past the join is sources^2 rows
-    "doc_kl_divergence_sources": 7,
-    # daily rollup + day-spine lag window + 1-row sums
-    "ts_ljung_box": 3,
-    # label rollup + 1-row range broadcast + 10-row decomposition
-    "ml_brier_decomposition": 4,
-    # user firsts + distinct user-days + (cohort, offset) rollups
-    "ev_cohort_half_life": 8,
-    # wave 46: sign-pack rollup + probe-partitioned top-3 window
-    "emb_bitpack_hamming": 2,
-    # sketch + ground-truth branches + hit/probe rollups (probe side
-    # is the fixed 20-vec broadcast panel throughout)
-    "emb_hamming_recall_at3": 7,
-    # per-row regex explode + segment rollup + sort
-    "fn_regexp_extract_all": 3,
-    # wave 47: (cust,year) distinct + per-cust/per-year rollups
-    "stat_cochran_q": 5,
-    # custkey rollup + day-spine risk/survival windows + grid join
-    "cust_survival_km": 7,
-    # supplier rollup + 1-row totals + quadrant rollup
-    "sup_kraljic_matrix": 5,
-    # wave 48: fact lag-window + counts rollup, then 12 unrolled
-    # power-iteration rounds over the <=|types|-row vector (each round
-    # an exchange pair in the static plan, tiny at runtime); the
-    # round-11 seed checkpoint truncates the guard + seed lineage
-    # (was 19 with the guard riding the unrolled rounds)
-    "ev_markov_stationary": 13,
-    # nation-year rollup + bounded 25x|years| rank grid
-    "stat_friedman": 7,
-    # orderkey rollup + bounded year-spine overlap join + year rollup
-    "ord_little_law": 3,
-    # doc-partitioned lead window + bigram/left/total rollups
-    "doc_bigram_entropy_rate": 6,
-    # -- wave 50 (round 11) --
-    # lineitem->part rollup + per-brand rank window + final sort
-    "li_gini_by_brand": 3,
-    # explode rollup, centroid join, bounded label^2 pair scan,
-    # 1-row DB-index broadcast
-    "emb_davies_bouldin": 8,
-    # 12 unrolled pi rounds (enum-sized at runtime) + the exact
-    # micro-nat conditional-entropy join; seed + transition relation
-    # both lazily checkpointed
-    "ev_entropy_rate_stationary": 28,
-    # day rollup + day-spine ROW_NUMBER + (w, blk) block windows +
-    # 4-row OLS moments
-    "ts_hurst_rs": 2,
-    # 250-cell grid completion + cless window + pair join + two
-    # 1-row moment broadcasts
-    "stat_jonckheere_terpstra": 15,
-    # month rollup + 1-row anchor broadcast + 1-row wide pivot; the
-    # 24 unrolled smoothing rounds are pure projections (no shuffle)
-    "ts_holt_winters_additive": 3,
-    # -- wave 51 (round 12) --
-    # same wide-pivot scaffold as the additive; damping and the MASE
-    # holdout are pure projections on the 1-row state
-    "ts_holt_winters_damped": 3,
-    "ts_holt_winters_mase": 3,
-    # nation x year grid completion + per-nation rank windows + the
-    # 1-row L/tie rollup + two 1-row moment broadcasts
-    "stat_page_trend": 11,
-    # explode rollup, per-dim global rollup, per-label W and B
-    # rollups, 1-row CH broadcast — all label/dim-bounded after the
-    # one fact explode
-    "emb_calinski_harabasz": 14,
-    # day rollup + 63-bin period grid + 1-row entropy/bin-count
-    # broadcasts
-    "ev_spectral_entropy": 8,
-    # composition of the portable LSH pipeline (sig agg, band bucket
-    # join, rescore) with the panel-broadcast exact-Jaccard truth
-    # side and three 1-row result aggregates
-    "doc_lsh_recall_vs_exact": 34,
-    # -- wave 52 (round 12) --
-    # two-phase: per-VALUE rollup shuffle, domain-bounded prefix-sum
-    # window, 1-row moment reduce
-    "stat_ansari_bradley": 3,
-    # (day, type) rollup + day-spine lead window + 8-cell marginal
-    # windows + 1-row reduce
-    "ev_transfer_entropy": 10,
-    # broadcast-assign over the 16 seed centroids + 10x16 contingency
-    # + three 1-row combinatorics reduces
-    "emb_adjusted_rand": 11,
-    # explode rollup + per-point deviation join + bounded label-pair
-    # scan + two 1-row extrema broadcasts
-    "emb_dunn_centroid": 8,
-}
+PLANS = json.loads((REPO / "PLANS.json").read_text())
+QUERIES = entrymod.queries()
 
 
-def _n_exchanges(df) -> int:
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
-    # count physical Exchange operators (not AQE fragments/reuses);
-    # ReusedExchange re-reads an existing shuffle, so it is free
-    return len(re.findall(r"\bExchange\b(?! reuse)", plan.split("\n\n")[0])) or len(
-        re.findall(r"^\s*\S*\s*Exchange", plan, re.M)
-    )
+def test_plan_manifest_names_match_queries():
+    assert sorted(PLANS) == sorted(QUERIES)
 
 
-@pytest.mark.parametrize("name,budget", sorted(BUDGETS.items()))
+# the test ID carries the entry's shuffle count: `<query>-<shuffles>`
+@pytest.mark.parametrize(
+    "name,budget", sorted((n, PLANS.get(n, {}).get("shuffles")) for n in QUERIES)
+)
 def test_shuffle_budget(spark, name, budget):
-    import __spark_entry__ as entrymod
-
-    fn = entrymod.queries()[name]
+    assert name in PLANS, f"{name}: no PLANS.json entry"
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        n = _n_exchanges(fn(spark, SF_DIR))
+        got = plan_record(QUERIES[name](spark, SF_SMOKE))
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
-    assert n <= budget, f"{name}: {n} exchanges > budget {budget}"
+    want = PLANS[name]
+    assert got["shuffles"] <= budget, f"{name}: {got['shuffles']} exchanges > {budget}"
+    over = {k: (got[k], want[k]) for k in want if k != "joins" and got[k] > want[k]}
+    assert not over, f"{name}: (got, entry) above PLANS.json: {over}"
+    extra = Counter(got["joins"]) - Counter(want["joins"])
+    assert not extra, f"{name}: joins not in PLANS.json: {sorted(extra.elements())}"

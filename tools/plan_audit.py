@@ -17,15 +17,14 @@ Prints one line per query; exits 1 if any un-allowlisted flag fires.
 
 from __future__ import annotations
 
-import io
 import sys
-from contextlib import redirect_stdout
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 import __spark_entry__ as entrymod  # noqa: E402
+from planning_center_data_pipeline_spark.planshape import plan_record, walk  # noqa: E402
 from planning_center_data_pipeline_spark.session import get_spark  # noqa: E402
 
 # Queries whose plans legitimately contain a nested-loop/cross shape:
@@ -305,7 +304,7 @@ def global_windows(df) -> int:
     logical plan (these compile to single-partition WindowExec)."""
     optimized = df._jdf.queryExecution().optimizedPlan()
     n = 0
-    for node in _walk(optimized):
+    for node in walk(optimized):
         if node.nodeName() == "Window":
             try:
                 if node.partitionSpec().size() == 0:
@@ -315,11 +314,18 @@ def global_windows(df) -> int:
     return n
 
 
-def plan_of(df) -> str:
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+def missing_partial_agg(df) -> bool:
+    """True if the physical plan hash-aggregates above a shuffle
+    without any partial (map-side) aggregate function."""
+    aggs = [
+        n
+        for n in walk(df._jdf.queryExecution().executedPlan())
+        if n.nodeName() in ("HashAggregate", "ObjectHashAggregate")
+    ]
+    exprs = [n.aggregateExpressions() for n in aggs]
+    return bool(aggs) and not any(
+        str(e.apply(i).mode()) == "Partial" for e in exprs for i in range(e.size())
+    )
 
 
 # Entity tables whose cardinality grows with the data — a broadcast
@@ -331,13 +337,6 @@ def plan_of(df) -> str:
 # recognized by their signature key columns (unique to each fact).
 _FACT_MARKERS = ("l_orderkey#", "o_orderkey#", "event_id#", "doc_id#", "vec_id#")
 _SHRINKING_NODES = ("Aggregate", "GlobalLimit", "LocalLimit", "Deduplicate")
-
-
-def _walk(node):
-    yield node
-    children = node.children()
-    for i in range(children.size()):
-        yield from _walk(children.apply(i))
 
 
 def _subtree_has_unshrunk_fact(node) -> bool:
@@ -361,7 +360,7 @@ def forced_fact_broadcasts(df) -> int:
     folds them into join nodes later).  Tree walk, not string match."""
     analyzed = df._jdf.queryExecution().analyzed()
     n = 0
-    for node in _walk(analyzed):
+    for node in walk(analyzed):
         if node.nodeName() == "ResolvedHint" and "broadcast" in node.toString().lower():
             if _subtree_has_unshrunk_fact(node):
                 n += 1
@@ -376,14 +375,15 @@ def main() -> int:
     for name, fn in qs.items():
         try:
             df = fn(spark, sf_dir)
-            plan = plan_of(df)
+            rec = plan_record(df)
         except Exception as exc:  # iterative builds execute; report, not crash
             print(f"{name:42s} SKIP (build error: {type(exc).__name__})")
             continue
+        joins = {j.split("/")[0] for j in rec["joins"]}
         flags = []
-        if "CartesianProduct" in plan:
+        if "CartesianProduct" in joins:
             flags.append("cartesian")
-        if "BroadcastNestedLoopJoin" in plan and name not in CROSS_OK:
+        if "BroadcastNestedLoopJoin" in joins and name not in CROSS_OK:
             flags.append("bnlj")
         try:
             n_forced = forced_fact_broadcasts(df)
@@ -398,10 +398,9 @@ def main() -> int:
         if n_gw and name not in WINDOW_OK:
             flags.append(f"global-window:{n_gw}")
         if (
-            "partial_" not in plan
-            and "HashAggregate" in plan
-            and "Exchange" in plan
+            rec["shuffles"] + rec["broadcasts"]
             and name not in PARTIAL_AGG_OK
+            and missing_partial_agg(df)
         ):
             # final-only aggregation above a shuffle: partial agg missing
             # (fine for collect_list-style non-algebraic aggs — flag to eyeball)
