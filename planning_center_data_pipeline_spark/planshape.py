@@ -1,11 +1,12 @@
 """One reader for a query's physical plan shape.
 
 `plan_record(df)` walks `df`'s executed physical plan once, through
-every node's children and subqueries and into the cached plan of an
-`InMemoryTableScan`, and counts the operators that decide what a plan
-costs at scale. `PLANS.json` (written by `tools/plan_manifest.py`)
-holds one record per query; `tests/test_shuffle_budgets.py` checks the
-fresh records against it and `tools/plan_audit.py` reads the same walk.
+every node's children and subqueries, into the plan an adaptive (AQE)
+root wraps and into the cached plan of an `InMemoryTableScan`, and
+counts the operators that decide what a plan costs at scale.
+`PLANS.json` (written by `tools/plan_manifest.py`) holds one record per
+query; `tests/test_shuffle_budgets.py` checks the fresh records against
+it and `tools/plan_audit.py` reads the same walk.
 """
 
 from __future__ import annotations
@@ -21,10 +22,15 @@ _BUILD_SIDED = ("BroadcastHashJoin", "ShuffledHashJoin", "BroadcastNestedLoopJoi
 
 def walk(node) -> Iterator:
     """Yield `node` (a JVM plan node, logical or physical) and every
-    node below it: its children, the plans of its subquery expressions
-    and, under an in-memory scan, the cached plan."""
+    node below it: its children, the plans of its subquery expressions,
+    the current plan under an `AdaptiveSparkPlan` (a leaf node whose
+    children and subqueries are empty; before execution its plan is the
+    initial one, exchanges included) and, under an in-memory scan, the
+    cached plan."""
     yield node
-    if node.nodeName() == "InMemoryTableScan":
+    if node.nodeName() == "AdaptiveSparkPlan":
+        yield from walk(node.executedPlan())
+    elif node.nodeName() == "InMemoryTableScan":
         yield from walk(node.relation().cachedPlan())
     for seq in (node.children(), node.subqueries()):
         for i in range(seq.size()):

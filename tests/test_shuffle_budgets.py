@@ -11,6 +11,13 @@ Entries are CEILINGS recorded from the current plans by
 exchanges at runtime, never add them — and this suite's session
 settings).  Raising one is a deliberate edit of PLANS.json: regenerate
 it and review the diff.
+
+The joins check guards build-side choices, not every broadcast hint:
+at sf0.001 every table is under `autoBroadcastJoinThreshold`, so a
+hint on a side Spark would broadcast anyway (q3's customer side, say)
+can be removed without changing the plan.  What it does catch is a
+lost hint that picks the build side or overrides a large size
+estimate, which turns into a different join node or build side.
 """
 
 from __future__ import annotations
@@ -32,19 +39,30 @@ def test_plan_manifest_names_match_queries():
     assert sorted(PLANS) == sorted(QUERIES)
 
 
-# the test ID carries the entry's shuffle count: `<query>-<shuffles>`
+def test_plan_record_sees_through_adaptive_root(spark):
+    """With AQE on (the session default) the executed plan is a single
+    `AdaptiveSparkPlan` leaf; the walk must still reach the exchanges
+    and joins under it, or plan_audit's cartesian/BNLJ flags go blind.
+    q22's broadcast cross join against its 1-row average is one that
+    plan_audit allows (CROSS_OK)."""
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    got = plan_record(QUERIES["q22_idle_customers"](spark, SF_SMOKE))
+    assert "BroadcastNestedLoopJoin/BuildRight" in got["joins"], got
+    assert got["shuffles"] > 0, got
+
+
+# `budget` only names the test (`<query>-<shuffles>`, the form the
+# hand-budget IDs had); the counts are checked against the whole entry
 @pytest.mark.parametrize(
     "name,budget", sorted((n, PLANS.get(n, {}).get("shuffles")) for n in QUERIES)
 )
 def test_shuffle_budget(spark, name, budget):
-    assert name in PLANS, f"{name}: no PLANS.json entry"
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         got = plan_record(QUERIES[name](spark, SF_SMOKE))
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
     want = PLANS[name]
-    assert got["shuffles"] <= budget, f"{name}: {got['shuffles']} exchanges > {budget}"
     over = {k: (got[k], want[k]) for k in want if k != "joins" and got[k] > want[k]}
     assert not over, f"{name}: (got, entry) above PLANS.json: {over}"
     extra = Counter(got["joins"]) - Counter(want["joins"])
