@@ -50,7 +50,3 @@ def sql_cents(col_expr: str, scale: int = 2) -> str:
     """DuckDB-side mirror of `cents` for oracle SQL strings."""
     return f"CAST(ROUND(({col_expr})*{10**scale}) AS BIGINT)"
 
-
-def sql_money_sum(col_expr: str, scale: int = 2) -> str:
-    """DuckDB-side mirror of `money_sum`."""
-    return f"CAST(SUM({col_expr}) AS DOUBLE)/{float(10**scale)}"

@@ -431,7 +431,7 @@ ORDER BY bucket
 # connected_components for the lineage-truncation pattern).
 
 _PR_SCALE = 10**12
-_PR_ITERS = 3
+_EVENT_PR_ITERS = 3
 
 
 def graph_pagerank_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -450,7 +450,7 @@ def graph_pagerank_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     teleport = (15 * _PR_SCALE) // (100 * n_nodes)
 
     ranks = nodes.select("node", F.lit(_PR_SCALE // n_nodes).alias("rank_micro"))
-    for _ in range(_PR_ITERS):
+    for _ in range(_EVENT_PR_ITERS):
         contrib = (
             edges.join(ranks, edges["from_type"] == ranks["node"])
             # `div` is exact int64 floor division — a float `/` here
@@ -467,7 +467,7 @@ def graph_pagerank_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranks.orderBy("node")
 
 
-def _pagerank_sql(iters: int = _PR_ITERS) -> str:
+def _event_pagerank_sql(iters: int = _EVENT_PR_ITERS) -> str:
     teleport = (15 * _PR_SCALE) // (100 * 5)
     prev = f"(SELECT node, CAST({_PR_SCALE} // 5 AS BIGINT) AS rank_micro FROM nodes)"
     for i in range(iters):
@@ -504,7 +504,7 @@ SELECT node, rank_micro FROM {prev} ORDER BY node
 """
 
 
-GRAPH_PAGERANK_SQL = _pagerank_sql()
+GRAPH_PAGERANK_SQL = _event_pagerank_sql()
 
 
 # --- tokenizer statistics (BPE-ish regex) ------------------------------------

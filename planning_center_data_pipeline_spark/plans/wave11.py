@@ -43,7 +43,7 @@ _BPE_SQL_PAT = r"[a-z]+|[0-9]+|[^a-z0-9\s]"
 
 # --- integer-exact PageRank over the co-purchase graph -----------------------
 
-_PR_ITERS = 5
+_PART_PR_ITERS = 5
 _PR_MASS = 1_000_000_000_000  # total rank mass, 1e-12 units
 _PR_TOP = 20
 
@@ -119,7 +119,7 @@ def graph_pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "SELECT explode(a.dsts) AS cnode, x.r DIV a.deg AS c "
         "FROM {prev} x JOIN {adj} a ON x.node = a.src"
         ") GROUP BY cnode) c ON n.node = c.cnode",
-        _PR_ITERS,
+        _PART_PR_ITERS,
         "SELECT node, r FROM {prev}",
         nodes=nodes,
         adj=adj,
@@ -137,10 +137,10 @@ def graph_pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pagerank_sql() -> str:
+def _part_pagerank_sql() -> str:
     iters = []
     prev = "r0"
-    for i in range(1, _PR_ITERS + 1):
+    for i in range(1, _PART_PR_ITERS + 1):
         iters.append(
             f"""r{i} AS (
   SELECT nd.node,
@@ -179,7 +179,7 @@ FROM {prev} ORDER BY r DESC, node LIMIT {_PR_TOP}
 """
 
 
-GRAPH_PAGERANK_PARTS_SQL = _pagerank_sql()
+GRAPH_PAGERANK_PARTS_SQL = _part_pagerank_sql()
 
 
 # --- RFM quintile segmentation ------------------------------------------------
@@ -247,7 +247,7 @@ def cust_rfm_global_quintiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CUST_RFM_SEGMENTS_SQL = """
+CUST_RFM_GLOBAL_QUINTILES_SQL = """
 WITH per AS (
   SELECT o_custkey AS ck,
          MAX(CAST(o_orderdate AS DATE)) AS last_d,
@@ -643,7 +643,7 @@ QUERIES = {
 
 ORACLES = {
     "graph_pagerank_parts": GRAPH_PAGERANK_PARTS_SQL,
-    "cust_rfm_global_quintiles": CUST_RFM_SEGMENTS_SQL,
+    "cust_rfm_global_quintiles": CUST_RFM_GLOBAL_QUINTILES_SQL,
     "ml_threshold_metrics": ML_THRESHOLD_METRICS_SQL,
     "doc_tokenizer_fertility": DOC_TOKENIZER_FERTILITY_SQL,
     "doc_zipf_rankfreq": DOC_ZIPF_RANKFREQ_SQL,

@@ -535,7 +535,7 @@ def emb_mips_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_EMB_DIMS = 64
+_DIMS = 64
 
 
 def _mips_oracle() -> str:
@@ -543,12 +543,12 @@ def _mips_oracle() -> str:
 WITH qv AS (
   SELECT vec_id, i,
          CAST(ROUND(CAST(embedding[i] AS DOUBLE)*{S.Q_SCALE}) AS BIGINT) AS v
-  FROM (SELECT vec_id, embedding, unnest(generate_series(1, {_EMB_DIMS})) AS i
+  FROM (SELECT vec_id, embedding, unnest(generate_series(1, {_DIMS})) AS i
         FROM embeddings WHERE vec_id % 97 = 0)
 ), cv AS (
   SELECT vec_id, i,
          CAST(ROUND(CAST(embedding[i] AS DOUBLE)*{S.Q_SCALE}) AS BIGINT) AS v
-  FROM (SELECT vec_id, embedding, unnest(generate_series(1, {_EMB_DIMS})) AS i
+  FROM (SELECT vec_id, embedding, unnest(generate_series(1, {_DIMS})) AS i
         FROM embeddings)
 ), dots AS (
   SELECT qv.vec_id AS query_id, cv.vec_id AS neighbor_id,

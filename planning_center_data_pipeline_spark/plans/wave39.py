@@ -35,7 +35,6 @@ from planning_center_data_pipeline_spark.sources.tables import load_table
 
 _NMH_HASHES = 8
 _NMH_BANDS = 4  # 2 hashes per band
-_NMH_THRESHOLD = 0.5
 # Bucket-skew ceiling (round-8 VERDICT item 5): the band bucket join is
 # quadratic WITHIN a bucket, and a hub neighborhood (hundreds of parts
 # whose only co-purchase neighbor is one popular part) gives hundreds of

@@ -67,7 +67,7 @@ def _copurchase_sym_adj(li: DataFrame) -> DataFrame:
     )
 
 
-def _copurchase_edges(li: DataFrame) -> DataFrame:
+def _part_part_edges(li: DataFrame) -> DataFrame:
     """Distinct undirected co-purchase edges u < v (parts sharing an
     order).  r12 (guide §2.3/§2.4): collect_set(pk) per order (one
     shuffle, basket-bounded arrays) + map-side pair explosion +

@@ -976,11 +976,11 @@ def graph_powerlaw_degree_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     minus its three exchanges) + two rollups; the fit runs on the
     bounded histogram."""
     from planning_center_data_pipeline_spark.plans.wave43 import (
-        _copurchase_edges,
+        _part_part_edges,
     )
 
     li = load_table(spark, sf_dir, "lineitem")
-    half = _copurchase_edges(li)
+    half = _part_part_edges(li)
     deg = (
         half.select("u")
         .unionAll(half.select(F.col("v").alias("u")))

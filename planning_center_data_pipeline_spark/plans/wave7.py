@@ -137,7 +137,7 @@ ORDER BY key_a, key_b
 # --- graph: multi-source BFS min-hop -----------------------------------------
 
 
-def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _customer_part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     return (
@@ -277,7 +277,7 @@ def rec_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     any other join.  max_partkey arrives as a 1-row broadcast
     (crossJoin of an aggregate — constant-size, never a fact
     broadcast)."""
-    edges = _copurchase_edges(spark, sf_dir)
+    edges = _customer_part_edges(spark, sf_dir)
     users = edges.filter(F.col("c") % 50 == 0).select("c").distinct()
     maxpk = load_table(spark, sf_dir, "part").agg(F.max("p_partkey").alias("maxpk"))
 
@@ -489,7 +489,7 @@ def emb_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_EMB_DIMS = 64
+_DIMS = 64
 _EMB_Q = 1_000_000
 
 EMB_HARD_NEGATIVES_SQL = f"""
@@ -497,13 +497,13 @@ WITH qv AS (
   SELECT vec_id, label, i,
          CAST(ROUND(CAST(embedding[i] AS DOUBLE)*{_EMB_Q}) AS BIGINT) AS v
   FROM (SELECT vec_id, label, embedding,
-               unnest(generate_series(1, {_EMB_DIMS})) AS i
+               unnest(generate_series(1, {_DIMS})) AS i
         FROM embeddings WHERE vec_id < 10)
 ), cv AS (
   SELECT vec_id, label, i,
          CAST(ROUND(CAST(embedding[i] AS DOUBLE)*{_EMB_Q}) AS BIGINT) AS v
   FROM (SELECT vec_id, label, embedding,
-               unnest(generate_series(1, {_EMB_DIMS})) AS i
+               unnest(generate_series(1, {_DIMS})) AS i
         FROM embeddings)
 ), norms AS (
   SELECT vec_id, CAST(SUM(v*v) AS BIGINT) AS nsq FROM cv GROUP BY vec_id
@@ -990,7 +990,7 @@ EMB_PQ_CODES_SQL = f"""
 WITH cv AS (
   SELECT vec_id, (i-1)//16 AS s, i,
          CAST(ROUND(CAST(embedding[i] AS DOUBLE)*{_EMB_Q}) AS BIGINT) AS v
-  FROM (SELECT vec_id, embedding, unnest(generate_series(1, {_EMB_DIMS})) AS i
+  FROM (SELECT vec_id, embedding, unnest(generate_series(1, {_DIMS})) AS i
         FROM embeddings)
 ), cent AS (
   SELECT vec_id AS cid, s, i, v FROM cv WHERE vec_id < 16
@@ -1288,7 +1288,7 @@ def rec_training_set_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: pair mining shuffles on (user, part); fold/shard keys are
     per-row md5 arithmetic; the per-(fold, shard) position window is
     the only added exchange."""
-    edges = _copurchase_edges(spark, sf_dir)
+    edges = _customer_part_edges(spark, sf_dir)
     users = edges.filter(F.col("c") % 50 == 0).select("c").distinct()
     maxpk = load_table(spark, sf_dir, "part").agg(F.max("p_partkey").alias("maxpk"))
 

@@ -60,15 +60,6 @@ def tumbling_counts(events: DataFrame, watermark: str = "10 minutes") -> DataFra
     )
 
 
-def sliding_counts(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
-    )
-
-
 def session_counts(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Native session windows (session_window merges events within the
     gap); streaming twin of plans/streaming_batch.ev_sessionize."""

@@ -5,6 +5,7 @@ schema drift in seconds instead of a full crosscheck run."""
 
 from __future__ import annotations
 
+import ast
 from pathlib import Path
 
 import duckdb
@@ -113,6 +114,38 @@ def test_rotation_sample_sets_are_consistent():
 
     k = len({owner[n] for n in oracles})
     assert len({owner[n] for n in names[:k]}) == k
+
+
+def _bound_names(target):
+    """The plain names an assignment target binds (`a`, `a, b`), not the
+    containers it stores into (`QUERIES["x"]`)."""
+    if isinstance(target, ast.Name):
+        return [target]
+    if isinstance(target, (ast.Tuple, ast.List)):
+        return [n for t in target.elts for n in _bound_names(t)]
+    return []
+
+
+def test_no_plan_module_binds_a_top_level_name_twice():
+    """A second top-level `def`, `class` or assignment of a name silently
+    replaces the first, so a shadowed oracle or constant would only show
+    up as a hash mismatch in crosscheck.  Name the module and the name."""
+    from planning_center_data_pipeline_spark import plans as P
+
+    twice = []
+    for path in sorted(Path(P.__file__).parent.glob("*.py")):
+        seen = set()
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                names = [node.name]
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                names = [n.id for t in targets for n in _bound_names(t)]
+            else:
+                continue
+            twice += [f"{path.name}: {n}" for n in names if n in seen]
+            seen.update(names)
+    assert not twice, f"top-level names bound twice: {twice}"
 
 
 def test_no_oracle_is_vacuous_at_sf001(con_sf001):

@@ -52,7 +52,7 @@ def test_geo_point_coords_match_md5_contract(spark):
 
 def test_graph_bfs_hops_levels(spark):
     rows = {r.hop: r for r in wave7.graph_bfs_hops(spark, SF_SMOKE).collect()}
-    edges = wave7._copurchase_edges(spark, SF_SMOKE)
+    edges = wave7._customer_part_edges(spark, SF_SMOKE)
     seeds = edges.filter(F.col("c") % 300 == 0).select("c").distinct().count()
     assert rows[0].n_customers == seeds and rows[0].n_parts == 0
     for hop, r in rows.items():
@@ -68,7 +68,7 @@ def test_rec_contrastive_pairs_labels(spark):
     out = wave7.rec_contrastive_pairs(spark, SF_SMALL).toPandas()
     edges = {
         (r.c, r.p)
-        for r in wave7._copurchase_edges(spark, SF_SMALL).collect()
+        for r in wave7._customer_part_edges(spark, SF_SMALL).collect()
     }
     pos = out[out.label == 1]
     neg = out[out.label == 0]
