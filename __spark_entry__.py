@@ -23,9 +23,7 @@ from planning_center_data_pipeline_spark.plans import collect_all  # noqa: E402
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (TPC-H-Q1-shaped pricing summary) on sf0.001."""
-    from planning_center_data_pipeline_spark.plans.relational import (
-        q1_pricing_summary,
-    )
+    from planning_center_data_pipeline_spark.plans.tpch import q1_pricing_summary
 
     return q1_pricing_summary(spark, "/root/testdata/sf0.001")
 

@@ -357,7 +357,7 @@ def _hex_digest_rows(
     full signature build.  Codegen'd md5 over short strings is cheaper
     than moving the row; the trade only reverses when the per-value
     hash work dwarfs a shuffle write (cf. the |E|:|V| ~ 100:1 8-hash
-    family in plans/wave39, where the vocabulary join measured as a
+    family of plans/graph.graph_minhash_neighbors, where the vocabulary join measured as a
     win).  Values are identical either way (same md5(seed|shingle)
     family)."""
     n_digests = (n_hashes + 1) // 2

@@ -2,7 +2,7 @@
 
 The reference is a weekly batch (planning_center_dag.py:23) — no
 streaming — but the engine's `events` surface is stream-first: the same
-aggregations exposed in plans/streaming_batch.py run here as real
+aggregations exposed in plans/events.py run here as real
 streaming queries with watermarks.  Tests drive them with a file source
 over the test parquet and a memory sink (processAllAvailable), which
 exercises the genuine incremental execution path.
@@ -62,7 +62,7 @@ def tumbling_counts(events: DataFrame, watermark: str = "10 minutes") -> DataFra
 
 def session_counts(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Native session windows (session_window merges events within the
-    gap); streaming twin of plans/streaming_batch.ev_sessionize."""
+    gap); streaming twin of plans/events.ev_sessionize."""
     return (
         events.withWatermark("ts", "1 hour")
         .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
@@ -120,7 +120,7 @@ def interval_join_clicks_purchases(
     join condition gives Spark the bound it needs to size state —
     without the time-range predicate a stream-stream inner join would
     buffer both sides forever.  Batch twin (oracle-checked):
-    plans/streaming_batch.ev_interval_join.
+    plans/events.ev_interval_join.
     """
     clicks = (
         events.filter(F.col("event_type") == "click")
@@ -499,7 +499,7 @@ def cms_bucket_rows(
     df: DataFrame, item_col: str, n_rows: int = 4, width: int = 64
 ) -> DataFrame:
     """(j, bucket) hash rows for a count-min sketch over item_col —
-    the md5 family shared with the batch CMS (plans/corpus.py), so
+    the md5 family shared with the batch CMS (plans/documents_text.py), so
     streaming-maintained counters are directly comparable/mergeable
     with batch-built ones."""
     from planning_center_data_pipeline_spark.operators.dedup import md5_hash60
@@ -956,7 +956,7 @@ def stateful_transition_counts(events: DataFrame) -> DataFrame:
     (previous event type -> current event type) pair counts, emitted
     as per-micro-batch DELTAS in append mode (sum the output stream to
     get the cumulative matrix — the batch twin is
-    plans/wave10.ev_markov_transitions' per-user lead()).
+    plans/events.ev_markov_transitions' per-user lead()).
 
     State per user is O(1): the last event's (timestamp-us, type).
     The cross-batch boundary pair uses that stored last event, so the

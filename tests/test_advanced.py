@@ -14,19 +14,16 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from planning_center_data_pipeline_spark.plans.advanced import (
-    _morton16,
-    distinct_users_bitmap,
-    ev_max_concurrency,
-    graph_triangle_count,
-    ts_interval_union_length,
-)
+from __spark_entry__ import queries
+from planning_center_data_pipeline_spark.plans.lifecycle import _morton16
 from planning_center_data_pipeline_spark.sources.tables import load_table
+
+Q = queries()
 
 
 def test_bitmap_distinct_equals_naive(spark, sf_dir):
     got = {
-        r.event_type: r.n_users for r in distinct_users_bitmap(spark, sf_dir).collect()
+        r.event_type: r.n_users for r in Q["distinct_users_bitmap"](spark, sf_dir).collect()
     }
     naive = {
         r.event_type: r.n
@@ -73,13 +70,13 @@ def test_max_concurrency_hand_case(spark):
     ).withColumn("ts", F.timestamp_micros(F.col("sec") * 1_000_000).cast("timestamp_ntz"))
 
     from planning_center_data_pipeline_spark.functions.temporal import epoch_us
-    from planning_center_data_pipeline_spark.plans import advanced as A
+    from planning_center_data_pipeline_spark.plans import events
     from pyspark.sql.window import Window
 
     e = df.withColumn("tus", epoch_us("ts"))
     opens = e.select("event_type", F.col("tus").alias("t"), F.lit(1).alias("d"))
     closes = e.select(
-        "event_type", (F.col("tus") + F.lit(A._CONC_US)).alias("t"), F.lit(-1).alias("d")
+        "event_type", (F.col("tus") + F.lit(events._CONC_US)).alias("t"), F.lit(-1).alias("d")
     )
     net = opens.unionAll(closes).groupBy("event_type", "t").agg(F.sum("d").alias("net"))
     w = Window.partitionBy("event_type").orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
@@ -96,7 +93,7 @@ def test_max_concurrency_hand_case(spark):
 def test_interval_union_merges_overlaps(spark, sf_dir):
     """Covered time is bounded by n_events * width and strictly less
     when any two intervals of a user overlap; islands <= events."""
-    res = ts_interval_union_length(spark, sf_dir).collect()
+    res = Q["ts_interval_union_length"](spark, sf_dir).collect()
     ev = (
         load_table(spark, sf_dir, "events")
         .groupBy("user_id")
@@ -142,7 +139,7 @@ def test_triangle_count_known_graph(spark, tmp_path):
     d = tmp_path / "sf_fake"
     d.mkdir()
     li.write.parquet(str(d / "lineitem.parquet"))
-    out = graph_triangle_count(spark, str(d)).collect()[0]
+    out = Q["graph_triangle_count"](spark, str(d)).collect()[0]
     assert (out.n_nodes, out.n_edges, out.n_triangles) == (5, 7, 4)
 
 
@@ -167,9 +164,7 @@ def test_theta_exact_below_capacity_and_mergeable(spark):
 
 
 def test_theta_set_ops_match_exact(spark, sf_dir):
-    from planning_center_data_pipeline_spark.plans.advanced import theta_user_set_ops
-
-    got = theta_user_set_ops(spark, sf_dir).collect()[0]
+    got = Q["theta_user_set_ops"](spark, sf_dir).collect()[0]
     e = load_table(spark, sf_dir, "events")
     c = {r.user_id for r in e.filter("event_type = 'click'").select("user_id").distinct().collect()}
     p = {r.user_id for r in e.filter("event_type = 'purchase'").select("user_id").distinct().collect()}
@@ -241,11 +236,9 @@ def test_udf_ladder_parity(spark, sf_dir):
 
 
 def test_pareto_skyline_matches_bruteforce(spark, sf_dir):
-    from planning_center_data_pipeline_spark.plans.advanced import pareto_orders_skyline
-
     got = {
         (r.o_orderkey, r.price, r.order_day_us)
-        for r in pareto_orders_skyline(spark, sf_dir).collect()
+        for r in Q["pareto_orders_skyline"](spark, sf_dir).collect()
     }
     from planning_center_data_pipeline_spark.functions.temporal import epoch_us
 
@@ -272,11 +265,7 @@ def test_pareto_skyline_matches_bruteforce(spark, sf_dir):
 
 
 def test_rolling_distinct_7d_vs_naive(spark, sf_dir):
-    from planning_center_data_pipeline_spark.plans.advanced import (
-        rolling_distinct_users_7d,
-    )
-
-    got = {r.day: r.users_7d for r in rolling_distinct_users_7d(spark, sf_dir).collect()}
+    got = {r.day: r.users_7d for r in Q["rolling_distinct_users_7d"](spark, sf_dir).collect()}
     from planning_center_data_pipeline_spark.functions.temporal import epoch_us
 
     rows = (

@@ -6,11 +6,14 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from __spark_entry__ import queries
 from planning_center_data_pipeline_spark.functions.derive import (
     calc_age,
     null_to_empty,
     stringify_grade,
 )
+
+Q = queries()
 
 
 def _ages(spark, rows, as_of):
@@ -64,13 +67,9 @@ def test_kll_rank_error(spark, sf_dir):
     bound (~1.7% at default k) of the exact percentiles."""
     from pyspark.sql import functions as F
 
-    from planning_center_data_pipeline_spark.plans.scalars_extra import (
-        agg_kll_value_quantiles,
-    )
-
     e = spark.read.parquet(f"{sf_dir}/events.parquet")
     vals = sorted(r["value"] for r in e.select("value").collect())
-    approx = agg_kll_value_quantiles(spark, sf_dir).collect()
+    approx = Q["agg_kll_value_quantiles"](spark, sf_dir).collect()
     # pool all event types' values per type for exact comparison
     by_type = {}
     for r in e.select("event_type", "value").collect():

@@ -7,20 +7,9 @@ from __future__ import annotations
 
 import pytest
 
-from planning_center_data_pipeline_spark.plans import (
-    wave4,
-    wave5,
-    wave7,
-    wave8,
-    wave9,
-    wave10,
-    wave11,
-    wave13,
-    wave14,
-)
-from planning_center_data_pipeline_spark.plans.relational import (
-    q1_pricing_summary,
-)
+from __spark_entry__ import queries
+
+Q = queries()
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -28,27 +17,27 @@ SF_DIR = "/root/testdata/sf0.01"
 @pytest.mark.parametrize(
     "fn",
     [
-        q1_pricing_summary,
-        wave4.win_gaps_islands,
-        wave4.agg_salted_skew,
-        wave5.mm_shard_plan,            # two-phase prefix sum
-        wave5.cust_entity_resolution,   # blocked fuzzy best-match
-        wave5.doc_bpe_merge_candidates, # weighted pair counts + top-k
-        wave7.stat_bootstrap_ci,        # md5 draws + exact replica means
-        wave7.geo_radius_pairs,         # grid join pair set
-        wave7.ev_cusum_shift,           # integer prefix-min windows
-        wave7.rec_training_set_e2e,     # pair mining -> folds -> order
-        wave8.freq_heavy_hitters,       # sketch candidates vary; output must not
-        wave8.rec_negative_sampling,    # prefix sum + bucketed range join
-        wave8.surv_hazard_curve,        # quantize-then-sum hazard
-        wave9.ev_basket_triples,        # apriori prune + exact recount
-        wave9.stat_trimmed_mean,        # two-pass percentile cutoffs
-        wave10.ml_auc_rank,             # value-bucketed prefix-sum ranks
-        wave10.cf_item_item_cosine,     # basket self-join + top-k cut
-        wave11.graph_pagerank_parts,    # 5 integer-exact rank iterations
-        wave11.cust_abc_pareto,         # bucketed global running sum
-        wave13.doc_incremental_dedup_merge,  # fp join + in-batch window
-        wave14.stat_ks_two_sample,      # bucketed two-sided ECDF argmax
+        Q["q1_pricing_summary"],
+        Q["win_gaps_islands"],
+        Q["agg_salted_skew"],
+        Q["mm_shard_plan"],                # two-phase prefix sum
+        Q["cust_entity_resolution"],       # blocked fuzzy best-match
+        Q["doc_bpe_merge_candidates"],     # weighted pair counts + top-k
+        Q["stat_bootstrap_ci"],            # md5 draws + exact replica means
+        Q["geo_radius_pairs"],             # grid join pair set
+        Q["ev_cusum_shift"],               # integer prefix-min windows
+        Q["rec_training_set_e2e"],         # pair mining -> folds -> order
+        Q["freq_heavy_hitters"],           # sketch candidates vary; output must not
+        Q["rec_negative_sampling"],        # prefix sum + bucketed range join
+        Q["surv_hazard_curve"],            # quantize-then-sum hazard
+        Q["ev_basket_triples"],            # apriori prune + exact recount
+        Q["stat_trimmed_mean"],            # two-pass percentile cutoffs
+        Q["ml_auc_rank"],                  # value-bucketed prefix-sum ranks
+        Q["cf_item_item_cosine"],          # basket self-join + top-k cut
+        Q["graph_pagerank_parts"],         # 5 integer-exact rank iterations
+        Q["cust_abc_pareto"],              # bucketed global running sum
+        Q["doc_incremental_dedup_merge"],  # fp join + in-batch window
+        Q["stat_ks_two_sample"],           # bucketed two-sided ECDF argmax
     ],
 )
 def test_result_invariant_to_shuffle_partitions(spark, fn):

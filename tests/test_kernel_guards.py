@@ -9,7 +9,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from __spark_entry__ import queries
 from planning_center_data_pipeline_spark.operators import similarity as S
+
+Q = queries()
 
 SF = "/root/testdata/sf0.001"
 
@@ -58,16 +61,16 @@ def test_block_matmul_rejects_degenerate_block(spark, monkeypatch):
 def test_asof_bucket_rejects_flooded_cogroup(spark, monkeypatch):
     """A cogroup bucket beyond the pandas-heap ceiling must fail
     loudly with the remediation (raise N_BUCKETS), not OOM a worker."""
-    from planning_center_data_pipeline_spark.plans import pandas_ops as P
+    from planning_center_data_pipeline_spark.plans import events
 
-    monkeypatch.setattr(P, "MAX_ROWS_PER_ASOF_BUCKET", 10)
+    monkeypatch.setattr(events, "MAX_ROWS_PER_ASOF_BUCKET", 10)
     with pytest.raises(Exception, match="MAX_ROWS_PER_ASOF_BUCKET"):
-        P.asof_cogrouped_pandas(spark, SF).count()
-    monkeypatch.setattr(P, "MAX_ROWS_PER_ASOF_BUCKET", 5_000_000)
-    rows = P.asof_cogrouped_pandas(spark, SF).collect()
+        Q["asof_cogrouped_pandas"](spark, SF).count()
+    monkeypatch.setattr(events, "MAX_ROWS_PER_ASOF_BUCKET", 5_000_000)
+    rows = Q["asof_cogrouped_pandas"](spark, SF).collect()
     assert len(rows) > 0
     # Spark 4.1 prunes cogroup input columns under .count() (the
     # clicks side arrives without its duplicate-named columns); the
     # kernel degrades instead of crashing, and the row count — which
     # depends only on the buys side — must match the full collect.
-    assert P.asof_cogrouped_pandas(spark, SF).count() == len(rows)
+    assert Q["asof_cogrouped_pandas"](spark, SF).count() == len(rows)

@@ -7,11 +7,14 @@ import datetime
 
 from pyspark.sql import functions as F
 
-from planning_center_data_pipeline_spark.plans import lifecycle
+from __spark_entry__ import queries
+from planning_center_data_pipeline_spark.plans import graph, lifecycle
+
+Q = queries()
 
 
 def test_cdc_merge_semantics(spark, sf_dir):
-    out = lifecycle.cdc_scd1_apply(spark, sf_dir)
+    out = Q["cdc_scd1_apply"](spark, sf_dir)
     rows = {r["user_id"]: r for r in out.collect()}
     assert rows, "CDC merge produced no rows"
     srcs = {r["src"] for r in rows.values()}
@@ -37,7 +40,7 @@ def test_cdc_merge_semantics(spark, sf_dir):
 
 
 def test_gap_fill_dense_and_monotone_days(spark, sf_dir):
-    out = lifecycle.ts_gap_fill_daily(spark, sf_dir).collect()
+    out = Q["ts_gap_fill_daily"](spark, sf_dir).collect()
     per_user: dict[int, list] = {}
     for r in out:
         per_user.setdefault(r["user_id"], []).append(r)
@@ -58,7 +61,7 @@ def test_gap_fill_dense_and_monotone_days(spark, sf_dir):
 def test_dq_audit_clean_fixture(spark, sf_dir):
     got = {
         (r["table_name"], r["check_name"]): r["metric"]
-        for r in lifecycle.dq_audit_report(spark, sf_dir).collect()
+        for r in Q["dq_audit_report"](spark, sf_dir).collect()
     }
     assert got[("orders", "dup_pk")] == 0
     assert got[("orders", "null_custkey")] == 0
@@ -69,25 +72,25 @@ def test_dq_audit_clean_fixture(spark, sf_dir):
 def test_pagerank_mass_conservation(spark, sf_dir):
     ranks = {
         r["node"]: r["rank_micro"]
-        for r in lifecycle.graph_pagerank_transitions(spark, sf_dir).collect()
+        for r in Q["graph_pagerank_transitions"](spark, sf_dir).collect()
     }
     assert len(ranks) == 5
     total = sum(ranks.values())
     # floor division leaks < 1 unit per edge per round; with ~25 edges x
     # 3 rounds the loss is bounded well under 1e-6 of the total mass
-    assert abs(total - lifecycle._PR_SCALE) < 1000
+    assert abs(total - graph._PR_SCALE) < 1000
     assert all(v > 0 for v in ranks.values())
 
 
 def test_bpe_counts_exceed_ws_counts(spark, sf_dir):
-    out = lifecycle.doc_bpe_token_count(spark, sf_dir).limit(50).collect()
+    out = Q["doc_bpe_token_count"](spark, sf_dir).limit(50).collect()
     assert out
     for r in out:
         assert r["n_bpe"] > r["n_ws"] >= 1  # suffix adds punct/digit runs
 
 
 def test_pii_scrub_finds_and_shrinks(spark, sf_dir):
-    out = lifecycle.doc_pii_scrub(spark, sf_dir).limit(50).collect()
+    out = Q["doc_pii_scrub"](spark, sf_dir).limit(50).collect()
     assert out
     for r in out:
         assert r["n_emails"] == 1 and r["n_phones"] == 1

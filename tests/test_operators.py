@@ -5,8 +5,10 @@ from __future__ import annotations
 from pathlib import Path
 
 import pytest
+from conftest import GATED_BROADCASTS
 from pyspark.sql import functions as F
 
+from __spark_entry__ import queries
 from planning_center_data_pipeline_spark.operators.dedup import (
     jaccard_pairs,
     minhash_near_dups,
@@ -23,6 +25,8 @@ from planning_center_data_pipeline_spark.operators.windows import (
     range_copy,
     top_k_per_group,
 )
+
+Q = queries()
 
 
 def _docs(spark):
@@ -390,12 +394,9 @@ def test_decode_seam_raises(spark, sf_dir):
 
 
 def test_hll_mergeable_estimate_within_bound(spark, sf_dir):
-    from planning_center_data_pipeline_spark.plans.analytic import (
-        distinct_users_hll_mergeable,
-    )
     from planning_center_data_pipeline_spark.sources.tables import load_table
 
-    est = distinct_users_hll_mergeable(spark, sf_dir).collect()[0][
+    est = Q["distinct_users_hll_mergeable"](spark, sf_dir).collect()[0][
         "n_users_merged"
     ]
     exact = (
@@ -416,32 +417,20 @@ def _formatted_plan(df) -> str:
 
 
 def test_q1_plan_pushes_filter_into_scan(spark, sf_dir):
-    from planning_center_data_pipeline_spark.plans.relational import (
-        q1_pricing_summary,
-    )
-
-    plan = _formatted_plan(q1_pricing_summary(spark, sf_dir))
+    plan = _formatted_plan(Q["q1_pricing_summary"](spark, sf_dir))
     assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in plan
     # column pruning: the scan must not read unused lineitem columns
     assert "l_orderkey" not in plan.split("ReadSchema")[1].split("\n")[0]
 
 
 def test_q5_plan_broadcasts_dimension_chain(spark, sf_dir):
-    from planning_center_data_pipeline_spark.plans.relational import (
-        q5_local_supplier_volume,
-    )
-
-    plan = _formatted_plan(q5_local_supplier_volume(spark, sf_dir))
+    plan = _formatted_plan(Q["q5_local_supplier_volume"](spark, sf_dir))
     # all four dims (supplier, customer, nation, region) broadcast
     assert plan.count("BroadcastHashJoin") >= 4
 
 
 def test_q17_plan_preaggregates_before_joinback(spark, sf_dir):
-    from planning_center_data_pipeline_spark.plans.tpch_extra import (
-        q17_small_qty_revenue,
-    )
-
-    plan = _formatted_plan(q17_small_qty_revenue(spark, sf_dir))
+    plan = _formatted_plan(Q["q17_small_qty_revenue"](spark, sf_dir))
     # the decorrelated per-part aggregate must appear as a HashAggregate
     # feeding the join, and the part dim must broadcast
     assert "HashAggregate" in plan
@@ -603,9 +592,7 @@ def test_kmeans_plan_broadcasts_centroids(spark, sf_dir):
 
 
 def test_funnel_plan_pushes_event_type_filter(spark, sf_dir):
-    from planning_center_data_pipeline_spark.plans.corpus import ev_funnel_stages
-
-    plan = _formatted_plan(ev_funnel_stages(spark, sf_dir))
+    plan = _formatted_plan(Q["ev_funnel_stages"](spark, sf_dir))
     # each funnel step's event_type predicate reaches the parquet scan
     assert "EqualTo(event_type,view)" in plan
     assert "EqualTo(event_type,click)" in plan
@@ -615,9 +602,7 @@ def test_funnel_plan_pushes_event_type_filter(spark, sf_dir):
 
 
 def test_chunk_dedup_plan_single_chunk_shuffle(spark, sf_dir):
-    from planning_center_data_pipeline_spark.plans.corpus import doc_chunk_dedup
-
-    plan = _formatted_plan(doc_chunk_dedup(spark, sf_dir))
+    plan = _formatted_plan(Q["doc_chunk_dedup"](spark, sf_dir))
     # no join anywhere: chunk-key window + doc-id reassembly only
     assert "Join" not in plan
 
@@ -776,18 +761,6 @@ def test_lsh_near_dup_subset_and_planted_recall(spark, sf_dir):
     assert planted <= got  # measured: 50/50 with these deterministic planes
 
 
-# Every forced broadcast of a |V|- or |docs|-row side, and the columns
-# only that side carries (one set per hinted join).  A hinted join
-# inside a localCheckpoint (triangle count's degree join) is planned
-# when the checkpoint is taken and does not show in the query's plan.
-GATED_BROADCASTS = {
-    "graph_triangle_count": [{"nbrs_t"}],
-    "graph_degree_assortativity": [{"y"}],
-    "graph_minhash_neighbors": [{"hv0"}],
-    "doc_jaccard_prefix_filter": [{"shs_1"}, {"shs_2"}],
-}
-
-
 def _scala_list(seq):
     return [seq.apply(i) for i in range(seq.size())]
 
@@ -852,23 +825,6 @@ def test_broadcast_gate_has_one_reader():
         if "spark.planning_center.broadcastVocabulary" in p.read_text()
     ]
     assert readers == ["operators/joins.py"], readers
-
-
-def test_broadcast_gate_list_covers_every_call_site():
-    """GATED_BROADCASTS names a query from every plan module that
-    places a gated_broadcast hint, and from no other module, so a new
-    hinted call site fails here until the both-positions test covers it."""
-    import planning_center_data_pipeline_spark.plans as plans
-    from __spark_entry__ import queries
-
-    root = Path(plans.__file__).parent
-    hinted = {
-        f"{plans.__name__}.{p.stem}"
-        for p in root.glob("*.py")
-        if "gated_broadcast(" in p.read_text()
-    }
-    covered = {queries()[n].__module__ for n in GATED_BROADCASTS}
-    assert covered == hinted, (covered, hinted)
 
 
 def test_no_session_global_views_in_package():

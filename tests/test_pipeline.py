@@ -9,6 +9,7 @@ import glob
 
 from pyspark.sql import functions as F
 
+from __spark_entry__ import queries
 from planning_center_data_pipeline_spark.operators.pipeline import (
     PRESENTATION_COLUMNS,
     build_people_presentation,
@@ -17,6 +18,8 @@ from planning_center_data_pipeline_spark.operators.pipeline import (
     validate_pipeline,
 )
 from tests.fixtures_pco import pco_tables
+
+Q = queries()
 
 AS_OF = "2024-06-15"
 
@@ -192,9 +195,6 @@ def test_sheets_edge_e2e(spark, sf_dir, tmp_path):
     import glob as _glob
 
     from planning_center_data_pipeline_spark import sheets_edge
-    from planning_center_data_pipeline_spark.plans.reference import (
-        ref_range_copy,
-    )
     from planning_center_data_pipeline_spark.sources.tables import load_table
 
     # K3 payloads: the per-list CSV text the engine rendered (K1).
@@ -241,7 +241,7 @@ def test_sheets_edge_e2e(spark, sf_dir, tmp_path):
     # K5: applied copyPaste == the engine's ref_range_copy rows
     # (source rows 3..500 1-indexed, 5 columns, values only), landing
     # at destination row 2 (startRowIndex 1).
-    want = [[r[c] for c in cols] for r in ref_range_copy(spark, sf_dir).collect()]
+    want = [[r[c] for c in cols] for r in Q["ref_range_copy"](spark, sf_dir).collect()]
     got = master.grids["dest_tab"][1:]
     assert got == want
     assert len(want) == 498

@@ -45,6 +45,10 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from __spark_entry__ import queries
+
+Q = queries()
+
 SF01 = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
@@ -66,11 +70,7 @@ def test_minhash_lsh_pairs_exact_jaccard_sf01(spark, sf01):
     from planning_center_data_pipeline_spark.operators.dedup import (
         shingle_table,
     )
-    from planning_center_data_pipeline_spark.plans.extensions import (
-        doc_minhash_lsh,
-    )
-
-    got = doc_minhash_lsh(spark, sf01)
+    got = Q["doc_minhash_lsh"](spark, sf01)
     d = spark.read.parquet(f"{sf01}/documents.parquet")
     # independent recomputation: shingle SETS as arrays, jaccard via
     # array_intersect/array_union sizes (different code path than the
@@ -129,11 +129,9 @@ def test_simhash_identity_and_planted_near_dup_sf01(spark, sf01):
     from planning_center_data_pipeline_spark.operators.dedup import (
         simhash_signatures,
     )
-    from planning_center_data_pipeline_spark.plans.extensions import doc_simhash
-
     # determinism + identity on real data: two independent builds agree
-    a = {r.doc_id: r.simhash for r in doc_simhash(spark, sf01).collect()}
-    b = {r.doc_id: r.simhash for r in doc_simhash(spark, sf01).collect()}
+    a = {r.doc_id: r.simhash for r in Q["doc_simhash"](spark, sf01).collect()}
+    b = {r.doc_id: r.simhash for r in Q["doc_simhash"](spark, sf01).collect()}
     assert a == b and len(a) > 100
 
     # identical text => identical fingerprint; light perturbation =>
@@ -150,13 +148,8 @@ def test_simhash_identity_and_planted_near_dup_sf01(spark, sf01):
 
 
 def test_simhash_near_dups_pairs_verified_sf01(spark, sf01):
-    from planning_center_data_pipeline_spark.plans.extensions import (
-        doc_simhash,
-        doc_simhash_near_dups,
-    )
-
-    fp = {r.doc_id: r.simhash for r in doc_simhash(spark, sf01).collect()}
-    pairs = doc_simhash_near_dups(spark, sf01).collect()
+    fp = {r.doc_id: r.simhash for r in Q["doc_simhash"](spark, sf01).collect()}
+    pairs = Q["doc_simhash_near_dups"](spark, sf01).collect()
     assert pairs, "no simhash near-dups at sf0.1"
     for r in pairs:
         ham = _hamming64(fp[r.id_1], fp[r.id_2])
@@ -164,11 +157,7 @@ def test_simhash_near_dups_pairs_verified_sf01(spark, sf01):
 
 
 def test_kll_quantiles_within_rank_error_sf01(spark, sf01):
-    from planning_center_data_pipeline_spark.plans.scalars_extra import (
-        agg_kll_value_quantiles,
-    )
-
-    got = agg_kll_value_quantiles(spark, sf01).collect()
+    got = Q["agg_kll_value_quantiles"](spark, sf01).collect()
     e = spark.read.parquet(f"{sf01}/events.parquet")
     for row in got:
         vals = sorted(
@@ -190,22 +179,13 @@ def test_kll_quantiles_within_rank_error_sf01(spark, sf01):
 
 
 def test_bloom_prune_bounds_sf01(spark, sf01):
-    from planning_center_data_pipeline_spark.plans.lifecycle import (
-        bloom_prune_orders,
-    )
-
-    r = bloom_prune_orders(spark, sf01).collect()[0]
+    r = Q["bloom_prune_orders"](spark, sf01).collect()[0]
     assert r.n_bloom_pass >= r.n_exact  # no false negatives, ever
     non_match = r.n_total - r.n_exact
     assert r.n_bloom_pass - r.n_exact <= max(2, int(0.05 * non_match))
 
 
 def test_hll_estimates_within_error_sf01(spark, sf01):
-    from planning_center_data_pipeline_spark.plans.analytic import (
-        distinct_users_approx,
-        distinct_users_hll_mergeable,
-    )
-
     exact = {
         r.event_type: r.n
         for r in spark.read.parquet(f"{sf01}/events.parquet")
@@ -213,7 +193,7 @@ def test_hll_estimates_within_error_sf01(spark, sf01):
         .agg(F.countDistinct("user_id").alias("n"))
         .collect()
     }
-    for row in distinct_users_approx(spark, sf01).collect():
+    for row in Q["distinct_users_approx"](spark, sf01).collect():
         ex = exact[row.event_type]
         assert abs(row.n_users_approx - ex) <= max(3, 0.10 * ex), row
 
@@ -223,5 +203,5 @@ def test_hll_estimates_within_error_sf01(spark, sf01):
         .distinct()
         .count()
     )
-    merged = distinct_users_hll_mergeable(spark, sf01).collect()[0].n_users_merged
+    merged = Q["distinct_users_hll_mergeable"](spark, sf01).collect()[0].n_users_merged
     assert abs(merged - global_exact) <= max(3, 0.05 * global_exact)

@@ -14,17 +14,14 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from __spark_entry__ import queries
 from planning_center_data_pipeline_spark.operators import similarity as S
-from planning_center_data_pipeline_spark.plans.corpus import (
+from planning_center_data_pipeline_spark.plans.documents_text import (
     _SHARD_TOKENS,
-    doc_decontaminate,
-    doc_shard_manifest,
 )
-from planning_center_data_pipeline_spark.plans.lifecycle import (
-    ts_interpolate_linear,
-)
-from planning_center_data_pipeline_spark.plans.analytic import sql_recursive_tree
 from planning_center_data_pipeline_spark.sources.tables import load_table
+
+Q = queries()
 
 
 def _gram_reference(spark, sf_dir):
@@ -65,7 +62,7 @@ def test_gram_matrix_partitioning_invariant(spark, sf_dir):
 
 
 def test_shard_manifest_matches_naive_global_window(spark, sf_dir):
-    out = doc_shard_manifest(spark, sf_dir).collect()
+    out = Q["doc_shard_manifest"](spark, sf_dir).collect()
     # naive single-partition global running sum over the same token counts
     naive = {}
     run = 0
@@ -78,7 +75,7 @@ def test_shard_manifest_matches_naive_global_window(spark, sf_dir):
 
 
 def test_shard_manifest_shard_budget(spark, sf_dir):
-    out = doc_shard_manifest(spark, sf_dir).collect()
+    out = Q["doc_shard_manifest"](spark, sf_dir).collect()
     # a shard never starts unless the previous one consumed its budget:
     # shard k's first doc has exclusive-cum in [k*B, (k+1)*B)
     first_by_shard = {}
@@ -90,7 +87,7 @@ def test_shard_manifest_shard_budget(spark, sf_dir):
 
 
 def test_decontaminate_excludes_eval_and_bounds_ratio(spark, sf_dir):
-    out = doc_decontaminate(spark, sf_dir).collect()
+    out = Q["doc_decontaminate"](spark, sf_dir).collect()
     assert out, "expected train docs"
     for r in out:
         assert r.doc_id % 20 != 0, "eval docs must not appear"
@@ -114,23 +111,23 @@ def test_decontaminate_flags_planted_duplicate(spark, sf_dir):
         "source",
         "n_chars",
     )
-    import planning_center_data_pipeline_spark.plans.corpus as C
+    from planning_center_data_pipeline_spark.plans import documents_dedup
 
     def fake_t(spark_, sf_dir_, name):
         assert name == "documents"
         return d.unionByName(planted)
 
-    orig = C.load_table
-    C.load_table = fake_t
+    orig = documents_dedup.load_table
+    documents_dedup.load_table = fake_t
     try:
-        out = {r.doc_id: r for r in doc_decontaminate(spark, sf_dir).collect()}
+        out = {r.doc_id: r for r in Q["doc_decontaminate"](spark, sf_dir).collect()}
     finally:
-        C.load_table = orig
+        documents_dedup.load_table = orig
     assert out[new_id].contamination == 1.0
 
 
 def test_interpolation_boundary_semantics(spark, sf_dir):
-    rows = ts_interpolate_linear(spark, sf_dir).collect()
+    rows = Q["ts_interpolate_linear"](spark, sf_dir).collect()
     by_user: dict[int, list] = {}
     for r in sorted(rows, key=lambda r: (r.user_id, r.day)):
         by_user.setdefault(r.user_id, []).append(r)
@@ -155,7 +152,7 @@ def test_interpolation_boundary_semantics(spark, sf_dir):
 
 
 def test_recursive_tree_depth_is_digit_count(spark, sf_dir):
-    for r in sql_recursive_tree(spark, sf_dir).collect():
+    for r in Q["sql_recursive_tree"](spark, sf_dir).collect():
         expected_depth = len(str(r.doc_id)) if r.doc_id > 0 else 0
         assert r.depth_to_root == expected_depth
         # chain_sum: doc_id + doc_id//10 + ... + 0
@@ -252,9 +249,5 @@ def test_knn_classify_plan_has_no_joins(spark, sf_dir):
     scorer and prunes candidates per batch — the plan must contain NO
     join at all (the old shape was a crossJoin scorer plus a label
     re-scan join), and only candidate rows reach the top-k window."""
-    from planning_center_data_pipeline_spark.plans.wave4 import (
-        emb_knn_classify,
-    )
-
-    plan = emb_knn_classify(spark, sf_dir)._jdf.queryExecution().optimizedPlan().toString()
+    plan = Q["emb_knn_classify"](spark, sf_dir)._jdf.queryExecution().optimizedPlan().toString()
     assert "Join" not in plan

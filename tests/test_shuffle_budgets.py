@@ -18,21 +18,34 @@ hint on a side Spark would broadcast anyway (q3's customer side, say)
 can be removed without changing the plan.  What it does catch is a
 lost hint that picks the build side or overrides a large size
 estimate, which turns into a different join node or build side.
+
+Every build also records its calls to `operators.joins.gated_broadcast`,
+so the list of gated queries the both-positions test checks
+(`GATED_BROADCASTS`) is held to the queries that place the hint,
+including a hint that a localCheckpoint hides from the plan.
 """
 
 from __future__ import annotations
 
 import json
+import sys
 from collections import Counter
 
 import __spark_entry__ as entrymod
 import pytest
-from conftest import REPO, SF_SMOKE
+from conftest import GATED_BROADCASTS, REPO, SF_SMOKE
 
 from planning_center_data_pipeline_spark.planshape import plan_record
 
 PLANS = json.loads((REPO / "PLANS.json").read_text())
 QUERIES = entrymod.queries()
+# the plan modules that import the hint; patching the name there sees
+# every call a query build makes
+HINTING = [
+    mod
+    for mod in {sys.modules[fn.__module__] for fn in QUERIES.values()}
+    if hasattr(mod, "gated_broadcast")
+]
 
 
 def test_plan_manifest_names_match_queries():
@@ -51,12 +64,23 @@ def test_plan_record_sees_through_adaptive_root(spark):
     assert got["shuffles"] > 0, got
 
 
+def _recording(hint, calls):
+    def recorded(df):
+        calls.append(df)
+        return hint(df)
+
+    return recorded
+
+
 # `budget` only names the test (`<query>-<shuffles>`, the form the
 # hand-budget IDs had); the counts are checked against the whole entry
 @pytest.mark.parametrize(
     "name,budget", sorted((n, PLANS.get(n, {}).get("shuffles")) for n in QUERIES)
 )
-def test_shuffle_budget(spark, name, budget):
+def test_shuffle_budget(spark, monkeypatch, name, budget):
+    hints = []
+    for mod in HINTING:
+        monkeypatch.setattr(mod, "gated_broadcast", _recording(mod.gated_broadcast, hints))
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         got = plan_record(QUERIES[name](spark, SF_SMOKE))
@@ -67,3 +91,7 @@ def test_shuffle_budget(spark, name, budget):
     assert not over, f"{name}: (got, entry) above PLANS.json: {over}"
     extra = Counter(got["joins"]) - Counter(want["joins"])
     assert not extra, f"{name}: joins not in PLANS.json: {sorted(extra.elements())}"
+    assert bool(hints) == (name in GATED_BROADCASTS), (
+        f"{name}: {len(hints)} gated_broadcast call(s); GATED_BROADCASTS must "
+        "list exactly the queries that place the hint"
+    )

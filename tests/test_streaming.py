@@ -8,9 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from planning_center_data_pipeline_spark.plans.streaming_batch import (
-    ev_tumbling_window,
-)
+from __spark_entry__ import queries
 from planning_center_data_pipeline_spark.sources.tables import load_table
 from planning_center_data_pipeline_spark.streaming.jobs import (
     dedup_events,
@@ -19,6 +17,8 @@ from planning_center_data_pipeline_spark.streaming.jobs import (
     session_counts,
     tumbling_counts,
 )
+
+Q = queries()
 
 
 @pytest.fixture(scope="module")
@@ -50,7 +50,7 @@ def test_tumbling_stream_matches_batch(spark, sf_dir, event_stream_dir):
     }
     want = {
         (r["window_start"], r["event_type"]): (r["n_events"], r["value_sum"])
-        for r in ev_tumbling_window(spark, sf_dir)
+        for r in Q["ev_tumbling_window"](spark, sf_dir)
         .withColumn("window_start", F.timestamp_seconds("window_start"))
         .collect()
     }
@@ -81,10 +81,6 @@ def test_session_stream_matches_batch_session_window(
     the late-data semantics the watermark defines.  (The multi-batch
     incremental path is covered by the other streaming tests.)"""
     from planning_center_data_pipeline_spark.functions.temporal import epoch_us
-    from planning_center_data_pipeline_spark.plans.streaming_batch import (
-        ev_session_window_batch,
-    )
-
     one_file = str(tmp_path / "events_onefile")
     load_table(spark, sf_dir, "events").coalesce(1).write.mode(
         "overwrite"
@@ -103,7 +99,7 @@ def test_session_stream_matches_batch_session_window(
     }
     want = {
         (r["user_id"], r["s_start_us"], r["s_end_us"]): r["n_events"]
-        for r in ev_session_window_batch(spark, sf_dir).collect()
+        for r in Q["ev_session_window_batch"](spark, sf_dir).collect()
     }
     assert got == want
 
@@ -157,9 +153,6 @@ def test_stateful_user_totals_matches_batch(spark, sf_dir, event_stream_dir):
 def test_stream_stream_interval_join_matches_batch(
     spark, sf_dir, event_stream_dir
 ):
-    from planning_center_data_pipeline_spark.plans.streaming_batch import (
-        ev_interval_join,
-    )
     from planning_center_data_pipeline_spark.streaming.jobs import (
         interval_join_clicks_purchases,
     )
@@ -177,7 +170,7 @@ def test_stream_stream_interval_join_matches_batch(
     }
     want = {
         (r["purchase_id"], r["click_id"]): r["user_id"]
-        for r in ev_interval_join(spark, sf_dir).collect()
+        for r in Q["ev_interval_join"](spark, sf_dir).collect()
     }
     assert got == want
 
@@ -702,9 +695,6 @@ def test_stateful_timeout_sessions_match_batch(spark, sf_dir, tmp_path):
     via watermark-driven timeouts, flushed by a far-future sentinel,
     and the closed set must equal the batch sessions exactly."""
     from planning_center_data_pipeline_spark.functions.temporal import epoch_us
-    from planning_center_data_pipeline_spark.plans.streaming_batch import (
-        ev_session_window_batch,
-    )
     from planning_center_data_pipeline_spark.streaming.jobs import (
         read_event_stream,
         stateful_sessions_timeout,
@@ -751,7 +741,7 @@ def test_stateful_timeout_sessions_match_batch(spark, sf_dir, tmp_path):
     }
     want = {
         (r["user_id"], r["s_start_us"], r["s_end_us"]): r["n_events"]
-        for r in ev_session_window_batch(spark, sf_dir).collect()
+        for r in Q["ev_session_window_batch"](spark, sf_dir).collect()
     }
     assert got == want and want
 
@@ -946,9 +936,6 @@ def test_timeout_sessionizer_checkpoint_restart(spark, sf_dir, tmp_path):
     from pathlib import Path
 
     from planning_center_data_pipeline_spark.functions.temporal import epoch_us
-    from planning_center_data_pipeline_spark.plans.streaming_batch import (
-        ev_session_window_batch,
-    )
     from planning_center_data_pipeline_spark.streaming.jobs import (
         read_event_stream,
         stateful_sessions_timeout,
@@ -1015,7 +1002,7 @@ def test_timeout_sessionizer_checkpoint_restart(spark, sf_dir, tmp_path):
     }
     want = {
         (r["user_id"], r["s_start_us"], r["s_end_us"]): r["n_events"]
-        for r in ev_session_window_batch(spark, sf_dir).collect()
+        for r in Q["ev_session_window_batch"](spark, sf_dir).collect()
     }
     assert got == want and want
 

@@ -11,7 +11,10 @@ import pyarrow.parquet as pq
 import pytest
 
 from conftest import SF_SMOKE
+from __spark_entry__ import queries
 from planning_center_data_pipeline_spark.sources.tables import TABLES, load_table
+
+Q = queries()
 
 SF_DIRS = sorted(str(p) for p in Path(SF_SMOKE).parent.glob("sf*"))
 NTZ = "spark.sql.parquet.inferTimestampNTZ.enabled"
@@ -121,13 +124,11 @@ def test_unconvertible_footer_type_raises(spark, tmp_path):
 
 
 def test_query_build_launches_no_spark_job(spark):
-    from planning_center_data_pipeline_spark.plans.relational import q3_shipping_priority
-
     sc = spark.sparkContext
     group = "test-tables-q3-build"
     sc.setJobGroup(group, "q3_shipping_priority build")
     try:
-        q3_shipping_priority(spark, SF_SMOKE)
+        Q["q3_shipping_priority"](spark, SF_SMOKE)
         jobs = sc.statusTracker().getJobIdsForGroup(group)
     finally:
         sc._jsc.clearJobGroup()

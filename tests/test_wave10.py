@@ -7,13 +7,15 @@ import math
 
 from pyspark.sql import functions as F
 
-from planning_center_data_pipeline_spark.plans import wave10
+from __spark_entry__ import queries
+
+Q = queries()
 
 SF_DIR = "/root/testdata/sf0.01"
 
 
 def test_markov_rows_are_proper_distribution(spark):
-    rows = wave10.ev_markov_transitions(spark, SF_DIR).collect()
+    rows = Q["ev_markov_transitions"](spark, SF_DIR).collect()
     by_from: dict[str, float] = {}
     for r in rows:
         assert 0.0 <= r.p <= 1.0
@@ -25,7 +27,7 @@ def test_markov_rows_are_proper_distribution(spark):
 
 
 def test_top_journeys_sorted_and_bounded(spark):
-    rows = wave10.ev_top_journeys(spark, SF_DIR).collect()
+    rows = Q["ev_top_journeys"](spark, SF_DIR).collect()
     assert 0 < len(rows) <= 20
     counts = [r.n_sessions for r in rows]
     assert counts == sorted(counts, reverse=True)
@@ -33,7 +35,7 @@ def test_top_journeys_sorted_and_bounded(spark):
 
 
 def test_cf_cosine_matches_definition(spark):
-    rows = wave10.cf_item_item_cosine(spark, SF_DIR).collect()
+    rows = Q["cf_item_item_cosine"](spark, SF_DIR).collect()
     assert rows, "expected co-occurring part pairs"
     for r in rows:
         # cosine recomputes from the exact integer counts it reports
@@ -43,7 +45,7 @@ def test_cf_cosine_matches_definition(spark):
 
 
 def test_decile_lift_accounting(spark):
-    rows = wave10.ml_decile_lift(spark, SF_DIR).collect()
+    rows = Q["ml_decile_lift"](spark, SF_DIR).collect()
     assert 1 <= len(rows) <= 10
     c = spark.read.parquet(f"{SF_DIR}/customer.parquet")
     assert sum(r.n_cust for r in rows) == c.count()
@@ -59,7 +61,7 @@ def test_decile_lift_accounting(spark):
 def test_auc_matches_naive_pair_count(spark):
     """The rank-sum AUC equals the O(n^2) pair-counting definition on
     the 1500-customer table (small enough to brute-force locally)."""
-    row = wave10.ml_auc_rank(spark, SF_DIR).collect()[0]
+    row = Q["ml_auc_rank"](spark, SF_DIR).collect()[0]
     c = spark.read.parquet(f"{SF_DIR}/customer.parquet")
     o = spark.read.parquet(f"{SF_DIR}/orders.parquet")
     buyers = {
@@ -83,7 +85,7 @@ def test_auc_matches_naive_pair_count(spark):
 
 
 def test_retention_user_accounting(spark):
-    rows = wave10.ev_retention_triangle(spark, SF_DIR).collect()
+    rows = Q["ev_retention_triangle"](spark, SF_DIR).collect()
     ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
     assert sum(r.n_users for r in rows) == ev.select("user_id").distinct().count()
     for r in rows:

@@ -8,7 +8,9 @@ from collections import defaultdict
 
 from pyspark.sql import functions as F
 
-from planning_center_data_pipeline_spark.plans import wave11
+from __spark_entry__ import queries
+
+Q = queries()
 
 SF_DIR = "/root/testdata/sf0.01"
 SF_TINY = "/root/testdata/sf0.001"
@@ -18,7 +20,7 @@ def test_pagerank_matches_local_integer_reference(spark):
     """The distributed 5-iteration integer PageRank equals a
     from-scratch single-threaded reimplementation on the tiny SF —
     bit-exact, because every step is integer arithmetic."""
-    rows = wave11.graph_pagerank_parts(spark, SF_TINY).collect()
+    rows = Q["graph_pagerank_parts"](spark, SF_TINY).collect()
     li = spark.read.parquet(f"{SF_TINY}/lineitem.parquet")
     baskets = defaultdict(set)
     for r in li.select("l_orderkey", "l_partkey").distinct().collect():
@@ -46,7 +48,7 @@ def test_pagerank_matches_local_integer_reference(spark):
 
 
 def test_pagerank_mass_roughly_conserved(spark):
-    rows = wave11.graph_pagerank_parts(spark, SF_DIR).collect()
+    rows = Q["graph_pagerank_parts"](spark, SF_DIR).collect()
     assert len(rows) == 20
     units = [r.rank_units for r in rows]
     assert units == sorted(units, reverse=True)
@@ -56,7 +58,7 @@ def test_pagerank_mass_roughly_conserved(spark):
 
 
 def test_rfm_scores_in_range_and_accounting(spark):
-    rows = wave11.cust_rfm_global_quintiles(spark, SF_DIR).collect()
+    rows = Q["cust_rfm_global_quintiles"](spark, SF_DIR).collect()
     o = spark.read.parquet(f"{SF_DIR}/orders.parquet")
     n_buyers = o.select("o_custkey").distinct().count()
     assert sum(r.n_cust for r in rows) == n_buyers
@@ -66,7 +68,7 @@ def test_rfm_scores_in_range_and_accounting(spark):
 
 
 def test_threshold_metrics_monotone(spark):
-    rows = wave11.ml_threshold_metrics(spark, SF_DIR).collect()
+    rows = Q["ml_threshold_metrics"](spark, SF_DIR).collect()
     assert [r.k for r in rows] == list(range(1, 10))
     # raising the threshold can only shrink the predicted-positive set
     preds = [r.pred_pos for r in rows]
@@ -83,7 +85,7 @@ def test_threshold_metrics_monotone(spark):
 
 
 def test_fertility_each_word_yields_a_piece(spark):
-    rows = wave11.doc_tokenizer_fertility(spark, SF_DIR).collect()
+    rows = Q["doc_tokenizer_fertility"](spark, SF_DIR).collect()
     d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     assert sum(r.n_docs for r in rows) == d.count()
     for r in rows:
@@ -94,7 +96,7 @@ def test_fertility_each_word_yields_a_piece(spark):
 
 
 def test_zipf_ranks_dense_and_sorted(spark):
-    rows = wave11.doc_zipf_rankfreq(spark, SF_DIR).collect()
+    rows = Q["doc_zipf_rankfreq"](spark, SF_DIR).collect()
     assert [r.rank for r in rows] == list(range(1, len(rows) + 1))
     freqs = [r.freq for r in rows]
     assert freqs == sorted(freqs, reverse=True)
@@ -106,7 +108,7 @@ def test_zipf_ranks_dense_and_sorted(spark):
 def test_abc_matches_naive_global_sort(spark):
     """The bucketed prefix-sum classification equals the naive
     single-ordering definition computed locally."""
-    rows = {r.abc_class: r for r in wave11.cust_abc_pareto(spark, SF_DIR).collect()}
+    rows = {r.abc_class: r for r in Q["cust_abc_pareto"](spark, SF_DIR).collect()}
     o = spark.read.parquet(f"{SF_DIR}/orders.parquet")
     per = (
         o.groupBy("o_custkey")

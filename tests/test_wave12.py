@@ -8,13 +8,15 @@ from collections import Counter
 
 from pyspark.sql import functions as F
 
-from planning_center_data_pipeline_spark.plans import wave12
+from __spark_entry__ import queries
+
+Q = queries()
 
 SF_DIR = "/root/testdata/sf0.01"
 
 
 def test_backlog_conserves_orders(spark):
-    rows = wave12.ord_open_backlog_daily(spark, SF_DIR).collect()
+    rows = Q["ord_open_backlog_daily"](spark, SF_DIR).collect()
     # every order that opens eventually closes: the final backlog is 0
     # iff the last ship date + 1 is inside the horizon; either way the
     # totals reconcile
@@ -31,7 +33,7 @@ def test_backlog_conserves_orders(spark):
 
 
 def test_hhi_bounds(spark):
-    rows = wave12.sup_part_hhi(spark, SF_DIR).collect()
+    rows = Q["sup_part_hhi"](spark, SF_DIR).collect()
     assert len(rows) == 25
     for r in rows:
         # 1/n <= HHI <= 1
@@ -42,7 +44,7 @@ def test_hhi_bounds(spark):
 
 def test_mann_whitney_matches_scipy_free_reference(spark):
     """U and z match a from-scratch tie-corrected computation."""
-    row = wave12.stat_mann_whitney(spark, SF_DIR).collect()[0]
+    row = Q["stat_mann_whitney"](spark, SF_DIR).collect()[0]
     c = spark.read.parquet(f"{SF_DIR}/customer.parquet")
     vals = [
         (int(round(r.c_acctbal * 100)), r.c_mktsegment)
@@ -75,7 +77,7 @@ def test_mann_whitney_matches_scipy_free_reference(spark):
 def test_elasticity_matches_numpy_reference(spark):
     import numpy as np
 
-    rows = wave12.li_discount_elasticity(spark, SF_DIR).collect()
+    rows = Q["li_discount_elasticity"](spark, SF_DIR).collect()
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
     p = spark.read.parquet(f"{SF_DIR}/part.parquet")
     pdf = (
@@ -94,7 +96,7 @@ def test_elasticity_matches_numpy_reference(spark):
 
 
 def test_heatmap_full_accounting(spark):
-    rows = wave12.ev_dow_hour_heatmap(spark, SF_DIR).collect()
+    rows = Q["ev_dow_hour_heatmap"](spark, SF_DIR).collect()
     ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
     assert sum(r.n_events for r in rows) == ev.count()
     assert len(rows) <= 168

@@ -7,7 +7,9 @@ import math
 
 from pyspark.sql import functions as F
 
-from planning_center_data_pipeline_spark.plans import wave13
+from __spark_entry__ import queries
+
+Q = queries()
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -30,7 +32,7 @@ def test_incremental_dedup_planted_classes(spark, tmp_path):
     ).write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
     got = {
         r.verdict: r.n_docs
-        for r in wave13.doc_incremental_dedup_merge(
+        for r in Q["doc_incremental_dedup_merge"](
             spark, str(tmp_path)
         ).collect()
     }
@@ -38,7 +40,7 @@ def test_incremental_dedup_planted_classes(spark, tmp_path):
 
 
 def test_incremental_dedup_accounts_for_whole_batch(spark):
-    rows = wave13.doc_incremental_dedup_merge(spark, SF_DIR).collect()
+    rows = Q["doc_incremental_dedup_merge"](spark, SF_DIR).collect()
     d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     n_batch = d.filter(F.col("doc_id") % 10 == 7).count()
     assert sum(r.n_docs for r in rows) == n_batch
@@ -49,7 +51,7 @@ def test_incremental_dedup_accounts_for_whole_batch(spark):
 
 
 def test_poisson_outliers_ranked_and_consistent(spark):
-    rows = wave13.ev_daily_poisson_outliers(spark, SF_DIR).collect()
+    rows = Q["ev_daily_poisson_outliers"](spark, SF_DIR).collect()
     assert len(rows) == 10
     zs = [abs(r.z) for r in rows]
     assert zs == sorted(zs, reverse=True)
@@ -64,7 +66,7 @@ def test_poisson_outliers_ranked_and_consistent(spark):
 
 
 def test_reorder_intervals_bounds(spark):
-    rows = wave13.ord_reorder_intervals(spark, SF_DIR).collect()
+    rows = Q["ord_reorder_intervals"](spark, SF_DIR).collect()
     o = spark.read.parquet(f"{SF_DIR}/orders.parquet")
     n_orders = o.count()
     n_customers = o.select("o_custkey").distinct().count()
@@ -76,7 +78,7 @@ def test_reorder_intervals_bounds(spark):
 
 
 def test_boilerplate_prefix_is_the_argmax(spark):
-    rows = wave13.doc_boilerplate_prefixes(spark, SF_DIR).collect()
+    rows = Q["doc_boilerplate_prefixes"](spark, SF_DIR).collect()
     d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     assert sum(r.src_docs for r in rows) == d.count()
     for r in rows:
@@ -86,7 +88,7 @@ def test_boilerplate_prefix_is_the_argmax(spark):
 
 
 def test_lifespan_covers_every_user(spark):
-    rows = wave13.ev_user_lifespan_days(spark, SF_DIR).collect()
+    rows = Q["ev_user_lifespan_days"](spark, SF_DIR).collect()
     ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
     assert sum(r.n_users for r in rows) == ev.select("user_id").distinct().count()
     for r in rows:

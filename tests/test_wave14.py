@@ -8,13 +8,15 @@ from collections import defaultdict
 
 from pyspark.sql import functions as F
 
-from planning_center_data_pipeline_spark.plans import wave14
+from __spark_entry__ import queries
+
+Q = queries()
 
 SF_DIR = "/root/testdata/sf0.01"
 
 
 def test_calibration_bins_accounting(spark):
-    rows = wave14.ml_calibration_bins(spark, SF_DIR).collect()
+    rows = Q["ml_calibration_bins"](spark, SF_DIR).collect()
     c = spark.read.parquet(f"{SF_DIR}/customer.parquet")
     assert sum(r.n_cust for r in rows) == c.count()
     assert all(0 <= r.bin <= 9 for r in rows)
@@ -26,7 +28,7 @@ def test_calibration_bins_accounting(spark):
 
 
 def test_ks_matches_naive_ecdf_scan(spark):
-    row = wave14.stat_ks_two_sample(spark, SF_DIR).collect()[0]
+    row = Q["stat_ks_two_sample"](spark, SF_DIR).collect()[0]
     c = spark.read.parquet(f"{SF_DIR}/customer.parquet")
     vals = [
         (int(round(r.c_acctbal * 100)), r.c_mktsegment)
@@ -52,7 +54,7 @@ def test_ks_matches_naive_ecdf_scan(spark):
 
 
 def test_changepoint_maximizes_between_sse(spark):
-    row = wave14.ts_changepoint_daily(spark, SF_DIR).collect()[0]
+    row = Q["ts_changepoint_daily"](spark, SF_DIR).collect()[0]
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
     daily = sorted(
         (r.d, r.rev)
@@ -79,7 +81,7 @@ def test_changepoint_maximizes_between_sse(spark):
 
 
 def test_decile_migration_square_accounting(spark):
-    rows = wave14.cust_decile_migration(spark, SF_DIR).collect()
+    rows = Q["cust_decile_migration"](spark, SF_DIR).collect()
     assert all(
         1 <= r.decile_p1 <= 10 and 1 <= r.decile_p2 <= 10 for r in rows
     )

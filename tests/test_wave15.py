@@ -3,13 +3,15 @@ hash checks (tools/crosscheck.py covers value equality)."""
 
 from __future__ import annotations
 
-from planning_center_data_pipeline_spark.plans import wave15
+from __spark_entry__ import queries
+
+Q = queries()
 
 SF_DIR = "/root/testdata/sf0.01"
 
 
 def test_filter_funnel_monotone(spark):
-    rows = wave15.doc_filter_funnel(spark, SF_DIR).collect()
+    rows = Q["doc_filter_funnel"](spark, SF_DIR).collect()
     d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     assert sum(r.n_docs for r in rows) == d.count()
     for r in rows:
@@ -30,7 +32,7 @@ def test_filter_funnel_monotone(spark):
 
 
 def test_bounce_rate_bounds(spark):
-    rows = wave15.ev_bounce_rate(spark, SF_DIR).collect()
+    rows = Q["ev_bounce_rate"](spark, SF_DIR).collect()
     ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
     n_sessions = (
         ev.selectExpr("user_id", "CAST(ts AS DATE) AS d")

@@ -5,13 +5,15 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from planning_center_data_pipeline_spark.plans import wave16
+from __spark_entry__ import queries
+
+Q = queries()
 
 SF_DIR = "/root/testdata/sf0.01"
 
 
 def test_threshold_sweep_monotone(spark):
-    rows = wave16.emb_dup_threshold_sweep(spark, SF_DIR).collect()
+    rows = Q["emb_dup_threshold_sweep"](spark, SF_DIR).collect()
     assert [r.thr for r in rows] == [0.4, 0.5, 0.6, 0.7]
     pairs = [r.n_pairs for r in rows]
     vecs = [r.n_vecs_affected for r in rows]
@@ -26,7 +28,7 @@ def test_threshold_sweep_monotone(spark):
 
 
 def test_rag_chunks_cover_every_token_with_overlap(spark):
-    rows = wave16.doc_rag_chunks(spark, SF_DIR).collect()
+    rows = Q["doc_rag_chunks"](spark, SF_DIR).collect()
     d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     toks = {
         r.doc_id: r.n

@@ -8,13 +8,15 @@ import statistics
 
 from pyspark.sql import functions as F
 
-from planning_center_data_pipeline_spark.plans import wave17
+from __spark_entry__ import queries
+
+Q = queries()
 
 SF_DIR = "/root/testdata/sf0.01"
 
 
 def test_welch_matches_textbook_formula(spark):
-    row = wave17.stat_welch_t(spark, SF_DIR).collect()[0]
+    row = Q["stat_welch_t"](spark, SF_DIR).collect()[0]
     c = spark.read.parquet(f"{SF_DIR}/customer.parquet")
     vals = [
         (int(round(r.c_acctbal * 100)), r.c_mktsegment)
@@ -38,7 +40,7 @@ def test_welch_matches_textbook_formula(spark):
 
 
 def test_waterfall_reconciles(spark):
-    rows = wave17.li_margin_waterfall(spark, SF_DIR).collect()
+    rows = Q["li_margin_waterfall"](spark, SF_DIR).collect()
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
     assert sum(r.n_items for r in rows) == li.count()
     for r in rows:
@@ -48,7 +50,7 @@ def test_waterfall_reconciles(spark):
 
 
 def test_l_diversity_accounting(spark):
-    rows = wave17.priv_l_diversity(spark, SF_DIR).collect()
+    rows = Q["priv_l_diversity"](spark, SF_DIR).collect()
     c = spark.read.parquet(f"{SF_DIR}/customer.parquet")
     assert sum(r.n_members for r in rows) == c.count()
     n_segments = c.select("c_mktsegment").distinct().count()
@@ -60,7 +62,7 @@ def test_l_diversity_accounting(spark):
 
 
 def test_skew_report_consistency(spark):
-    rows = {r.key_col: r for r in wave17.data_skew_report(spark, SF_DIR).collect()}
+    rows = {r.key_col: r for r in Q["data_skew_report"](spark, SF_DIR).collect()}
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
     r = rows["lineitem.l_partkey"]
     assert r.n_rows == li.count()

@@ -7,7 +7,9 @@ import math
 
 from pyspark.sql import functions as F
 
-from planning_center_data_pipeline_spark.plans import wave18
+from __spark_entry__ import queries
+
+Q = queries()
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -15,7 +17,7 @@ SF_DIR = "/root/testdata/sf0.01"
 def test_centroid_drift_matches_numpy(spark):
     import numpy as np
 
-    rows = {r.label: r for r in wave18.emb_label_centroid_drift(spark, SF_DIR).collect()}
+    rows = {r.label: r for r in Q["emb_label_centroid_drift"](spark, SF_DIR).collect()}
     e = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").collect()
     by_label: dict[int, list] = {}
     for r in e:
@@ -35,7 +37,7 @@ def test_centroid_drift_matches_numpy(spark):
 
 
 def test_common_neighbors_probe_shape(spark):
-    rows = wave18.graph_common_neighbors(spark, SF_DIR).collect()
+    rows = Q["graph_common_neighbors"](spark, SF_DIR).collect()
     assert rows
     by_probe: dict[int, list] = {}
     for r in rows:
@@ -54,7 +56,7 @@ def test_common_neighbors_probe_shape(spark):
 
 
 def test_profile_matches_direct_queries(spark):
-    rows = {r.col_name: r for r in wave18.data_profile_orders(spark, SF_DIR).collect()}
+    rows = {r.col_name: r for r in Q["data_profile_orders"](spark, SF_DIR).collect()}
     o = spark.read.parquet(f"{SF_DIR}/orders.parquet")
     n = o.count()
     assert all(r.n == n for r in rows.values())

@@ -7,7 +7,9 @@ import math
 
 from pyspark.sql import functions as F
 
-from planning_center_data_pipeline_spark.plans import wave19
+from __spark_entry__ import queries
+
+Q = queries()
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -15,7 +17,7 @@ SF_DIR = "/root/testdata/sf0.01"
 def test_acf_matches_numpy(spark):
     import numpy as np
 
-    rows = {r.lag: r for r in wave19.ts_autocorrelation(spark, SF_DIR).collect()}
+    rows = {r.lag: r for r in Q["ts_autocorrelation"](spark, SF_DIR).collect()}
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
     daily = sorted(
         (r.d, r.x)
@@ -47,7 +49,7 @@ def test_acf_matches_numpy(spark):
 
 
 def test_pvm_reconciles_to_revenue_delta(spark):
-    rows = wave19.li_price_volume_mix(spark, SF_DIR).collect()
+    rows = Q["li_price_volume_mix"](spark, SF_DIR).collect()
     assert rows
     for r in rows:
         # Laspeyres identity: volume + price == rev1 - rev0
@@ -61,7 +63,7 @@ def test_pvm_reconciles_to_revenue_delta(spark):
 
 
 def test_dedup_savings_accounting(spark):
-    rows = wave19.doc_dedup_savings(spark, SF_DIR).collect()
+    rows = Q["doc_dedup_savings"](spark, SF_DIR).collect()
     d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     assert sum(r.n_docs for r in rows) == d.count()
     n_fp = (

@@ -5,14 +5,16 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from planning_center_data_pipeline_spark.plans import wave20
+from __spark_entry__ import queries
+
+Q = queries()
 
 SF_DIR = "/root/testdata/sf0.01"
 
 
 def test_integrity_audit_clean_and_planted_orphans(spark, tmp_path):
     # the synthetic schema is referentially clean
-    rows = wave20.rel_integrity_audit(spark, SF_DIR).collect()
+    rows = Q["rel_integrity_audit"](spark, SF_DIR).collect()
     assert len(rows) == 4
     assert all(r.n_orphans == 0 and r.orphan_pct == 0.0 for r in rows)
     # plant orphans: copy the tables, drop half the parts
@@ -25,7 +27,7 @@ def test_integrity_audit_clean_and_planted_orphans(spark, tmp_path):
     ).write.parquet(f"{tmp_path}/part.parquet")
     planted = {
         r.relation: r
-        for r in wave20.rel_integrity_audit(spark, str(tmp_path)).collect()
+        for r in Q["rel_integrity_audit"](spark, str(tmp_path)).collect()
     }
     r = planted["lineitem.l_partkey -> part"]
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
@@ -35,7 +37,7 @@ def test_integrity_audit_clean_and_planted_orphans(spark, tmp_path):
 
 
 def test_boxplot_ordering_and_outliers(spark):
-    rows = wave20.ev_type_value_boxplot(spark, SF_DIR).collect()
+    rows = Q["ev_type_value_boxplot"](spark, SF_DIR).collect()
     ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
     assert sum(r.n for r in rows) == ev.filter(F.col("value").isNotNull()).count()
     for r in rows:

@@ -7,7 +7,9 @@ import math
 
 from pyspark.sql import functions as F
 
-from planning_center_data_pipeline_spark.plans import wave21
+from __spark_entry__ import queries
+
+Q = queries()
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -15,22 +17,20 @@ SF_DIR = "/root/testdata/sf0.01"
 def test_skipgram_gap1_equals_markov(spark):
     """Gap-1 skip-gram counts are exactly the Markov transition
     counts — the two operators agree on their shared marginal."""
-    from planning_center_data_pipeline_spark.plans import wave10
-
     sk = {
         (r.t_from, r.t_to): r.n_pairs
-        for r in wave21.ev_skipgram_pairs(spark, SF_DIR).collect()
+        for r in Q["ev_skipgram_pairs"](spark, SF_DIR).collect()
         if r.gap == 1
     }
     mk = {
         (r.t_from, r.t_to): r.n_trans
-        for r in wave10.ev_markov_transitions(spark, SF_DIR).collect()
+        for r in Q["ev_markov_transitions"](spark, SF_DIR).collect()
     }
     assert sk == mk
 
 
 def test_skipgram_shares_normalised(spark):
-    rows = wave21.ev_skipgram_pairs(spark, SF_DIR).collect()
+    rows = Q["ev_skipgram_pairs"](spark, SF_DIR).collect()
     by_group: dict[tuple, float] = {}
     for r in rows:
         assert 1 <= r.gap <= 3
@@ -40,7 +40,7 @@ def test_skipgram_shares_normalised(spark):
 
 
 def test_stopword_leakage_accounting(spark):
-    rows = wave21.doc_stopword_leakage(spark, SF_DIR).collect()
+    rows = Q["doc_stopword_leakage"](spark, SF_DIR).collect()
     d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     assert sum(r.n_docs for r in rows) == d.count()
     for r in rows:

@@ -6,14 +6,14 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from __spark_entry__ import queries
+
+Q = queries()
+
 
 def test_revenue_bridge_reconciles_to_the_cent(spark, sf_dir):
     """new + expansion + contraction + churned == net, per month."""
-    from planning_center_data_pipeline_spark.plans.wave25 import (
-        ord_revenue_bridge,
-    )
-
-    rows = ord_revenue_bridge(spark, sf_dir).collect()
+    rows = Q["ord_revenue_bridge"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert (
@@ -30,9 +30,6 @@ def test_revenue_bridge_reconciles_to_the_cent(spark, sf_dir):
 def test_queue_wait_closed_form_equals_direct_simulation(spark, sf_dir):
     """The prefix-extremum closed form must equal the sequential
     c_i = max(a_i, c_{i-1}) + 1 recursion run directly in Python."""
-    from planning_center_data_pipeline_spark.plans.wave23 import (
-        ord_queue_wait_closed_form,
-    )
     from planning_center_data_pipeline_spark.sources.tables import load_table
 
     got = {
@@ -41,7 +38,7 @@ def test_queue_wait_closed_form_equals_direct_simulation(spark, sf_dir):
             r["max_wait_days"],
             r["total_wait_days"],
         )
-        for r in ord_queue_wait_closed_form(spark, sf_dir).collect()
+        for r in Q["ord_queue_wait_closed_form"](spark, sf_dir).collect()
     }
     o = (
         load_table(spark, sf_dir, "orders")
@@ -70,11 +67,7 @@ def test_queue_wait_closed_form_equals_direct_simulation(spark, sf_dir):
 
 
 def test_kcore_rounds_monotone_and_converging(spark, sf_dir):
-    from planning_center_data_pipeline_spark.plans.wave23 import (
-        graph_bipartite_kcore_rounds,
-    )
-
-    rows = graph_bipartite_kcore_rounds(spark, sf_dir).collect()
+    rows = Q["graph_bipartite_kcore_rounds"](spark, sf_dir).collect()
     assert [r["round"] for r in rows] == [0, 1, 2, 3, 4]
     for a, b in zip(rows, rows[1:]):
         assert b["n_edges"] <= a["n_edges"]
@@ -86,10 +79,6 @@ def test_kcore_rounds_monotone_and_converging(spark, sf_dir):
 def test_containment_bounds_and_symmetric_subset(spark, tmp_path):
     """Planted: A's shingles are a strict subset of B's -> containment
     (A in B) = 1.0 while (B in A) < 1 and Jaccard < threshold."""
-    from planning_center_data_pipeline_spark.plans.wave22 import (
-        doc_containment_pairs,
-    )
-
     small = "alpha beta gamma delta epsilon"  # 3 shingles
     big = small + " zeta eta theta iota kappa xray yankee zulu"
     docs = spark.createDataFrame(
@@ -98,7 +87,7 @@ def test_containment_bounds_and_symmetric_subset(spark, tmp_path):
     docs.coalesce(1).write.parquet(f"{tmp_path}/documents.parquet")
     rows = {
         (r["doc_id"], r["other_id"]): r
-        for r in doc_containment_pairs(spark, str(tmp_path)).collect()
+        for r in Q["doc_containment_pairs"](spark, str(tmp_path)).collect()
     }
     assert rows[(1, 2)]["containment"] == 1.0  # A fully inside B
     assert (2, 1) not in rows  # B in A is far below 0.6
@@ -110,8 +99,6 @@ def test_containment_bounds_and_symmetric_subset(spark, tmp_path):
 def test_ndcg_bounds_and_perfect_ranking(spark):
     """NDCG in [0, 1]; a user whose purchases occupy the top ranks by
     value scores exactly 1.0 (ndcg_micro = 1_000_000)."""
-    from planning_center_data_pipeline_spark.plans.wave22 import ml_ndcg_at10
-
     # user 1: 3 purchases with the 3 highest values -> perfect ranking
     rows = [
         (i, 1, "purchase" if i < 3 else "view", 1000.0 - i)
@@ -129,7 +116,7 @@ def test_ndcg_bounds_and_perfect_ranking(spark):
 
     with tempfile.TemporaryDirectory() as td:
         df.coalesce(1).write.parquet(f"{td}/events.parquet")
-        out = {r["cohort"]: r for r in ml_ndcg_at10(spark, td).collect()}
+        out = {r["cohort"]: r for r in Q["ml_ndcg_at10"](spark, td).collect()}
     # cohorts: user 1 -> cohort 1, user 2 -> cohort 2
     assert out[1]["sum_ndcg_micro"] == 1_000_000
     assert out[2]["sum_ndcg_micro"] == 386_853  # w[5]/w[1] in micro

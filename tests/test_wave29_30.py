@@ -8,17 +8,16 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from __spark_entry__ import queries
 from planning_center_data_pipeline_spark.sources.tables import load_table
+
+Q = queries()
 
 
 def test_theil_sen_matches_direct_python_median(spark, sf_dir):
-    from planning_center_data_pipeline_spark.plans.wave29 import (
-        ts_theil_sen_slope,
-    )
-
     got = {
         r["n_name"]: (r["n_pairs"], r["ts_slope_cents_per_month"])
-        for r in ts_theil_sen_slope(spark, sf_dir).collect()
+        for r in Q["ts_theil_sen_slope"](spark, sf_dir).collect()
     }
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
@@ -53,13 +52,9 @@ def test_theil_sen_matches_direct_python_median(spark, sf_dir):
 def test_weighted_median_defining_property(spark, sf_dir):
     """At the reported value v: weight(<= v) >= W/2 and
     weight(>= v) >= W/2 — the textbook weighted-median certificate."""
-    from planning_center_data_pipeline_spark.plans.wave29 import (
-        li_weighted_median_price,
-    )
-
     med = {
         r["p_brand"]: (r["wmedian_cents"], r["total_qty"])
-        for r in li_weighted_median_price(spark, sf_dir).collect()
+        for r in Q["li_weighted_median_price"](spark, sf_dir).collect()
     }
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part")
@@ -84,11 +79,7 @@ def test_weighted_median_defining_property(spark, sf_dir):
 
 
 def test_max_drawdown_bounds(spark, sf_dir):
-    from planning_center_data_pipeline_spark.plans.wave29 import (
-        ts_max_drawdown,
-    )
-
-    rows = ts_max_drawdown(spark, sf_dir).collect()
+    rows = Q["ts_max_drawdown"](spark, sf_dir).collect()
     assert rows and len(rows) <= 25
     dd = [r["dd_cents"] for r in rows]
     assert dd == sorted(dd, reverse=True)  # deepest first
@@ -101,11 +92,7 @@ def test_max_drawdown_bounds(spark, sf_dir):
 def test_rbo_range_and_self_similarity(spark, sf_dir):
     """rbo_at_d is in [0, 1), non-decreasing in d only when overlap
     grows — and each prefix term is non-negative."""
-    from planning_center_data_pipeline_spark.plans.wave29 import (
-        rank_rbo_topk,
-    )
-
-    rows = rank_rbo_topk(spark, sf_dir).collect()
+    rows = Q["rank_rbo_topk"](spark, sf_dir).collect()
     assert [r["d"] for r in rows] == list(range(1, 21))
     prev = 0.0
     for r in rows:
@@ -119,11 +106,7 @@ def test_t_closeness_range_and_global_group(spark, sf_dir):
     """0 <= t < 1 for every group; a group equal to the whole table
     would score exactly 0 (checked by construction on a single-nation
     projection)."""
-    from planning_center_data_pipeline_spark.plans.wave29 import (
-        priv_t_closeness,
-    )
-
-    rows = priv_t_closeness(spark, sf_dir).collect()
+    rows = Q["priv_t_closeness"](spark, sf_dir).collect()
     assert len(rows) == 25
     for r in rows:
         assert 0.0 <= r["t_closeness"] < 1.0
@@ -131,11 +114,7 @@ def test_t_closeness_range_and_global_group(spark, sf_dir):
 
 
 def test_permutation_test_pvalue_sane(spark, sf_dir):
-    from planning_center_data_pipeline_spark.plans.wave29 import (
-        stat_permutation_test,
-    )
-
-    r = stat_permutation_test(spark, sf_dir).collect()[0]
+    r = Q["stat_permutation_test"](spark, sf_dir).collect()[0]
     assert r["n_perms"] == 200
     assert 0 <= r["n_extreme"] <= 200
     assert 1 / 201 <= r["p_value"] <= 1.0
@@ -143,11 +122,7 @@ def test_permutation_test_pvalue_sane(spark, sf_dir):
 
 
 def test_map_mrr_ranges(spark, sf_dir):
-    from planning_center_data_pipeline_spark.plans.wave30 import (
-        ml_map_mrr_at10,
-    )
-
-    rows = ml_map_mrr_at10(spark, sf_dir).collect()
+    rows = Q["ml_map_mrr_at10"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert 0.0 <= r["map_at10"] <= 1.0
@@ -161,11 +136,7 @@ def test_forward_asof_ordering_and_minimality(spark, sf_dir):
     """Every matched purchase is at-or-after the view, belongs to the
     same user, and is the FIRST such purchase (no earlier purchase of
     that user in between)."""
-    from planning_center_data_pipeline_spark.plans.wave30 import (
-        asof_next_event_forward,
-    )
-
-    got = asof_next_event_forward(spark, sf_dir).collect()
+    got = Q["asof_next_event_forward"](spark, sf_dir).collect()
     assert got
     from planning_center_data_pipeline_spark.functions.temporal import epoch_us
 
@@ -193,11 +164,7 @@ def test_forward_asof_ordering_and_minimality(spark, sf_dir):
 def test_readability_matches_python_recount(spark, sf_dir):
     import re
 
-    from planning_center_data_pipeline_spark.plans.wave30 import (
-        doc_readability_fk,
-    )
-
-    got = {r["doc_id"]: r for r in doc_readability_fk(spark, sf_dir).collect()}
+    got = {r["doc_id"]: r for r in Q["doc_readability_fk"](spark, sf_dir).collect()}
     docs = load_table(spark, sf_dir, "documents").limit(50).collect()
     for d in docs:
         t = d["text"] or ""
@@ -218,11 +185,7 @@ def test_readability_matches_python_recount(spark, sf_dir):
 def test_basket_diversity_bounds(spark, sf_dir):
     """1 <= eff_brands <= n_brands, with equality to n_brands only
     under perfectly even spend."""
-    from planning_center_data_pipeline_spark.plans.wave30 import (
-        cust_basket_diversity,
-    )
-
-    rows = cust_basket_diversity(spark, sf_dir).collect()
+    rows = Q["cust_basket_diversity"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert 1.0 <= r["eff_brands"] <= r["n_brands"] + 1e-9
@@ -233,11 +196,7 @@ def test_bigram_lift_marginals(spark, sf_dir):
     """sum over cells of cnt equals T; the cnt-weighted mean lift along
     any row of the contingency table is exactly 1 — the defining
     identity of lift (sum_b P(b|a) * lift / P(b) structure)."""
-    from planning_center_data_pipeline_spark.plans.wave30 import (
-        ev_bigram_lift,
-    )
-
-    rows = ev_bigram_lift(spark, sf_dir).collect()
+    rows = Q["ev_bigram_lift"](spark, sf_dir).collect()
     assert rows
     T = sum(r["cnt"] for r in rows)
     # reconstruct marginals and check lift = cnt*T/(row_tot*col_tot)
@@ -257,11 +216,7 @@ def test_avro_roundtrip_agg_equals_plain_aggregate(spark, sf_dir):
     """The serde-in-plan query must equal the same aggregate computed
     WITHOUT the encode/decode pair — identity, verified in-engine."""
     from planning_center_data_pipeline_spark.functions.temporal import epoch_us
-    from planning_center_data_pipeline_spark.plans.wave29 import (
-        ev_avro_roundtrip_agg,
-    )
-
-    got = sorted(map(tuple, ev_avro_roundtrip_agg(spark, sf_dir).collect()))
+    got = sorted(map(tuple, Q["ev_avro_roundtrip_agg"](spark, sf_dir).collect()))
     plain = (
         load_table(spark, sf_dir, "events")
         .filter(F.pmod("event_id", F.lit(97)) == 0)
@@ -286,11 +241,7 @@ def test_png_roundtrip_agg_matches_python(spark, sf_dir):
     direct Python recomputation from the md5 hex."""
     import hashlib
 
-    from planning_center_data_pipeline_spark.plans.wave31 import (
-        mm_png_roundtrip_agg,
-    )
-
-    rows = mm_png_roundtrip_agg(spark, sf_dir).collect()
+    rows = Q["mm_png_roundtrip_agg"](spark, sf_dir).collect()
     assert rows
     for r in rows[:50]:
         h = hashlib.md5(str(r["doc_id"]).encode()).hexdigest()
@@ -299,11 +250,7 @@ def test_png_roundtrip_agg_matches_python(spark, sf_dir):
 
 
 def test_wilson_ci_brackets_p_hat(spark, sf_dir):
-    from planning_center_data_pipeline_spark.plans.wave31 import (
-        stat_wilson_ci_returns,
-    )
-
-    rows = stat_wilson_ci_returns(spark, sf_dir).collect()
+    rows = Q["stat_wilson_ci_returns"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert 0.0 <= r["wilson_low"] <= r["p_hat"] <= r["wilson_high"] <= 1.0
@@ -312,12 +259,9 @@ def test_wilson_ci_brackets_p_hat(spark, sf_dir):
 
 
 def test_otif_rate_bounds_and_total(spark, sf_dir):
-    from planning_center_data_pipeline_spark.plans.wave31 import (
-        li_otif_by_month,
-    )
     from planning_center_data_pipeline_spark.sources.tables import load_table
 
-    rows = li_otif_by_month(spark, sf_dir).collect()
+    rows = Q["li_otif_by_month"](spark, sf_dir).collect()
     assert rows
     # OTIF is defined over orders that HAVE lines (this synthetic data
     # contains a few lineless orders; real TPC-H does not)
@@ -333,12 +277,9 @@ def test_otif_rate_bounds_and_total(spark, sf_dir):
 
 
 def test_keyspace_density_accounts_for_all_orders(spark, sf_dir):
-    from planning_center_data_pipeline_spark.plans.wave31 import (
-        ord_keyspace_density,
-    )
     from planning_center_data_pipeline_spark.sources.tables import load_table
 
-    rows = ord_keyspace_density(spark, sf_dir).collect()
+    rows = Q["ord_keyspace_density"](spark, sf_dir).collect()
     assert rows
     total = sum(r["present"] * r["n_buckets"] for r in rows)
     assert total == load_table(spark, sf_dir, "orders").count()
@@ -350,12 +291,9 @@ def test_keyspace_density_accounts_for_all_orders(spark, sf_dir):
 def test_semantic_dedup_decision_table(spark, sf_dir):
     """Every bucket keeps exactly one representative (keep=1, cos≈1);
     drops only happen above the threshold; bucket sizes reconcile."""
-    from planning_center_data_pipeline_spark.plans.wave32 import (
-        _SD_THRESHOLD,
-        emb_semantic_dedup,
-    )
+    from planning_center_data_pipeline_spark.plans.embeddings import _SD_THRESHOLD
 
-    rows = emb_semantic_dedup(spark, sf_dir).collect()
+    rows = Q["emb_semantic_dedup"](spark, sf_dir).collect()
     assert rows
     by_bucket: dict[int, list] = {}
     for r in rows:
@@ -375,13 +313,12 @@ def test_semantic_dedup_decision_table(spark, sf_dir):
 def test_kendall_tau_matches_scipy_free_python(spark, sf_dir):
     """tau-b from the query equals a direct Python computation over the
     same contingency definition."""
-    from planning_center_data_pipeline_spark.plans.wave32 import (
-        _TAU_BAND_CENTS,
+    from planning_center_data_pipeline_spark.plans.statistics import (
         _TAU_BANDS,
-        stat_kendall_tau_b,
+        _TAU_BAND_CENTS,
     )
 
-    r = stat_kendall_tau_b(spark, sf_dir).collect()[0]
+    r = Q["stat_kendall_tau_b"](spark, sf_dir).collect()[0]
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_quantity").cast("bigint").alias("x"),
         F.least(
@@ -421,12 +358,9 @@ def test_kendall_tau_matches_scipy_free_python(spark, sf_dir):
 def test_ivf_sweep_monotone_and_exhaustive(spark, sf_dir):
     """Recall is monotone in n_probe and EXACTLY 1.0 when every cell is
     probed (n_probe = number of cells)."""
-    from planning_center_data_pipeline_spark.plans.wave34 import (
-        _IVF_CELLS,
-        emb_ivf_nprobe_recall_sweep,
-    )
+    from planning_center_data_pipeline_spark.plans.embeddings import _IVF_CELLS
 
-    rows = emb_ivf_nprobe_recall_sweep(spark, sf_dir).collect()
+    rows = Q["emb_ivf_nprobe_recall_sweep"](spark, sf_dir).collect()
     assert [r["n_probe"] for r in rows] == [1, 2, 4, 8]
     prev = -1
     for r in rows:
@@ -440,11 +374,7 @@ def test_ivf_sweep_monotone_and_exhaustive(spark, sf_dir):
 def test_cohens_kappa_identities(spark, sf_dir):
     """kappa in [-1, 1]; po and pe reconstruct from the output ints;
     labeling both classifiers identically would give kappa = 1."""
-    from planning_center_data_pipeline_spark.plans.wave34 import (
-        stat_cohens_kappa,
-    )
-
-    r = stat_cohens_kappa(spark, sf_dir).collect()[0]
+    r = Q["stat_cohens_kappa"](spark, sf_dir).collect()[0]
     assert -1.0 <= r["kappa"] <= 1.0
     po = r["d"] / r["n"]
     pe = r["e"] / (r["n"] * r["n"])
@@ -454,12 +384,9 @@ def test_cohens_kappa_identities(spark, sf_dir):
 
 def test_rolling_ols_slope_matches_numpy(spark, sf_dir):
     """Windowed closed form equals a direct per-window polyfit."""
-    from planning_center_data_pipeline_spark.plans.wave35 import (
-        _W,
-        ts_rolling_ols_slope,
-    )
+    from planning_center_data_pipeline_spark.plans.timeseries import _W
 
-    rows = ts_rolling_ols_slope(spark, sf_dir).collect()
+    rows = Q["ts_rolling_ols_slope"](spark, sf_dir).collect()
     assert rows
     daily = {
         r["day"]: r["y"]
@@ -484,11 +411,7 @@ def test_rolling_ols_slope_matches_numpy(spark, sf_dir):
 
 
 def test_scalar_subquery_matches_join(spark, sf_dir):
-    from planning_center_data_pipeline_spark.plans.wave35 import (
-        sql_scalar_subquery_orders,
-    )
-
-    got = {r["orderkey"]: r for r in sql_scalar_subquery_orders(spark, sf_dir).collect()}
+    got = {r["orderkey"]: r for r in Q["sql_scalar_subquery_orders"](spark, sf_dir).collect()}
     li = (
         load_table(spark, sf_dir, "lineitem")
         .groupBy("l_orderkey")
@@ -506,12 +429,9 @@ def test_scalar_subquery_matches_join(spark, sf_dir):
 
 
 def test_brown_forsythe_against_direct_python(spark, sf_dir):
-    from planning_center_data_pipeline_spark.plans.wave35 import (
-        _BF_GROUPS,
-        stat_brown_forsythe,
-    )
+    from planning_center_data_pipeline_spark.plans.statistics import _BF_GROUPS
 
-    r = stat_brown_forsythe(spark, sf_dir).collect()[0]
+    r = Q["stat_brown_forsythe"](spark, sf_dir).collect()[0]
     rows = (
         load_table(spark, sf_dir, "orders")
         .select(
@@ -547,11 +467,7 @@ def test_brown_forsythe_against_direct_python(spark, sf_dir):
 def test_generalization_ladder_monotone(spark, sf_dir):
     """Coarser levels can only merge groups: n_groups non-increasing,
     min_k non-decreasing, suppression non-increasing with level."""
-    from planning_center_data_pipeline_spark.plans.wave36 import (
-        priv_generalization_ladder,
-    )
-
-    rows = priv_generalization_ladder(spark, sf_dir).collect()
+    rows = Q["priv_generalization_ladder"](spark, sf_dir).collect()
     assert [r["level"] for r in rows] == [0, 1, 2, 3]
     for a, b in zip(rows, rows[1:]):
         assert b["n_groups"] <= a["n_groups"]
@@ -561,11 +477,7 @@ def test_generalization_ladder_monotone(spark, sf_dir):
 
 def test_fisher_between_laspeyres_and_paasche(spark, sf_dir):
     """Geometric-mean identity: min(L,P) <= F <= max(L,P), all > 0."""
-    from planning_center_data_pipeline_spark.plans.wave36 import (
-        li_price_index_fisher,
-    )
-
-    rows = li_price_index_fisher(spark, sf_dir).collect()
+    rows = Q["li_price_index_fisher"](spark, sf_dir).collect()
     assert rows
     import math
 

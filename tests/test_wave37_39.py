@@ -8,6 +8,10 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from __spark_entry__ import queries
+
+Q = queries()
+
 SF = "/root/testdata/sf0.001"
 SF01 = "/root/testdata/sf0.01"
 
@@ -78,7 +82,7 @@ def test_bh_fdr_step_up_shape(spark):
 def test_bm25_spot_check_against_python(spark):
     """Recompute one returned doc's BM25 in plain Python from raw
     token counts."""
-    from planning_center_data_pipeline_spark.plans.wave37 import _BM25_TERMS
+    from planning_center_data_pipeline_spark.plans.documents_text import _BM25_TERMS
 
     out = _q("doc_bm25_scores")(spark, SF).collect()
     assert out, "no docs matched the query terms"
@@ -223,10 +227,9 @@ def test_minhash_neighbors_planted_hub_bucket_cap(spark, tmp_path):
     Without the cap the bucket join emits C(200,2)=19900 pairs per
     band; with it, candidates stay <= C(cap,2) and the query still
     surfaces the (identical-neighborhood, jaccard=1.0) pairs."""
-    from planning_center_data_pipeline_spark.plans.wave39 import (
+    from planning_center_data_pipeline_spark.plans.graph import (
         _NMH_BUCKET_CAP,
         _nmh_candidates,
-        graph_minhash_neighbors,
     )
 
     hub_twins = list(range(2, 202))  # parts with neighbor set == {1}
@@ -250,7 +253,7 @@ def test_minhash_neighbors_planted_hub_bucket_cap(spark, tmp_path):
     assert 0 < n_cand <= cap_pairs, (n_cand, cap_pairs)
 
     # end-to-end: the ranking still finds max-similarity twin pairs
-    out = graph_minhash_neighbors(spark, str(tmp_path)).collect()
+    out = Q["graph_minhash_neighbors"](spark, str(tmp_path)).collect()
     assert len(out) == 25
     assert all(r["jaccard"] == 1.0 for r in out)
     # every emitted id is a capped-bucket member (lowest-id twins)

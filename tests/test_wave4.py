@@ -16,7 +16,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from planning_center_data_pipeline_spark.plans import wave4
+from __spark_entry__ import queries
+
+Q = queries()
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -32,7 +34,7 @@ def _formatted_plan(df) -> str:
 
 
 @pytest.mark.parametrize(
-    "fn", [wave4.win_topn_group_limit, wave4.doc_stratified_topk_sample]
+    "fn", [Q["win_topn_group_limit"], Q["doc_stratified_topk_sample"]]
 )
 def test_rank_filter_compiles_to_window_group_limit(spark, fn):
     plan = _formatted_plan(fn(spark, SF_DIR))
@@ -56,13 +58,13 @@ def test_gaps_islands_single_data_shuffle(spark):
     # orderBy; a third shuffle means a grouping failed to reuse the
     # custkey clustering.  Counted by walking the physical plan tree,
     # not by substring-matching formatted output.
-    df = wave4.win_gaps_islands(spark, SF_DIR)
+    df = Q["win_gaps_islands"](spark, SF_DIR)
     jplan = df._jdf.queryExecution().executedPlan()
     assert _count_plan_nodes(jplan, "ShuffleExchange") <= 2
 
 
 def test_salted_agg_equals_plain_groupby(spark):
-    salted = wave4.agg_salted_skew(spark, SF_DIR).collect()
+    salted = Q["agg_salted_skew"](spark, SF_DIR).collect()
     e = spark.read.parquet(f"{SF_DIR}/events.parquet")
     cents = F.round(F.col("value") * 100).cast("bigint")
     plain = {
@@ -81,7 +83,7 @@ def test_salted_agg_equals_plain_groupby(spark):
 
 
 def test_mix_plan_budget_caps_at_uniform_target(spark):
-    rows = wave4.corpus_mix_plan(spark, SF_DIR).collect()
+    rows = Q["corpus_mix_plan"](spark, SF_DIR).collect()
     tot = sum(r.n_tokens for r in rows)
     target = tot / len(rows)
     for r in rows:
@@ -94,7 +96,7 @@ def test_mix_plan_budget_caps_at_uniform_target(spark):
 
 
 def test_gaps_islands_invariants(spark):
-    for r in wave4.win_gaps_islands(spark, SF_DIR).collect():
+    for r in Q["win_gaps_islands"](spark, SF_DIR).collect():
         assert r.max_run <= r.active_months
         assert r.n_islands >= 1
         assert r.active_months >= r.n_islands  # each island >= 1 month
@@ -152,11 +154,7 @@ def test_curate_e2e_shard_budget_and_composition(spark):
     one document (the running-sum assignment can overshoot by at most
     the doc that crosses the boundary); all docs survive curation
     stages consistently (n_docs > 0 for every emitted shard)."""
-    from planning_center_data_pipeline_spark.plans.wave4b import (
-        corpus_curate_e2e,
-    )
-
-    rows = corpus_curate_e2e(spark, "/root/testdata/sf0.01").collect()
+    rows = Q["corpus_curate_e2e"](spark, "/root/testdata/sf0.01").collect()
     assert rows
     by_src = {}
     for r in rows:

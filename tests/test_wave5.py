@@ -6,7 +6,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from planning_center_data_pipeline_spark.plans import wave5
+from __spark_entry__ import queries
+from planning_center_data_pipeline_spark.plans import multimodal
+
+Q = queries()
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -35,7 +38,7 @@ def test_edit_near_dup_symmetric_and_bounded(spark):
         )
         got = {
             (r.id_1, r.id_2): r.edit_dist
-            for r in wave5.doc_prefix_edit_near_dup(spark, td).collect()
+            for r in Q["doc_prefix_edit_near_dup"](spark, td).collect()
         }
     # 40-char prefix keeps only "iii"/"jjj" of the last token
     assert (1, 2) in got and got[(1, 2)] == 3
@@ -59,13 +62,13 @@ def test_intersect_all_bag_semantics(spark, tmp_path):
     o.write.parquet(f"{tmp_path}/orders.parquet")
     got = {
         r.o_custkey: r.n_matched
-        for r in wave5.set_orders_intersect_all(spark, str(tmp_path)).collect()
+        for r in Q["set_orders_intersect_all"](spark, str(tmp_path)).collect()
     }
     assert got == {1: 1, 2: 1}
 
 
 def test_vocab_coverage_rates(spark, sf_dir):
-    rows = wave5.doc_vocab_coverage(spark, sf_dir).collect()
+    rows = Q["doc_vocab_coverage"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert 0 <= r.n_oov <= r.n_tokens
@@ -87,19 +90,11 @@ def test_lang_confusion_totals_match_docs(spark, sf_dir):
     """The confusion matrix (wave4d) must aggregate exactly the
     per-doc guesses (extensions.doc_lang_guess) — the two queries
     share one classifier and must not drift apart."""
-    from planning_center_data_pipeline_spark.plans.wave4d import (
-        doc_lang_confusion,
-    )
-
-    rows = doc_lang_confusion(spark, sf_dir).collect()
+    rows = Q["doc_lang_confusion"](spark, sf_dir).collect()
     n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
     assert sum(r.n_docs for r in rows) == n_docs  # a partition of docs
     assert {r.lang_guessed for r in rows} <= {"en", "es", "de", "fr", "und"}
-    from planning_center_data_pipeline_spark.plans.extensions import (
-        doc_lang_guess,
-    )
-
-    per_doc = doc_lang_guess(spark, sf_dir).collect()
+    per_doc = Q["doc_lang_guess"](spark, sf_dir).collect()
     from collections import Counter
 
     expect = Counter((r.lang, r.lang_guessed) for r in per_doc)
@@ -111,7 +106,7 @@ def test_pca_spectrum_invariants(spark, sf_dir):
     """Eigen-spectrum checks: PSD (all eigenvalues >= -tol),
     descending order, var shares sum to 1, and trace preservation
     against an independently computed sum of squared components."""
-    rows = wave5.emb_pca_variance(spark, sf_dir).collect()
+    rows = Q["emb_pca_variance"](spark, sf_dir).collect()
     assert len(rows) == 64
     evs = [r.eigenvalue for r in rows]
     assert all(e >= -1e-9 for e in evs)
@@ -141,7 +136,7 @@ def test_mm_shard_plan_budget_and_contiguity(spark, sf_dir):
     item's overshoot (greedy cumulative packing), id ranges are
     contiguous and non-overlapping, and totals reconcile with the
     corpus."""
-    rows = wave5.mm_shard_plan(spark, sf_dir).collect()
+    rows = Q["mm_shard_plan"](spark, sf_dir).collect()
     assert rows
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     corpus_bytes = d.select(
@@ -153,7 +148,7 @@ def test_mm_shard_plan_budget_and_contiguity(spark, sf_dir):
         F.max(F.octet_length(F.encode("text", "utf-8"))).alias("m")
     ).collect()[0].m
     for r in rows:
-        assert r.total_bytes < wave5._SHARD_BYTES + max_item
+        assert r.total_bytes < multimodal._SHARD_BYTES + max_item
     ordered = sorted(rows, key=lambda r: r.shard_id)
     for a, b in zip(ordered, ordered[1:]):
         assert a.last_id < b.first_id  # contiguous, non-overlapping
@@ -164,7 +159,7 @@ def test_entity_resolution_self_match_dominates(spark, sf_dir):
     closest to itself in the vast majority of cases (TPC-H names
     differ in several digit positions); every row must get exactly one
     best match and a consistent edit distance."""
-    rows = wave5.cust_entity_resolution(spark, sf_dir).collect()
+    rows = Q["cust_entity_resolution"](spark, sf_dir).collect()
     n_cust = spark.read.parquet(f"{sf_dir}/customer.parquet").count()
     assert len(rows) == n_cust  # one best match per dirty record
     assert all(r.edit_dist >= 0 for r in rows)
@@ -176,7 +171,7 @@ def test_exact_stratified_split_counts(spark, sf_dir):
     """Count exactness: precisely floor(n*0.8)/floor(n*0.1)/remainder
     docs per source — the property the hash split only gives in
     expectation."""
-    rows = wave5.doc_exact_stratified_split(spark, sf_dir).collect()
+    rows = Q["doc_exact_stratified_split"](spark, sf_dir).collect()
     per_src = {}
     for r in rows:
         per_src.setdefault(r.source, {})[r.split] = r.n_docs

@@ -7,6 +7,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from __spark_entry__ import queries
+
+Q = queries()
+
 
 def test_weighted_sample_partitioning_invariant(spark, sf_dir):
     """The sampled ID SET must be identical under any partitioning —
@@ -180,13 +184,9 @@ def test_prefix_filter_equals_naive_jaccard(spark, sf_dir):
         jaccard_pairs,
         shingle_table,
     )
-    from planning_center_data_pipeline_spark.plans.wave6 import (
-        doc_jaccard_prefix_filter,
-    )
-
     got = {
         (r.id_1, r.id_2, r.n_common, r.n_1, r.n_2)
-        for r in doc_jaccard_prefix_filter(spark, sf_dir).collect()
+        for r in Q["doc_jaccard_prefix_filter"](spark, sf_dir).collect()
     }
     sh = shingle_table(
         spark.read.parquet(f"{sf_dir}/documents.parquet"), "doc_id", "text", k=3
@@ -260,12 +260,9 @@ def test_scd2_pit_join_covers_every_fact_row(spark, sf_dir):
     timeline from their first order onward, so every lineitem whose
     ship date is on/after the customer's first interval start matches
     EXACTLY one interval — no gaps, no double-attribution."""
-    from planning_center_data_pipeline_spark.plans.wave6 import (
-        li_scd2_pit_revenue,
-    )
     from pyspark.sql import functions as F
 
-    out = li_scd2_pit_revenue(spark, sf_dir)
+    out = Q["li_scd2_pit_revenue"](spark, sf_dir)
     n_attributed = out.agg(F.sum("n_items")).first()[0]
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
@@ -292,10 +289,9 @@ def test_jaccard_auto_switch_routes_dense_corpus(spark, tmp_path):
     same data-driven rule in SQL, must agree row-for-row."""
     import duckdb
 
-    from planning_center_data_pipeline_spark.plans.wave6 import (
+    from planning_center_data_pipeline_spark.plans.documents_dedup import (
         JACCARD_DF_SWITCH,
         _jaccard_naive_oracle,
-        doc_jaccard_prefix_filter,
     )
 
     n_template = JACCARD_DF_SWITCH + 50
@@ -312,7 +308,7 @@ def test_jaccard_auto_switch_routes_dense_corpus(spark, tmp_path):
     sfdir = str(tmp_path)
     docs.coalesce(1).write.parquet(f"{sfdir}/documents.parquet")
 
-    out = doc_jaccard_prefix_filter(spark, sfdir).collect()
+    out = Q["doc_jaccard_prefix_filter"](spark, sfdir).collect()
     assert {r["path"] for r in out} == {"exact_rare_capped"}
     got = {(r.id_1, r.id_2): r.jaccard for r in out}
     assert got[(9001, 9002)] == 1.0
@@ -335,13 +331,9 @@ def test_jaccard_auto_switch_routes_dense_corpus(spark, tmp_path):
 def test_jaccard_auto_switch_full_path_on_sparse_corpus(spark, sf_dir):
     """On the real sf0.001 corpus (max df 9) the switch keeps the full
     exact path and the output says so."""
-    from planning_center_data_pipeline_spark.plans.wave6 import (
-        doc_jaccard_prefix_filter,
-    )
-
     paths = {
         r["path"]
-        for r in doc_jaccard_prefix_filter(spark, sf_dir)
+        for r in Q["doc_jaccard_prefix_filter"](spark, sf_dir)
         .select("path")
         .distinct()
         .collect()

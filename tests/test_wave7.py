@@ -21,7 +21,10 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from planning_center_data_pipeline_spark.plans import wave7
+from __spark_entry__ import queries
+from planning_center_data_pipeline_spark.plans import commerce, graph
+
+Q = queries()
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_SMALL = "/root/testdata/sf0.01"
@@ -30,29 +33,29 @@ SF_SMALL = "/root/testdata/sf0.01"
 def test_geo_radius_pairs_equals_brute_force(spark):
     got = {
         (r.key_a, r.key_b, r.dist2)
-        for r in wave7.geo_radius_pairs(spark, SF_SMALL).collect()
+        for r in Q["geo_radius_pairs"](spark, SF_SMALL).collect()
     }
-    pts = wave7._geo_points(spark, SF_SMALL).toPandas()
+    pts = commerce._geo_points(spark, SF_SMALL).toPandas()
     k = pts["k"].to_numpy()
     x = pts["x"].to_numpy()
     y = pts["y"].to_numpy()
     dx = x[:, None] - x[None, :]
     dy = y[:, None] - y[None, :]
     d2 = dx * dx + dy * dy
-    ia, ib = np.where((d2 <= wave7._GEO_R**2) & (k[:, None] < k[None, :]))
+    ia, ib = np.where((d2 <= commerce._GEO_R**2) & (k[:, None] < k[None, :]))
     want = {(int(k[a]), int(k[b]), int(d2[a, b])) for a, b in zip(ia, ib)}
     assert got == want and len(want) > 0
 
 
 def test_geo_point_coords_match_md5_contract(spark):
-    row = wave7._geo_points(spark, SF_SMOKE).filter(F.col("k") == 7).first()
-    h = int(hashlib.md5(b"x|7").hexdigest()[:15], 16) % wave7._GEO_SPAN
+    row = commerce._geo_points(spark, SF_SMOKE).filter(F.col("k") == 7).first()
+    h = int(hashlib.md5(b"x|7").hexdigest()[:15], 16) % commerce._GEO_SPAN
     assert row.x == h
 
 
 def test_graph_bfs_hops_levels(spark):
-    rows = {r.hop: r for r in wave7.graph_bfs_hops(spark, SF_SMOKE).collect()}
-    edges = wave7._customer_part_edges(spark, SF_SMOKE)
+    rows = {r.hop: r for r in Q["graph_bfs_hops"](spark, SF_SMOKE).collect()}
+    edges = graph._customer_part_edges(spark, SF_SMOKE)
     seeds = edges.filter(F.col("c") % 300 == 0).select("c").distinct().count()
     assert rows[0].n_customers == seeds and rows[0].n_parts == 0
     for hop, r in rows.items():
@@ -65,10 +68,10 @@ def test_graph_bfs_hops_levels(spark):
 
 
 def test_rec_contrastive_pairs_labels(spark):
-    out = wave7.rec_contrastive_pairs(spark, SF_SMALL).toPandas()
+    out = Q["rec_contrastive_pairs"](spark, SF_SMALL).toPandas()
     edges = {
         (r.c, r.p)
-        for r in wave7._customer_part_edges(spark, SF_SMALL).collect()
+        for r in graph._customer_part_edges(spark, SF_SMALL).collect()
     }
     pos = out[out.label == 1]
     neg = out[out.label == 0]
@@ -99,14 +102,14 @@ def test_doc_kfold_split_no_content_leakage(spark, sf_dir):
         docs.groupBy("h").agg(F.countDistinct("fold").alias("nf")).agg(F.max("nf")).first()[0]
         == 1
     )
-    stats = wave7.doc_kfold_split(spark, sf_dir).toPandas()
+    stats = Q["doc_kfold_split"](spark, sf_dir).toPandas()
     n_total = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
     assert stats.n_docs.sum() == n_total
     assert set(stats.fold.unique()) <= {0, 1, 2, 3, 4}
 
 
 def test_emb_hard_negatives_semantics(spark):
-    out = wave7.emb_hard_negatives(spark, SF_SMOKE).toPandas()
+    out = Q["emb_hard_negatives"](spark, SF_SMOKE).toPandas()
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").toPandas()
     labels = dict(zip(emb.vec_id, emb.label))
     # every mined negative has a different label from its query
@@ -134,7 +137,7 @@ def test_emb_hard_negatives_semantics(spark):
 
 
 def test_gdpr_purge_audit_cascade(spark, sf_dir):
-    out = {r.tbl: r for r in wave7.gdpr_purge_audit(spark, sf_dir).collect()}
+    out = {r.tbl: r for r in Q["gdpr_purge_audit"](spark, sf_dir).collect()}
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     # purged+kept == table size, every table present
@@ -155,7 +158,7 @@ def test_ev_cusum_closed_form_equals_recursion(spark):
     """The windowed closed form must equal the textbook recursion
     S_t = max(0, S_{t-1} + dev_t) replayed in pandas."""
     ev = spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-    out = wave7.ev_cusum_shift(spark, SF_SMOKE).toPandas()
+    out = Q["ev_cusum_shift"](spark, SF_SMOKE).toPandas()
     from planning_center_data_pipeline_spark.sources.tables import load_table
 
     daily = (
@@ -178,7 +181,7 @@ def test_ev_cusum_closed_form_equals_recursion(spark):
 
 
 def test_ts_rolling_median_matches_pandas(spark):
-    out = wave7.ts_rolling_median(spark, SF_SMOKE).toPandas()
+    out = Q["ts_rolling_median"](spark, SF_SMOKE).toPandas()
     orders = spark.read.parquet(f"{SF_SMOKE}/orders.parquet").toPandas()
     orders["cts"] = (orders.o_totalprice * 100).round().astype("int64")
     orders["day"] = orders.o_orderdate.dt.date.astype(str)
@@ -195,7 +198,7 @@ def test_ts_rolling_median_matches_pandas(spark):
 
 
 def test_attr_linear_touch_conserves_value(spark, sf_dir):
-    out = wave7.attr_linear_touch(spark, sf_dir).toPandas()
+    out = Q["attr_linear_touch"](spark, sf_dir).toPandas()
     from planning_center_data_pipeline_spark.sources.tables import load_table
 
     conv_total = (
@@ -211,7 +214,7 @@ def test_attr_linear_touch_conserves_value(spark, sf_dir):
 
 
 def test_stat_bootstrap_ci_brackets_mean(spark, sf_dir):
-    row = wave7.stat_bootstrap_ci(spark, sf_dir).first()
+    row = Q["stat_bootstrap_ci"](spark, sf_dir).first()
     mean_cents = (
         spark.read.parquet(f"{sf_dir}/orders.parquet")
         .agg(
@@ -224,12 +227,12 @@ def test_stat_bootstrap_ci_brackets_mean(spark, sf_dir):
     # a 90% CI from 32 replicas should bracket the point estimate
     assert row.ci_lo <= mean_cents <= row.ci_hi
     # determinism: a second evaluation yields the identical interval
-    again = wave7.stat_bootstrap_ci(spark, sf_dir).first()
+    again = Q["stat_bootstrap_ci"](spark, sf_dir).first()
     assert (row.ci_lo, row.ci_hi) == (again.ci_lo, again.ci_hi)
 
 
 def test_emb_pq_codes_histogram_matches_numpy(spark):
-    out = wave7.emb_pq_codes(spark, SF_SMOKE).toPandas()
+    out = Q["emb_pq_codes"](spark, SF_SMOKE).toPandas()
     emb = (
         spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
         .toPandas()
@@ -256,7 +259,7 @@ def test_emb_pq_codes_histogram_matches_numpy(spark):
 
 
 def test_doc_common_substring_pairs_verified(spark):
-    out = wave7.doc_common_substring_pairs(spark, SF_SMALL).toPandas()
+    out = Q["doc_common_substring_pairs"](spark, SF_SMALL).toPandas()
     assert len(out) > 0
     docs = (
         spark.read.parquet(f"{SF_SMALL}/documents.parquet")
@@ -281,19 +284,19 @@ def test_doc_common_substring_pairs_verified(spark):
 
 
 def test_doc_training_order_is_permutation(spark, sf_dir):
-    out = wave7.doc_training_order(spark, sf_dir).toPandas()
+    out = Q["doc_training_order"](spark, sf_dir).toPandas()
     n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
     assert len(out) == n_docs and out.doc_id.nunique() == n_docs
     for shard, g in out.groupby("shard"):
         assert sorted(g.position) == list(range(1, len(g) + 1))
-    again = wave7.doc_training_order(spark, sf_dir).toPandas()
+    again = Q["doc_training_order"](spark, sf_dir).toPandas()
     assert out.equals(again)
 
 
 def test_ev_capped_sessions_matches_pandas(spark):
     from planning_center_data_pipeline_spark.sources.tables import load_table
 
-    out = wave7.ev_capped_sessions(spark, SF_SMOKE).toPandas().set_index("user_id")
+    out = Q["ev_capped_sessions"](spark, SF_SMOKE).toPandas().set_index("user_id")
     ev = (
         load_table(spark, SF_SMOKE, "events")
         .select("user_id", F.unix_micros(F.col("ts").cast("timestamp")).alias("us"))
@@ -329,7 +332,7 @@ def test_ev_capped_sessions_matches_pandas(spark):
 def test_ev_type_affinity_matches_pandas(spark, sf_dir):
     from planning_center_data_pipeline_spark.sources.tables import load_table
 
-    out = wave7.ev_type_affinity(spark, sf_dir).toPandas()
+    out = Q["ev_type_affinity"](spark, sf_dir).toPandas()
     ut = (
         load_table(spark, sf_dir, "events")
         .select("user_id", "event_type")
@@ -350,8 +353,8 @@ def test_ev_type_affinity_matches_pandas(spark, sf_dir):
 
 
 def test_rec_training_set_e2e_composes(spark):
-    e2e = wave7.rec_training_set_e2e(spark, SF_SMALL).toPandas()
-    pairs = wave7.rec_contrastive_pairs(spark, SF_SMALL).toPandas()
+    e2e = Q["rec_training_set_e2e"](spark, SF_SMALL).toPandas()
+    pairs = Q["rec_contrastive_pairs"](spark, SF_SMALL).toPandas()
     # the labeled pair set is exactly the pair-mining operator's output
     assert set(
         zip(e2e.cust_key, e2e.part_key, e2e.label)
@@ -366,7 +369,7 @@ def test_rec_training_set_e2e_composes(spark):
 
 
 def test_ts_ols_trend_matches_numpy(spark):
-    out = wave7.ts_ols_trend(spark, SF_SMOKE).toPandas()
+    out = Q["ts_ols_trend"](spark, SF_SMOKE).toPandas()
     orders = spark.read.parquet(f"{SF_SMOKE}/orders.parquet").toPandas()
     cust = spark.read.parquet(f"{SF_SMOKE}/customer.parquet").toPandas()
     df = orders.merge(
@@ -393,7 +396,7 @@ def test_ts_ols_trend_matches_numpy(spark):
 
 
 def test_data_diff_report_counts(spark, sf_dir):
-    out = {r.change: r for r in wave7.data_diff_report(spark, sf_dir).collect()}
+    out = {r.change: r for r in Q["data_diff_report"](spark, sf_dir).collect()}
     o = spark.read.parquet(f"{sf_dir}/orders.parquet")
     removed = o.filter(F.col("o_orderkey") % 101 == 0).count()
     changed = o.filter(
@@ -415,7 +418,7 @@ def test_data_diff_report_counts(spark, sf_dir):
 
 
 def test_ts_ewma_spend_matches_pandas(spark):
-    got = wave7.ts_ewma_spend(spark, SF_SMOKE).toPandas()
+    got = Q["ts_ewma_spend"](spark, SF_SMOKE).toPandas()
     orders = spark.read.parquet(f"{SF_SMOKE}/orders.parquet").toPandas()
     orders["cts"] = (orders.o_totalprice * 100).round().astype("int64")
     want = {}

@@ -18,7 +18,7 @@ import math
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from planning_center_data_pipeline_spark.plans.wave7 import _POIS_CUTS
+from planning_center_data_pipeline_spark.plans.statistics import _POIS_CUTS
 
 
 @settings(max_examples=500, deadline=None)

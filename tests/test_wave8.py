@@ -19,9 +19,16 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from __spark_entry__ import queries
 from planning_center_data_pipeline_spark.operators import textstats as X
-from planning_center_data_pipeline_spark.plans import wave8
+from planning_center_data_pipeline_spark.plans import (
+    embeddings,
+    graph,
+    sql_surface,
+)
 from planning_center_data_pipeline_spark.sources.tables import load_table
+
+Q = queries()
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_SMALL = "/root/testdata/sf0.01"
@@ -37,7 +44,7 @@ def _exact_heavy_hitters(spark, sf_dir):
         (r.tok, r.cnt)
         for r in toks.groupBy("tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .filter(F.col("cnt") * (wave8._MG_K + 1) > total)
+        .filter(F.col("cnt") * (sql_surface._MG_K + 1) > total)
         .collect()
     }
 
@@ -45,7 +52,7 @@ def _exact_heavy_hitters(spark, sf_dir):
 def test_heavy_hitters_equal_brute_force(spark):
     got = {
         (r.tok, r.cnt)
-        for r in wave8.freq_heavy_hitters(spark, SF_SMALL).collect()
+        for r in Q["freq_heavy_hitters"](spark, SF_SMALL).collect()
     }
     assert got == _exact_heavy_hitters(spark, SF_SMALL) and got
 
@@ -53,30 +60,30 @@ def test_heavy_hitters_equal_brute_force(spark):
 def test_heavy_hitters_survive_tiny_sketch(spark, monkeypatch):
     """K=7 makes the per-partition sketch aggressively lossy; the
     two-pass output must STILL be the exact > N/8 set (pigeonhole)."""
-    monkeypatch.setattr(wave8, "_MG_K", 7)
+    monkeypatch.setattr(sql_surface, "_MG_K", 7)
     got = {
         (r.tok, r.cnt)
-        for r in wave8.freq_heavy_hitters(spark, SF_SMOKE).collect()
+        for r in Q["freq_heavy_hitters"](spark, SF_SMOKE).collect()
     }
     assert got == _exact_heavy_hitters(spark, SF_SMOKE)
 
 
 def test_negative_sampling_conserves_draws(spark):
-    rows = wave8.rec_negative_sampling(spark, SF_SMOKE).collect()
-    assert sum(r.n_draws for r in rows) == wave8._NEG_DRAWS
+    rows = Q["rec_negative_sampling"](spark, SF_SMOKE).collect()
+    assert sum(r.n_draws for r in rows) == graph._NEG_DRAWS
     assert all(r.wt > 0 and r.n_draws > 0 for r in rows)
     assert len({r.item for r in rows}) == len(rows)
 
 
 def test_ivfpq_topk_shape_and_order(spark):
-    rows = wave8.emb_ivfpq_adc(spark, SF_SMALL).collect()
+    rows = Q["emb_ivfpq_adc"](spark, SF_SMALL).collect()
     per_q = {}
     for r in rows:
         per_q.setdefault(r.qid, []).append(r)
-    assert set(per_q) == set(range(wave8._IVFPQ_QUERIES))
+    assert set(per_q) == set(range(embeddings._IVFPQ_QUERIES))
     for q, rs in per_q.items():
         rs.sort(key=lambda r: r.rk)
-        assert [r.rk for r in rs] == list(range(1, wave8._IVFPQ_TOPK + 1))
+        assert [r.rk for r in rs] == list(range(1, embeddings._IVFPQ_TOPK + 1))
         d = [r.adc_d2 for r in rs]
         assert d == sorted(d)
 
@@ -90,7 +97,7 @@ def test_ivfpq_candidates_only_from_probed_cells(spark):
     from planning_center_data_pipeline_spark.operators import similarity as S
 
     qv = e.select("vec_id", S.quantized(F.col("embedding")).alias("v"))
-    coarse = qv.filter(F.col("vec_id") < wave8._IVF_CELLS).select(
+    coarse = qv.filter(F.col("vec_id") < embeddings._IVF_CELLS).select(
         F.col("vec_id").alias("cell"), F.col("v").alias("cv")
     )
     d2 = F.aggregate(
@@ -107,17 +114,17 @@ def test_ivfpq_candidates_only_from_probed_cells(spark):
     probes = {}
     for r in (
         ranked.filter(
-            (F.col("vec_id") < wave8._IVFPQ_QUERIES)
-            & (F.col("rn") <= wave8._IVF_NPROBE)
+            (F.col("vec_id") < embeddings._IVFPQ_QUERIES)
+            & (F.col("rn") <= embeddings._IVF_NPROBE)
         ).collect()
     ):
         probes.setdefault(r.vec_id, set()).add(r.cell)
-    for r in wave8.emb_ivfpq_adc(spark, SF_SMALL).collect():
+    for r in Q["emb_ivfpq_adc"](spark, SF_SMALL).collect():
         assert assign[r.vec_id] in probes[r.qid]
 
 
 def test_hazard_curve_monotone(spark):
-    rows = wave8.surv_hazard_curve(spark, SF_SMALL).collect()
+    rows = Q["surv_hazard_curve"](spark, SF_SMALL).collect()
     by_nation = {}
     for r in rows:
         by_nation.setdefault(r.nation, []).append(r)
@@ -132,13 +139,13 @@ def test_hazard_curve_monotone(spark):
 
 
 def test_seasonal_decompose_reconstructs(spark):
-    for r in wave8.ts_seasonal_decompose(spark, SF_SMOKE).collect():
+    for r in Q["ts_seasonal_decompose"](spark, SF_SMOKE).collect():
         assert abs((r.seasonal + r.residual) - r.revenue) < 1e-6
 
 
 def test_collation_groups_merge_case(spark):
     p = load_table(spark, SF_SMOKE, "part")
-    rows = wave8.fn_collation_group(spark, SF_SMOKE).collect()
+    rows = Q["fn_collation_group"](spark, SF_SMOKE).collect()
     assert sum(r.n for r in rows) == p.count()
     keys = [r.ptype_ci for r in rows]
     assert keys == sorted(keys) and all(k == k.lower() for k in keys)

@@ -16,8 +16,15 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from planning_center_data_pipeline_spark.plans import wave9
+from __spark_entry__ import queries
+from planning_center_data_pipeline_spark.plans import (
+    embeddings,
+    events,
+    governance,
+)
 from planning_center_data_pipeline_spark.sources.tables import load_table
+
+Q = queries()
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_SMALL = "/root/testdata/sf0.01"
@@ -26,7 +33,7 @@ SF_SMALL = "/root/testdata/sf0.01"
 def test_basket_triples_equal_unpruned_brute_force(spark):
     got = {
         (r.t1, r.t2, r.t3, r.support)
-        for r in wave9.ev_basket_triples(spark, SF_SMALL).collect()
+        for r in Q["ev_basket_triples"](spark, SF_SMALL).collect()
     }
     ev = load_table(spark, SF_SMALL, "events")
     b = ev.select(
@@ -44,19 +51,19 @@ def test_basket_triples_equal_unpruned_brute_force(spark):
             F.col("y.t").alias("t3"),
         )
         .agg(F.count(F.lit(1)).alias("support"))
-        .filter(F.col("support") * wave9._SUP_DIV >= n_b)
+        .filter(F.col("support") * events._SUP_DIV >= n_b)
     )
     want = {(r.t1, r.t2, r.t3, r.support) for r in brute.collect()}
     assert got == want and got
 
 
 def test_k_anonymity_partitions_population(spark):
-    rows = wave9.priv_k_anonymity(spark, SF_SMALL).collect()
+    rows = Q["priv_k_anonymity"](spark, SF_SMALL).collect()
     total = load_table(spark, SF_SMALL, "customer").count()
     assert sum(r.n_people for r in rows) == total
     for r in rows:
         assert r.n_people == r.class_size * r.n_classes
-        assert r.at_risk == (1 if r.class_size < wave9._KANON_K else 0)
+        assert r.at_risk == (1 if r.class_size < governance._KANON_K else 0)
 
 
 def test_trimmed_mean_inside_envelope(spark):
@@ -71,27 +78,27 @@ def test_trimmed_mean_inside_envelope(spark):
         )
         .collect()
     }
-    for r in wave9.stat_trimmed_mean(spark, SF_SMALL).collect():
+    for r in Q["stat_trimmed_mean"](spark, SF_SMALL).collect():
         s = stats[r.rf]
         assert s.mn <= r.trimmed_mean <= s.mx
         assert 0.88 * s.n <= r.n_kept <= 0.92 * s.n
 
 
 def test_trunc_recall_full_dims_is_fixed_point(spark, monkeypatch):
-    monkeypatch.setattr(wave9, "_TRUNC_DIMS", wave9._FULL_DIMS)
-    rows = wave9.emb_dim_trunc_recall(spark, SF_SMOKE).collect()
+    monkeypatch.setattr(embeddings, "_TRUNC_DIMS", embeddings._FULL_DIMS)
+    rows = Q["emb_dim_trunc_recall"](spark, SF_SMOKE).collect()
     assert rows and all(
-        r.n_overlap == wave9._TRUNC_K and r.recall_at5 == 1.0 for r in rows
+        r.n_overlap == embeddings._TRUNC_K and r.recall_at5 == 1.0 for r in rows
     )
 
 
 def test_trunc_recall_bounds(spark):
-    rows = wave9.emb_dim_trunc_recall(spark, SF_SMALL).collect()
-    assert rows and all(0 <= r.n_overlap <= wave9._TRUNC_K for r in rows)
+    rows = Q["emb_dim_trunc_recall"](spark, SF_SMALL).collect()
+    assert rows and all(0 <= r.n_overlap <= embeddings._TRUNC_K for r in rows)
 
 
 def test_share_of_parent_telescopes(spark):
-    rows = wave9.win_share_of_parent(spark, SF_SMALL).collect()
+    rows = Q["win_share_of_parent"](spark, SF_SMALL).collect()
     assert abs(sum(r.share_of_global_pct for r in rows) - 100.0) < 1e-4
     by_region = {}
     for r in rows:
@@ -102,7 +109,7 @@ def test_share_of_parent_telescopes(spark):
 
 
 def test_ship_sla_percentiles_ordered(spark):
-    rows = wave9.li_ship_sla_percentiles(spark, SF_SMALL).collect()
+    rows = Q["li_ship_sla_percentiles"](spark, SF_SMALL).collect()
     assert rows
     for r in rows:
         assert r.p50_days <= r.p90_days <= r.p99_days
