@@ -70,6 +70,7 @@ def test_minhash_lsh_pairs_exact_jaccard_sf01(spark, sf01):
     from planning_center_data_pipeline_spark.operators.dedup import (
         shingle_table,
     )
+
     got = Q["doc_minhash_lsh"](spark, sf01)
     d = spark.read.parquet(f"{sf01}/documents.parquet")
     # independent recomputation: shingle SETS as arrays, jaccard via

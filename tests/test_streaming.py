@@ -81,6 +81,7 @@ def test_session_stream_matches_batch_session_window(
     the late-data semantics the watermark defines.  (The multi-batch
     incremental path is covered by the other streaming tests.)"""
     from planning_center_data_pipeline_spark.functions.temporal import epoch_us
+
     one_file = str(tmp_path / "events_onefile")
     load_table(spark, sf_dir, "events").coalesce(1).write.mode(
         "overwrite"

@@ -216,6 +216,7 @@ def test_avro_roundtrip_agg_equals_plain_aggregate(spark, sf_dir):
     """The serde-in-plan query must equal the same aggregate computed
     WITHOUT the encode/decode pair — identity, verified in-engine."""
     from planning_center_data_pipeline_spark.functions.temporal import epoch_us
+
     got = sorted(map(tuple, Q["ev_avro_roundtrip_agg"](spark, sf_dir).collect()))
     plain = (
         load_table(spark, sf_dir, "events")

@@ -184,6 +184,7 @@ def test_prefix_filter_equals_naive_jaccard(spark, sf_dir):
         jaccard_pairs,
         shingle_table,
     )
+
     got = {
         (r.id_1, r.id_2, r.n_common, r.n_1, r.n_2)
         for r in Q["doc_jaccard_prefix_filter"](spark, sf_dir).collect()
