@@ -298,17 +298,22 @@ def minhash_near_dups(
 
 # --- engine-portable (md5-based) sketch variants -----------------------------
 # xxhash64 is Spark-only; md5 exists in every engine (DuckDB mirror:
-# CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)), so sketches built on
-# it are cross-checkable value-for-value against a SQL oracle.  The md5
-# family is ~2x slower than xxhash64 (still JVM codegen) — production
-# paths keep xxhash64; these variants exist for verifiability and for
-# interop with engines that persist md5-based signatures.
+# MD5_HASH60_DUCK), so sketches built on it are cross-checkable
+# value-for-value against a SQL oracle.  The md5 family is ~2x slower
+# than xxhash64 (still JVM codegen) — production paths keep xxhash64;
+# these variants exist for verifiability and for interop with engines
+# that persist md5-based signatures.
 
 def md5_hash60(col: Column, seed: int | None = None) -> Column:
     """Deterministic 60-bit non-negative int64 hash, portable across
     engines: first 15 hex chars of md5, base-16 decoded."""
     s = col if seed is None else F.concat(F.lit(f"{seed}|"), col)
     return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint")
+
+
+# md5_hash60 as DuckDB SQL text over the expression `{x}` (for a seed,
+# x is `'<seed>|' || <expr>`)
+MD5_HASH60_DUCK = "CAST('0x' || substr(md5({x}), 1, 15) AS BIGINT)"
 
 
 def _md5_hash60_family(col_sql: str, n_hashes: int) -> list[Column]:

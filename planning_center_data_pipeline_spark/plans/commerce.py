@@ -1450,6 +1450,7 @@ SELECT probe_key, cand_key AS best_match, jw_micro FROM (
 """
 
 
+# global window: partition-id offsets, <= 32 rows (two-phase revenue cumsum)
 def li_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ABC x XYZ part classification:
 
@@ -3841,6 +3842,7 @@ def _skyline_scan(df: DataFrame, part_cols: list[str]) -> DataFrame:
     ).drop("prev_best")
 
 
+# global window: only bucket-skyline survivors, expected O(B*log n) rows
 def pareto_orders_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = (
         load_table(spark, sf_dir, "orders")
@@ -4033,8 +4035,8 @@ FROM ranked GROUP BY nation ORDER BY nation
 # revenue exposure: the purchasing-risk screen.  Negative-balance
 # suppliers are a small filtered set, but |suppliers| grows with the
 # data, so the join carries NO broadcast hint — AQE broadcasts while
-# it fits and falls back to shuffle beyond that (plan_audit's
-# forced-fact rule applied to an entity dim).
+# it fits and falls back to shuffle beyond that (the forced-fact rule
+# of planshape's `fact_broadcasts`, applied to an entity dim).
 
 def sup_credit_risk_exposure(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = load_table(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0)

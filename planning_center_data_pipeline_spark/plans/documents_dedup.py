@@ -93,8 +93,6 @@ _CDC_W = 4  # rolling-hash n-gram width (tokens)
 
 _CDC_MOD = 16  # boundary when h % 16 == 0 -> ~16-token chunks
 
-_H60_SPARK = "CAST(CONV(SUBSTRING(MD5({x}), 1, 15), 16, 10) AS BIGINT)"
-
 
 # --- content-defined chunking -------------------------------------------------
 
@@ -134,7 +132,7 @@ def doc_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # boundary AFTER position pos when the 4-gram ending here hashes
     # to 0 mod 16 (positions < W-1 have a short gram: no boundary)
-    h = F.expr(_H60_SPARK.format(x="gram"))
+    h = D.md5_hash60(F.col("gram"))
     flagged = grams.select(
         "doc_id",
         "source",
@@ -185,8 +183,6 @@ def doc_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_H60_DUCK = "CAST('0x' || substr(md5({x}), 1, 15) AS BIGINT)"
-
 DOC_CDC_SQL = rf"""
 WITH toks AS MATERIALIZED (
   -- generate_series with a lateral bound must sit in a SELECT list
@@ -205,7 +201,7 @@ WITH toks AS MATERIALIZED (
 ), grams AS (
   SELECT t.doc_id, t.source, t.pos, t.tok, t.dl,
          CASE WHEN t.pos >= {_CDC_W - 1} AND t.pos < t.dl - 1 THEN
-           CASE WHEN ({_H60_DUCK.format(x="g.gram")}) % {_CDC_MOD} = 0
+           CASE WHEN ({D.MD5_HASH60_DUCK.format(x="g.gram")}) % {_CDC_MOD} = 0
                 THEN 1 ELSE 0 END
          ELSE 0 END AS bdry
   FROM toks t LEFT JOIN (
@@ -740,11 +736,8 @@ def doc_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # verified pairs) reproducible in SQL, so the driver's hash-match gate
 # covers the sketch pipeline itself, not just a rows-only count.
 
-_H60 = "CAST('0x' || substr(md5({x}), 1, 15) AS BIGINT)"
-
-
 def _simhash_portable_sql(n_bits: int = 60) -> str:
-    h = _H60.format(x="tok")
+    h = D.MD5_HASH60_DUCK.format(x="tok")
     bit_sums = ",\n         ".join(
         f"SUM(CASE WHEN (h >> {i}) & 1 = 1 THEN 1 ELSE -1 END) AS b{i}"
         for i in range(n_bits)

@@ -2514,6 +2514,7 @@ FROM top CROSS JOIN total ORDER BY rank
 
 # --- Zipf-law fit ------------------------------------------------------------
 
+# global window: the rank over the top-100 tokens (post-LIMIT)
 def doc_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Least-squares slope of ln(freq) vs ln(rank) over the top-100
     corpus tokens — the Zipf diagnostic (natural language ~ -1;

@@ -189,6 +189,7 @@ FROM sij CROSS JOIN aa CROSS JOIN bb
 """
 
 
+# broadcast: the vec_id < 5 query side; the corpus side streams
 def emb_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF (inverted-file) approximate top-k — the coarse-quantizer
     scale path. Deterministic end-to-end (lowest-id centroids, explicit
@@ -269,6 +270,7 @@ ORDER BY query_id, rank
 """
 
 
+# broadcast: the vec_id < 5 query side; the corpus side streams
 def emb_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-k via sign-random-projection buckets (the 100 TB
     path). The sha256-derived hyperplane signs are embedded in both the
@@ -2913,6 +2915,7 @@ ORDER BY a.label
 """
 
 
+# broadcast: the vec_id < 5 query side; the corpus side streams
 def emb_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     return S.brute_force_topk(e, e.filter(F.col("vec_id") < 5), k=10).select(

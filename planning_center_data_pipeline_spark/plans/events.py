@@ -722,6 +722,7 @@ ORDER BY t1, t2, t3
 # --- bigram lift -----------------------------------------------------------------
 
 
+# global window: the event-type pair grid, |types|^2 rows (types is an enum)
 def ev_bigram_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lift of consecutive event-type bigrams against independence of
     the (first, second) marginals: lift(a, b) = P(a, b) / (P(a as
@@ -2481,6 +2482,7 @@ FROM credited GROUP BY 1, 2 ORDER BY ttype, iso_dow
 
 # --- exact p90 activity cut --------------------------------------------------
 
+# global window: value-bucket totals, <= 32 rows (two-phase)
 def ev_power_users_p90(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Users above the exact 90th-percentile event count, and their
     share of all events.  The threshold is the count at rank

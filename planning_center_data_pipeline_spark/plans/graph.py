@@ -10,13 +10,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from planning_center_data_pipeline_spark.operators.dedup import md5_hash60
+from planning_center_data_pipeline_spark.operators.dedup import (
+    MD5_HASH60_DUCK,
+    md5_hash60,
+)
 from planning_center_data_pipeline_spark.operators.joins import gated_broadcast
 from planning_center_data_pipeline_spark.operators.unrolled import unrolled_sql
-from planning_center_data_pipeline_spark.plans.documents_dedup import (
-    _H60_DUCK,
-    _H60_SPARK,
-)
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
@@ -961,9 +960,7 @@ def _nmh_candidates(edges: DataFrame, vocab: DataFrame | None = None) -> DataFra
     vh = vocab.select(
         "v",
         *[
-            F.expr(
-                _H60_SPARK.format(x=f"CONCAT('{j}', '|', CAST(v AS STRING))")
-            ).alias(f"hv{j}")
+            md5_hash60(F.col("v").cast("string"), seed=j).alias(f"hv{j}")
             for j in range(_NMH_HASHES)
         ],
     )
@@ -1125,7 +1122,7 @@ half AS (
   SELECT u, CAST(COUNT(*) AS BIGINT) AS deg FROM edges GROUP BY u
 ), hashed AS (
   SELECT u, j,
-         {_H60_DUCK.format(x="CAST(j AS VARCHAR) || '|' || CAST(v AS VARCHAR)")}
+         {MD5_HASH60_DUCK.format(x="CAST(j AS VARCHAR) || '|' || CAST(v AS VARCHAR)")}
            AS hv
   FROM edges CROSS JOIN (SELECT unnest(generate_series(0, {_NMH_HASHES - 1}))
                          AS j) js

@@ -415,6 +415,7 @@ def _morton16(bx: str, by: str) -> str:
     return " + ".join(terms)
 
 
+# global window: prefix sum over the zcode rollup, <= 65536 rows (16-bit codes)
 def zorder_file_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = (
         load_table(spark, sf_dir, "orders")

@@ -447,6 +447,7 @@ FROM t ORDER BY media_id
 _SHARD_BYTES = 64_000
 
 
+# global window: partition-id offsets, <= 32 rows
 def mm_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 

@@ -174,6 +174,7 @@ ORDER BY n_name
 # Positional slice rows 3..500 of the first 5 columns under an explicit
 # total order — the sheet copyPaste (google_sheets.py:76-87).
 
+# global window: reference lists are ~500 rows by their data contract
 def ref_range_copy(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     return range_copy(

@@ -722,6 +722,7 @@ _BH_ALPHA_INV = 20  # alpha = 1/20
 
 # --- Benjamini-Hochberg over permutation tests --------------------------------
 
+# global window: the BH rank over the 25-nation p-value grid
 def stat_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BH step-up FDR control over 25 per-nation hypotheses: does the
     BUILDING segment's mean balance differ from the other segments'?
@@ -917,6 +918,7 @@ _POIS_CUTS = (
 _B = 32  # bootstrap replicas
 
 
+# global window: the bootstrap replicate index, B a literal constant
 def stat_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Poisson bootstrap 90% CI for mean order value — the
     single-pass, streamable bootstrap (each row draws an independent
@@ -2593,6 +2595,7 @@ FROM grp, tot
 # --- Page's L trend test ---------------------------------------------------------------
 
 
+# global window: year-ordinal RANK over the distinct years (<= ~7 rows)
 def stat_page_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Page's L ordered-alternative test: does yearly revenue trend
     monotonically across the order years, consistently over the 25

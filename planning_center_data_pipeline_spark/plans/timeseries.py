@@ -1846,6 +1846,7 @@ FROM joined GROUP BY yr ORDER BY yr
 _SES_WINDOW = 16  # truncation horizon: weight 2^-16 ~ 1.5e-5 of mass
 
 
+# global windows run over the dense order-day spine, one row per calendar day
 def ts_ses_forecast_int(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-step-ahead simple exponential smoothing of daily order
     revenue with alpha = 1/2, truncated at 16 days:
@@ -2126,6 +2127,7 @@ ORDER BY n_name
 _WMA_FAST, _WMA_SLOW = 7, 28
 
 
+# global windows: lag terms over the day spine
 def ts_wma_crossover(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangular-weight moving-average crossover signal on daily
     revenue: WMA_k(d) = sum_{i=0..k-1} (k-i) * x_{d-i} / (k(k+1)/2).

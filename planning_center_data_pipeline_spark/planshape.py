@@ -1,12 +1,15 @@
-"""One reader for a query's physical plan shape.
+"""One reader for a query's plan shape.
 
 `plan_record(df)` walks `df`'s executed physical plan once, through
 every node's children and subqueries, into the plan an adaptive (AQE)
 root wraps and into the cached plan of an `InMemoryTableScan`, and
-counts the operators that decide what a plan costs at scale.
+counts the operators that decide what a plan costs at scale.  It walks
+the analyzed plan once more for the broadcast hints, which the
+optimizer folds into join nodes before the physical plan exists.
 `PLANS.json` (written by `tools/plan_manifest.py`) holds one record per
 query; `tests/test_shuffle_budgets.py` checks the fresh records against
-it and `tools/plan_audit.py` reads the same walk.
+it, so a query keeps a global window, a broadcast fact table or a
+final-only aggregate only while its entry records one.
 """
 
 from __future__ import annotations
@@ -18,6 +21,14 @@ from pyspark.sql import DataFrame
 # join nodes that carry a buildSide (SortMergeJoin and
 # CartesianProduct have none)
 _BUILD_SIDED = ("BroadcastHashJoin", "ShuffledHashJoin", "BroadcastNestedLoopJoin")
+# Entity tables whose cardinality grows with the data: a broadcast hint
+# over one of these with no aggregate or limit shrinking it first
+# overrides the size threshold and fails at scale.  Dimension tables
+# (region/nation/part/customer/supplier at TPC-H ratios) stay
+# broadcastable.  A relation's string shows only its columns, so a fact
+# is recognized by its signature key column.
+_FACT_MARKERS = ("l_orderkey#", "o_orderkey#", "event_id#", "doc_id#", "vec_id#")
+_SHRINKING_NODES = ("Aggregate", "GlobalLimit", "LocalLimit", "Deduplicate")
 
 
 def walk(node) -> Iterator:
@@ -37,14 +48,42 @@ def walk(node) -> Iterator:
             yield from walk(seq.apply(i))
 
 
+def _hints(node) -> tuple[int, int, bool]:
+    """(broadcast `ResolvedHint`s at or below the analyzed-plan `node`,
+    those of them over an unshrunk fact relation, whether a fact
+    relation is reachable from `node` through its children without
+    passing an aggregate or limit)."""
+    hints = facts = 0
+    unshrunk = False
+    for seq, is_child in ((node.children(), True), (node.subqueries(), False)):
+        for i in range(seq.size()):
+            h, f, u = _hints(seq.apply(i))
+            hints, facts, unshrunk = hints + h, facts + f, unshrunk or (u and is_child)
+    name = node.nodeName()
+    if name in _SHRINKING_NODES:
+        unshrunk = False
+    elif name in ("LogicalRelation", "Relation"):
+        unshrunk = any(m in node.toString() for m in _FACT_MARKERS)
+    elif name == "ResolvedHint" and node.hints().toString() == "(strategy=broadcast)":
+        hints, facts = hints + 1, facts + unshrunk
+    return hints, facts, unshrunk
+
+
 def plan_record(df: DataFrame) -> dict:
     """Counts of shuffles (`Exchange`), broadcasts (`BroadcastExchange`),
-    `Generate` nodes and checkpoints (RDD scans) in `df`'s executed
-    plan, plus its joins as a sorted list of `"<JoinNode>/<buildSide>"`
-    (just `"<JoinNode>"` when the join has no build side)."""
-    rec = {"shuffles": 0, "broadcasts": 0, "generates": 0, "checkpoints": 0}
+    `Generate` nodes, checkpoints (RDD scans) and global windows (a
+    `Window` with no partitionSpec runs on one partition) in `df`'s
+    executed plan; `no_partial_agg` 1 when the plan hash-aggregates and
+    no aggregate runs in `Partial` (map-side) mode; its joins as a
+    sorted list of `"<JoinNode>/<buildSide>"` (just `"<JoinNode>"` when
+    the join has no build side); and, from the analyzed plan, every
+    broadcast hint (`broadcast_hints`) and the hints over a fact table
+    that nothing shrinks first (`fact_broadcasts`)."""
+    qe = df._jdf.queryExecution()
+    rec = {"shuffles": 0, "broadcasts": 0, "generates": 0, "checkpoints": 0, "global_windows": 0}
     joins = []
-    for node in walk(df._jdf.queryExecution().executedPlan()):
+    aggs = partial = False
+    for node in walk(qe.executedPlan()):
         name = node.nodeName()
         if name == "Exchange":
             rec["shuffles"] += 1
@@ -52,11 +91,21 @@ def plan_record(df: DataFrame) -> dict:
             rec["broadcasts"] += 1
         elif name == "Generate":
             rec["generates"] += 1
+        elif name == "Window":
+            rec["global_windows"] += node.partitionSpec().isEmpty()
+        elif name in ("HashAggregate", "ObjectHashAggregate"):
+            aggs = True
+            exprs = node.aggregateExpressions()
+            partial = partial or any(
+                str(exprs.apply(i).mode()) == "Partial" for i in range(exprs.size())
+            )
         elif name in _BUILD_SIDED:
             joins.append(f"{name}/{node.buildSide()}")
         elif name.endswith("Join") or name == "CartesianProduct":
             joins.append(name)
         elif name.startswith("Scan") and node.getClass().getSimpleName() == "RDDScanExec":
             rec["checkpoints"] += 1
+    rec["no_partial_agg"] = int(aggs and not partial)
+    rec["broadcast_hints"], rec["fact_broadcasts"], _ = _hints(qe.analyzed())
     rec["joins"] = sorted(joins)
     return rec

@@ -385,43 +385,14 @@ def stateful_sessions_timeout(
     )
 
 
-def run_update_to_memory(stream_df: DataFrame, name: str) -> DataFrame:
-    """Update-mode variant for stateful operators; the memory table
-    accumulates one row per (key, micro-batch) — take the latest row
-    per key for final state."""
-    q = (
-        stream_df.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return stream_df.sparkSession.sql(f"SELECT * FROM {name}")
-
-
-def run_to_memory(stream_df: DataFrame, name: str) -> DataFrame:
+def run_to_memory(stream_df: DataFrame, name: str, mode: str) -> DataFrame:
     """Drive a streaming DataFrame to completion over a bounded file
-    source and return the materialized result (test harness)."""
+    source through a memory sink in output `mode` and return the
+    materialized result (test harness).  In "update" mode the table
+    holds one row per (key, micro-batch): take the latest row per key
+    for final state."""
     q = (
-        stream_df.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return stream_df.sparkSession.sql(f"SELECT * FROM {name}")
-
-
-def run_append_to_memory(stream_df: DataFrame, name: str) -> DataFrame:
-    """Append-mode variant for dedup/passthrough streams."""
-    q = (
-        stream_df.writeStream.outputMode("append")
+        stream_df.writeStream.outputMode(mode)
         .format("memory")
         .queryName(name)
         .start()

@@ -19,6 +19,7 @@ from planning_center_data_pipeline_spark.operators import similarity as S
 from planning_center_data_pipeline_spark.plans.documents_text import (
     _SHARD_TOKENS,
 )
+from planning_center_data_pipeline_spark.planshape import plan_record
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 Q = queries()
@@ -166,16 +167,10 @@ def test_recursive_tree_depth_is_digit_count(spark, sf_dir):
 
 
 def test_forced_fact_broadcast_detector(spark, sf_dir):
-    """The plan_audit detector must fire on a broadcast hint placed
-    directly on a fact table (the round-4 triangle-count bug class)
-    and stay silent when the broadcast side shrinks through an
-    aggregate first."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
-    from plan_audit import forced_fact_broadcasts
-
+    """`plan_record` must count a broadcast hint placed directly on a
+    fact table (the round-4 triangle-count bug class) and not one whose
+    side shrinks through an aggregate first; and count a global window
+    (`Window.orderBy` with no partitionSpec) but not a partitioned one."""
     e = spark.read.parquet(f"{sf_dir}/events.parquet")
     o = spark.read.parquet(f"{sf_dir}/orders.parquet")
 
@@ -183,7 +178,7 @@ def test_forced_fact_broadcast_detector(spark, sf_dir):
         F.broadcast(e.select(F.col("user_id").alias("o_custkey"))),
         "o_custkey",
     )
-    assert forced_fact_broadcasts(bad) == 1
+    assert plan_record(bad)["fact_broadcasts"] == 1
 
     good = o.join(
         F.broadcast(
@@ -193,7 +188,15 @@ def test_forced_fact_broadcast_detector(spark, sf_dir):
         ),
         "o_custkey",
     )
-    assert forced_fact_broadcasts(good) == 0
+    assert plan_record(good)["fact_broadcasts"] == 0
+
+    bad = o.withColumn("rn", F.row_number().over(Window.orderBy("o_orderkey")))
+    assert plan_record(bad)["global_windows"] == 1
+    good = o.withColumn(
+        "rn",
+        F.row_number().over(Window.partitionBy("o_custkey").orderBy("o_orderkey")),
+    )
+    assert plan_record(good)["global_windows"] == 0
 
 
 def test_sorted_layout_enables_file_skipping(spark, sf_dir, tmp_path):

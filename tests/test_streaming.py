@@ -12,7 +12,6 @@ from __spark_entry__ import queries
 from planning_center_data_pipeline_spark.sources.tables import load_table
 from planning_center_data_pipeline_spark.streaming.jobs import (
     dedup_events,
-    run_append_to_memory,
     run_to_memory,
     session_counts,
     tumbling_counts,
@@ -42,7 +41,7 @@ def _stream(spark, path):
 
 def test_tumbling_stream_matches_batch(spark, sf_dir, event_stream_dir):
     stream_out = run_to_memory(
-        tumbling_counts(_stream(spark, event_stream_dir)), "tumbling_t"
+        tumbling_counts(_stream(spark, event_stream_dir)), "tumbling_t", "complete"
     )
     got = {
         (r["window_start"], r["event_type"]): (r["n_events"], r["value_sum"])
@@ -59,7 +58,7 @@ def test_tumbling_stream_matches_batch(spark, sf_dir, event_stream_dir):
 
 def test_session_stream_produces_sessions(spark, event_stream_dir):
     out = run_to_memory(
-        session_counts(_stream(spark, event_stream_dir)), "sessions_t"
+        session_counts(_stream(spark, event_stream_dir)), "sessions_t", "complete"
     )
     rows = out.collect()
     assert len(rows) > 0
@@ -87,7 +86,7 @@ def test_session_stream_matches_batch_session_window(
         "overwrite"
     ).parquet(one_file)
     stream_out = run_to_memory(
-        session_counts(_stream(spark, one_file)), "sessions_eq_t"
+        session_counts(_stream(spark, one_file)), "sessions_eq_t", "complete"
     )
     got = {
         (r["user_id"], r["s_start_us"], r["s_end_us"]): r["n_events"]
@@ -116,20 +115,19 @@ def test_streaming_dedup(spark, sf_dir, event_stream_dir, tmp_path):
     # after the watermark has advanced past them are dropped as late,
     # which is correct streaming semantics but not what this test
     # exercises (duplicate collapse).
-    out = run_append_to_memory(
-        dedup_events(_stream(spark, dup_dir), watermark="365 days"), "dedup_t"
+    out = run_to_memory(
+        dedup_events(_stream(spark, dup_dir), watermark="365 days"), "dedup_t", "append"
     )
     assert out.count() == base.count()
 
 
 def test_stateful_user_totals_matches_batch(spark, sf_dir, event_stream_dir):
     from planning_center_data_pipeline_spark.streaming.jobs import (
-        run_update_to_memory,
         stateful_user_totals,
     )
 
-    out = run_update_to_memory(
-        stateful_user_totals(_stream(spark, event_stream_dir)), "stateful_t"
+    out = run_to_memory(
+        stateful_user_totals(_stream(spark, event_stream_dir)), "stateful_t", "update"
     )
     # update mode emits one row per (user, micro-batch); the row with
     # the highest n_events per user is the final state.
@@ -160,11 +158,12 @@ def test_stream_stream_interval_join_matches_batch(
 
     # Files replay out of time order; a year-wide watermark keeps every
     # row eligible so the streaming result must equal the batch join.
-    out = run_append_to_memory(
+    out = run_to_memory(
         interval_join_clicks_purchases(
             _stream(spark, event_stream_dir), watermark="365 days"
         ),
         "ivj_t",
+        "append",
     )
     got = {
         (r["purchase_id"], r["click_id"]): r["user_id"] for r in out.collect()
@@ -179,15 +178,16 @@ def test_stream_stream_interval_join_matches_batch(
 def test_stream_static_join(spark, sf_dir, event_stream_dir):
     from planning_center_data_pipeline_spark.streaming.jobs import (
         enrich_stream_with_dim,
-        run_append_to_memory,
     )
 
     base = load_table(spark, sf_dir, "events")
     dim = base.select("user_id").distinct().withColumn(
         "cohort", (F.col("user_id") % 3).cast("long")
     )
-    out = run_append_to_memory(
-        enrich_stream_with_dim(_stream(spark, event_stream_dir), dim), "enrich_t"
+    out = run_to_memory(
+        enrich_stream_with_dim(_stream(spark, event_stream_dir), dim),
+        "enrich_t",
+        "append",
     )
     rows = out.collect()
     assert len(rows) == base.count()  # left join preserves every event
@@ -204,7 +204,6 @@ def test_stateful_v2_profile_matches_batch(spark, sf_dir, event_stream_dir):
         pytest.skip("google.protobuf unavailable and no vendored runtime to shim")
 
     from planning_center_data_pipeline_spark.streaming.jobs import (
-        run_update_to_memory,
         stateful_user_profile_v2,
     )
 
@@ -218,8 +217,10 @@ def test_stateful_v2_profile_matches_batch(spark, sf_dir, event_stream_dir):
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
     try:
-        out = run_update_to_memory(
-            stateful_user_profile_v2(_stream(spark, event_stream_dir)), "tws_t"
+        out = run_to_memory(
+            stateful_user_profile_v2(_stream(spark, event_stream_dir)),
+            "tws_t",
+            "update",
         )
     finally:
         if old_prov:
@@ -252,12 +253,11 @@ def test_streaming_cms_matches_batch_sketch(spark, sf_dir, event_stream_dir):
     count — the CMS invariant."""
     from planning_center_data_pipeline_spark.streaming.jobs import (
         cms_bucket_rows,
-        run_update_to_memory,
         streaming_cms_counts,
     )
 
-    out = run_update_to_memory(
-        streaming_cms_counts(_stream(spark, event_stream_dir)), "cms_t"
+    out = run_to_memory(
+        streaming_cms_counts(_stream(spark, event_stream_dir)), "cms_t", "update"
     )
     # update mode emits one row per key per micro-batch: keep the max
     # (counters are monotonically increasing)
@@ -1171,13 +1171,13 @@ def test_streaming_reservoir_equals_batch_sample(spark, sf_dir, event_stream_dir
     bounded at k rows per stratum regardless of input size."""
     from planning_center_data_pipeline_spark.operators.sampling import aes_key
     from planning_center_data_pipeline_spark.streaming.jobs import (
-        run_update_to_memory,
         streaming_weighted_reservoir,
     )
 
-    out = run_update_to_memory(
+    out = run_to_memory(
         streaming_weighted_reservoir(_stream(spark, event_stream_dir), k=20),
         "reservoir_t",
+        "update",
     )
     rows = out.collect()
     # keep each stratum's final emission (largest n_seen)
@@ -1229,7 +1229,6 @@ def test_stateful_transition_counts_matches_batch_lead(spark, sf_dir, tmp_path):
 
     from planning_center_data_pipeline_spark.streaming.jobs import (
         read_event_stream,
-        run_append_to_memory,
         stateful_transition_counts,
     )
 
@@ -1256,9 +1255,10 @@ def test_stateful_transition_counts_matches_batch_lead(spark, sf_dir, tmp_path):
             shutil.copy(p, dst)
             os.utime(dst, (now + i, now + i))
 
-    out = run_append_to_memory(
+    out = run_to_memory(
         stateful_transition_counts(read_event_stream(spark, str(src))),
         "transitions_stream",
+        "append",
     )
     got: dict[tuple, int] = {}
     for r in out.collect():
@@ -1348,7 +1348,6 @@ def test_stateful_totals_rocksdb_changelog_checkpointing(
     checkpointing uploads deltas instead of full snapshots).  Untested
     config is a claim, not a capability."""
     from planning_center_data_pipeline_spark.streaming.jobs import (
-        run_update_to_memory,
         stateful_user_totals,
     )
 
@@ -1364,9 +1363,10 @@ def test_stateful_totals_rocksdb_changelog_checkpointing(
     for k, v in conf.items():
         spark.conf.set(k, v)
     try:
-        out = run_update_to_memory(
+        out = run_to_memory(
             stateful_user_totals(_stream(spark, event_stream_dir)),
             "stateful_rocks_t",
+            "update",
         )
     finally:
         for k, v in old.items():

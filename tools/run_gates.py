@@ -5,14 +5,13 @@ order that can't commit stale evidence.
 
 Runs, serially and stopping at the first failure:
   1. pytest tests/ -q                       (~14 min)
-  2. tools/plan_audit.py                    (~8 min; exit 1 on hard flag)
-  3. tools/crosscheck.py --bare --json      at sf0.01 AND sf0.1,
+  2. tools/crosscheck.py --bare --json      at sf0.01 AND sf0.1,
      merged into the both-SF CROSSCHECK_SF01.json shape the snapshot
      gate expects                           (~10 + ~17 min)
-  4. bench.py with BENCH_BUDGET_S (default 2700 — 900 only fits 2
+  3. bench.py with BENCH_BUDGET_S (default 2700 — 900 only fits 2
      passes and self-marks contended)       (~45 min; ends by running
      the snapshot gate and embedding its verdict in BENCH_DETAIL.json)
-  5. tools/snapshot_gate.py standalone      (final verdict, exit code)
+  4. tools/snapshot_gate.py standalone      (final verdict, exit code)
 
 Rules learned rounds 8-10: batch every source edit BEFORE invoking
 this (any later edit under planning_center_data_pipeline_spark/ or
@@ -60,7 +59,6 @@ def main() -> None:
     py = sys.executable
     if not skip_pytest:
         run("pytest", [py, "-m", "pytest", "tests/", "-q"])
-    run("plan_audit", [py, "tools/plan_audit.py"])
 
     legs = {}
     for sf, tmp in (("sf0.01", "/tmp/_gate_cc001.json"),
