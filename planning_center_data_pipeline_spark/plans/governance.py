@@ -893,21 +893,23 @@ def priv_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     glob = dense.groupBy("b").agg(F.sum("cnt").alias("gcnt")).select(
         "b", F.sum("gcnt").over(wg).alias("cp")
     )
+    n_all = c.agg(F.count(F.lit(1)).alias("n_all"))  # 1 row: N
     cum = (
         dense.select("nk", "b", F.sum("cnt").over(wq).alias("cq"))
         .join(F.broadcast(glob), "b")
+        .crossJoin(F.broadcast(n_all))
     )
     n_g = Window.partitionBy("nk")
-    tot = c.count()  # single scalar: N
     scored = cum.withColumn("ng", F.max("cq").over(n_g)).filter(
         F.col("b") < _TC_BANDS - 1  # last cum term is always 0
     ).select(
         "nk",
+        "n_all",
         "ng",
-        F.abs(F.col("cq") * tot - F.col("cp") * F.col("ng")).alias("num"),
+        F.abs(F.col("cq") * F.col("n_all") - F.col("cp") * F.col("ng")).alias("num"),
     )
     return (
-        scored.groupBy("nk")
+        scored.groupBy("nk", "n_all")
         .agg(
             F.max("ng").cast("bigint").alias("n_group"),
             F.sum("num").cast("bigint").alias("num_sum"),
@@ -919,7 +921,7 @@ def priv_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("num_sum").cast("double")
                 / (
                     F.col("n_group").cast("double")
-                    * float(tot)
+                    * F.col("n_all").cast("double")
                     * float(_TC_BANDS - 1)
                 )
             ).alias("t_closeness"),

@@ -19,48 +19,107 @@ from planning_center_data_pipeline_spark.operators.unrolled import unrolled_sql
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
+# --- co-purchase kernels -----------------------------------------------------
+
+def _baskets(li: DataFrame, min_size: int = 1) -> DataFrame:
+    """Per-order part baskets (ok, pks).  One shuffle on the order key;
+    collect_set drops duplicate lines inside the aggregate, so no
+    (order, part) distinct exchange runs first.  An array holds one
+    order's parts, at most 7 in TPC-H at any scale, so every pair
+    fan-out downstream is a map-side double explode that grows with
+    sum(basket^2), not table^2.  `min_size` keeps only baskets with at
+    least that many parts.  Not checkpointed: a caller that reads the
+    baskets more than once checkpoints them itself."""
+    baskets = (
+        li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
+        .groupBy("ok")
+        .agg(F.collect_set("pk").alias("pks"))
+    )
+    if min_size > 1:
+        baskets = baskets.where(F.size("pks") >= min_size)
+    return baskets
+
+
+def _pair_counts(baskets: DataFrame, a: str, b: str, n: str) -> DataFrame:
+    """(a, b, n): orders holding both parts a < b, from a map-side
+    double explode of the baskets into one count."""
+    return (
+        baskets.select(F.explode("pks").alias(a), F.col("pks"))
+        .select(a, F.explode("pks").alias(b))
+        .where(F.col(a) < F.col(b))
+        .groupBy(a, b)
+        .agg(F.count(F.lit(1)).alias(n))
+    )
+
+
+def _part_counts(baskets: DataFrame) -> DataFrame:
+    """(pk, n): orders holding each part."""
+    return (
+        baskets.select(F.explode("pks").alias("pk"))
+        .groupBy("pk")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+
+
+def _copurchase_sym_adj(li: DataFrame) -> DataFrame:
+    """Symmetric co-purchase adjacency (u, nbrs): nbrs is the set of
+    parts sharing an order with u, u itself excluded, so size(nbrs) is
+    u's degree and consumers read degrees without a union + groupBy
+    over half-edges.  Two shuffles: the baskets, then collect_set per
+    node over their map-side pair explosion; both dedups live inside
+    the aggregates, so no pair-distinct exchange runs.
+
+    Repartitioned by u to the session parallelism before the
+    checkpoint: AQE coalesces the small array rollup to about one
+    partition, and every map-side explode downstream would then run on
+    one core (Generate passes the pre-explode size estimate through).
+
+    The checkpoint is lazy only with AQE off.  Under AQE, the session
+    default, taking it plans the subtree adaptively and runs its
+    shuffle stages while the query is built; the rows are still
+    materialized once and every consumer reads the checkpointed
+    partitions.
+
+    Memory bound: one node's whole neighbor set sits in one
+    aggregation buffer and one row.  Degree is bounded by
+    baskets-per-part x basket size, both SF-invariant in this schema
+    (~30 x 7), so the largest row is KB-sized at any scale.  On a
+    schema where a hub's degree grows with volume, cap hubs before the
+    collect; the consumers here also hub-cap before any wedge or pair
+    explosion."""
+    return (
+        _baskets(li)
+        .select(F.explode("pks").alias("u"), F.col("pks"))
+        .select("u", F.explode("pks").alias("v"))
+        .where(F.col("u") != F.col("v"))
+        .groupBy("u")
+        .agg(F.collect_set("v").alias("nbrs"))
+        .repartition(
+            li.sparkSession.sparkContext.defaultParallelism, F.col("u")
+        )
+        .localCheckpoint(eager=False)
+    )
+
+
 # --- market-basket pair affinity --------------------------------------------
 
 def basket_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top co-ordered part pairs with lift.
 
-    Per-order basket arrays (r12, guide §2.4): one shuffle collects
-    each order's distinct part set (the dedup lives inside the
-    aggregate, replacing the (order, part)-distinct exchange); pair
-    fan-out is a map-side double explode — quadratic in basket size,
-    which TPC-H bounds at 7, so the pattern scales with sum(basket^2),
-    not table^2 — and the former self-join's two order-key exchanges
-    disappear.  n_orders and the per-part order counts come from the
-    same materialized arrays.  Pair support joins per-part order
-    counts (broadcast the small side at this cardinality; sort-merge
-    at 100 TB), lift from exact integer counts; top-50 via
+    n_orders, the pair counts and the per-part order counts all read
+    the same checkpointed baskets.  Lift is computed from exact integer
+    counts; the one-row n_orders is a broadcast cross join; top-50 via
     orderBy+limit = TakeOrderedAndProject.
     """
-    li = load_table(spark, sf_dir, "lineitem")
-    baskets = (
-        li.select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.collect_set("l_partkey").alias("pks"))
-        .localCheckpoint(eager=False)
+    baskets = _baskets(load_table(spark, sf_dir, "lineitem")).localCheckpoint(
+        eager=False
     )
     n_orders = baskets.agg(F.count(F.lit(1)).alias("n_orders"))
-    pairs = (
-        baskets.select(F.explode("pks").alias("pk_a"), F.col("pks"))
-        .select("pk_a", F.explode("pks").alias("pk_b"))
-        .filter(F.col("pk_a") < F.col("pk_b"))
-        .groupBy("pk_a", "pk_b")
-        .agg(F.count("*").alias("n_pair"))
-    )
-    counts = baskets.select(
-        F.explode("pks").alias("l_partkey")
-    ).groupBy("l_partkey").agg(F.count("*").alias("n_ord"))
+    counts = _part_counts(baskets)
     out = (
-        pairs.join(
-            counts.withColumnRenamed("l_partkey", "pk_a"), "pk_a"
-        )
-        .withColumnRenamed("n_ord", "n_a")
-        .join(counts.withColumnRenamed("l_partkey", "pk_b"), "pk_b")
-        .withColumnRenamed("n_ord", "n_b")
+        _pair_counts(baskets, "pk_a", "pk_b", "n_pair")
+        .join(counts.select(F.col("pk").alias("pk_a"), F.col("n").alias("n_a")), "pk_a")
+        .join(counts.select(F.col("pk").alias("pk_b"), F.col("n").alias("n_b")), "pk_b")
         .crossJoin(F.broadcast(n_orders))
     )
     lift = (
@@ -112,35 +171,15 @@ def cf_item_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE sqrt and one division are bit-identical across engines, so
     the ordering (and the LIMIT cut) is portable.
 
-    Plan shape (r12, guide §2.4): one shuffle builds per-order basket
-    ARRAYS (collect_set dedups inside the aggregate, replacing the
-    former (order, part)-distinct exchange); pair fan-out is a
-    map-side double explode — sum-of-C(basket,2), bounded by basket
-    size, never |parts|^2 — straight into the (pa, pb) count, and the
-    per-item order counts come from a map-side single explode of the
-    same materialized arrays.  The former basket self-join's two
-    order-key exchanges disappear.  Item frequencies join back on the
-    part key (dimension-bounded; AQE picks the strategy); top-100 via
-    TakeOrderedAndProject.
+    Pair and item counts read the same checkpointed baskets; item
+    frequencies join back on the part key (dimension-bounded; AQE
+    picks the strategy); top-100 via TakeOrderedAndProject.
     """
-    li = load_table(spark, sf_dir, "lineitem")
-    baskets = (
-        li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
-        .groupBy("ok")
-        .agg(F.collect_set("pk").alias("pks"))
-        .localCheckpoint(eager=False)
+    baskets = _baskets(load_table(spark, sf_dir, "lineitem")).localCheckpoint(
+        eager=False
     )
-    item_n = baskets.select(F.explode("pks").alias("pk")).groupBy("pk").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    co = (
-        baskets.select(F.explode("pks").alias("pa"), F.col("pks"))
-        .select("pa", F.explode("pks").alias("pb"))
-        .where(F.col("pa") < F.col("pb"))
-        .groupBy("pa", "pb")
-        .agg(F.count(F.lit(1)).alias("co"))
-        .filter(F.col("co") >= _CF_MIN_CO)
-    )
+    item_n = _part_counts(baskets)
+    co = _pair_counts(baskets, "pa", "pb", "co").filter(F.col("co") >= _CF_MIN_CO)
     return (
         co.join(item_n.select(F.col("pk").alias("pa"), F.col("n").alias("na")), "pa")
         .join(item_n.select(F.col("pk").alias("pb"), F.col("n").alias("nb")), "pb")
@@ -420,44 +459,6 @@ _CN_PROBE_MOD = 50
 _CN_PER_PROBE = 3
 
 
-def _copurchase_sym_adj(li: DataFrame) -> DataFrame:
-    """Symmetric distinct co-purchase adjacency (u, nbrs): two shuffles
-    total — collect_set(pk) per order basket, map-side double explode,
-    collect_set per node (the dedup lives inside the aggregates; the
-    u != v guard excludes self-loops).  nbrs is exactly the set of
-    parts sharing an order with u, so size(nbrs) IS the co-purchase
-    degree — consumers read degrees for free instead of paying the
-    union-both-orientations + groupBy rollup.  Repartitioned to the
-    session parallelism before the lazy checkpoint because AQE
-    coalesces the small array rollup to ~1 partition and every
-    map-side explode downstream would serialize (the Generate size-estimate trap).
-
-    Memory bound (r12 ADVICE): one node's whole neighbor set sits in a
-    single aggregation buffer/row.  Co-purchase degree is bounded by
-    baskets-per-part x basket size — both SF-invariant in this schema
-    (~30 x 7: parts scale with data volume), so the max row is KB-sized
-    at any scale.  On a schema where a hub's degree CAN grow with
-    volume, pre-filter or cap hubs before the collect (approximate
-    degree cap, salted two-level aggregation) — consumers here
-    additionally hub-cap before any wedge/pair explosion."""
-    baskets = (
-        li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
-        .groupBy("ok")
-        .agg(F.collect_set("pk").alias("pks"))
-    )
-    return (
-        baskets.select(F.explode("pks").alias("u"), F.col("pks"))
-        .select("u", F.explode("pks").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .groupBy("u")
-        .agg(F.collect_set("v").alias("nbrs"))
-        .repartition(
-            li.sparkSession.sparkContext.defaultParallelism, F.col("u")
-        )
-        .localCheckpoint(eager=False)
-    )
-
-
 def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Neighborhood-overlap item similarity, PROBE-SET shaped: for a
     bounded probe set of parts (partkey % 50 == 0 — 2% of the
@@ -474,31 +475,15 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     the all-pairs variant at scale is MinHash over neighbor sets
     (doc_minhash_lsh machinery), not this rollup.
 
-    Plan shape (r12 rewrite; r13 onto the shared symmetric adjacency,
-    VERDICT item 5, guide §2.4): the graph is built ONCE as
-    `_copurchase_sym_adj` (shared with assortativity/LCC — collect_set
-    per order -> map-side pair explosion -> collect_set per node).  In
-    a symmetric graph the hub-capped per-neighbor source lists ARE the
-    adjacency rows themselves: srcs(nbr) = nbrs(nbr) whenever
-    deg(nbr) <= cap, so the former |E|-row degree join + re-group
-    (explode -> join degv -> filter -> collect_set per nbr: 3 shuffle
-    exchanges + a checkpoint) collapses to a FILTER on the checkpointed
-    adjacency — zero exchanges.  cdeg (per-source count of surviving
+    Plan shape: in a symmetric graph the hub-capped per-neighbor
+    source lists ARE the adjacency rows: srcs(nbr) = nbrs(nbr) whenever
+    deg(nbr) <= cap, so hub capping is a filter on the checkpointed
+    adjacency with no exchange.  cdeg (per-source count of surviving
     edges) comes from one explode of the filtered lists.  The wedge
-    enumeration stays the map-side double explode with the probe
-    filter INSIDE the array (F.filter) before the first explode; each
+    enumeration is a map-side double explode with the probe filter
+    inside the array (F.filter) before the first explode; each
     surviving list holds <= 128 entries, so every list row expands to
-    <= |probes-in-list| x 128 wedges with no join.  r12 measured
-    5.3-6.6 -> 3.4-4.3 s interleaved; r13 numbers in
-    OPTIMIZATION_r13.md.  Byte-identical output (oracle hash== both
-    SFs).
-
-    Scale/memory bound (r12 ADVICE): a collect_set adjacency row
-    concentrates one node's neighbor set in a single aggregation
-    buffer; per-part co-purchase degree is bounded by baskets-per-part
-    x basket size (~30 x 7 at any SF — parts scale with SF), so the
-    arrays stay KB-sized; the probe/wedge explode is additionally
-    hub-capped at _CN_HUB_CAP (128).
+    <= |probes-in-list| x 128 wedges with no join.
     """
     li = load_table(spark, sf_dir, "lineitem")
     und = _copurchase_sym_adj(li)
@@ -523,8 +508,6 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("src")
         .agg(F.count(F.lit(1)).alias("cdeg"))
     )
-    from pyspark.sql.window import Window
-
     scored = (
         common.join(
             cdeg.select(
@@ -605,60 +588,45 @@ _LP_ITERS = 5
 
 def graph_components_minlabel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components of the part co-purchase graph (edge = two
-    parts in the same order) via {n} rounds of min-label propagation:
-    label(v) <- min(label(v), min over neighbors).  Deterministic
-    integer arithmetic — both engines converge identically round by
-    round, so the round-limited result is exactly comparable even
-    where components have diameter > {n}.
+    parts in the same order) via _LP_ITERS (5) rounds of min-label
+    propagation: label(v) <- min(label(v), min over neighbors).
+    Deterministic integer arithmetic — both engines converge
+    identically round by round, so the round-limited result is exactly
+    comparable even where components have diameter > 5.
 
-    Scale shape (round-10 bipartite form; r12 adjacency rewrite):
-    each propagation round runs as two bipartite half-steps over the
-    part-order relation (min per order, min per part), which is
-    mathematically identical to a co-purchase graph round but LINEAR
-    in |lineitem| — the C(basket,2) pair list and its edge-build
-    self-join are never materialized.  r12 (guide §2.3/§2.4): the
-    relation is held as BOTH adjacency groupings (order -> parts
-    array, part -> orders array, each lazily checkpointed once), so a
-    round explodes the arrays map-side and shuffles only the two
-    partial-aggregated min tables — the former per-round re-shuffles
-    of the lineitem-sized rows (localCheckpoint erases SQL output
-    partitioning, so the old "co-partitioned" copies re-exchanged
-    every round) are gone.  Arrays stay bounded at any SF: basket
-    size and orders-per-part do not grow with scale.  Top-20 via
-    TakeOrderedAndProject.""".format(
-        n=_LP_ITERS
-    )
+    Scale shape: each propagation round runs as two bipartite
+    half-steps over the part-order relation (min per order, min per
+    part), which is mathematically identical to a co-purchase graph
+    round but LINEAR in |lineitem| — the C(basket,2) pair list is never
+    materialized.  The relation is held as both groupings (the
+    multi-part baskets, and part -> orders arrays), each checkpointed
+    once, so a round explodes the arrays map-side and shuffles only
+    the two partial-aggregated min tables.  Arrays stay bounded at any
+    SF: basket size and orders-per-part do not grow with scale.  Top-20
+    via TakeOrderedAndProject."""
     # Half-step identity: om(o) = min label over parts of o;
     # label'(v) = min om over orders containing v (v's own label flows
     # through its own orders, so least() is implicit, and min over
     # co-order parts == min over graph neighbors).  Node set: parts in
-    # >= 1 multi-part order, matching the old edge-derived set.
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    by_order = (
-        li.groupBy("l_orderkey")
-        .agg(F.collect_set("l_partkey").alias("parts"))
-        .where(F.size("parts") >= 2)
-        .localCheckpoint(eager=False)
-    )
+    # >= 1 multi-part order, the endpoints of the co-purchase edges.
+    by_order = _baskets(
+        load_table(spark, sf_dir, "lineitem"), min_size=2
+    ).localCheckpoint(eager=False)
     by_part = (
-        by_order.select(F.explode("parts").alias("node"), F.col("l_orderkey"))
+        by_order.select(F.explode("pks").alias("node"), F.col("ok"))
         .groupBy("node")
-        .agg(F.collect_set("l_orderkey").alias("orders"))
+        .agg(F.collect_set("ok").alias("orders"))
         .localCheckpoint(eager=False)
     )
     labels = unrolled_sql(
         "SELECT node, node AS lbl, orders FROM {by_part}",
         "SELECT n.node, n.lbl, p.orders FROM ("
         "SELECT node, MIN(om) AS lbl FROM ("
-        "SELECT m.om, explode(b.parts) AS node FROM ("
-        "SELECT l_orderkey, MIN(lbl) AS om FROM ("
-        "SELECT lbl, explode(orders) AS l_orderkey FROM {prev}"
-        ") GROUP BY l_orderkey"
-        ") m JOIN {by_order} b ON b.l_orderkey = m.l_orderkey"
+        "SELECT m.om, explode(b.pks) AS node FROM ("
+        "SELECT ok, MIN(lbl) AS om FROM ("
+        "SELECT lbl, explode(orders) AS ok FROM {prev}"
+        ") GROUP BY ok"
+        ") m JOIN {by_order} b ON b.ok = m.ok"
         ") GROUP BY node"
         ") n JOIN {by_part} p ON p.node = n.node",
         _LP_ITERS,
@@ -716,24 +684,20 @@ ORDER BY n_parts DESC, component LIMIT 20
 
 def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Newman degree assortativity of the co-purchase graph: Pearson r
-    of (deg(u), deg(v)) over both orientations of every edge.  After
-    the edge build (one self-join + distinct, the shared graph-family
-    cost), the statistic is ONE exact-sum aggregate: sums of x, x^2,
-    x*y over 2E contribution rows in DECIMAL(38,0) (HUGEINT in the
-    oracle), then a single double division — the same
+    of (deg(u), deg(v)) over both orientations of every edge.  The
+    statistic is ONE exact-sum aggregate: sums of x, x^2, x*y over 2E
+    contribution rows in DECIMAL(38,0) (HUGEINT in the oracle), then a
+    single double division — the same
     exact-at-any-parallelism shape as agg_stats_moments.
 
     By symmetry sum(x) = sum(y) and sum(x^2) = sum(y^2), so
     r = (M*Sxy - Sx^2) / (M*Sxx - Sx^2) with M = 2E.
 
-    r12 (guide §2.4, §2.3): iterate the SYMMETRIC adjacency arrays —
-    each orientation row (u, v) carries deg_u = size(nbrs_u) out of the
-    map-side explode and attaches deg_v with ONE |V|-row join; the old
-    edge build's pair-distinct exchange, the union-both-orientations
-    degree rollup, and the second degree join all disappear.  Summing
-    x, x*x, x*y over BOTH orientations equals the old per-edge sums of
-    (x+y), (x^2+y^2), 2xy term-for-term, and m = the orientation-row
-    count = 2E — identical values into the identical final formula."""
+    Each orientation row (u, v) of the symmetric adjacency carries
+    deg_u = size(nbrs_u) out of the map-side explode and attaches deg_v
+    with ONE |V|-row join.  Summing x, x*x, x*y over BOTH orientations
+    equals the per-edge sums of (x+y), (x^2+y^2), 2xy term-for-term,
+    and m = the orientation-row count = 2E."""
     li = load_table(spark, sf_dir, "lineitem")
     adj = _copurchase_sym_adj(li)
     oriented = adj.select(
@@ -818,11 +782,9 @@ def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     size.  Probes with k < 2 report cc = 0 over k values still shown.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    # r12 (guide §2.4, §8): build from the shared symmetric adjacency
-    # arrays — degree IS size(nbrs), so the union-both-orientations
-    # degree rollup disappears; the small-u restriction is a FILTER on
-    # a node's own array size, and only the small-v restriction of the
-    # neighbor lists needs a join (against the |V|-row small-id set).
+    # The small-u restriction is a FILTER on a node's own array size;
+    # only the small-v restriction of the neighbor lists needs a join
+    # (against the |V|-row small-id set).
     fadj = _copurchase_sym_adj(li)
     small_u = fadj.where(F.size("nbrs") <= _LCC_HUB_CAP)
     small_ids = small_u.select(F.col("u").alias("v"))
@@ -1030,45 +992,20 @@ def graph_minhash_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     via banded MinHash over neighbor sets + exact verification of the
     candidates.
 
-    Scale shape (r12, guide §2.4 + the §8 payload rule): the symmetric
-    neighbor-set adjacency is built in TWO shuffles total — collect_set
-    per order basket, map-side pair explosion in both directions,
-    collect_set per node (the dedup that used to be a pair-distinct
-    exchange lives inside the aggregates).  Degrees fall out as
-    size(nbrs); the edge rows the signature stage consumes are a
-    map-side explode of the same materialized arrays; and the
+    Scale shape: the edge rows the signature stage consumes are a
+    map-side explode of the checkpointed adjacency, and the
     exact-Jaccard verify attaches each candidate's TWO neighbor arrays
     once and intersects in-row (candidate x degree work with no
-    per-edge shuffle, replacing the former double edge-table join +
-    groupBy).  The band bucket join still bounds candidates.  Same
+    per-edge shuffle).  The band bucket join bounds candidates.  Same
     asymmetry contract as doc MinHash-LSH."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = li.groupBy("l_orderkey").agg(
-        F.collect_set("l_partkey").alias("pks")
-    )
-    adj = (
-        baskets.select(F.explode("pks").alias("u"), "pks")
-        .select("u", F.explode("pks").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .groupBy("u")
-        .agg(F.collect_set("v").alias("nbrs"))
-        # AQE coalesces the small array rollup to ~1 partition before it
-        # is checkpointed; every consumer below (edge explode, vocabulary
-        # md5, bucket-cap window, candidate join) would then run on ONE
-        # core.  Re-spread to the session parallelism first — the
-        # explicit exchange is |V| array rows, paid once.
-        .repartition(
-            spark.sparkContext.defaultParallelism, F.col("u")
-        )
-        .localCheckpoint(eager=False)
-    )
+    adj = _copurchase_sym_adj(load_table(spark, sf_dir, "lineitem"))
     edges = adj.select("u", F.explode("nbrs").alias("v"))
     # 8 md5-seeded hashes of each neighbor, min per (node, seed), banded
     # and bucket-joined with the per-bucket skew cap (see _NMH_BUCKET_CAP).
-    # r13: the vocabulary is the adjacency's own node column — in the
-    # symmetric graph every neighbor id IS a node id, so the |E|-row
-    # distinct exchange _nmh_candidates would pay to derive it is
-    # replaced by a |V|-row projection of the checkpoint.
+    # The vocabulary is the adjacency's own node column: in the
+    # symmetric graph every neighbor id IS a node id, so a |V|-row
+    # projection of the checkpoint replaces the |E|-row distinct
+    # exchange _nmh_candidates would pay to derive it.
     cand = _nmh_candidates(edges, vocab=adj.select(F.col("u").alias("v")))
     a1 = adj.select(F.col("u").alias("id_1"), F.col("nbrs").alias("n1"))
     a2 = adj.select(F.col("u").alias("id_2"), F.col("nbrs").alias("n2"))
@@ -1079,7 +1016,7 @@ def graph_minhash_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
             "id_1",
             "id_2",
             # nbrs are sets by construction, so |array_intersect| is the
-            # exact shared-neighbor count the old join+groupBy computed
+            # exact shared-neighbor count the oracle's join+groupBy computes
             F.size(F.array_intersect("n1", "n2")).cast("bigint").alias("n_common"),
             F.size("n1").cast("bigint").alias("deg_1"),
             F.size("n2").cast("bigint").alias("deg_2"),
@@ -1186,47 +1123,21 @@ def graph_pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     libm.  Every node has deg >= 1 by construction (it appears in an
     edge), so there is no dangling-mass term.
 
-    Plan shape (r12 rewrite, guide §2.3/§2.4/§3.3): the edge relation
-    is built and iterated as an ADJACENCY LIST, two exchanges total —
-    collect_set(pk) per order (one shuffle, basket-bounded arrays),
-    map-side pair explosion, collect_set(dst) per src (one shuffle,
-    dedup inside the aggregate replaces the former pair-distinct
-    exchange).  deg = size(dsts) is identical to the former
-    count-per-src over distinct pairs.  Each of the 5 iterations then
-    joins |V|-row frames only and explodes dsts AFTER the join (guide
-    §3.3: join on the un-exploded key), so no fact-sized row set is
-    ever re-shuffled inside the loop — the old edge-list form
-    re-shuffled all |E| rows every iteration because localCheckpoint
-    erases SQL output partitioning.  Adjacency rows stay bounded
-    because per-part co-purchase degree does not grow with SF (parts
-    scale with SF; a part sits in ~30 baskets of <= 7 items at any
-    scale).  Measured 8.2 -> 3.4 s at sf0.1 (32 -> 30 Exchanges, and
-    the 5 remaining per-iteration exchanges carry |V| rows, not |E|).
-    Output is top-20 via TakeOrderedAndProject.
+    Plan shape: the graph is iterated as the adjacency list, deg =
+    size(nbrs).  Each of the 5 iterations joins |V|-row frames only and
+    explodes nbrs AFTER the join (join on the un-exploded key), so no
+    |E|-row set is re-shuffled inside the loop.  Output is top-20 via
+    TakeOrderedAndProject.
     """
-    li = load_table(spark, sf_dir, "lineitem")
-    baskets = (
-        li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
-        .groupBy("ok")
-        .agg(F.collect_set("pk").alias("pks"))
-    )
-    pairs = (
-        baskets.select(F.explode("pks").alias("src"), F.col("pks"))
-        .select("src", F.explode("pks").alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-    )
-    adj = (
-        pairs.groupBy("src")
-        .agg(F.collect_set("dst").alias("dsts"))
-        .select("src", "dsts", F.size("dsts").cast("bigint").alias("deg"))
-        .localCheckpoint(eager=False)
+    adj = _copurchase_sym_adj(load_table(spark, sf_dir, "lineitem")).withColumn(
+        "deg", F.size("nbrs").cast("bigint")
     )
     n1 = adj.agg(F.count(F.lit(1)).alias("n_nodes"))  # 1 row
     nodes = (
-        adj.select("src", "deg")
+        adj.select("u", "deg")
         .crossJoin(F.broadcast(n1))
         .select(
-            F.col("src").alias("node"),
+            F.col("u").alias("node"),
             "deg",
             F.expr(f"CAST({_PR_MASS} AS BIGINT) DIV n_nodes").alias("base"),
         )
@@ -1239,8 +1150,8 @@ def graph_pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(85 * coalesce(c.s, CAST(0 AS BIGINT))) DIV 100 AS r "
         "FROM {nodes} n LEFT JOIN ("
         "SELECT cnode, SUM(c) AS s FROM ("
-        "SELECT explode(a.dsts) AS cnode, x.r DIV a.deg AS c "
-        "FROM {prev} x JOIN {adj} a ON x.node = a.src"
+        "SELECT explode(a.nbrs) AS cnode, x.r DIV a.deg AS c "
+        "FROM {prev} x JOIN {adj} a ON x.node = a.u"
         ") GROUP BY cnode) c ON n.node = c.cnode",
         _PART_PR_ITERS,
         "SELECT node, r FROM {prev}",
@@ -1395,28 +1306,6 @@ SELECT node, rank_micro FROM {prev} ORDER BY node
 GRAPH_PAGERANK_SQL = _event_pagerank_sql()
 
 
-def _part_part_edges(li: DataFrame) -> DataFrame:
-    """Distinct undirected co-purchase edges u < v (parts sharing an
-    order).  r12 (guide §2.3/§2.4): collect_set(pk) per order (one
-    shuffle, basket-bounded arrays) + map-side pair explosion +
-    distinct — identical rows to the former basket self-join build,
-    minus the (ok,pk)-distinct exchange and the self-join's two
-    ok-partitioned exchanges.  localCheckpoint keeps the multi-
-    consumer plans from re-executing the build."""
-    baskets = (
-        li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
-        .groupBy("ok")
-        .agg(F.collect_set("pk").alias("pks"))
-    )
-    return (
-        baskets.select(F.explode("pks").alias("u"), F.col("pks"))
-        .select("u", F.explode("pks").alias("v"))
-        .where(F.col("u") < F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-
-
 # --- power-law fit of the co-purchase degree distribution ---------------------------
 
 
@@ -1429,18 +1318,10 @@ def graph_powerlaw_degree_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ln d, ln cnt) are micro-quantized integers, and the OLS moment
     sums run in DECIMAL(38,0)/HUGEINT (x*y products overflow int64),
     so slope/intercept are shared double expressions over exact
-    integers.  Scale shape: adjacency edge build (collect_set per
-    order + map-side pair explosion + distinct — the shared
-    _part_part_edges helper, r12 guide §2.4: same rows as the former basket self-join
-    minus its three exchanges) + two rollups; the fit runs on the
-    bounded histogram."""
-    li = load_table(spark, sf_dir, "lineitem")
-    half = _part_part_edges(li)
-    deg = (
-        half.select("u")
-        .unionAll(half.select(F.col("v").alias("u")))
-        .groupBy("u")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
+    integers.  Degree is size(nbrs) of the adjacency; the histogram is
+    one rollup and the fit runs on it."""
+    deg = _copurchase_sym_adj(load_table(spark, sf_dir, "lineitem")).select(
+        F.size("nbrs").cast("bigint").alias("deg")
     )
     hist = deg.groupBy("deg").agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt")
@@ -1520,16 +1401,15 @@ FROM mom
 
 # --- degree-oriented triangle counting --------------------------------------
 # Co-purchase graph: parts are adjacent when they appear in the same
-# order.  Edge building self-joins lineitem ON l_orderkey — bounded
-# (TPC-H orders have ≤ 7 lines, so ≤ 21 pairs per order) and shuffles
-# once on orderkey.  Triangles are counted edge-iterator style: orient
-# every edge from the (degree, id)-smaller endpoint to the larger
-# (out-degree then bounded by O(sqrt E) — hub nodes never fan out),
-# build each node's sorted out-neighbor array, and count each triangle
-# exactly once at its base edge as |N+(s) ∩ N+(t)|.  Unlike the naive
-# wedge join E⋈E (41M intermediate rows at sf0.1) nothing bigger than
-# the edge list is ever shuffled: the adjacency side is |V| rows and
-# broadcastable, and array_intersect runs inside whole-stage codegen.
+# order (the `_copurchase_sym_adj` kernel).  Triangles are counted
+# edge-iterator style: orient every edge from the (degree, id)-smaller
+# endpoint to the larger (out-degree then bounded by O(sqrt E) — hub
+# nodes never fan out), build each node's sorted out-neighbor array,
+# and count each triangle exactly once at its base edge as
+# |N+(s) ∩ N+(t)|.  Unlike the naive wedge join E⋈E (41M intermediate
+# rows at sf0.1) nothing bigger than the edge list is ever shuffled:
+# the adjacency side is |V| rows and broadcastable, and array_intersect
+# runs inside whole-stage codegen.
 # The oracle counts the same triangles from the plain pa<pb edge set —
 # orientation changes the join cost, not the count.
 #
@@ -1543,48 +1423,15 @@ FROM mom
 # billion-node graph switch the gate off and the identical plan
 # degrades to shuffle joins keyed on the node id; the O(sqrt E)
 # out-degree bound from orientation still caps the per-row array size.
-# localCheckpoint(eager=False) keeps plan *construction* lazy (no jobs
-# run at build time — explain-only callers pay nothing); the subtree
-# still materializes exactly once at first action and every consumer
-# reuses the checkpointed partitions.
 
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r12 rewrite (guide §2.3/§2.4/§3.3): the graph is built and
-    # consumed as ADJACENCY LISTS instead of edge rows.
-    #   1. collect_set(pk) per order — one shuffle, basket-bounded;
-    #   2. map-side pair explosion -> collect_set(v) per u — one
-    #      shuffle; dedup happens inside the aggregate, so the former
-    #      basket self-join + distinct exchanges are gone, and the
-    #      degree table falls out as size(nbrs) with NO union+groupBy
-    #      pass over the edge list;
-    #   3. orientation takes ONE join (deg_u rides along from the
-    #      explode; only deg_v is looked up) instead of two;
-    #   4. the per-edge intersect probe is derived by exploding the
-    #      oriented adjacency (nbrs_s attached map-side), so it joins
-    #      adj ONCE (t side) instead of twice.
-    # localCheckpoint (not a cache) materializes the two multi-
-    # consumer frames with their AQE-coalesced partitioning — same
-    # rationale as before the rewrite (cache froze pre-AQE
-    # partitioning: 2.6s vs 88s at sf0.01 under 200 partitions).
-    # Adjacency rows stay bounded at scale: per-part co-purchase
-    # degree does not grow with SF (parts scale with SF).
-    # Measured 4.1 -> 2.5 s warm at sf0.1; n/m/t bit-identical.
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = (
-        li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
-        .groupBy("ok")
-        .agg(F.collect_set("pk").alias("pks"))
-    )
-    pairs = (
-        baskets.select(F.explode("pks").alias("u"), F.col("pks"))
-        .select("u", F.explode("pks").alias("v"))
-        .where(F.col("u") != F.col("v"))
-    )
-    und = (
-        pairs.groupBy("u")
-        .agg(F.collect_set("v").alias("nbrs"))
-        .select("u", "nbrs", F.size("nbrs").cast("bigint").alias("deg"))
-        .localCheckpoint(eager=False)
+    # Orientation takes ONE join (deg_u rides along from the explode;
+    # only deg_v is looked up), and the per-edge intersect probe is
+    # derived by exploding the oriented adjacency (nbrs_s attached
+    # map-side), so it joins adj ONCE (t side).  The oriented
+    # adjacency is checkpointed because two consumers read it.
+    und = _copurchase_sym_adj(load_table(spark, sf_dir, "lineitem")).withColumn(
+        "deg", F.size("nbrs").cast("bigint")
     )
     exploded = und.select("u", "deg", F.explode("nbrs").alias("v")).where(
         F.col("u") < F.col("v")

@@ -10,13 +10,17 @@ by hand.
 
 from __future__ import annotations
 
+import duckdb
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from __spark_entry__ import queries
+from __spark_entry__ import oracle_sql, queries
 from planning_center_data_pipeline_spark.plans.lifecycle import _morton16
 from planning_center_data_pipeline_spark.sources.tables import load_table
+from tools.crosscheck import canon, value_hash
 
 Q = queries()
 
@@ -141,6 +145,60 @@ def test_triangle_count_known_graph(spark, tmp_path):
     li.write.parquet(str(d / "lineitem.parquet"))
     out = Q["graph_triangle_count"](spark, str(d)).collect()[0]
     assert (out.n_nodes, out.n_edges, out.n_triangles) == (5, 7, 4)
+
+
+# (order, part) lines: order 1 is a K4 with part 50 on two lines, order
+# 2 a pendant edge, order 3 a one-part basket; orders 1, 4 and 5 all
+# hold the pair (2, 50), which passes cf's co >= 3 filter and gives the
+# probes 50 (% 50) and 101 (% 101) the common neighbors and the triangle
+# their queries report.  101 and 6 have the same neighbor set {2, 50},
+# so MinHash must pair them.
+_COPURCHASE_LINES = (
+    [(1, 50), (1, 50), (1, 2), (1, 3), (1, 4)]
+    + [(2, 4), (2, 5)]
+    + [(3, 7)]
+    + [(4, 50), (4, 2), (4, 101)]
+    + [(5, 50), (5, 2), (5, 6)]
+)
+
+
+@pytest.fixture(scope="module")
+def copurchase_dir(tmp_path_factory):
+    d = tmp_path_factory.mktemp("copurchase")
+    ok, pk = zip(*_COPURCHASE_LINES)
+    pq.write_table(
+        pa.table({"l_orderkey": pa.array(ok, pa.int64()), "l_partkey": pa.array(pk, pa.int64())}),
+        d / "lineitem.parquet",
+    )
+    return d
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "basket_part_pairs",
+        "cf_item_item_cosine",
+        "graph_components_minlabel",
+        "graph_common_neighbors",
+        "graph_degree_assortativity",
+        "graph_local_clustering",
+        "graph_minhash_neighbors",
+        "graph_pagerank_parts",
+        "graph_powerlaw_degree_fit",
+        "graph_triangle_count",
+    ],
+)
+def test_copurchase_queries_match_oracles_on_known_graph(spark, copurchase_dir, name):
+    """Every query built on the basket and adjacency kernels returns
+    rows on the hand-built graph, with the value hash of its DuckDB
+    oracle."""
+    got = canon(Q[name](spark, str(copurchase_dir)).toPandas())
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW lineitem AS SELECT * FROM '{copurchase_dir}/lineitem.parquet'")
+    want = canon(con.execute(oracle_sql()[name]).df())
+    assert len(got) >= 1
+    assert list(got.columns) == list(want.columns)
+    assert value_hash(got) == value_hash(want)
 
 
 def test_theta_exact_below_capacity_and_mergeable(spark):

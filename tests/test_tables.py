@@ -125,11 +125,12 @@ def test_unconvertible_footer_type_raises(spark, tmp_path):
 
 def test_query_build_launches_no_spark_job(spark):
     sc = spark.sparkContext
-    group = "test-tables-q3-build"
-    sc.setJobGroup(group, "q3_shipping_priority build")
-    try:
-        Q["q3_shipping_priority"](spark, SF_SMOKE)
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
-    finally:
-        sc._jsc.clearJobGroup()
-    assert jobs == []
+    for name in ("q3_shipping_priority", "priv_t_closeness"):
+        group = f"test-tables-{name}-build"
+        sc.setJobGroup(group, f"{name} build")
+        try:
+            Q[name](spark, SF_SMOKE)
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+        finally:
+            sc._jsc.clearJobGroup()
+        assert jobs == [], name

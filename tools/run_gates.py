@@ -4,7 +4,9 @@ order that can't commit stale evidence.
     python tools/run_gates.py [--skip-pytest] [--budget 2700]
 
 Runs, serially and stopping at the first failure:
-  1. pytest tests/ -q                       (~14 min)
+  1. the ROADMAP tier-1 command: pytest tests/ -q
+     --continue-on-collection-errors -p no:cacheprovider under a
+     2670 s timeout, SPARK_LOCAL_DIRS=/tmp/spark-local  (~19 min)
   2. tools/crosscheck.py --bare --json      at sf0.01 AND sf0.1,
      merged into the both-SF CROSSCHECK_SF01.json shape the snapshot
      gate expects                           (~10 + ~17 min)
@@ -58,7 +60,12 @@ def main() -> None:
 
     py = sys.executable
     if not skip_pytest:
-        run("pytest", [py, "-m", "pytest", "tests/", "-q"])
+        run(
+            "pytest",
+            ["timeout", "-k", "10", "2670", py, "-m", "pytest", "tests/", "-q",
+             "--continue-on-collection-errors", "-p", "no:cacheprovider"],
+            env={"SPARK_LOCAL_DIRS": "/tmp/spark-local"},
+        )
 
     legs = {}
     for sf, tmp in (("sf0.01", "/tmp/_gate_cc001.json"),
