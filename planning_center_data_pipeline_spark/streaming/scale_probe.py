@@ -2,7 +2,7 @@
 streaming query in event-time order and record throughput + state-store
 size per micro-batch (SURVEY.md §2.9's scale-evidence wing).
 
-Why this exists: batch scale probes (tools/bench_scale.py) say nothing
+Why this exists: batch scale probes (bench.py --sf ...) say nothing
 about the property that makes streaming operators survive unbounded
 input — WATERMARK-DRIVEN STATE EVICTION.  A stateful operator whose
 state grows with total input (not with the in-watermark horizon) works

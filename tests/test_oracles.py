@@ -59,32 +59,12 @@ def test_registry_consistency():
         assert len(inspect.signature(fn).parameters) == 2, name
 
 
-def test_bench_warmup_and_headline_names_exist():
-    """bench.py references queries by NAME (warmup list, headline
-    subset); a renamed query would silently drop out of the warmup or
-    the driver's stdout line.  Pin every referenced name to the
-    registry."""
-    import re
+def test_query_index_is_current():
+    """docs/QUERY_INDEX.md is generated; a query added, moved, renamed or
+    re-documented without regenerating it fails here."""
+    from tools.query_index import OUT, render
 
-    queries, _ = collect_all()
-    src = Path(__file__).resolve().parent.parent / "bench.py"
-    text = src.read_text()
-    # headline list + warmup list entries are quoted names
-    referenced = set(re.findall(r'"([a-z0-9_]+)"', text))
-    known = {n for n in referenced if n in queries}
-    # every name that LOOKS like a query (family prefix) must resolve.
-    # Prefixes are DERIVED from the registry (round-10 ADVICE: the old
-    # literal tuple omitted newer families — ml_, ord_, sup_, rank_ —
-    # so a dangling reference to one of those would not be caught).
-    prefixes = tuple({n.split("_", 1)[0] + "_" for n in queries if "_" in n})
-    lookalike = {
-        n
-        for n in referenced
-        if n.startswith(prefixes) and not n.startswith("spark.")
-    }
-    missing = lookalike - set(queries)
-    assert not missing, f"bench.py references unknown queries: {missing}"
-    assert len(known) >= 50  # headline + warmup really were scanned
+    assert OUT.read_text() == render(), "run python tools/query_index.py"
 
 
 def test_rotation_sample_sets_are_consistent():

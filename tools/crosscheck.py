@@ -3,6 +3,7 @@
 Runs every __spark_entry__.queries() entry at a given sf dir, runs the
 matching oracle_sql() in DuckDB over the same parquet, and compares
 row count, sorted column names, and an order-insensitive value hash.
+A query that returns while a Spark job is still active fails too.
 
 The compare path deliberately goes THROUGH PANDAS on both sides (Spark
 `toPandas()`, DuckDB `.df()`) because that is what the driver does:
@@ -86,6 +87,8 @@ def main() -> int:
         json_out = argv[i + 1]
         del argv[i : i + 2]
     record: dict[str, dict] = {}
+    from bench import active_jobs
+
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
@@ -122,6 +125,12 @@ def main() -> int:
             record[name] = {"status": "FAIL", "err": str(exc)[:200]}
             continue
         dt = time.time() - t0
+        jobs = active_jobs(spark)
+        if jobs:
+            print(f"{name:42s} FAIL Spark jobs {jobs} still active after the query")
+            failures += 1
+            record[name] = {"status": "FAIL", "err": f"Spark jobs {jobs} still active"}
+            continue
         if name not in oracles:
             print(f"{name:42s} rows={len(spdf):6d} (rows-only, {dt:.1f}s)")
             if len(spdf) == 0:

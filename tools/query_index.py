@@ -1,7 +1,9 @@
 """Generate docs/QUERY_INDEX.md: one row per registered query —
-implementation location, oracle status, and the first docstring line —
-so the full `__spark_entry__.queries()` surface is auditable at a
-glance without grepping the plan modules.
+implementation module, oracle status, and the first docstring paragraph
+— so the full `__spark_entry__.queries()` surface is auditable at a
+glance without grepping the plan modules.  Rows carry no line numbers,
+so a row changes only when its query, module, oracle or summary does;
+tier-1 checks that the committed file equals `render()`.
 
 Usage: python tools/query_index.py
 """
@@ -17,8 +19,10 @@ sys.path.insert(0, str(REPO))
 
 import __spark_entry__ as entrymod  # noqa: E402
 
+OUT = REPO / "docs" / "QUERY_INDEX.md"
 
-def main() -> None:
+
+def render() -> str:
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
     lines = [
@@ -33,12 +37,7 @@ def main() -> None:
     ]
     for name in sorted(queries):
         fn = queries[name]
-        mod = fn.__module__.rsplit(".", 1)[-1]
-        try:
-            line_no = inspect.getsourcelines(fn)[1]
-            loc = f"`plans/{mod}.py:{line_no}`"
-        except (OSError, TypeError):
-            loc = f"`{mod}`"
+        loc = f"`{fn.__module__.split('.', 1)[-1].replace('.', '/')}.py`"
         para = (inspect.getdoc(fn) or "").split("\n\n")[0]
         doc = " ".join(para.split())
         if len(doc) > 110:
@@ -46,9 +45,12 @@ def main() -> None:
         doc = doc.replace("|", "\\|")
         oracle = "sql" if name in oracles else "rows-only"
         lines.append(f"| {name} | {loc} | {oracle} | {doc} |")
-    out = REPO / "docs" / "QUERY_INDEX.md"
-    out.write_text("\n".join(lines) + "\n")
-    print(f"wrote {out} ({len(queries)} queries)")
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
+    OUT.write_text(render())
+    print(f"wrote {OUT}")
 
 
 if __name__ == "__main__":

@@ -1,7 +1,7 @@
 """One-shot end-of-round gate runner: the exact sequence, in the only
 order that can't commit stale evidence.
 
-    python tools/run_gates.py [--skip-pytest] [--budget 2700]
+    python tools/run_gates.py [--skip-pytest]
 
 Runs, serially and stopping at the first failure:
   1. the ROADMAP tier-1 command: pytest tests/ -q
@@ -10,9 +10,10 @@ Runs, serially and stopping at the first failure:
   2. tools/crosscheck.py --bare --json      at sf0.01 AND sf0.1,
      merged into the both-SF CROSSCHECK_SF01.json shape the snapshot
      gate expects                           (~10 + ~17 min)
-  3. bench.py with BENCH_BUDGET_S (default 2700 — 900 only fits 2
-     passes and self-marks contended)       (~45 min; ends by running
-     the snapshot gate and embedding its verdict in BENCH_DETAIL.json)
+  3. bench.py over every query at sf0.1, min of 3 full passes
+                                            (~21 min on 4 CPUs; ends
+     by running the snapshot gate and embedding its verdict in
+     BENCH_DETAIL.json)
   4. tools/snapshot_gate.py standalone      (final verdict, exit code)
 
 Rules learned rounds 8-10: batch every source edit BEFORE invoking
@@ -50,13 +51,7 @@ def run(step: str, cmd: list[str], env: dict | None = None) -> None:
 
 
 def main() -> None:
-    argv = sys.argv[1:]
-    budget = "2700"
-    if "--budget" in argv:
-        i = argv.index("--budget")
-        budget = argv[i + 1]
-        del argv[i : i + 2]
-    skip_pytest = "--skip-pytest" in argv
+    skip_pytest = "--skip-pytest" in sys.argv[1:]
 
     py = sys.executable
     if not skip_pytest:
@@ -79,7 +74,7 @@ def main() -> None:
     (REPO / "CROSSCHECK_SF01.json").write_text(json.dumps(legs, indent=1))
     print("== merged both-SF CROSSCHECK_SF01.json", flush=True)
 
-    run("bench", [py, "bench.py"], env={"BENCH_BUDGET_S": budget})
+    run("bench", [py, "bench.py"])
     run("snapshot_gate", [py, "tools/snapshot_gate.py"])
     print("== ALL GATES GREEN — safe to commit the artifacts")
 
