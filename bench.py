@@ -6,7 +6,9 @@ Every pass builds each named query (every registered query when none is
 named) with its ``query()`` call and writes it to the noop sink, so every
 expression and shuffle runs and nothing comes back to the driver.
 ``--reps`` passes run (default 3).  A query's record holds the min of its
-build times, of its exec (noop write) times and of their sums.  Pass 1
+build times, of its exec (noop write) times and of their sums, and
+``build_jobs``: the most Spark jobs one of its builds started (a build
+should only plan; ``planshape.counted_build`` counts them).  Pass 1
 runs cold and the min discards it.  A query whose two best totals differ
 by more than 50% is re-run, at most twice, so that its min reflects
 steady state rather than one contended pass.
@@ -57,6 +59,7 @@ REPO = Path(__file__).resolve().parent
 sys.path.insert(0, str(REPO))
 
 import __spark_entry__ as entrymod  # noqa: E402
+from planning_center_data_pipeline_spark.planshape import counted_build  # noqa: E402
 
 NOISY = 0.5  # two best totals further apart than this: re-run the query
 CONTENDED = 0.15  # median two-best gap above this marks the window contended
@@ -93,9 +96,10 @@ def active_jobs(spark, grace_s: float = 1.0) -> list[int]:
 
 
 def time_queries(spark, qs, sf_dir, names, reps, samples=None, errors=None):
-    """Run `reps` passes over `names`, appending one (build, exec) sample
-    per query and pass to `samples`.  A query that raises, or leaves a job
-    active, moves to `errors` and is not run again."""
+    """Run `reps` passes over `names`, appending one (build, exec,
+    build_jobs) sample per query and pass to `samples`.  A query that
+    raises, or leaves a job active, moves to `errors` and is not run
+    again."""
     samples = {} if samples is None else samples
     errors = {} if errors is None else errors
     for _ in range(reps):
@@ -104,31 +108,32 @@ def time_queries(spark, qs, sf_dir, names, reps, samples=None, errors=None):
                 continue
             try:
                 t0 = time.perf_counter()
-                df = qs[name](spark, sf_dir)
+                df, jobs = counted_build(spark, lambda: qs[name](spark, sf_dir))
                 t1 = time.perf_counter()
                 df.write.format("noop").mode("overwrite").save()
                 t2 = time.perf_counter()
-                jobs = active_jobs(spark)
-                if jobs:
-                    raise RuntimeError(f"Spark jobs {jobs} still active after the query")
+                active = active_jobs(spark)
+                if active:
+                    raise RuntimeError(f"Spark jobs {active} still active after the query")
             except Exception as exc:
                 errors[name] = f"{type(exc).__name__}: {exc}"[:400]
                 samples.pop(name, None)
                 print(f"# {name}: ERROR {errors[name]}", file=sys.stderr, flush=True)
                 continue
-            samples.setdefault(name, []).append((round(t1 - t0, 3), round(t2 - t1, 3)))
-            print(f"# {name}: build {t1 - t0:.3f}s exec {t2 - t1:.3f}s",
+            samples.setdefault(name, []).append((round(t1 - t0, 3), round(t2 - t1, 3), jobs))
+            print(f"# {name}: build {t1 - t0:.3f}s ({jobs} jobs) exec {t2 - t1:.3f}s",
                   file=sys.stderr, flush=True)
     return samples, errors
 
 
-def record(samples: list[tuple[float, float]]) -> dict:
-    """One query's timing record from its (build, exec) samples."""
-    totals = [round(b + e, 3) for b, e in samples]
+def record(samples: list[tuple[float, float, int]]) -> dict:
+    """One query's timing record from its (build, exec, build_jobs) samples."""
+    totals = [round(b + e, 3) for b, e, _ in samples]
     return {
-        "build": min(b for b, _ in samples),
-        "exec": min(e for _, e in samples),
+        "build": min(b for b, _, _ in samples),
+        "exec": min(e for _, e, _ in samples),
         "total": min(totals),
+        "build_jobs": max(j for _, _, j in samples),
         "samples": totals,
     }
 
@@ -280,6 +285,7 @@ def write_detail(summary: dict, records: dict, errors: dict) -> None:
         "queries": {n: r["total"] for n, r in records.items()},
         "build": {n: r["build"] for n, r in records.items()},
         "exec": {n: r["exec"] for n, r in records.items()},
+        "build_jobs": {n: r["build_jobs"] for n, r in records.items()},
         "samples": {n: r["samples"] for n, r in records.items()},
         "errors": errors,
     }

@@ -44,6 +44,8 @@ def build_bloom_words(
     pos = ", ".join(
         f"pmod(xxhash64({seed}, {key_col}), {n_bits})" for seed in range(k)
     )
+    # kept: the bitmap becomes a literal in the probe expression, so the
+    # build collects its (at most n_bits/64) words
     words = (
         df.select(F.expr(f"explode(array({pos})) AS p"))
         .distinct()

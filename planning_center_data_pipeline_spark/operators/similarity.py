@@ -550,7 +550,8 @@ def brute_force_topk_pandas(
     # fuzzy.jw_micro_pairs): the query side is driver-collected and
     # shipped to every worker — an unbounded query side is a disguised
     # all-pairs GEMM that OOMs the driver first.  LIMIT+1 bounds the
-    # collect itself, not just the post-hoc check.
+    # collect itself, not just the post-hoc check.  kept at build: the
+    # query matrix is a closure constant of the scoring UDF.
     q_rows = (
         queries.select(
             F.col(id_col).alias("qid"), quantized(F.col(vec_col)).alias("qv")

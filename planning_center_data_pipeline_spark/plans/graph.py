@@ -75,10 +75,15 @@ def _copurchase_sym_adj(li: DataFrame) -> DataFrame:
     one core (Generate passes the pre-explode size estimate through).
 
     The checkpoint is lazy only with AQE off.  Under AQE, the session
-    default, taking it plans the subtree adaptively and runs its
-    shuffle stages while the query is built; the rows are still
-    materialized once and every consumer reads the checkpointed
-    partitions.
+    default, taking it runs the subtree's shuffle stages while the
+    query is built (its jobs show as `build_jobs` in PLANS.json).  It
+    stays because no caller reads clearly faster without it: an sf0.1
+    bench A/B (median of 3) without it read pagerank 3.59 -> 4.89 s,
+    powerlaw fit 1.37 -> 1.55 s, triangle count 3.94 -> 4.50 s (its
+    own checkpoint removed too), minhash neighbors 3.84 -> 4.28 s,
+    local clustering 2.27 -> 2.45 s, degree assortativity
+    1.94 -> 1.97 s and common neighbors 4.08 -> 3.91 s (inside the
+    parent's 0.34 s spread).
 
     Memory bound: one node's whole neighbor set sits in one
     aggregation buffer and one row.  Degree is bounded by
@@ -107,13 +112,13 @@ def basket_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top co-ordered part pairs with lift.
 
     n_orders, the pair counts and the per-part order counts all read
-    the same checkpointed baskets.  Lift is computed from exact integer
-    counts; the one-row n_orders is a broadcast cross join; top-50 via
-    orderBy+limit = TakeOrderedAndProject.
+    the same baskets, unmaterialized: a checkpoint read slower in the
+    sf0.1 bench A/B (2.50 s with it, 2.12 s without).  Lift is
+    computed from exact integer counts; the one-row n_orders is a
+    broadcast cross join; top-50 via orderBy+limit =
+    TakeOrderedAndProject.
     """
-    baskets = _baskets(load_table(spark, sf_dir, "lineitem")).localCheckpoint(
-        eager=False
-    )
+    baskets = _baskets(load_table(spark, sf_dir, "lineitem"))
     n_orders = baskets.agg(F.count(F.lit(1)).alias("n_orders"))
     counts = _part_counts(baskets)
     out = (
@@ -175,6 +180,7 @@ def cf_item_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequencies join back on the part key (dimension-bounded; AQE
     picks the strategy); top-100 via TakeOrderedAndProject.
     """
+    # kept: without it the sf0.1 bench A/B read 1.97 s vs 1.62 s
     baskets = _baskets(load_table(spark, sf_dir, "lineitem")).localCheckpoint(
         eager=False
     )
@@ -248,6 +254,8 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = (
         o.join(li, o.o_orderkey == li.l_orderkey)
         .select(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
+        # kept: sf0.1 bench A/Bs without it read 2.65 vs 2.71 s,
+        # 3.34 vs 2.82 s and 3.45 vs 3.34 s
         .localCheckpoint(eager=False)
     )
     cadj = raw.groupBy("c").agg(F.collect_set("p").alias("ps"))
@@ -351,25 +359,37 @@ def graph_bipartite_kcore_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: each round is two degree aggregations + two semi
     joins, all keyed on supplier/part ids (ordinary shuffles, no
     cross products).  Every round's surviving edge set is MATERIALIZED
-    once (eager localCheckpoint, the established iterative-plan
+    once (lazy localCheckpoint, the established iterative-plan
     pattern): without it the unrolled lineage makes round r's stats
     recompute rounds 0..r-1 from scratch — measured 39 s -> ~3 s at
     sf0.01.  Edge sets only shrink, so the per-round materialization
-    cost is monotonically decreasing; thresholds are two driver-side
-    ints from one bounded aggregate."""
+    cost is monotonically decreasing.  The thresholds (ks, kp) are a
+    scalar subquery over a one-row checkpoint of the round-0 edge
+    aggregate, so no build-time action reads them to the driver."""
     li = load_table(spark, sf_dir, "lineitem")
+    # kept: every round, the thresholds and the round-0 stats read these
+    # rows; without the checkpoint sf0.1 read 5.7 s build + 2.2 s exec,
+    # with it 3.1 + 0.7
     edges = (
         li.select(F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("p"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
-    e, ns, np_ = edges.agg(
-        F.count(F.lit(1)),
-        F.countDistinct("s"),
-        F.countDistinct("p"),
-    ).first()
-    ks = (e + ns - 1) // ns
-    kp = (e + np_ - 1) // np_
+    k = (
+        edges.agg(
+            F.count(F.lit(1)).alias("e"),
+            F.countDistinct("s").alias("ns"),
+            F.countDistinct("p").alias("np"),
+        )
+        .select(
+            F.expr("named_struct('s', (e + ns - 1) DIV ns, 'p', (e + np - 1) DIV np)")
+        )
+        # kept: each round's subquery reads this one row; re-aggregated
+        # per round the sf0.1 bench A/B read 3.59 s vs 3.10 s (parent),
+        # checkpointed 3.03 s vs 3.35 s
+        .localCheckpoint(eager=False)
+        .scalar()
+    )
 
     def stats(ed: DataFrame, rnd: int) -> DataFrame:
         return ed.agg(
@@ -385,14 +405,14 @@ def graph_bipartite_kcore_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         s_keep = (
             cur.groupBy("s")
             .agg(F.count(F.lit(1)).alias("d"))
-            .filter(F.col("d") >= ks)
+            .filter(F.col("d") >= k["s"])
             .select("s")
         )
         step = cur.join(s_keep, "s")
         p_keep = (
             step.groupBy("p")
             .agg(F.count(F.lit(1)).alias("d"))
-            .filter(F.col("d") >= kp)
+            .filter(F.col("d") >= k["p"])
             .select("p")
         )
         # r12 (guide §5): eager=False — the lazy checkpoint truncates
@@ -609,6 +629,8 @@ def graph_components_minlabel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # through its own orders, so least() is implicit, and min over
     # co-order parts == min over graph neighbors).  Node set: parts in
     # >= 1 multi-part order, the endpoints of the co-purchase edges.
+    # kept: every round reads both; without them the sf0.1 bench A/B
+    # read 5.93 s vs 4.45 s
     by_order = _baskets(
         load_table(spark, sf_dir, "lineitem"), min_size=2
     ).localCheckpoint(eager=False)
@@ -1141,6 +1163,8 @@ def graph_pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "deg",
             F.expr(f"CAST({_PR_MASS} AS BIGINT) DIV n_nodes").alias("base"),
         )
+        # kept: every round reads it; without it (and the adjacency's)
+        # the sf0.1 bench A/B read 4.89 s vs 3.59 s
         .localCheckpoint(eager=False)
     )
     ranks = unrolled_sql(
@@ -1461,6 +1485,8 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     adj = (
         oriented.groupBy("s")
         .agg(F.sort_array(F.collect_list("t")).alias("nbrs"))
+        # kept: without it (and the adjacency's) the sf0.1 bench A/B
+        # read 4.50 s vs 3.94 s
         .localCheckpoint(eager=False)
     )
     probe = adj.select(F.col("s"), F.col("nbrs").alias("nbrs_s")).select(

@@ -728,17 +728,15 @@ def stat_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     BUILDING segment's mean balance differ from the other segments'?
 
     Per nation, a two-sample permutation test: b = 0 uses the real
-    labels, b = 1..{B} relabels each customer by md5(custkey#b) % 2 —
+    labels, b = 1..200 relabels each customer by md5(custkey#b) % 2 —
     both engines draw the SAME permutations.  |meanA - meanB| across
     unequal group sizes compares by cross-multiplication
     |sA*nB - sB*nA| * (nAo*nBo)  vs  obs * (nAb*nBb), in
     DECIMAL(38,0): cents(1e9) x n(1e5) x n^2(1e10) overflows int64.
     p_i = 1 + #(T_b >= T_obs) over B+1 (add-one, exact integer).
     BH: sort p ascending (nation tiebreak), reject ranks <= kmax where
-    kmax = max k with p*m*{ainv} <= k*(B+1).  The rank window runs
-    over the 25-nation grid (bounded spine).""".format(
-        B=_BH_PERMS, ainv=_BH_ALPHA_INV
-    )
+    kmax = max k with p*m*20 <= k*(B+1).  The rank window runs
+    over the 25-nation grid (bounded spine)."""
     from pyspark.sql.window import Window
 
     from planning_center_data_pipeline_spark.operators.parallelism import (

@@ -579,11 +579,11 @@ def _hw_wide(spark: SparkSession, sf_dir: str, window: int) -> DataFrame:
 
 
 def ts_holt_winters_additive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Additive Holt-Winters (alpha {a}, beta {b}, gamma {g}, period
-    12) over the LAST {n} observed months of order revenue: classical
+    """Additive Holt-Winters (alpha 0.25, beta 0.125, gamma 0.25, period
+    12) over the LAST 36 observed months of order revenue: classical
     init (level = mean of the first 12 months, trend = mean month-over
     -month difference of the two init years, seasonals = first-year
-    deviations), then {u} UNROLLED update rounds — each round is a
+    deviations), then 24 UNROLLED update rounds — each round is a
     pure column projection on a ONE-ROW wide state (month values
     pivoted by known offset), so the whole recurrence is a single
     zero-shuffle, zero-join Catalyst plan after one fact rollup +
@@ -596,16 +596,13 @@ def ts_holt_winters_additive(spark: SparkSession, sf_dir: str) -> DataFrame:
     Window semantics (round-11 ADVICE): the 36 slots are CALENDAR-
     anchored — i = m - (maxm - 35) indexes months relative to the
     newest observed month, so a calendar month with NO orders inside
-    the window leaves its y{{i}} NULL and the recurrence propagates
+    the window leaves its y{i} NULL and the recurrence propagates
     NULL into all 12 forecasts, in BOTH engines identically.  That is
     the deliberate contract (a gap means the series is not a valid
     36-month spine, and a loud all-NULL answer beats silently
     zero-filling revenue); tests/test_wave50.py pins it with a
     gapped-spine fixture and asserts the real data's window is
-    gap-free.""".format(
-        a=_HW_ALPHA, b=_HW_BETA, g=_HW_GAMMA, n=_HW_WINDOW,
-        u=_HW_WINDOW - 12,
-    )
+    gap-free."""
     wide = _hw_wide(spark, sf_dir, _HW_WINDOW)
     y1 = " + ".join(f"y{i}" for i in range(12))
     y2 = " + ".join(f"y{i}" for i in range(12, 24))

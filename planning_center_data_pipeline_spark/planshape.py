@@ -6,14 +6,17 @@ root wraps and into the cached plan of an `InMemoryTableScan`, and
 counts the operators that decide what a plan costs at scale.  It walks
 the analyzed plan once more for the broadcast hints, which the
 optimizer folds into join nodes before the physical plan exists.
-`PLANS.json` (written by `tools/plan_manifest.py`) holds one record per
-query; `tests/test_shuffle_budgets.py` checks the fresh records against
-it, so a query keeps a global window, a broadcast fact table or a
-final-only aggregate only while its entry records one.
+`counted_build` counts the Spark jobs a query build starts; a build
+should only plan.  `PLANS.json` (written by `tools/plan_manifest.py`)
+holds one `manifest_record` per query; `tests/test_shuffle_budgets.py`
+checks the fresh records against it, so a query keeps a global window,
+a broadcast fact table, a final-only aggregate or a build-time job only
+while its entry records one.
 """
 
 from __future__ import annotations
 
+import time
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
@@ -67,6 +70,38 @@ def _hints(node) -> tuple[int, int, bool]:
     elif name == "ResolvedHint" and node.hints().toString() == "(strategy=broadcast)":
         hints, facts = hints + 1, facts + unshrunk
     return hints, facts, unshrunk
+
+
+def counted_build(spark, build) -> tuple[DataFrame, int]:
+    """Call `build()` (a query build) under a job group of its own;
+    return its DataFrame and the number of Spark jobs the call started.
+    A build that only plans starts none.  The status store hears of a
+    job through the asynchronous listener bus, so the count waits for
+    the bus to drain."""
+    sc = spark.sparkContext
+    group = f"build-{id(build)}-{time.monotonic_ns()}"
+    sc.setJobGroup(group, "query build")
+    try:
+        df = build()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def manifest_record(spark, build) -> dict:
+    """A query's `PLANS.json` record: the `plan_record` of one
+    `build()` with AQE off (the static plan, where a repeated exchange
+    shows as reused), plus `build_jobs`, the jobs a second `build()`
+    starts with AQE on, the session default under which taking a
+    checkpoint runs its subplan."""
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        rec = plan_record(build())
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    _, rec["build_jobs"] = counted_build(spark, build)
+    return rec
 
 
 def plan_record(df: DataFrame) -> dict:

@@ -1,6 +1,6 @@
-"""bench.py's pure parts, in process: the timing record, the lingering
-job check, and the SF-ladder exponent arithmetic with its row-count
-factor."""
+"""bench.py's pure parts, in process: the timing record with its
+build-time job count, the lingering job check, and the SF-ladder
+exponent arithmetic with its row-count factor."""
 
 from __future__ import annotations
 
@@ -22,6 +22,7 @@ def test_time_queries_records_build_exec_and_total_mins(spark, sf_dir):
     assert len(rec["samples"]) == 2
     assert rec["build"] > 0 and rec["exec"] > 0
     assert rec["total"] == min(rec["samples"]) > 0
+    assert rec["build_jobs"] == 0
 
 
 def test_active_jobs_reports_a_job_that_is_still_running(spark):

@@ -851,13 +851,13 @@ def test_no_session_global_views_in_package():
 
 
 def test_query_run_leaves_cache_manager_empty(spark, sf_dir):
-    """doc_ngram_jaccard scans its shingle table three times through a
-    lazy localCheckpoint; running it leaves nothing in the session's
+    """doc_minhash_lsh reads its shingle table twice through a lazy
+    localCheckpoint; running it leaves nothing in the session's
     CacheManager for a later build of the same plan to read."""
     from __spark_entry__ import queries
 
     spark.catalog.clearCache()
-    queries()["doc_ngram_jaccard"](spark, sf_dir).collect()
+    queries()["doc_minhash_lsh"](spark, sf_dir).collect()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 

@@ -128,6 +128,29 @@ def test_no_plan_module_binds_a_top_level_name_twice():
     assert not twice, f"top-level names bound twice: {twice}"
 
 
+def test_no_plan_function_opens_with_a_format_call():
+    """A function whose first statement is a string literal with
+    `.format(...)` applied opens with an expression, not a docstring:
+    `__doc__` is None and the query's `docs/QUERY_INDEX.md` row is
+    blank.  Write the values as literals."""
+    from planning_center_data_pipeline_spark import plans as P
+
+    bad = []
+    for path in sorted(Path(P.__file__).parent.glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            first = node.body[0]
+            if (
+                isinstance(first, ast.Expr)
+                and isinstance(first.value, ast.Call)
+                and isinstance(first.value.func, ast.Attribute)
+                and first.value.func.attr == "format"
+            ):
+                bad.append(f"{path.name}: {node.name}")
+    assert not bad, f"functions opening with a str.format call: {bad}"
+
+
 def test_no_oracle_is_vacuous_at_sf001(con_sf001):
     """A 0-row result hash-matches trivially — the oracle proves
     nothing.  Every oracled query must return at least one row at the

@@ -15,6 +15,11 @@ exchanges at runtime, never add them — and this suite's session
 settings).  Raising one is a deliberate edit of PLANS.json: regenerate
 it and review the diff.
 
+`build_jobs` is a ceiling too: the Spark jobs a second build of the
+query starts with AQE on (the session default), counted under a job
+group of its own.  A query build should only plan; a checkpoint or a
+driver action that runs at build time shows here, and a new one fails.
+
 `broadcast_hints` is the one exact count.  At sf0.001 every table is
 under `autoBroadcastJoinThreshold`, so a hint on a side Spark would
 broadcast anyway (q3's customer side, say) can be removed without
@@ -36,8 +41,13 @@ from collections import Counter
 import __spark_entry__ as entrymod
 import pytest
 from conftest import GATED_BROADCASTS, REPO, SF_SMOKE
+from pyspark.sql import functions as F
 
-from planning_center_data_pipeline_spark.planshape import plan_record
+from planning_center_data_pipeline_spark.planshape import (
+    counted_build,
+    manifest_record,
+    plan_record,
+)
 
 PLANS = json.loads((REPO / "PLANS.json").read_text())
 QUERIES = entrymod.queries()
@@ -65,6 +75,15 @@ def test_plan_record_sees_through_adaptive_root(spark):
     assert got["shuffles"] > 0, got
 
 
+def test_counted_build_counts_build_time_jobs(spark):
+    """A build that only plans starts no job; an eager checkpoint taken
+    while building runs its subplan, and the count sees it."""
+    _, idle = counted_build(spark, lambda: spark.range(8).groupBy(F.col("id") % 2).count())
+    assert idle == 0
+    _, eager = counted_build(spark, lambda: spark.range(8).localCheckpoint(eager=True))
+    assert eager >= 1
+
+
 def _recording(hint, calls):
     def recorded(df):
         calls.append(df)
@@ -82,11 +101,7 @@ def test_shuffle_budget(spark, monkeypatch, name, budget):
     hints = []
     for mod in HINTING:
         monkeypatch.setattr(mod, "gated_broadcast", _recording(mod.gated_broadcast, hints))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        got = plan_record(QUERIES[name](spark, SF_SMOKE))
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    got = manifest_record(spark, lambda: QUERIES[name](spark, SF_SMOKE))
     want = PLANS[name]
     ceilings = [k for k in want if k not in ("joins", "broadcast_hints")]
     over = {k: (got[k], want[k]) for k in ceilings if got[k] > want[k]}
