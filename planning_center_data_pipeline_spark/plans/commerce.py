@@ -15,13 +15,11 @@ from pyspark.sql.window import Window
 from planning_center_data_pipeline_spark.functions.exact import cents
 from planning_center_data_pipeline_spark.functions.temporal import epoch_us
 from planning_center_data_pipeline_spark.operators.dedup import md5_hash60
+from planning_center_data_pipeline_spark.operators.windows import running_sums
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
 # --- ABC / Pareto revenue classification ----------------------------------------
-
-_ABC_BUCKETS = 31  # percentile cutoffs -> <=32 value buckets
-
 
 def cust_abc_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A/B/C (Pareto) customer classification: customers sorted by
@@ -32,57 +30,23 @@ def cust_abc_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparisons (100*cum_before < 80*total), so the 3-row rollup is
     bit-portable.
 
-    Plan shape: one shuffle on custkey for the revenue rollup; the
-    global running sum uses the value-bucketed two-phase prefix sum
-    (31 percentile cutoffs from a 1-row broadcast aggregate assign
-    buckets by VALUE comparison — deterministic under re-execution,
-    unlike range-partition sampling; see ml_auc_rank), per-bucket
-    windows parallelize, and the only global window runs over the
-    <=32-row bucket totals.
+    Plan shape: one shuffle on custkey for the revenue rollup, then
+    `operators.windows.running_sums` on the negated revenue.
     """
     o = load_table(spark, sf_dir, "orders")
     rev = o.groupBy(F.col("o_custkey").alias("ck")).agg(
         F.sum(cents("o_totalprice")).alias("v")
     )
-    qs = [i / 32.0 for i in range(1, _ABC_BUCKETS + 1)]
-    cuts = rev.agg(
-        F.percentile("v", F.array(*[F.lit(q) for q in qs])).alias("vcut")
-    )  # 1 row
-    n_above = sum(
-        (F.col("v").cast("double") > F.element_at("vcut", i + 1)).cast("int")
-        for i in range(_ABC_BUCKETS)
-    )
-    p = rev.crossJoin(F.broadcast(cuts)).select("ck", "v", n_above.alias("bk"))
-    # within-bucket running revenue, descending value order
-    w_local = (
-        Window.partitionBy("bk")
-        .orderBy(F.desc("v"), "ck")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    local = p.withColumn("local_cum", F.sum("v").over(w_local))
-    totals = local.groupBy("bk").agg(F.sum("v").alias("b_total"))
-    w_off = Window.orderBy(F.desc("bk")).rowsBetween(
-        Window.unboundedPreceding, -1
-    )  # <=32 rows
-    offsets = totals.withColumn(
-        "offset", F.coalesce(F.sum("b_total").over(w_off), F.lit(0))
-    ).select("bk", "offset")
     grand = rev.agg(F.sum("v").alias("t"))  # 1 row
+    cum_before = F.col("cum_v") - F.col("v")
     classed = (
-        local.join(F.broadcast(offsets), "bk")
+        running_sums(rev.withColumn("nv", -F.col("v")), ["nv", "ck"], ["v"])
         .crossJoin(F.broadcast(grand))
         .select(
             "v",
-            (F.col("offset") + F.col("local_cum") - F.col("v")).alias(
-                "cum_before"
-            ),
             "t",
-        )
-        .select(
-            "v",
-            "t",
-            F.when(F.col("cum_before") * 100 < F.col("t") * 80, "A")
-            .when(F.col("cum_before") * 100 < F.col("t") * 95, "B")
+            F.when(cum_before * 100 < F.col("t") * 80, "A")
+            .when(cum_before * 100 < F.col("t") * 95, "B")
             .otherwise("C")
             .alias("abc_class"),
         )
@@ -554,58 +518,32 @@ def cust_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative share of total revenue in ppm (exact integer cross-
     multiplication: share_ppm = cum_cents*1e6 DIV total_cents).
 
-    Customer ranks and cumulative sums come from the 31-percentile-
-    cut two-phase prefix sum — no customer-cardinality global
-    window."""
+    Customer ranks and cumulative sums come from
+    `operators.windows.running_sums` over the revenue values — no
+    customer-cardinality global window."""
     o = load_table(spark, sf_dir, "orders")
     per = o.groupBy("o_custkey").agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
         .cast("bigint")
         .alias("cents")
     )
-    qs = [i / 32.0 for i in range(1, 32)]
-    g = per.groupBy("cents").agg(F.count(F.lit(1)).alias("nv"))
-    vcuts = g.agg(
-        F.percentile("cents", F.array(*[F.lit(x) for x in qs]), F.col("nv"))
-        .alias("vcut")
-    )  # 1 row
-    n_below = sum(
-        (F.col("cents").cast("double") > F.element_at("vcut", i + 1)).cast("int")
-        for i in range(31)
+    g = (
+        per.groupBy("cents")
+        .agg(F.count(F.lit(1)).alias("nv"))
+        .withColumn("c", F.col("cents") * F.col("nv"))
     )
-    p = g.crossJoin(F.broadcast(vcuts)).select(
-        "cents", "nv", n_below.alias("bk")
-    )
-    w_local = (
-        Window.partitionBy("bk")
-        .orderBy("cents")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    local = p.withColumn("cum_n_local", F.sum("nv").over(w_local)).withColumn(
-        "cum_c_local", F.sum(F.col("cents") * F.col("nv")).over(w_local)
-    )
-    totals = local.groupBy("bk").agg(
-        F.sum("nv").alias("t_n"),
-        F.sum(F.col("cents") * F.col("nv")).alias("t_c"),
-    )
-    w_off = Window.orderBy("bk").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.select(
-        "bk",
-        F.coalesce(F.sum("t_n").over(w_off), F.lit(0)).alias("off_n"),
-        F.coalesce(F.sum("t_c").over(w_off), F.lit(0)).alias("off_c"),
-    )
-    grand = totals.agg(
-        F.sum("t_n").cast("bigint").alias("n_cust"),
-        F.sum("t_c").cast("bigint").alias("tot_cents"),
+    grand = g.agg(
+        F.sum("nv").cast("bigint").alias("n_cust"),
+        F.sum("c").cast("bigint").alias("tot_cents"),
     )  # 1 row
     ranked = (
-        local.join(F.broadcast(offsets), "bk")
+        running_sums(g, ["cents"], ["nv", "c"])
         .crossJoin(F.broadcast(grand))
         .select(
             "cents",
             "nv",
-            (F.col("cum_n_local") + F.col("off_n")).alias("cum_n"),
-            (F.col("cum_c_local") + F.col("off_c")).alias("cum_c"),
+            F.col("cum_nv").alias("cum_n"),
+            "cum_c",
             "n_cust",
             "tot_cents",
         )
@@ -1450,7 +1388,7 @@ SELECT probe_key, cand_key AS best_match, jw_micro FROM (
 """
 
 
-# global window: partition-id offsets, <= 32 rows (two-phase revenue cumsum)
+# global window: running_sums' bucket offsets, <= 32 rows
 def li_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ABC x XYZ part classification:
 
@@ -1465,8 +1403,9 @@ def li_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Everything until the 9-row output is exact int64 (per-part sums are
     SF-invariant in TPC-H, so no overflow at scale).  Shape: one
-    (part, month) rollup, one part rollup, one ~part-count window for
-    the revenue rank, 9-cell aggregate."""
+    (part, month) rollup, one part rollup, the revenue rank from
+    `operators.windows.running_sums` on the negated revenue, 9-cell
+    aggregate."""
     li = load_table(spark, sf_dir, "lineitem")
     mexp = (
         (F.year("l_shipdate") - 1992) * 12 + F.month("l_shipdate") - 1
@@ -1489,17 +1428,8 @@ def li_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("q").cast("bigint").alias("sq"),
         F.sum(F.col("q") * F.col("q")).cast("bigint").alias("sqq"),
     )
-    # Global revenue cumsum WITHOUT a part-cardinality single-partition
-    # window (round-7 VERDICT item 5): 31 VALUE-deterministic
-    # percentile cuts on the negated revenue (1-row broadcast; value
-    # buckets, not repartitionByRange+pid — the range sampler reseeds
-    # per execution) split parts into buckets ordered by rev DESC, sum
-    # locally per bucket, then shift by the preceding buckets' totals
-    # — the only global-ordered stage is the <=32-row offset window.
-    # The grand total comes from a 1-row broadcast aggregate instead
-    # of SUM() OVER ().
     # r13: checkpoint the part-level relation ONCE — previously every
-    # broadcast build (vcuts, offsets, tot_row) re-derived the full
+    # broadcast build (cuts, offsets, grand total) re-derived the full
     # lineitem -> pm -> per_part lineage, running the widest shuffles
     # 4-5x per query (84 Exchange nodes in the printed plan).
     neg = (
@@ -1508,48 +1438,17 @@ def li_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         # kept: without it the sf0.1 bench A/B read 3.15 s vs 2.82 s
         .localCheckpoint(eager=False)
     )
-    qs = [i / 32.0 for i in range(1, 32)]
-    # cuts from the $1k-quantized revenue rollup (nrev DIV 100000):
-    # per-part revenues are near-distinct, so the rollup must quantize
-    # to bound the percentile buffer; bucketing on a monotone function
-    # of nrev keeps the global rank exact (ties share a bucket).
-    qv = neg.groupBy(F.expr("nrev DIV 100000").alias("v")).agg(
-        F.count(F.lit(1)).alias("freq")
-    )
-    vcuts = qv.agg(
-        F.percentile("v", F.array(*[F.lit(x) for x in qs]), F.col("freq"))
-        .alias("vcut")
-    )  # 1 row
-    # r13 (guide §1.4/§7.3 — plan size): bucket = count of cuts below
-    # the value, as ONE array filter over the 31-cut vector instead of
-    # a 31-term sum of element_at comparisons — the same integer per
-    # row (element order in vcut is ascending but count is order-free),
-    # a 62x smaller expression tree to analyze/codegen.
-    n_below = F.expr(
-        "size(filter(vcut, x -> CAST(nrev DIV 100000 AS DOUBLE) > x))"
-    ).cast("int")
-    p = neg.crossJoin(F.broadcast(vcuts)).select(
-        "l_partkey", "rev", "sq", "sqq", "M", "nrev", n_below.alias("bk")
-    )
-    w_local = (
-        Window.partitionBy("bk")
-        .orderBy("nrev", "l_partkey")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    local = p.withColumn("cum_local", F.sum("rev").over(w_local))
-    # r13: bucket totals come straight from p (the window adds columns,
-    # never changes rev), so the cum_local window executes exactly once
-    # — in the final join — instead of once per totals consumer.
-    totals = p.groupBy("bk").agg(F.sum("rev").alias("p_total"))
-    w_off = Window.orderBy("bk").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.withColumn(
-        "offset", F.coalesce(F.sum("p_total").over(w_off), F.lit(0))
-    ).select("bk", "offset")
-    # grand total = sum of the <=32 bucket totals (reuses the totals
-    # rollup instead of re-aggregating the part-cardinality relation)
-    tot_row = totals.agg(F.sum("p_total").cast("bigint").alias("tot"))  # 1 row
+    tot_row = neg.agg(F.sum("rev").cast("bigint").alias("tot"))  # 1 row
+    # per-part revenues are near-distinct, so the buckets come from the
+    # $1k-quantized revenue (nrev DIV 100000) to bound the percentile
+    # buffer; the quantization is monotone, so the rank stays exact.
     ranked = (
-        local.join(F.broadcast(offsets), "bk")
+        running_sums(
+            neg,
+            ["nrev", "l_partkey"],
+            ["rev"],
+            bucket_value="nrev DIV 100000",
+        )
         .crossJoin(F.broadcast(tot_row))
         .select(
             "l_partkey",
@@ -1557,7 +1456,7 @@ def li_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sq",
             "sqq",
             "M",
-            (F.col("cum_local") + F.col("offset")).alias("cum"),
+            F.col("cum_rev").alias("cum"),
             "tot",
         )
     )

@@ -17,6 +17,7 @@ from planning_center_data_pipeline_spark.operators.sampling import (
     aes_key_sql,
     weighted_sample,
 )
+from planning_center_data_pipeline_spark.operators.windows import running_sums
 from planning_center_data_pipeline_spark.plans.documents_dedup import _SHINGLE_CTE
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
@@ -1280,48 +1281,22 @@ ORDER BY bin
 def doc_quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-score decile binning (curriculum/filter thresholds):
     ntile(10) over the full corpus ordered by (quality, doc_id), then
-    per-decile stats.  The exact global rank is computed WITHOUT a
-    single-partition window (round-7 VERDICT item 5): 31 VALUE-
-    deterministic percentile cuts on quality (1-row broadcast; value
-    buckets, not repartitionByRange+pid — the range sampler reseeds
-    per execution), row_number locally per bucket, shift by the
-    preceding buckets' counts (<=32-row offset window), then apply
-    the exact SQL-standard NTILE formula — the first n%10 tiles carry
-    one extra row — from the 1-row corpus count.  Bit-identical to
-    ntile(10) OVER (ORDER BY quality, doc_id) and fully parallel."""
+    per-decile stats.  The exact global rank is a running count from
+    `operators.windows.running_sums` (no single-partition window), and
+    the exact SQL-standard NTILE formula (the first n%10 tiles carry
+    one extra row) applies it with the 1-row corpus count.
+    Bit-identical to ntile(10) OVER (ORDER BY quality, doc_id)."""
     d = load_table(spark, sf_dir, "documents")
-    q = d.select("doc_id", X.quality_score(F.col("text")).alias("quality"))
-    qcs = [i / 32.0 for i in range(1, 32)]
-    # frequency-weighted percentile over the distinct-quality rollup:
-    # identical cuts to percentile over raw docs with a buffer bounded
-    # by the score lattice (the quality formula emits a finite value
-    # set); a truly continuous score would get a micro-unit quantize
-    # here (round(q*1e6)) — monotone bucketing keeps the rank exact.
-    qfreq = q.groupBy("quality").agg(F.count(F.lit(1)).alias("freq"))
-    vcuts = qfreq.agg(
-        F.percentile(
-            "quality", F.array(*[F.lit(x) for x in qcs]), F.col("freq")
-        ).alias("vcut")
-    )  # 1 row
-    n_below = sum(
-        (F.col("quality") > F.element_at("vcut", i + 1)).cast("int")
-        for i in range(31)
+    q = d.select(
+        "doc_id",
+        X.quality_score(F.col("text")).alias("quality"),
+        F.lit(1).alias("one"),
     )
-    p = q.crossJoin(F.broadcast(vcuts)).select(
-        "doc_id", "quality", n_below.alias("bk")
-    )
-    w_local = Window.partitionBy("bk").orderBy("quality", "doc_id")
-    local = p.withColumn("rn_local", F.row_number().over(w_local))
-    totals = local.groupBy("bk").agg(F.count(F.lit(1)).alias("p_total"))
-    w_off = Window.orderBy("bk").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.withColumn(
-        "offset", F.coalesce(F.sum("p_total").over(w_off), F.lit(0))
-    ).select("bk", "offset")
     nrow = q.agg(F.count(F.lit(1)).alias("n"))  # 1 row
     ranked = (
-        local.join(F.broadcast(offsets), "bk")
+        running_sums(q, ["quality", "doc_id"], ["one"])
         .crossJoin(F.broadcast(nrow))
-        .withColumn("rn", F.col("rn_local") + F.col("offset"))
+        .withColumnRenamed("cum_one", "rn")
     )
     # exact NTILE(10): with n = q*10 + s, tiles 1..s hold q+1 rows
     # (front-loaded, SQL standard); CASE is lazy so the DIV in the
@@ -1648,50 +1623,22 @@ def doc_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative token count in doc_id order — the manifest step before
     writing training shards.
 
-    A naive `SUM() OVER (ORDER BY doc_id)` funnels the whole corpus
-    through ONE partition; this uses the scalable two-phase prefix sum
-    instead: range-partition on doc_id, per-partition running sums (32
-    parallel windows), then a window over the tiny per-partition-totals
-    table (rows = #partitions) broadcast back as offsets.  Identical
-    result, no single-partition stage over the data."""
+    The cumulative count is `operators.windows.running_sums`, not a
+    `SUM() OVER (ORDER BY doc_id)` that funnels the whole corpus
+    through one partition."""
     d = load_table(spark, sf_dir, "documents")
     ntok = d.select(
         "doc_id", X.token_count(F.col("text")).cast("long").alias("n_toks")
     )
-    # NOTE: pid-based prefix sums rely on Catalyst reusing the range
-    # exchange between the offsets subtree and the stream side — range
-    # boundaries are SAMPLED per execution, so without reuse the two
-    # sides can disagree (observed in an aggregated-input variant; see
-    # ml_metrics.ml_auc_rank for the value-deterministic bucket version).
-    # This plan's exchange reuse is stable: hash-checked repeatedly.
-    p = ntok.repartitionByRange(32, "doc_id").withColumn(
-        "pid", F.spark_partition_id()
-    )
-    w_local = (
-        Window.partitionBy("pid")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    local = p.withColumn("local_cum", F.sum("n_toks").over(w_local))
-    totals = local.groupBy("pid").agg(F.sum("n_toks").alias("p_total"))
-    # window over <= 32 rows — the only global-ordered stage, by design
-    w_off = Window.orderBy("pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = totals.withColumn(
-        "offset", F.coalesce(F.sum("p_total").over(w_off), F.lit(0))
-    ).select("pid", "offset")
+    cum = F.col("cum_n_toks")
     return (
-        local.join(F.broadcast(offsets), "pid")
-        .withColumn("cum_toks", F.col("local_cum") + F.col("offset"))
-        .withColumn(
-            "shard_id",
-            F.floor(
-                (F.col("cum_toks") - F.col("n_toks"))
-                / F.lit(_SHARD_TOKENS)
-            ),
+        running_sums(ntok, ["doc_id"], ["n_toks"])
+        .select(
+            "doc_id",
+            "n_toks",
+            cum.alias("cum_toks"),
+            F.floor((cum - F.col("n_toks")) / _SHARD_TOKENS).alias("shard_id"),
         )
-        .select("doc_id", "n_toks", "cum_toks", "shard_id")
         .orderBy("doc_id")
     )
 

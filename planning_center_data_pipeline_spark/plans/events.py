@@ -33,6 +33,7 @@ from planning_center_data_pipeline_spark.functions.exact import (
 )
 from planning_center_data_pipeline_spark.functions.temporal import epoch_us
 from planning_center_data_pipeline_spark.operators.unrolled import unrolled_sql
+from planning_center_data_pipeline_spark.operators.windows import running_sums
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
@@ -2486,7 +2487,7 @@ FROM credited GROUP BY 1, 2 ORDER BY ttype, iso_dow
 
 # --- exact p90 activity cut --------------------------------------------------
 
-# global window: value-bucket totals, <= 32 rows (two-phase)
+# global window: running_sums' bucket offsets, <= 32 rows
 def ev_power_users_p90(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Users above the exact 90th-percentile event count, and their
     share of all events.  The threshold is the count at rank
@@ -2497,41 +2498,18 @@ def ev_power_users_p90(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_user = e.groupBy("user_id").agg(F.count("*").alias("cnt"))
     # The rank-ceil(0.9n) threshold VALUE depends only on how many
     # users sit at each count (the user_id tiebreak orders equal
-    # counts among themselves), so it is computed on the per-VALUE
-    # rollup with the value-bucketed two-phase prefix sum (same shape
-    # as stat_mann_whitney) instead of a user-cardinality global
-    # row_number: 31 percentile cuts from a 1-row broadcast, local
-    # running counts per bucket, one <=32-row offset window.
+    # counts among themselves), so the running count runs over the
+    # per-VALUE rollup instead of a user-cardinality row_number.
     g = per_user.groupBy("cnt").agg(F.count(F.lit(1)).alias("nv"))
-    qs = [i / 32.0 for i in range(1, 32)]
-    vcuts = g.agg(
-        F.percentile("cnt", F.array(*[F.lit(x) for x in qs])).alias("vcut")
-    )  # 1 row
-    n_below = sum(
-        (F.col("cnt").cast("double") > F.element_at("vcut", i + 1)).cast("int")
-        for i in range(31)
-    )
-    gb = g.crossJoin(F.broadcast(vcuts)).select("cnt", "nv", n_below.alias("bk"))
-    w_local = (
-        Window.partitionBy("bk")
-        .orderBy("cnt")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    local = gb.withColumn("local_cum", F.sum("nv").over(w_local))
-    totals = local.groupBy("bk").agg(F.sum("nv").alias("p_total"))
-    w_off = Window.orderBy("bk").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.withColumn(
-        "offset", F.coalesce(F.sum("p_total").over(w_off), F.lit(0))
-    ).select("bk", "offset")
     nrow = per_user.agg(F.count(F.lit(1)).alias("n"))  # 1 row
     thr = (
-        local.join(F.broadcast(offsets), "bk")
+        running_sums(g, ["cnt"], ["nv"])
         .crossJoin(F.broadcast(nrow))
-        .withColumn("start", F.col("local_cum") + F.col("offset") - F.col("nv"))
+        .withColumn("start", F.col("cum_nv") - F.col("nv"))
         .withColumn("target", F.ceil(F.lit(0.9) * F.col("n")))
         .filter(
             (F.col("start") < F.col("target"))
-            & (F.col("target") <= F.col("start") + F.col("nv"))
+            & (F.col("target") <= F.col("cum_nv"))
         )
         .select(F.col("cnt").alias("thr"))
     )

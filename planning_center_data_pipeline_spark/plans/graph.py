@@ -16,6 +16,7 @@ from planning_center_data_pipeline_spark.operators.dedup import (
 )
 from planning_center_data_pipeline_spark.operators.joins import gated_broadcast
 from planning_center_data_pipeline_spark.operators.unrolled import unrolled_sql
+from planning_center_data_pipeline_spark.operators.windows import running_sums
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
@@ -1633,41 +1634,24 @@ def rec_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     count.  The word2vec/recsys negative-sampling table, reproducible
     bit-for-bit in any engine.
 
-    Plan shape: cumulative weights come from the two-phase prefix sum
-    (range-partition on item, per-partition running sums, tiny offsets
-    table broadcast back — no single-partition window over the items).
-    The draw->interval lookup is a BUCKETED range join: each interval
-    covers its span's buckets (explode bounded by W/B + n_items total
-    rows), draws hash to one bucket, and the join is a plain equi-join
-    on bucket plus an exact containment filter.  Never a cartesian:
-    at 100 TB this shuffles on bucket id, and the output is one row
-    per SAMPLED item (<= min(draws, items)).
+    Plan shape: cumulative weights come from
+    `operators.windows.running_sums` (no single-partition window over
+    the items).  The draw->interval lookup is a BUCKETED range join:
+    each interval covers its span's buckets (explode bounded by W/B +
+    n_items total rows), draws hash to one bucket, and the join is a
+    plain equi-join on bucket plus an exact containment filter.  Never
+    a cartesian: at 100 TB this shuffles on bucket id, and the output
+    is one row per SAMPLED item (<= min(draws, items)).
     """
     li = load_table(spark, sf_dir, "lineitem")
     w = li.groupBy(F.col("l_partkey").alias("item")).agg(
         F.count(F.lit(1)).alias("wt")
     )
-    p = w.repartitionByRange(32, "item").withColumn(
-        "pid", F.spark_partition_id()
+    cum = running_sums(w, ["item"], ["wt"]).select(
+        "item", "wt", (F.col("cum_wt") - F.col("wt")).alias("s"),
+        F.col("cum_wt").alias("e"),
     )
-    w_local = (
-        Window.partitionBy("pid").orderBy("item").rowsBetween(
-            Window.unboundedPreceding, 0
-        )
-    )
-    local = p.withColumn("local_cum", F.sum("wt").over(w_local))
-    totals = local.groupBy("pid").agg(F.sum("wt").alias("p_total"))
-    w_off = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.withColumn(
-        "offset", F.coalesce(F.sum("p_total").over(w_off), F.lit(0))
-    ).select("pid", "offset")
-    cum = (
-        local.join(F.broadcast(offsets), "pid")
-        .withColumn("cum_end", F.col("local_cum") + F.col("offset"))
-        .select("item", "wt", (F.col("cum_end") - F.col("wt")).alias("s"),
-                F.col("cum_end").alias("e"))
-    )
-    grand = cum.agg(F.sum("wt").alias("w_total"))  # 1 row
+    grand = w.agg(F.sum("wt").alias("w_total"))  # 1 row
     intervals = cum.select(
         "item", "wt", "s", "e",
         F.explode(

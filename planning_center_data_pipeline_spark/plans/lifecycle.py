@@ -397,10 +397,9 @@ ORDER BY custkey, valid_from, priority
 #
 # The bit interleave is pure integer arithmetic ((x div 2^i) mod 2 —
 # no engine-specific shift operators) so the DuckDB oracle runs the
-# byte-identical formula.  The global row_number here is the
-# demonstration shape; at 100 TB the same layout comes from
-# repartitionByRange(zcode) + sortWithinPartitions (no single-task
-# sort), as in doc_shard_manifest's two-phase prefix sum.
+# byte-identical formula.  File numbers come from a prefix sum over
+# the <= 65536-row zcode rollup (see the comment in the function), so
+# no stage sorts or ranks the fact rows on one task.
 
 _ROWS_PER_FILE = 1000
 

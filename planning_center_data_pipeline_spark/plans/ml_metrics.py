@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from planning_center_data_pipeline_spark.functions.exact import cents
+from planning_center_data_pipeline_spark.operators.windows import running_sums
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
@@ -25,19 +26,9 @@ def ml_auc_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``start`` lower-scored rows contributes npos * (2*start + cnt
     + 1).  One division at the end, rounded once.
 
-    Plan shape: the per-score rollup shuffles once on the score; the
-    rank offsets come from a scalable two-phase prefix sum over
-    VALUE-deterministic buckets: 31 percentile cutoffs (a 1-row
-    aggregate, broadcast back) assign each score group a bucket by
-    comparison, per-bucket running sums parallelize, and the only
-    globally-ordered window runs over the <= 32-row bucket totals.
-    Unlike a repartitionByRange + spark_partition_id() prefix sum,
-    bucket membership depends only on the VALUE, so the offsets
-    subtree and the stream side cannot disagree when Catalyst
-    executes the bucketed subtree twice (range-boundary SAMPLING is
-    per-execution and made that shape nondeterministic — measured:
-    three different AUCs in three runs at sf0.1).  The final reduce
-    is a 1-row aggregate.
+    Plan shape: the per-score rollup shuffles once on the score, the
+    rank offsets come from `operators.windows.running_sums` over the
+    score groups, and the final reduce is a 1-row aggregate.
     """
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
@@ -56,34 +47,9 @@ def ml_auc_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("cnt"),
         F.sum("pos").alias("npos"),
     )
-    qs = [i / 32.0 for i in range(1, 32)]
-    vcuts = g.agg(
-        F.percentile("v", F.array(*[F.lit(q) for q in qs])).alias("vcut")
-    )  # 1 row, deterministic function of the data
-    n_below = sum(
-        (F.col("v").cast("double") > F.element_at("vcut", i + 1)).cast("int")
-        for i in range(31)
-    )
-    p = g.crossJoin(F.broadcast(vcuts)).select(
-        "v", "cnt", "npos", n_below.alias("bk")
-    )
-    w_local = (
-        Window.partitionBy("bk")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    local = p.withColumn("local_cum", F.sum("cnt").over(w_local))
-    totals = local.groupBy("bk").agg(F.sum("cnt").alias("p_total"))
-    w_off = Window.orderBy("bk").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.withColumn(
-        "offset", F.coalesce(F.sum("p_total").over(w_off), F.lit(0))
-    ).select("bk", "offset")
-    ranked = (
-        local.join(F.broadcast(offsets), "bk")
-        # rows strictly below this tie group
-        .withColumn(
-            "start", F.col("local_cum") + F.col("offset") - F.col("cnt")
-        )
+    # rows strictly below this tie group
+    ranked = running_sums(g, ["v"], ["cnt"]).withColumn(
+        "start", F.col("cum_cnt") - F.col("cnt")
     )
     return ranked.agg(
         F.sum("npos").alias("n_pos"),

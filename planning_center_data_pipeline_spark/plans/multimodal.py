@@ -13,6 +13,7 @@ from planning_center_data_pipeline_spark.operators.multimodal import (
     media_from_documents,
     resize_thumb,
 )
+from planning_center_data_pipeline_spark.operators.windows import running_sums
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
@@ -437,47 +438,26 @@ FROM t ORDER BY media_id
 # Training loaders for image/audio/video corpora read sequential tar
 # shards of roughly equal BYTES (WebDataset / tar-archive pattern), so
 # the shard plan packs media blobs by byte budget in a deterministic
-# global order.  Same scalable two-phase prefix sum as
-# doc_shard_manifest (range-partition local cumsums + a <=32-row
-# offsets window — no single-partition stage over the data), but
-# byte-weighted and aggregated to one row per output shard: the
-# driver table a shard-writer job consumes.  Budget here is 64 KB for
-# the synthetic corpus; production uses ~1 GB with the same plan.
+# global order.  The byte offsets come from
+# `operators.windows.running_sums` (no single-partition stage over the
+# data), aggregated to one row per output shard: the driver table a
+# shard-writer job consumes.  Budget here is 64 KB for the synthetic
+# corpus; production uses ~1 GB with the same plan.
 
 _SHARD_BYTES = 64_000
 
 
-# global window: partition-id offsets, <= 32 rows
+# global window: running_sums' bucket offsets, <= 32 rows
 def mm_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
     d = load_table(spark, sf_dir, "documents")
     sizes = d.select(
         F.col("doc_id").alias("media_id"),
         F.octet_length(F.encode("text", "utf-8")).cast("long").alias("n_bytes"),
     )
-    p = sizes.repartitionByRange(32, "media_id").withColumn(
-        "pid", F.spark_partition_id()
-    )
-    w_local = (
-        Window.partitionBy("pid")
-        .orderBy("media_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    local = p.withColumn("local_cum", F.sum("n_bytes").over(w_local))
-    totals = local.groupBy("pid").agg(F.sum("n_bytes").alias("p_total"))
-    w_off = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.withColumn(
-        "offset", F.coalesce(F.sum("p_total").over(w_off), F.lit(0))
-    ).select("pid", "offset")
+    shard = F.floor((F.col("cum_n_bytes") - F.col("n_bytes")) / F.lit(_SHARD_BYTES))
     return (
-        local.join(F.broadcast(offsets), "pid")
-        .withColumn("cum", F.col("local_cum") + F.col("offset"))
-        .withColumn(
-            "shard_id",
-            F.floor((F.col("cum") - F.col("n_bytes")) / F.lit(_SHARD_BYTES)),
-        )
-        .groupBy("shard_id")
+        running_sums(sizes, ["media_id"], ["n_bytes"])
+        .groupBy(shard.alias("shard_id"))
         .agg(
             F.count(F.lit(1)).alias("n_items"),
             F.sum("n_bytes").alias("total_bytes"),

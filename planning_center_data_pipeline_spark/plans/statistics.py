@@ -10,6 +10,7 @@ from pyspark.sql.window import Window
 from planning_center_data_pipeline_spark.functions.exact import cents, sql_cents
 from planning_center_data_pipeline_spark.operators.dedup import md5_hash60
 from planning_center_data_pipeline_spark.operators.parallelism import cpu_floor
+from planning_center_data_pipeline_spark.operators.windows import running_sums
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
@@ -2195,8 +2196,6 @@ _KS_SEG_A = "AUTOMOBILE"
 
 _KS_SEG_B = "HOUSEHOLD"
 
-_KS_BUCKETS = 31
-
 
 def stat_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact two-sample Kolmogorov-Smirnov D: are AUTOMOBILE and
@@ -2209,10 +2208,9 @@ def stat_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break on the smaller v) is engine-portable; the single
     division happens once, at the end.
 
-    Plan shape: per-value rollup (one shuffle), the value-bucketed
-    two-phase prefix sum (31 percentile cutoffs from a 1-row
-    broadcast; the only global window runs over the <=32-row bucket
-    totals), then TakeOrderedAndProject for the argmax row.
+    Plan shape: per-value rollup (one shuffle), both ECDF numerators
+    from one `operators.windows.running_sums`, then
+    TakeOrderedAndProject for the argmax row.
     """
     c = load_table(spark, sf_dir, "customer")
     base = c.filter(
@@ -2225,48 +2223,19 @@ def stat_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("in_a").alias("ca"),
         F.sum(F.lit(1) - F.col("in_a")).alias("cb"),
     )
-    qs = [i / 32.0 for i in range(1, _KS_BUCKETS + 1)]
-    vcuts = g.agg(
-        F.percentile("v", F.array(*[F.lit(q) for q in qs])).alias("vcut")
-    )  # 1 row
-    n_below = sum(
-        (F.col("v").cast("double") > F.element_at("vcut", i + 1)).cast("int")
-        for i in range(_KS_BUCKETS)
-    )
-    p = g.crossJoin(F.broadcast(vcuts)).select(
-        "v", "ca", "cb", n_below.alias("bk")
-    )
-    w_local = (
-        Window.partitionBy("bk")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    local = p.withColumn("la", F.sum("ca").over(w_local)).withColumn(
-        "lb", F.sum("cb").over(w_local)
-    )
-    totals = local.groupBy("bk").agg(
-        F.sum("ca").alias("ta"), F.sum("cb").alias("tb")
-    )
-    w_off = Window.orderBy("bk").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.select(
-        "bk",
-        F.coalesce(F.sum("ta").over(w_off), F.lit(0)).alias("oa"),
-        F.coalesce(F.sum("tb").over(w_off), F.lit(0)).alias("ob"),
-    )
     n1n2 = base.agg(
         F.sum("in_a").alias("n1"),
         F.sum(F.lit(1) - F.col("in_a")).alias("n2"),
     )  # 1 row
     cum = (
-        local.join(F.broadcast(offsets), "bk")
+        running_sums(g, ["v"], ["ca", "cb"])
         .crossJoin(F.broadcast(n1n2))
         .select(
             "v",
             "n1",
             "n2",
             F.abs(
-                (F.col("la") + F.col("oa")) * F.col("n2")
-                - (F.col("lb") + F.col("ob")) * F.col("n1")
+                F.col("cum_ca") * F.col("n2") - F.col("cum_cb") * F.col("n1")
             ).alias("num"),
         )
     )
@@ -2322,8 +2291,6 @@ _MW_SEG_A = "BUILDING"
 
 _MW_SEG_B = "MACHINERY"
 
-_MW_BUCKETS = 31
-
 
 def stat_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tie-corrected Mann-Whitney U test: do BUILDING and MACHINERY
@@ -2338,10 +2305,7 @@ def stat_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically in both engines.  p_superior = U/(n1*n2) is the
     common-language effect size (the AUC between the groups).
 
-    Plan shape: identical to ml_auc_rank — per-value rollup (one
-    shuffle), 31 VALUE-deterministic percentile buckets from a 1-row
-    broadcast, per-bucket running counts, one global window over the
-    <=32-row bucket totals, then a 1-row reduce.
+    Plan shape: identical to ml_auc_rank.
     """
     c = load_table(spark, sf_dir, "customer")
     base = c.filter(
@@ -2353,30 +2317,8 @@ def stat_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = base.groupBy("v").agg(
         F.count(F.lit(1)).alias("cnt"), F.sum("in_a").alias("na")
     )
-    qs = [i / 32.0 for i in range(1, _MW_BUCKETS + 1)]
-    vcuts = g.agg(
-        F.percentile("v", F.array(*[F.lit(q) for q in qs])).alias("vcut")
-    )  # 1 row
-    n_below = sum(
-        (F.col("v").cast("double") > F.element_at("vcut", i + 1)).cast("int")
-        for i in range(_MW_BUCKETS)
-    )
-    p = g.crossJoin(F.broadcast(vcuts)).select(
-        "v", "cnt", "na", n_below.alias("bk")
-    )
-    w_local = (
-        Window.partitionBy("bk")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    local = p.withColumn("local_cum", F.sum("cnt").over(w_local))
-    totals = local.groupBy("bk").agg(F.sum("cnt").alias("p_total"))
-    w_off = Window.orderBy("bk").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.withColumn(
-        "offset", F.coalesce(F.sum("p_total").over(w_off), F.lit(0))
-    ).select("bk", "offset")
-    ranked = local.join(F.broadcast(offsets), "bk").withColumn(
-        "start", F.col("local_cum") + F.col("offset") - F.col("cnt")
+    ranked = running_sums(g, ["v"], ["cnt"]).withColumn(
+        "start", F.col("cum_cnt") - F.col("cnt")
     )
     red = ranked.agg(
         F.sum("na").alias("n1"),

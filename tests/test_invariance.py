@@ -38,6 +38,12 @@ SF_DIR = "/root/testdata/sf0.01"
         Q["cust_abc_pareto"],              # bucketed global running sum
         Q["doc_incremental_dedup_merge"],  # fp join + in-batch window
         Q["stat_ks_two_sample"],           # bucketed two-sided ECDF argmax
+        Q["cust_lorenz_deciles"],          # running count and revenue sums
+        Q["li_abc_xyz_matrix"],            # running sum on a quantized key
+        Q["stat_mann_whitney"],            # running rank offsets
+        Q["ev_power_users_p90"],           # running count to the p90 rank
+        Q["doc_quality_deciles"],          # running row number for NTILE
+        Q["doc_shard_manifest"],           # running token count per doc
     ],
 )
 def test_result_invariant_to_shuffle_partitions(spark, fn):

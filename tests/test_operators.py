@@ -4,11 +4,12 @@ from __future__ import annotations
 
 from pathlib import Path
 
+import duckdb
 import pytest
-from conftest import GATED_BROADCASTS
+from conftest import GATED_BROADCASTS, SF_SMOKE
 from pyspark.sql import functions as F
 
-from __spark_entry__ import queries
+from __spark_entry__ import oracle_sql, queries
 from planning_center_data_pipeline_spark.operators.dedup import (
     jaccard_pairs,
     minhash_near_dups,
@@ -23,8 +24,11 @@ from planning_center_data_pipeline_spark.operators.similarity import (
 )
 from planning_center_data_pipeline_spark.operators.windows import (
     range_copy,
+    running_sums,
     top_k_per_group,
 )
+from planning_center_data_pipeline_spark.sources.tables import TABLES
+from tools.crosscheck import canon, value_hash
 
 Q = queries()
 
@@ -131,6 +135,101 @@ def test_top_k_per_group(spark, sf_dir):
     )
     counts = out.groupBy("o_custkey").count().collect()
     assert all(r["count"] <= 2 for r in counts)
+
+
+def _python_running_sums(rows, sort_key, sums):
+    """{id: (running sum of each `sums` column)} over `rows` sorted by
+    `sort_key`."""
+    out, acc = {}, [0] * len(sums)
+    for r in sorted(rows, key=sort_key):
+        acc = [a + r[c] for a, c in zip(acc, sums)]
+        out[r["id"]] = tuple(acc)
+    return out
+
+
+@pytest.mark.parametrize("parts", [1, 8])
+@pytest.mark.parametrize(
+    "order,sums,bucket_value,sort_key",
+    [
+        # 60 distinct keys, a quarter of the rows tied on k = 17 across
+        # several cuts; two sum columns
+        (["k", "id"], ["w", "v"], None, lambda r: (r["k"], r["id"])),
+        # descending order through a negated key
+        (["nk", "id"], ["w"], None, lambda r: (-r["k"], r["id"])),
+        # a double key with a tie-break column
+        (["d", "id"], ["w"], None, lambda r: (r["d"], r["id"])),
+        # one distinct value: every row in one bucket
+        (["one", "id"], ["w"], None, lambda r: r["id"]),
+        # buckets from a quantized key
+        (["k", "id"], ["w"], "k DIV 8", lambda r: (r["k"], r["id"])),
+        # null keys sort first; an all-null key leaves the cuts null
+        (["kn", "id"], ["w"], None, lambda r: (r["kn"] is not None, r["kn"], r["id"])),
+        (["z", "id"], ["w"], None, lambda r: r["id"]),
+    ],
+    ids=["ties", "negated", "double", "one_value", "quantized", "nulls", "all_null"],
+)
+def test_running_sums_matches_python(
+    spark, parts, order, sums, bucket_value, sort_key
+):
+    rows = [
+        {
+            "id": i,
+            "k": 17 if i % 4 == 0 else i % 60,
+            "w": i % 5 + 1,
+            "v": i % 3,
+        }
+        for i in range(400)
+    ]
+    for r in rows:
+        kn = None if r["id"] % 7 == 0 else r["k"]
+        r.update(nk=-r["k"], d=r["k"] * 0.5 + 0.25, one=7, kn=kn)
+    df = (
+        spark.createDataFrame(rows)
+        .withColumn("z", F.lit(None).cast("long"))
+        .repartition(parts)
+    )
+    out = running_sums(df, order, sums, bucket_value=bucket_value)
+    assert out.columns == df.columns + [f"cum_{c}" for c in sums]
+    got = {
+        r["id"]: tuple(r[f"cum_{c}"] for c in sums)
+        for r in out.select("id", *[f"cum_{c}" for c in sums]).collect()
+    }
+    assert got == _python_running_sums(rows, sort_key, sums)
+
+
+# every query whose running sum is `running_sums`
+RUNNING_SUM_CALLERS = [
+    "cust_abc_pareto",
+    "cust_lorenz_deciles",
+    "li_abc_xyz_matrix",
+    "ml_auc_rank",
+    "stat_ks_two_sample",
+    "stat_mann_whitney",
+    "ev_power_users_p90",
+    "doc_quality_deciles",
+    "doc_shard_manifest",
+    "mm_shard_plan",
+    "rec_negative_sampling",
+]
+
+
+@pytest.fixture(scope="module")
+def duck_smoke():
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_SMOKE}/{t}.parquet'")
+    return con
+
+
+@pytest.mark.parametrize("name", RUNNING_SUM_CALLERS)
+def test_running_sums_callers_match_oracles(spark, duck_smoke, name):
+    """Each `running_sums` caller returns the rows, column names and
+    value hash of its DuckDB oracle at sf0.001."""
+    got = canon(Q[name](spark, SF_SMOKE).toPandas())
+    want = canon(duck_smoke.execute(oracle_sql()[name]).df())
+    assert len(got) == len(want) >= 1
+    assert list(got.columns) == list(want.columns)
+    assert value_hash(got) == value_hash(want)
 
 
 def test_salted_join_equals_plain_join(spark, sf_dir):

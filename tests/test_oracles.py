@@ -151,6 +151,30 @@ def test_no_plan_function_opens_with_a_format_call():
     assert not bad, f"functions opening with a str.format call: {bad}"
 
 
+def test_no_plan_module_calls_a_range_partition_prefix_sum():
+    """No plan module calls `repartitionByRange` or `spark_partition_id`.
+    A prefix sum keyed on range-partition ids is right only while
+    Catalyst reuses one range exchange for the offsets and the stream
+    side: the range sampler draws its boundaries again on every
+    execution, so two executions can split the rows differently
+    (`ml_auc_rank` read three different AUCs in three sf0.1 runs in
+    that form).  `operators.windows.running_sums` buckets by value
+    instead."""
+    from planning_center_data_pipeline_spark import plans as P
+
+    banned = {"repartitionByRange", "spark_partition_id"}
+    bad = []
+    for path in sorted(Path(P.__file__).parent.glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+            if name in banned:
+                bad.append(f"{path.name}:{node.lineno}: {name}")
+    assert not bad, f"range-partition prefix sums in plan modules: {bad}"
+
+
 def test_no_oracle_is_vacuous_at_sf001(con_sf001):
     """A 0-row result hash-matches trivially — the oracle proves
     nothing.  Every oracled query must return at least one row at the
