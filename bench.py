@@ -22,9 +22,11 @@ Outputs:
 - a run over the whole registry at one SF also writes
   ``BENCH_DETAIL.json`` and ends by running ``tools/snapshot_gate.py``,
   whose verdict goes into that file.  A contended window (median gap
-  between the two best samples above 15%, or a query with fewer than two
-  samples) goes to ``BENCH_DETAIL_CONTENDED.json`` instead when the
-  existing record is clean;
+  between the two best samples above 15%, a query with fewer than two
+  samples, or a CPU steal share above 5% over the timed passes, read
+  from /proc/stat as ``steal_share``) goes to
+  ``BENCH_DETAIL_CONTENDED.json`` instead when the existing record is
+  clean;
 - a run over named queries writes no file, so A/B timing leaves the tree
   clean;
 - with two or more ``--sf`` dirs, one child ``bench.py`` runs per dir,
@@ -63,6 +65,7 @@ from planning_center_data_pipeline_spark.planshape import counted_build  # noqa:
 
 NOISY = 0.5  # two best totals further apart than this: re-run the query
 CONTENDED = 0.15  # median two-best gap above this marks the window contended
+STOLEN = 0.05  # CPU steal share above this over the timed passes does too
 
 
 def disk_mb_s(path: str, size_mb: int = 256) -> float | None:
@@ -79,6 +82,29 @@ def disk_mb_s(path: str, size_mb: int = 256) -> float | None:
             return round(size_mb / (time.perf_counter() - t0), 1)
     except OSError:
         return None
+
+
+def cpu_times(stat: str | None = None) -> list[int] | None:
+    """user .. steal jiffies from the aggregate `cpu` line of `stat` (the
+    text of /proc/stat, read when not given); None where there is none."""
+    try:
+        text = Path("/proc/stat").read_text() if stat is None else stat
+    except OSError:
+        return None
+    for line in text.splitlines():
+        if line.startswith("cpu "):
+            return [int(x) for x in line.split()[1:9]]
+    return None
+
+
+def steal_share(before: list[int] | None, after: list[int] | None) -> float | None:
+    """Share of the CPU time between two `cpu_times` readings that the
+    hypervisor gave to other guests (steal).  Sustained steal slows every
+    pass alike, so the two-best gap cannot see it."""
+    if before is None or after is None:
+        return None
+    total = sum(after) - sum(before)
+    return round((after[7] - before[7]) / total, 4) if total > 0 else None
 
 
 def active_jobs(spark, grace_s: float = 1.0) -> list[int]:
@@ -230,12 +256,14 @@ def main(argv: list[str] | None = None) -> None:
 
     spark = get_spark(app_name="bench")
     cpus = spark.sparkContext.defaultParallelism
+    cpu0 = cpu_times()
     samples, errors = time_queries(spark, qs, sf_dir, names, args.reps)
     for _ in range(2):
         noisy = [n for n, s in samples.items() if spread2(record(s)["samples"]) > NOISY]
         if not noisy:
             break
         time_queries(spark, qs, sf_dir, noisy, 1, samples, errors)
+    steal = steal_share(cpu0, cpu_times())
     spark.stop()
 
     records = {n: record(s) for n, s in samples.items()}
@@ -249,7 +277,8 @@ def main(argv: list[str] | None = None) -> None:
                            for r in records.values()
                            if len(r["samples"]) > 1 and r["total"] > 0])
     min_samples = min((len(r["samples"]) for r in records.values()), default=0)
-    contended = bool((noise_best2 or 0) > CONTENDED or min_samples < 2)
+    contended = bool((noise_best2 or 0) > CONTENDED or min_samples < 2
+                     or (steal or 0) > STOLEN)
     total = round(sum(r["total"] for r in records.values()), 3)
     summary = {
         "metric": "sum_query_seconds",
@@ -263,6 +292,7 @@ def main(argv: list[str] | None = None) -> None:
         "noise_best2": noise_best2,
         "noise_maxmin": noise_maxmin,
         "min_samples_per_query": min_samples,
+        "steal_share": steal,
         "contended": contended,
         "reps": args.reps,
         "cpus": cpus,

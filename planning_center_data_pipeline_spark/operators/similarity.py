@@ -45,6 +45,95 @@ def quantized(vec: Column) -> Column:
     return F.transform(vec, lambda x: F.round(x.cast("double") * Q_SCALE).cast("bigint"))
 
 
+def label_centroids(e: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Exact per-label centroids of an embeddings frame
+    (label, vec_id, embedding), kept as integer sums, so that
+    `point_centroid_dist_q` and `centroid_pair_dist` take one sqrt of
+    an exact integer.
+
+    Returns `q(label, vec_id, dim, v)`, one row per quantized
+    component, and `cent(label, dim, n, s, ssq)`: the label's point
+    count, sum and sum of squares (decimal(38,0)) of dim `dim`.  The
+    centroid is s / (n * Q_SCALE).  A caller that does not read `ssq`
+    gets its aggregate pruned by the optimizer.  Scale shape: one
+    |E| x dims explode and one (label, dim) rollup."""
+    q = e.select(
+        "label",
+        "vec_id",
+        F.posexplode(quantized(F.col("embedding"))).alias("dim", "v"),
+    )
+    cent = q.groupBy("label", "dim").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("v").cast("bigint").alias("s"),
+        F.sum(F.col("v").cast("decimal(38,0)") * F.col("v")).alias("ssq"),
+    )
+    return q, cent
+
+
+def point_centroid_dist_q(q: DataFrame, cent: DataFrame) -> DataFrame:
+    """(label, d_q) per point of `label_centroids`: the Euclidean
+    distance to its own label's centroid in original units,
+    micro-quantized, d_q = round(sqrt(sum_d (v*n - s)^2) / (n * Q_SCALE)
+    * 1e6).  The squared sum is exact, so the one sqrt and the rounding
+    give the same bigint in any engine and order; callers sum d_q
+    order-free.  Scale shape: one point-level join on (label, dim)."""
+    dv = F.col("v").cast("decimal(38,0)") * F.col("n") - F.col("s")
+    return (
+        q.join(cent, ["label", "dim"])
+        .select("label", "vec_id", "n", (dv * dv).alias("d2"))
+        .groupBy("label", "vec_id")
+        .agg(F.min("n").alias("n"), F.sum("d2").alias("d2sum"))
+        .select(
+            "label",
+            F.expr(
+                "CAST(ROUND(SQRT(CAST(d2sum AS DOUBLE))"
+                f" / (CAST(n AS DOUBLE) * {Q_SCALE}) * 1e6) AS BIGINT)"
+            ).alias("d_q"),
+        )
+    )
+
+
+def centroid_pair_dist(cent: DataFrame) -> DataFrame:
+    """(la, lb, cdist) for every ordered pair of distinct labels of
+    `label_centroids`: the distance between their centroids,
+    sqrt(sum_d (s_a n_b - s_b n_a)^2) / (n_a n_b Q_SCALE).  The squared
+    sum is exact and symmetric, so cdist(a, b) == cdist(b, a) bit for
+    bit.  Scale shape: a labels^2 x dims self-join of the rollup."""
+    ca, cb = cent.alias("ca"), cent.alias("cb")
+    ds = (
+        F.col("ca.s").cast("decimal(38,0)") * F.col("cb.n")
+        - F.col("cb.s").cast("decimal(38,0)") * F.col("ca.n")
+    )
+    return (
+        ca.join(
+            cb,
+            (F.col("ca.dim") == F.col("cb.dim"))
+            & (F.col("ca.label") != F.col("cb.label")),
+        )
+        .select(
+            F.col("ca.label").alias("la"),
+            F.col("cb.label").alias("lb"),
+            (ds * ds).alias("d2"),
+            F.col("ca.n").alias("na"),
+            F.col("cb.n").alias("nb"),
+        )
+        .groupBy("la", "lb")
+        .agg(
+            F.min("na").alias("na"),
+            F.min("nb").alias("nb"),
+            F.sum("d2").alias("d2sum"),
+        )
+        .select(
+            "la",
+            "lb",
+            F.expr(
+                "SQRT(CAST(d2sum AS DOUBLE))"
+                f" / (CAST(na AS DOUBLE) * CAST(nb AS DOUBLE) * {Q_SCALE})"
+            ).alias("cdist"),
+        )
+    )
+
+
 def dot_q(a: Column, b: Column) -> Column:
     """Exact integer dot product of two quantized vectors."""
     return F.aggregate(

@@ -453,7 +453,7 @@ def emb_calinski_harabasz(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Calinski-Harabasz index over the embedding labels:
     CH = (B/(k-1)) / (W/(N-k)), W_l = sum_i ||x_i - c_l||^2 within
     label l and B_l = n_l ||c_l - c||^2, from the exact integer
-    centroid shapes of emb_davies_bouldin: per-dim
+    rollup of `operators.similarity.label_centroids`: per-dim
     quantized sums keep W_l's numerator n_l * ssq_l - sum_d s_ld^2
     and B_l's numerator sum_d (s_ld N - g_d n_l)^2 exact in
     decimal(38,0); each label's dispersion is converted to original
@@ -461,21 +461,7 @@ def emb_calinski_harabasz(spark: SparkSession, sf_dir: str) -> DataFrame:
     The quantization scale cancels in the B/W ratio.  Scale shape:
     one |E| x 64 explode rollup; everything below is label-bounded
     (10 x 64)."""
-    from planning_center_data_pipeline_spark.operators import similarity as S
-
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.select(
-        "label",
-        "vec_id",
-        F.posexplode(S.quantized(F.col("embedding"))).alias("dim", "v"),
-    )
-    cent = q.groupBy("label", "dim").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("v").cast("bigint").alias("s"),
-        F.sum(
-            F.col("v").cast("decimal(38,0)") * F.col("v")
-        ).alias("ssq"),
-    )
+    _, cent = S.label_centroids(load_table(spark, sf_dir, "embeddings"))
     glob = cent.groupBy("dim").agg(
         F.sum("n").cast("bigint").alias("nn"),
         F.sum("s").cast("bigint").alias("g"),
@@ -616,20 +602,14 @@ ORDER BY label
 
 def emb_centroid_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vector rollup: per-label centroid, flattened to (label, dim, c).
-    Exact: integer sums of quantized components / count."""
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.select(
-        "label", F.posexplode(S.quantized(F.col("embedding"))).alias("dim", "v")
-    ).withColumn("dim", F.col("dim").cast("long"))
-    return (
-        q.groupBy("label", "dim")
-        .agg(
-            (F.sum("v").cast("double") / F.count(F.lit(1)) / S.Q_SCALE).alias(
-                "centroid"
-            )
-        )
-        .orderBy("label", "dim")
-    )
+    Exact: integer sums of quantized components / count
+    (`operators.similarity.label_centroids`)."""
+    _, cent = S.label_centroids(load_table(spark, sf_dir, "embeddings"))
+    return cent.select(
+        "label",
+        F.col("dim").cast("long").alias("dim"),
+        (F.col("s").cast("double") / F.col("n") / S.Q_SCALE).alias("centroid"),
+    ).orderBy("label", "dim")
 
 
 EMB_CENTROID_SQL = f"""
@@ -654,39 +634,8 @@ def emb_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
     final average is an order-free integer sum.  Scale shape: one
     |E| x 64 explode rollup, one point-level join, label^2 x 64
     bounded centroid-pair scan (10 labels in the synthetic data)."""
-    from planning_center_data_pipeline_spark.operators import similarity as S
-
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.select(
-        "label",
-        "vec_id",
-        F.posexplode(S.quantized(F.col("embedding"))).alias("dim", "v"),
-    )
-    cent = q.groupBy("label", "dim").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("v").cast("bigint").alias("s"),
-    )
-    dev = (
-        q.join(cent, ["label", "dim"])
-        .select(
-            "label",
-            "vec_id",
-            "n",
-            (
-                (F.col("v").cast("decimal(38,0)") * F.col("n") - F.col("s"))
-                * (F.col("v").cast("decimal(38,0)") * F.col("n") - F.col("s"))
-            ).alias("d2"),
-        )
-        .groupBy("label", "vec_id")
-        .agg(F.min("n").alias("n"), F.sum("d2").alias("d2sum"))
-        .select(
-            "label",
-            F.expr(
-                "CAST(ROUND(SQRT(CAST(d2sum AS DOUBLE))"
-                f" / (CAST(n AS DOUBLE) * {S.Q_SCALE}) * 1e6) AS BIGINT)"
-            ).alias("d_q"),
-        )
-    )
+    q, cent = S.label_centroids(load_table(spark, sf_dir, "embeddings"))
+    dev = S.point_centroid_dist_q(q, cent)
     a_side = dev.groupBy("label").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_points"),
         F.sum("d_q").cast("bigint").alias("d_sum"),
@@ -699,44 +648,7 @@ def emb_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.lit(1e6)
         ).alias("a_mean"),
     )
-    ca, cb = cent.alias("ca"), cent.alias("cb")
-    cdist = (
-        ca.join(
-            cb,
-            (F.col("ca.dim") == F.col("cb.dim"))
-            & (F.col("ca.label") != F.col("cb.label")),
-        )
-        .select(
-            F.col("ca.label").alias("la"),
-            F.col("cb.label").alias("lb"),
-            (
-                (
-                    F.col("ca.s").cast("decimal(38,0)") * F.col("cb.n")
-                    - F.col("cb.s").cast("decimal(38,0)") * F.col("ca.n")
-                )
-                * (
-                    F.col("ca.s").cast("decimal(38,0)") * F.col("cb.n")
-                    - F.col("cb.s").cast("decimal(38,0)") * F.col("ca.n")
-                )
-            ).alias("d2"),
-            F.col("ca.n").alias("na"),
-            F.col("cb.n").alias("nb"),
-        )
-        .groupBy("la", "lb")
-        .agg(
-            F.min("na").alias("na"),
-            F.min("nb").alias("nb"),
-            F.sum("d2").alias("d2sum"),
-        )
-        .select(
-            "la",
-            "lb",
-            F.expr(
-                "SQRT(CAST(d2sum AS DOUBLE))"
-                f" / (CAST(na AS DOUBLE) * CAST(nb AS DOUBLE) * {S.Q_SCALE})"
-            ).alias("cdist"),
-        )
-    )
+    cdist = S.centroid_pair_dist(cent)
     ai = a_mean.select(F.col("label").alias("la"), F.col("a_mean").alias("a_i"))
     aj = a_mean.select(F.col("label").alias("lb"), F.col("a_mean").alias("a_j"))
     rmax = (
@@ -860,8 +772,6 @@ def emb_dim_trunc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb_topk_cosine; both rankings come from ONE pass over the pair
     stream (two aggregates per pair), so the corpus is scanned once.
     """
-    from planning_center_data_pipeline_spark.operators import similarity as S
-
     e = load_table(spark, sf_dir, "embeddings")
 
     def norms(df, prefix):
@@ -984,43 +894,15 @@ def emb_dunn_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Centroid-linkage Dunn index over the embedding labels:
     min_{i != j} d(c_i, c_j) / max_k (2 * a_mean_k), with centroid
     distances and mean point-to-centroid distances from the exact
-    quantized shapes of emb_davies_bouldin.  Both
+    quantized kernels of `operators.similarity` (`label_centroids`,
+    `point_centroid_dist_q`, `centroid_pair_dist`).  Both
     extrema are micro-quantized before the 1-row ratio, so the
     order of the bounded label scans cannot flip the result.  Higher
     is better (well-separated, compact clusters).  Scale shape: one
     |E| x 64 explode rollup, label^2 x 64 bounded pair scan, 1-row
     output."""
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.select(
-        "label",
-        "vec_id",
-        F.posexplode(quantized(F.col("embedding"))).alias("dim", "v"),
-    )
-    cent = q.groupBy("label", "dim").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("v").cast("bigint").alias("s"),
-    )
-    dev = (
-        q.join(cent, ["label", "dim"])
-        .select(
-            "label",
-            "vec_id",
-            "n",
-            (
-                (F.col("v").cast("decimal(38,0)") * F.col("n") - F.col("s"))
-                * (F.col("v").cast("decimal(38,0)") * F.col("n") - F.col("s"))
-            ).alias("d2"),
-        )
-        .groupBy("label", "vec_id")
-        .agg(F.min("n").alias("n"), F.sum("d2").alias("d2sum"))
-        .select(
-            "label",
-            F.expr(
-                "CAST(ROUND(SQRT(CAST(d2sum AS DOUBLE))"
-                f" / (CAST(n AS DOUBLE) * {Q_SCALE}) * 1e6) AS BIGINT)"
-            ).alias("d_q"),
-        )
-    )
+    q, cent = S.label_centroids(load_table(spark, sf_dir, "embeddings"))
+    dev = S.point_centroid_dist_q(q, cent)
     diam = dev.groupBy("label").agg(
         (
             2.0 * F.sum("d_q").cast("double")
@@ -1031,42 +913,8 @@ def emb_dunn_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.round(F.col("diam") * 1e6).cast("bigint")).alias("maxd_q"),
         F.count(F.lit(1)).cast("bigint").alias("k_labels"),
     )
-    ca, cb = cent.alias("ca"), cent.alias("cb")
-    sep = (
-        ca.join(
-            cb,
-            (F.col("ca.dim") == F.col("cb.dim"))
-            & (F.col("ca.label") < F.col("cb.label")),
-        )
-        .select(
-            F.col("ca.label").alias("la"),
-            F.col("cb.label").alias("lb"),
-            (
-                (
-                    F.col("ca.s").cast("decimal(38,0)") * F.col("cb.n")
-                    - F.col("cb.s").cast("decimal(38,0)") * F.col("ca.n")
-                )
-                * (
-                    F.col("ca.s").cast("decimal(38,0)") * F.col("cb.n")
-                    - F.col("cb.s").cast("decimal(38,0)") * F.col("ca.n")
-                )
-            ).alias("d2"),
-            F.col("ca.n").alias("na"),
-            F.col("cb.n").alias("nb"),
-        )
-        .groupBy("la", "lb")
-        .agg(
-            F.min("na").alias("na"),
-            F.min("nb").alias("nb"),
-            F.sum("d2").alias("d2sum"),
-        )
-        .select(
-            F.expr(
-                "CAST(ROUND(SQRT(CAST(d2sum AS DOUBLE))"
-                f" / (CAST(na AS DOUBLE) * CAST(nb AS DOUBLE) * {Q_SCALE})"
-                " * 1e6) AS BIGINT)"
-            ).alias("sep_q")
-        )
+    sep = S.centroid_pair_dist(cent).select(
+        F.round(F.col("cdist") * 1e6).cast("bigint").alias("sep_q")
     )
     min_sep = sep.agg(F.min("sep_q").alias("minsep_q"))
     return (
@@ -1280,7 +1128,8 @@ def emb_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q_SCALE = 1 << 20  # matches operators/similarity.py quantization
+# 2^20, not Q_SCALE: the query and its oracle both quantize with it
+_Q_SCALE = 1 << 20
 
 
 def emb_hamming_recall_at3(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1415,8 +1264,6 @@ def emb_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     only (query, neighbor, cosine) rows ever shuffle.  Same exactness
     contract as emb_topk_cosine, so the SQL oracle mirrors it
     verbatim with a label join added."""
-    from planning_center_data_pipeline_spark.operators import similarity as S
-
     e = load_table(spark, sf_dir, "embeddings")
     q = (
         e.filter(F.col("vec_id") < 10)
@@ -1453,18 +1300,16 @@ def emb_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_EMB_Q = 1_000_000
-
 EMB_HARD_NEGATIVES_SQL = f"""
 WITH qv AS (
   SELECT vec_id, label, i,
-         CAST(ROUND(CAST(embedding[i] AS DOUBLE)*{_EMB_Q}) AS BIGINT) AS v
+         CAST(ROUND(CAST(embedding[i] AS DOUBLE)*{Q_SCALE}) AS BIGINT) AS v
   FROM (SELECT vec_id, label, embedding,
                unnest(generate_series(1, {_DIMS})) AS i
         FROM embeddings WHERE vec_id < 10)
 ), cv AS (
   SELECT vec_id, label, i,
-         CAST(ROUND(CAST(embedding[i] AS DOUBLE)*{_EMB_Q}) AS BIGINT) AS v
+         CAST(ROUND(CAST(embedding[i] AS DOUBLE)*{Q_SCALE}) AS BIGINT) AS v
   FROM (SELECT vec_id, label, embedding,
                unnest(generate_series(1, {_DIMS})) AS i
         FROM embeddings)
@@ -1780,8 +1625,6 @@ def emb_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     hint-broadcast.  At 100 TB only step 1's assignment scans the full
     corpus; ADC scoring touches 4-byte codes, the point of PQ.
     """
-    from planning_center_data_pipeline_spark.operators import similarity as S
-
     e = load_table(spark, sf_dir, "embeddings")
     qv = e.select("vec_id", S.quantized(F.col("embedding")).alias("v"))
 
@@ -1979,8 +1822,6 @@ def emb_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     asc) tie-break.  The approximate scale path swaps in the IVF/LSH
     scorers without touching the vote logic.
     """
-    from planning_center_data_pipeline_spark.operators import similarity as S
-
     e = load_table(spark, sf_dir, "embeddings")
     queries = e.filter((F.col("vec_id") % 20) == 0)
     topk = S.brute_force_topk_pandas(
@@ -2005,10 +1846,6 @@ def emb_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _knn_classify_sql() -> str:
-    from planning_center_data_pipeline_spark.operators.similarity import (
-        Q_SCALE,
-    )
-
     dims = 64
     return f"""
 WITH qv AS (
@@ -2561,8 +2398,6 @@ def emb_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vec_id, subspace), one tiny histogram aggregate.  At 100 TB the
     scored stream is 64 rows per vector and never materializes the
     vectors twice."""
-    from planning_center_data_pipeline_spark.operators import similarity as S
-
     e = load_table(spark, sf_dir, "embeddings")
     subs = e.select(
         "vec_id",
@@ -2599,7 +2434,7 @@ def emb_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
 EMB_PQ_CODES_SQL = f"""
 WITH cv AS (
   SELECT vec_id, (i-1)//16 AS s, i,
-         CAST(ROUND(CAST(embedding[i] AS DOUBLE)*{_EMB_Q}) AS BIGINT) AS v
+         CAST(ROUND(CAST(embedding[i] AS DOUBLE)*{Q_SCALE}) AS BIGINT) AS v
   FROM (SELECT vec_id, embedding, unnest(generate_series(1, {_DIMS})) AS i
         FROM embeddings)
 ), cent AS (
@@ -2759,83 +2594,14 @@ def emb_silhouette_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the centroid-pair scan is label^2 x 64 rows (bounded).  Scale
     shape: one explode rollup (|E| x 64), one point-level join on
     (label, dim), bounded centroid self-join."""
-    e = load_table(spark, sf_dir, "embeddings")
-    from planning_center_data_pipeline_spark.operators import similarity as S
-
-    q = e.select(
-        "label",
-        "vec_id",
-        F.posexplode(S.quantized(F.col("embedding"))).alias("dim", "v"),
-    )
-    cent = q.groupBy("label", "dim").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("v").cast("bigint").alias("s"),
-    )
-    # per-point exact squared deviation sum: sum_d (v*n - s)^2
-    dev = (
-        q.join(cent, ["label", "dim"])
-        .select(
-            "label",
-            "vec_id",
-            "n",
-            (
-                (F.col("v").cast("decimal(38,0)") * F.col("n") - F.col("s"))
-                * (F.col("v").cast("decimal(38,0)") * F.col("n") - F.col("s"))
-            ).alias("d2"),
-        )
-        .groupBy("label", "vec_id")
-        .agg(
-            F.min("n").alias("n"),
-            F.sum("d2").alias("d2sum"),
-        )
-        .select(
-            "label",
-            F.expr(
-                "CAST(ROUND(SQRT(CAST(d2sum AS DOUBLE))"
-                f" / (CAST(n AS DOUBLE) * {S.Q_SCALE}) * 1e6) AS BIGINT)"
-            ).alias("d_q"),
-        )
-    )
+    q, cent = S.label_centroids(load_table(spark, sf_dir, "embeddings"))
+    dev = S.point_centroid_dist_q(q, cent)
     a_side = dev.groupBy("label").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_points"),
         F.sum("d_q").cast("bigint").alias("d_sum"),
     )
-    ca, cb2 = cent.alias("ca"), cent.alias("cb")
     pair = (
-        ca.join(
-            cb2,
-            (F.col("ca.dim") == F.col("cb.dim"))
-            & (F.col("ca.label") != F.col("cb.label")),
-        )
-        .select(
-            F.col("ca.label").alias("la"),
-            F.col("cb.label").alias("lb"),
-            (
-                (
-                    F.col("ca.s").cast("decimal(38,0)") * F.col("cb.n")
-                    - F.col("cb.s").cast("decimal(38,0)") * F.col("ca.n")
-                )
-                * (
-                    F.col("ca.s").cast("decimal(38,0)") * F.col("cb.n")
-                    - F.col("cb.s").cast("decimal(38,0)") * F.col("ca.n")
-                )
-            ).alias("d2"),
-            F.col("ca.n").alias("na"),
-            F.col("cb.n").alias("nb"),
-        )
-        .groupBy("la", "lb")
-        .agg(
-            F.min("na").alias("na"),
-            F.min("nb").alias("nb"),
-            F.sum("d2").alias("d2sum"),
-        )
-        .select(
-            "la",
-            F.expr(
-                "SQRT(CAST(d2sum AS DOUBLE))"
-                f" / (CAST(na AS DOUBLE) * CAST(nb AS DOUBLE) * {S.Q_SCALE})"
-            ).alias("cdist"),
-        )
+        S.centroid_pair_dist(cent)
         .groupBy("la")
         .agg(F.min("cdist").alias("b_dist"))
     )

@@ -12,6 +12,26 @@ from planning_center_data_pipeline_spark.operators.windows import running_sums
 from planning_center_data_pipeline_spark.sources.tables import load_table
 
 
+def _scored_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The scored-customer panel of the binary-score metrics: one row
+    (v, pos) per customer, v = account balance in integer cents (the
+    score), pos = 1 when the customer placed a 1-URGENT order (the
+    label), else 0."""
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
+    buyers = (
+        o.filter(F.col("o_orderpriority") == "1-URGENT")
+        .select(F.col("o_custkey").alias("ck"))
+        .distinct()
+        .withColumn("is_buyer", F.lit(1))
+    )
+    return (
+        c.select(F.col("c_custkey").alias("ck"), cents("c_acctbal").alias("v"))
+        .join(buyers, "ck", "left")
+        .select("v", F.coalesce("is_buyer", F.lit(0)).alias("pos"))
+    )
+
+
 # --- exact AUC via tie-aware rank sum ----------------------------------------
 
 
@@ -30,19 +50,7 @@ def ml_auc_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank offsets come from `operators.windows.running_sums` over the
     score groups, and the final reduce is a 1-row aggregate.
     """
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders")
-    buyers = (
-        o.filter(F.col("o_orderpriority") == "1-URGENT")
-        .select(F.col("o_custkey").alias("ck"))
-        .distinct()
-        .withColumn("is_buyer", F.lit(1))
-    )
-    base = (
-        c.select(F.col("c_custkey").alias("ck"), cents("c_acctbal").alias("v"))
-        .join(buyers, "ck", "left")
-        .select("v", F.coalesce("is_buyer", F.lit(0)).alias("pos"))
-    )
+    base = _scored_customers(spark, sf_dir)
     g = base.groupBy("v").agg(
         F.count(F.lit(1)).alias("cnt"),
         F.sum("pos").alias("npos"),
@@ -110,22 +118,7 @@ def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer sums over the shifted score), o_b = bin positive rate,
     o = overall rate.  One label rollup, a broadcast 1-row range, a
     10-row decomposition."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders")
-    buyers = (
-        o.filter(F.col("o_orderpriority") == "1-URGENT")
-        .select(F.col("o_custkey").alias("ck"))
-        .distinct()
-        .withColumn("pos", F.lit(1))
-    )
-    base = (
-        c.select(
-            F.col("c_custkey").alias("ck"),
-            F.round(F.col("c_acctbal") * 100).cast("bigint").alias("v"),
-        )
-        .join(buyers, "ck", "left")
-        .select("v", F.coalesce("pos", F.lit(0)).alias("pos"))
-    )
+    base = _scored_customers(spark, sf_dir)
     rng = base.agg(
         F.min("v").alias("vmin"), F.max("v").alias("vmax"),
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -265,19 +258,7 @@ def ml_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: label semi-aggregate (one shuffle), 1-row min/max
     aggregate broadcast, 10-row rollup.
     """
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders")
-    buyers = (
-        o.filter(F.col("o_orderpriority") == "1-URGENT")
-        .select(F.col("o_custkey").alias("ck"))
-        .distinct()
-        .withColumn("is_buyer", F.lit(1))
-    )
-    base = (
-        c.select(F.col("c_custkey").alias("ck"), cents("c_acctbal").alias("v"))
-        .join(buyers, "ck", "left")
-        .select("v", F.coalesce("is_buyer", F.lit(0)).alias("pos"))
-    )
+    base = _scored_customers(spark, sf_dir)
     rng = base.agg(
         F.min("v").alias("vmin"), F.max("v").alias("vmax")
     )  # 1 row
@@ -347,19 +328,7 @@ def ml_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row cutoff aggregate broadcast back onto the scan, a 10-row
     rollup, and 10-row windows for the cumulative columns.
     """
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders")
-    buyers = (
-        o.filter(F.col("o_orderpriority") == "1-URGENT")
-        .select(F.col("o_custkey").alias("ck"))
-        .distinct()
-        .withColumn("is_buyer", F.lit(1))
-    )
-    base = (
-        c.select(F.col("c_custkey").alias("ck"), cents("c_acctbal").alias("v"))
-        .join(buyers, "ck", "left")
-        .select("v", F.coalesce("is_buyer", F.lit(0)).alias("pos"))
-    )
+    base = _scored_customers(spark, sf_dir)
     qs = [i / 10.0 for i in range(1, 10)]
     cuts = base.agg(
         F.percentile("v", F.array(*[F.lit(q) for q in qs])).alias("cut")
@@ -856,19 +825,7 @@ def ml_threshold_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row cutoff aggregate exploded to 9 rows and broadcast; the
     9-way fan-out feeds one conditional aggregation; output is 9 rows.
     """
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders")
-    buyers = (
-        o.filter(F.col("o_orderpriority") == "1-URGENT")
-        .select(F.col("o_custkey").alias("ck"))
-        .distinct()
-        .withColumn("is_buyer", F.lit(1))
-    )
-    base = (
-        c.select(F.col("c_custkey").alias("ck"), cents("c_acctbal").alias("v"))
-        .join(buyers, "ck", "left")
-        .select("v", F.coalesce("is_buyer", F.lit(0)).alias("pos"))
-    )
+    base = _scored_customers(spark, sf_dir)
     qs = [i / 10.0 for i in range(1, 10)]
     cuts = base.agg(
         F.percentile("v", F.array(*[F.lit(q) for q in qs])).alias("cut")

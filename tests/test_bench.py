@@ -1,6 +1,6 @@
 """bench.py's pure parts, in process: the timing record with its
-build-time job count, the lingering job check, and the SF-ladder
-exponent arithmetic with its row-count factor."""
+build-time job count, the lingering job check, the SF-ladder exponent
+arithmetic with its row-count factor, and the CPU steal share."""
 
 from __future__ import annotations
 
@@ -65,3 +65,22 @@ def test_scale_entry_factor_comes_from_lineitem_rows(sf_dir):
         "exponents": [round(math.log(4.0) / math.log(factor), 2)],
     }
     assert entry["queries"]["b"]["exponents"] == [None]
+
+
+def test_steal_share_from_two_proc_stat_snapshots():
+    before = bench.cpu_times(
+        "cpu  1000 10 200 5000 40 0 30 20 7 0\n"
+        "cpu0 500 5 100 2500 20 0 15 10 7 0\n"
+        "intr 12345 0\n"
+    )
+    after = bench.cpu_times(
+        "cpu  1580 10 300 5200 40 0 50 120 9 0\n"
+        "cpu0 800 5 150 2600 20 0 25 60 9 0\n"
+    )
+    # user .. steal only: guest time is already counted in user
+    assert before == [1000, 10, 200, 5000, 40, 0, 30, 20]
+    # 100 of the 1000 jiffies between the snapshots were stolen
+    assert bench.steal_share(before, after) == 0.1 > bench.STOLEN
+    assert bench.steal_share(before, before) is None
+    assert bench.steal_share(None, after) is None
+    assert bench.cpu_times("cpu0 1 2 3 4 5 6 7 8\n") is None

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import math
+from decimal import ROUND_HALF_UP, Decimal
 from pathlib import Path
 
 import duckdb
@@ -20,7 +22,10 @@ from planning_center_data_pipeline_spark.operators.dedup import (
 from planning_center_data_pipeline_spark.operators.joins import validate_counts
 from planning_center_data_pipeline_spark.operators.similarity import (
     brute_force_topk,
+    centroid_pair_dist,
+    label_centroids,
     lsh_ann_topk,
+    point_centroid_dist_q,
 )
 from planning_center_data_pipeline_spark.operators.windows import (
     range_copy,
@@ -213,6 +218,24 @@ RUNNING_SUM_CALLERS = [
 ]
 
 
+# every query built on operators.similarity's label-centroid kernels
+CENTROID_CALLERS = [
+    "emb_calinski_harabasz",
+    "emb_centroid_by_label",
+    "emb_davies_bouldin",
+    "emb_dunn_centroid",
+    "emb_silhouette_centroid",
+]
+
+# the queries on ml_metrics' scored-customer panel not listed above
+SCORED_PANEL_CALLERS = [
+    "ml_brier_decomposition",
+    "ml_calibration_bins",
+    "ml_decile_lift",
+    "ml_threshold_metrics",
+]
+
+
 @pytest.fixture(scope="module")
 def duck_smoke():
     con = duckdb.connect()
@@ -221,15 +244,91 @@ def duck_smoke():
     return con
 
 
-@pytest.mark.parametrize("name", RUNNING_SUM_CALLERS)
+@pytest.mark.parametrize(
+    "name", RUNNING_SUM_CALLERS + CENTROID_CALLERS + SCORED_PANEL_CALLERS
+)
 def test_running_sums_callers_match_oracles(spark, duck_smoke, name):
-    """Each `running_sums` caller returns the rows, column names and
-    value hash of its DuckDB oracle at sf0.001."""
+    """Each caller of a shared derivation (`running_sums`, the
+    label-centroid kernels, the scored-customer panel) returns the
+    rows, column names and value hash of its DuckDB oracle at sf0.001."""
     got = canon(Q[name](spark, SF_SMOKE).toPandas())
     want = canon(duck_smoke.execute(oracle_sql()[name]).df())
     assert len(got) == len(want) >= 1
     assert list(got.columns) == list(want.columns)
     assert value_hash(got) == value_hash(want)
+
+
+def _round_half_up(x: float) -> int:
+    """Spark's ROUND(double): HALF_UP on the double's shortest decimal
+    form (Python's round() goes half to even)."""
+    return int(Decimal(repr(x)).quantize(Decimal(1), ROUND_HALF_UP))
+
+
+@pytest.mark.parametrize("parts", [1, 8])
+def test_label_centroid_kernels_match_python(spark, parts):
+    rows = [
+        # label 0: one point, so its distance to its centroid is 0
+        (0, 1, [0.1234567, -0.25, 0.5]),
+        # label 1: a duplicated point and one more
+        (1, 2, [0.3333333, 0.0000017, -0.75]),
+        (1, 3, [0.3333333, 0.0000017, -0.75]),
+        (1, 4, [-0.1111111, 0.2222222, 0.9876543]),
+        # label 2: negative components throughout
+        (2, 5, [-0.6543211, -0.0000004, -0.3141593]),
+        (2, 6, [-0.0271828, -0.9999999, -0.1414214]),
+        (2, 7, [-0.5, -0.4242424, -0.0000026]),
+    ]
+    for _, _, vec in rows:
+        # no x * 1e6 at a half-integer, where the two roundings differ
+        assert all(abs(abs(x * 1e6) % 1 - 0.5) > 1e-3 for x in vec)
+    e = spark.createDataFrame(
+        rows, "label int, vec_id long, embedding array<double>"
+    ).repartition(parts)
+    q, cent = label_centroids(e)
+
+    # the same integer and double operations in Python
+    qvecs = [
+        (lab, vid, [_round_half_up(x * 1e6) for x in vec]) for lab, vid, vec in rows
+    ]
+    want_q = {(lab, vid, d, v) for lab, vid, vs in qvecs for d, v in enumerate(vs)}
+    labels = sorted({lab for lab, _, _ in qvecs})
+    want_cent = {}
+    for lab in labels:
+        for d in range(3):
+            col = [vs[d] for la, _, vs in qvecs if la == lab]
+            want_cent[lab, d] = (len(col), sum(col), sum(v * v for v in col))
+    n_of = {lab: want_cent[lab, 0][0] for lab in labels}
+
+    def dist_q(lab, vs):
+        n = n_of[lab]
+        d2 = sum((v * n - want_cent[lab, d][1]) ** 2 for d, v in enumerate(vs))
+        return _round_half_up(math.sqrt(float(d2)) / (float(n) * 1e6) * 1e6)
+
+    def cdist(a, b):
+        d2 = sum(
+            (want_cent[a, d][1] * n_of[b] - want_cent[b, d][1] * n_of[a]) ** 2
+            for d in range(3)
+        )
+        return math.sqrt(float(d2)) / (float(n_of[a]) * float(n_of[b]) * 1e6)
+
+    want_dq = sorted((lab, dist_q(lab, vs)) for lab, _, vs in qvecs)
+    want_cdist = {(a, b): cdist(a, b) for a in labels for b in labels if a != b}
+
+    assert {tuple(r) for r in q.collect()} == want_q
+    assert q.count() == 3 * len(rows)
+    got_cent = {
+        (r["label"], r["dim"]): (r["n"], r["s"], int(r["ssq"]))
+        for r in cent.collect()
+    }
+    assert got_cent == want_cent
+    got_dq = sorted(tuple(r) for r in point_centroid_dist_q(q, cent).collect())
+    assert got_dq == want_dq
+    assert [d for lab, d in got_dq if lab == 0] == [0]
+    got_cdist = {
+        (r["la"], r["lb"]): r["cdist"] for r in centroid_pair_dist(cent).collect()
+    }
+    assert got_cdist == want_cdist
+    assert all(got_cdist[a, b] == got_cdist[b, a] for a, b in got_cdist)
 
 
 def test_salted_join_equals_plain_join(spark, sf_dir):
